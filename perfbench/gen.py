@@ -378,12 +378,13 @@ def write_query_mix(
     return QueryMixInputs(base_path, batch_paths, sf_dir, live_tbl, key_max)
 
 
-def request_kinds(seed: int, n: int) -> list[str]:
-    """Seeded request sequence: blocks of 20 holding 14 point, 4 range
-    and 2 analytic requests, shuffled within each block, so every
-    prefix of the sequence keeps the mix."""
+def request_kinds(seed: int, n: int, per_kind: int) -> list[str]:
+    """Seeded request sequence: blocks holding ``per_kind`` point,
+    range and analytic requests each, shuffled within each block, so
+    every block has the same mix. The equal counts are an assumption,
+    not a measured traffic ratio."""
     rng = _rng(seed, 21)
-    block = ["point"] * 14 + ["range"] * 4 + ["analytic"] * 2
+    block = ["point", "range", "analytic"] * per_kind
     out: list[str] = []
     while len(out) < n:
         out += list(rng.permutation(block))

@@ -7,9 +7,11 @@ operators, plus a mixed read workload over the transactional table.
 
 Run from the repository root. The command generates the workload's
 inputs from ``--seed`` under ``.perfbench_work/``, sets up a session on
-``local[<cores>]`` (repeated ``SETUP_REPS`` times; ``setup_s`` is the
-median), runs warm-up operations, then runs timed operations from one
-client in a closed loop for ``--seconds`` and checks every output.
+``local[<cores>]`` and the workload's tables, runs warm-up operations,
+then runs timed operations from one client in a closed loop for
+``--seconds`` and checks every output. ``setup_s`` is the time from
+process start to the first timed operation, less input generation and
+the host-noise calibration.
 
 Output: human-readable ``# ...`` lines (the host-noise bracket and
 every metric by name and unit), then, as the last line, one JSON object
@@ -22,19 +24,20 @@ correctness check failed.
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import shutil
-import statistics
-import sys
 import time
-import traceback
+
+T_START = time.perf_counter()
+
+import argparse  # noqa: E402
+import json  # noqa: E402
+import os  # noqa: E402
+import shutil  # noqa: E402
+import statistics  # noqa: E402
+import sys  # noqa: E402
+import traceback  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-
-SETUP_REPS = 3
 
 
 def _parse(argv: list[str]) -> argparse.Namespace:
@@ -74,16 +77,6 @@ def _spark_conf(work: str) -> dict[str, str]:
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={os.path.join(work, 'tmp')}",
     }
-
-
-def _warm_workers(spark, python_workers: bool) -> None:
-    """Start the JVM's execution path and, for workloads that use them,
-    the Python worker pool, so the first timed operation does not pay
-    worker start-up."""
-    spark.range(1).count()
-    if python_workers:
-        n = spark.sparkContext.defaultParallelism
-        spark.range(n * 4).repartition(n).mapInPandas(lambda it: it, schema="id long").count()
 
 
 def _stop_jvm(spark) -> None:
@@ -135,26 +128,23 @@ def main(argv: list[str]) -> int:
     os.makedirs(work)
     cpus = _configure_env(work)
 
+    t_cal = time.perf_counter()
     ticks0 = host.cpu_ticks()
     calib0 = host.parallel_calibration(cpus)
+    calib_s = time.perf_counter() - t_cal
     wl = WORKLOADS[args.workload](work, args.seed, args.size)
     t_gen = time.perf_counter()
     wl.generate()
-    gen_s = time.perf_counter() - t_gen
+    wl.gen_s += time.perf_counter() - t_gen
 
     spark = None
     try:
-        setup_s: list[float] = []
-        build_s: list[float] = []
-        for rep in range(SETUP_REPS):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            spark = build_spark(app_name="perfbench", extra_conf=_spark_conf(work))
-            build_s.append(time.perf_counter() - t0)
-            _warm_workers(spark, wl.python_workers)
-            wl.setup(spark, rep)
-            setup_s.append(time.perf_counter() - t0)
+        # one cold set-up: JVM launch, engine imports and JIT warm-up
+        # are part of what a user waits for, so none is repeated warm
+        t0 = time.perf_counter()
+        spark = build_spark(app_name="perfbench", extra_conf=_spark_conf(work))
+        build_s = time.perf_counter() - t0
+        wl.setup(spark)
 
         # the warm-up and the end-of-run check count as one operation each
         attempted, failed = 1, 0
@@ -164,6 +154,7 @@ def main(argv: list[str]) -> int:
             traceback.print_exc()
             failed += 1
         wl.reset()
+        setup_s = time.perf_counter() - T_START - wl.gen_s - calib_s
 
         tr = Tracer(bool(args.trace), spark.sparkContext)
         if tr.enabled:
@@ -198,7 +189,7 @@ def main(argv: list[str]) -> int:
     steal = host.steal_share(ticks0, ticks1)
 
     e2e = {
-        "setup_s": (statistics.median(setup_s), "s"),
+        "setup_s": (setup_s, "s"),
         "peak_rss_mb": (rss, "MB"),
         "items_per_s": (items / sum(lat), "1/s"),
         "op_ms_p50": (1e3 * statistics.median(lat), "ms"),
@@ -208,7 +199,7 @@ def main(argv: list[str]) -> int:
         n = len(lat)
         top = [s for s in tr.spans if s["parent"] is None]
         layer = {
-            "session.build_s": (statistics.median(build_s), "s"),
+            "session.build_s": (build_s, "s"),
             "build.ms_per_op": (1e3 * sum(s["end"] - s["start"] for s in top
                                           if s["name"].endswith(".build")) / n, "ms"),
             "exec.ms_per_op": (1e3 * sum(s["end"] - s["start"] for s in top
@@ -220,11 +211,10 @@ def main(argv: list[str]) -> int:
 
     correct = failed == 0
     print(f"# workload={args.workload} seed={args.seed} size={args.size} trace={args.trace} "
-          f"cpus={cpus} ops={len(lat)} loop_s={loop_s:.2f} gen_s={gen_s:.2f}")
+          f"cpus={cpus} ops={len(lat)} loop_s={loop_s:.2f} gen_s={wl.gen_s:.2f}")
     print(f"# noise: steal_share={'n/a' if steal is None else f'{steal:.4f}'} "
           f"calib_parallel_s before={calib0:.4f} after={calib1:.4f} "
           f"(drift {calib1 / calib0 - 1:+.1%})")
-    print(f"# setup_s samples: {' '.join(f'{x:.3f}' for x in setup_s)}")
     for name, (v, unit) in {**e2e, **named, **layer,
                             "ops_failed_ratio": (failed / attempted, "ratio")}.items():
         print(f"# metric {name} = {v:.6g} {unit}")
@@ -240,17 +230,18 @@ def main(argv: list[str]) -> int:
         "correct": correct, "attempted": attempted, "failed": failed,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in {**e2e, **named, **layer}.items()},
         "noise": {"steal_share": steal, "calib_parallel_s": [calib0, calib1]},
-        "setup_s": setup_s, "op_s": lat, "notes": wl.notes,
+        "op_s": lat, "notes": wl.notes,
     }
     if tr.enabled:
         record["spans"] = tr.spans
         untraced = f"{stem}-trace0.json"
         if os.path.exists(untraced):
             with open(untraced) as fh:
-                base_p50 = json.load(fh)["metrics"]["op_ms_p50"]["value"]
-            over = e2e["op_ms_p50"][0] / base_p50 - 1
-            record["overhead_vs_untraced"] = over
-            print(f"# trace overhead vs untraced run of this seed: op_ms_p50 {over:+.1%}")
+                base = json.load(fh)
+            if (base["size"], base["seconds"]) == (args.size, args.seconds):
+                over = e2e["op_ms_p50"][0] / base["metrics"]["op_ms_p50"]["value"] - 1
+                record["overhead_vs_untraced"] = over
+                print(f"# trace overhead vs untraced run of this seed: op_ms_p50 {over:+.1%}")
     with open(f"{stem}-trace{args.trace}.json", "w") as fh:
         json.dump(record, fh, indent=1)
 

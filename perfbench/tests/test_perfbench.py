@@ -65,11 +65,17 @@ def test_generator_deterministic_per_seed(tmp_path):
 
 
 def test_request_schedule_keeps_the_mix():
-    kinds = gen.request_kinds(3, 40)
-    assert kinds == gen.request_kinds(3, 40)
-    assert kinds != gen.request_kinds(4, 40)
-    for block in (kinds[:20], kinds[20:]):
-        assert (block.count("point"), block.count("range"), block.count("analytic")) == (14, 4, 2)
+    n = workloads.QueryMix.BLOCK
+    per_kind = workloads.QueryMix.PER_KIND
+    kinds = gen.request_kinds(3, 4 * n, per_kind)
+    assert kinds == gen.request_kinds(3, 4 * n, per_kind)
+    assert kinds != gen.request_kinds(4, 4 * n, per_kind)
+    for i in range(0, 4 * n, n):
+        block = kinds[i : i + n]
+        assert (block.count("point"), block.count("range"), block.count("analytic")) == (
+            per_kind, per_kind, per_kind)
+    # every block runs each analytic query once
+    assert block.count("analytic") == len(workloads.QueryMix.ANALYTIC)
 
 
 def test_benchmark_json_names():
@@ -104,8 +110,12 @@ def test_tiny_run_passes_and_prints_declared_metrics(workload, trace):
         got = result["metrics"][m["name"]]
         assert got["unit"] == m["unit"]
         assert isinstance(got["value"], (int, float)) and got["value"] > 0
-    printed = re.findall(r"^# metric (\S+) = ", p.stdout, re.M)
+    printed = dict(re.findall(r"^# metric (\S+) = (\S+) ", p.stdout, re.M))
     assert printed and all(NAME.fullmatch(n) for n in printed)
+    if workload == "query_mix" and trace:
+        # the re-clustered table lets both indexes skip files
+        assert float(printed["operators.txn.read_point.files_kept_ratio"]) < 1
+        assert float(printed["sources.manifest_datasource.files_kept_ratio"]) < 1
 
 
 def test_fails_without_a_result_outside_a_checkout(tmp_path):
@@ -135,25 +145,29 @@ def test_curation_check_catches_missing_and_wrong_pairs(tmp_path):
     assert not wl._check(pairs, top[: len(top) // 3], len(pairs))
 
 
-def test_oracle_check_catches_a_wrong_analytic_result(tmp_path):
+def test_oracle_check_catches_a_wrong_or_missing_analytic_result(tmp_path):
     import duckdb
 
     from datapipeline_scraping_spark.queries import REGISTRY
 
     wl = workloads.QueryMix(str(tmp_path), 3, "tiny")
     wl.inputs = gen.write_query_mix(str(tmp_path), 3, 1000, tpch_orders=300)
-    wl.first_result = {}
     con = duckdb.connect()
-    for t in ("lineitem",):
+    for t in ("customer", "orders", "lineitem"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{wl.inputs.sf_dir}/{t}.parquet'")
-    res = con.execute(REGISTRY["q01_pricing_summary"].oracle)
-    cols = [d[0] for d in res.description]
-    rows = res.fetchall()
+    good = {}
+    for name in wl.ANALYTIC:
+        res = con.execute(REGISTRY[name].oracle)
+        good[name] = ([d[0] for d in res.description], res.fetchall())
     con.close()
-    wl.first_result["q01_pricing_summary"] = (cols, rows)
+    wl.first_result = dict(good)
     assert wl._oracle_check()
+    cols, rows = good["q01_pricing_summary"]
     bad = [rows[0][:-1] + (rows[0][-1] + 1,)] + rows[1:]
     wl.first_result["q01_pricing_summary"] = (cols, bad)
+    assert not wl._oracle_check()
+    wl.first_result = dict(good)
+    del wl.first_result[wl.ANALYTIC[-1]]
     assert not wl._oracle_check()
 
 
@@ -169,7 +183,7 @@ def test_etl_final_check_catches_a_corrupted_table(tmp_path):
     try:
         wl = workloads.EtlIncremental(str(tmp_path), 4, "tiny")
         wl.generate()
-        wl.setup(spark, 0)
+        wl.setup(spark)
         items, ok = wl.op(spark, Tracer(False))
         assert ok and items > 0
         assert wl.finish(spark, Tracer(False))[0]

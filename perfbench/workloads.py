@@ -4,8 +4,8 @@ functions from one client in a closed loop.
 A workload object has four phases, called by ``run.py``:
 
 - ``generate()``: write the seeded inputs (untimed, outside set-up);
-- ``setup(spark, rep)``: session-dependent preparation such as table
-  init; timed as part of ``setup_s``;
+- ``setup(spark)``: session-dependent preparation such as table init;
+  timed as part of ``setup_s``;
 - ``op(spark, tr)``: one timed unit of work (an ETL batch, a curation
   pass, a read request); returns ``(items, ok)`` after checking the
   outputs;
@@ -49,15 +49,14 @@ class Workload:
     name = ""
     #: timed operations a run makes even when ``--seconds`` ends sooner
     min_ops = 1
-    #: whether the workload runs Python workers (mapInPandas, the
-    #: Python data source), whose start-up then belongs to set-up
-    python_workers = True
 
     def __init__(self, work: str, seed: int, size: str) -> None:
         self.work = work
         self.seed = seed
         self.size = size
         self.notes: list[str] = []
+        #: time spent writing inputs, which ``setup_s`` leaves out
+        self.gen_s = 0.0
 
     def reset(self) -> None:
         """Clear per-operation accumulators (after the warm-up)."""
@@ -82,11 +81,10 @@ class EtlIncremental(Workload):
     copy-on-write ``merge_write`` per incoming full scrape."""
 
     name = "etl_incremental"
-    min_ops = 5
-    python_workers = False
-    #: untimed batches: the first batches run JIT-cold (measured
+    min_ops = 3
+    #: untimed batches: the first batch runs JIT-cold (measured
     #: 1.65 s -> 1.3 s over the first four on a 4-core host)
-    WARMUP_BATCHES = 2
+    WARMUP_BATCHES = 1
     SIZES = {"full": 20_000, "tiny": 2_000}
     CONFIG = {
         "stages": [
@@ -129,13 +127,12 @@ class EtlIncremental(Workload):
             )
         return out
 
-    def setup(self, spark, rep: int) -> None:
+    def setup(self, spark) -> None:
         from datapipeline_scraping_spark.operators.txn import ManifestTable
 
         from spans import Tracer
 
-        self.root = os.path.join(self.work, f"table{rep}")
-        shutil.rmtree(self.root, ignore_errors=True)
+        self.root = os.path.join(self.work, "table")
         empty = spark.createDataFrame([], "lookup_key string, row_hash string")
         df = self._changed(spark, self.base_path, empty, Tracer(False))
         ManifestTable(self.root).init(df)
@@ -147,7 +144,9 @@ class EtlIncremental(Workload):
         from datapipeline_scraping_spark.operators.txn import ManifestTable, merge_write
 
         path = os.path.join(self.work, f"batch{self.inputs.batch + 1}")
+        t_gen = time.perf_counter()
         planted = self.inputs.next_batch(path)  # untimed: input generation
+        self.gen_s += time.perf_counter() - t_gen
         n_in = self.inputs.n_keys
         tbl = ManifestTable(self.root)
         before = _dir_bytes(self.root) if tr.enabled else None
@@ -238,14 +237,18 @@ class CurationDedup(Workload):
         self.candidates: list[int] = []
         self.verified: list[int] = []
 
-    def setup(self, spark, rep: int) -> None:
+    def setup(self, spark) -> None:
         # the corpus is read through the file source on every pass;
         # nothing to initialise beyond the session
         return None
 
     def warmup(self, spark, tr) -> bool:
         # a pass is 9-14 s of mostly fixed per-job cost on a 4-core
-        # host, so a run affords one; it is timed JIT-cold in every run
+        # host, so a run affords one; it is timed JIT-cold in every run.
+        # Only the Python worker pool is started, so that the timed
+        # pass does not pay worker start-up in classify's mapInPandas.
+        n = spark.sparkContext.defaultParallelism
+        spark.range(n * 4).repartition(n).mapInPandas(lambda it: it, schema="id long").count()
         return True
 
     def op(self, spark, tr):
@@ -347,23 +350,26 @@ class CurationDedup(Workload):
 class QueryMix(Workload):
     """Point reads, pruned range aggregates and registry analytics,
     interleaved by a seeded schedule, against a manifest table built
-    through the ETL write path (init commit + merge_write batches)."""
+    through the ETL write path (init commit + merge_write batches),
+    then re-clustered by ``compact_table`` so the indexes can prune."""
 
     name = "query_mix"
-    #: requests per op: one seeded block (14 point, 4 range, 2
-    #: analytic). A single ~100 ms point read moved up to 1.8x with
-    #: host CPU steal (36% run-to-run spread of a per-request p50 over
-    #: ten runs on a 4-core host); a block's time averages that out.
-    BLOCK = 20
+    #: two blocks in every run, so the op count does not depend on how
+    #: fast the host is (a block takes 3-7 s on a 4-core host)
+    min_ops = 2
+    #: the analytic requests: an aggregation and a three-way join with
+    #: a top-k. Every block runs each once.
+    ANALYTIC = ("q01_pricing_summary", "q03_top_orders")
+    #: requests of each kind per block. Equal counts per kind are an
+    #: assumption, not a measured traffic mix.
+    PER_KIND = len(ANALYTIC)
+    #: requests per op. A single ~100 ms point read moved up to 1.8x
+    #: with host CPU steal (36% run-to-run spread of a per-request p50
+    #: over ten runs on a 4-core host); a block's time averages that out.
+    BLOCK = 3 * PER_KIND
+    #: files the table is range-clustered into after the merges
+    FILES = 16
     SIZES = {"full": (40_000, 15_000), "tiny": (5_000, 1_500)}
-    ANALYTIC = (
-        "q01_pricing_summary",
-        "q02_revenue_by_nation",
-        "q03_top_orders",
-        "q17_event_daily_rollup",
-        "q84_volume_shipping",
-        "q85_product_profit",
-    )
     RANGE_FRAC = 0.01
 
     def generate(self) -> None:
@@ -373,36 +379,41 @@ class QueryMix(Workload):
         self.ids = live.column("id").to_numpy()
         self.amount_cum = np.concatenate([[0], np.cumsum(live.column("amount").to_numpy())])
         self.rows = {r["id"]: r for r in live.to_pylist()}
-        self.kinds = gen.request_kinds(self.seed, 100_000)
+        self.kinds = gen.request_kinds(self.seed, 100_000, self.PER_KIND)
         self.rng = np.random.default_rng([self.seed, 22])
         self.first_result: dict[str, tuple] = {}
         self.n_req = 0
-        self.n_analytic = 0
         self.reset()
 
     def reset(self) -> None:
         super().reset()
         self.by_kind: dict[str, list[float]] = {"point": [], "range": [], "analytic": []}
         self.files_kept: dict[str, list[float]] = {"point": [], "range": []}
+        #: (kind, key or window) of the traced block's reads, probed
+        #: for pruning after the block's time is taken
+        self.probes: list[tuple[str, tuple]] = []
 
-    def setup(self, spark, rep: int) -> None:
+    def setup(self, spark) -> None:
         from datapipeline_scraping_spark.operators.txn import ManifestTable, merge_write
+        from datapipeline_scraping_spark.operators.txn.compact import compact_table
 
-        self.root = os.path.join(self.work, f"table{rep}")
-        shutil.rmtree(self.root, ignore_errors=True)
+        self.root = os.path.join(self.work, "table")
         ManifestTable(self.root).commit(
             spark.read.parquet(self.inputs.base_path),
             expect_version=0, stats_by=["id"], bloom_by=["id"],
         )
         for p in self.inputs.batch_paths:
             merge_write(spark, self.root, spark.read.parquet(p), "id", writer="manifest")
-
-    def warmup(self, spark, tr) -> bool:
-        """One request of each kind, outside the seeded sequence."""
-        return all([self._point(spark, tr), self._range(spark, tr), self._analytic(spark, tr)])
+        # merge_write leaves one file at this size, so nothing could be
+        # pruned. Table maintenance re-clusters it on id; the stats and
+        # bloom columns carry over. The rewrite adds files, so the
+        # "files saved" gate is set below zero.
+        compact_table(spark, self.root, target_files=self.FILES, sort_by=["id"],
+                      min_gain_files=-self.FILES)
 
     def op(self, spark, tr):
         ok = True
+        analytic = iter(self.ANALYTIC)
         t_block = time.perf_counter()
         for kind in self.kinds[self.n_req : self.n_req + self.BLOCK]:
             tr.new_request()
@@ -412,10 +423,12 @@ class QueryMix(Workload):
             elif kind == "range":
                 ok &= self._range(spark, tr)
             else:
-                ok &= self._analytic(spark, tr)
+                ok &= self._analytic(spark, tr, next(analytic))
             self.by_kind[kind].append(time.perf_counter() - t0)
-        self.n_req += self.BLOCK
         self.latencies.append(time.perf_counter() - t_block)
+        self.n_req += self.BLOCK
+        if tr.enabled:
+            self._probe_pruning(tr)
         return self.BLOCK, ok
 
     def _point(self, spark, tr) -> bool:
@@ -429,12 +442,10 @@ class QueryMix(Workload):
         with tr.span("operators.txn.read_point.exec", spark_jobs=True):
             got = [r.asDict() for r in df.collect()]
         if tr.enabled:
-            kept, total, _ = tbl.bloom_pruned_files("id", key)
-            self.files_kept["point"].append(len(kept) / total)
+            self.probes.append(("point", (key,)))
         return got == [self.rows[key]] or self.fail(f"point id={key}: {got}")
 
     def _range(self, spark, tr) -> bool:
-        from datapipeline_scraping_spark.operators.txn import ManifestTable
         from datapipeline_scraping_spark.sources.manifest_sql import predicate_view
 
         width = max(1, int(self.inputs.key_max * self.RANGE_FRAC))
@@ -449,19 +460,33 @@ class QueryMix(Workload):
         with tr.span("sources.manifest_datasource.exec", spark_jobs=True):
             row = df.collect()[0]
         if tr.enabled:
-            kept, total = ManifestTable(self.root).pruned_files("id", lo, hi - 1)
-            self.files_kept["range"].append(len(kept) / total)
+            self.probes.append(("range", (lo, hi - 1)))
         a, b = np.searchsorted(self.ids, [lo, hi])
         want = (int(b - a), int(self.amount_cum[b] - self.amount_cum[a]) if b > a else None)
         return (row["n"], row["s"]) == want or self.fail(
             f"range [{lo},{hi}): {(row['n'], row['s'])} != {want}"
         )
 
-    def _analytic(self, spark, tr) -> bool:
+    def _probe_pruning(self, tr) -> None:
+        """Share of files each index keeps for the block's reads: the
+        bloom for points, min/max stats for ranges. Runs after the
+        block's time is taken; its time counts as tracer overhead."""
+        from datapipeline_scraping_spark.operators.txn import ManifestTable
+
+        t0 = time.perf_counter()
+        tbl = ManifestTable(self.root)
+        for kind, arg in self.probes:
+            if kind == "point":
+                kept, total, _ = tbl.bloom_pruned_files("id", *arg)
+            else:
+                kept, total = tbl.pruned_files("id", *arg)
+            self.files_kept[kind].append(len(kept) / total)
+        self.probes.clear()
+        tr.overhead_s += time.perf_counter() - t0
+
+    def _analytic(self, spark, tr, name: str) -> bool:
         from datapipeline_scraping_spark.queries import REGISTRY
 
-        name = self.ANALYTIC[self.n_analytic % len(self.ANALYTIC)]
-        self.n_analytic += 1
         with tr.span("queries.build"):
             df = REGISTRY[name].fn(spark, self.inputs.sf_dir)
         with tr.span("queries.exec", spark_jobs=True):
@@ -497,8 +522,7 @@ class QueryMix(Workload):
                                 ("range", "sources.manifest_datasource")):
                 n = max(1, len(bk[kind]))
                 named[f"{layer}.exec_s"] = (tr.total(f"{layer}.exec") / n, "s")
-                named[f"{layer}.files_kept_ratio"] = (
-                    statistics.mean(self.files_kept[kind]) if self.files_kept[kind] else 1.0, "ratio")
+                named[f"{layer}.files_kept_ratio"] = (statistics.mean(self.files_kept[kind]), "ratio")
             named["operators.txn.read_point.build_s"] = (
                 tr.total("operators.txn.read_point.build") / max(1, len(bk["point"])), "s")
             named["sources.manifest_sql.predicate_view.build_s"] = (
@@ -521,6 +545,8 @@ class QueryMix(Workload):
                     f"'{os.path.join(self.inputs.sf_dir, t)}.parquet'"
                 )
             ok = True
+            for name in sorted(set(self.ANALYTIC) - set(self.first_result)):
+                ok = self.fail(f"{name}: never ran")
             for name, (cols, rows) in self.first_result.items():
                 res = con.execute(REGISTRY[name].oracle)
                 dcols = [d[0] for d in res.description]

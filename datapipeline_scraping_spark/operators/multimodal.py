@@ -178,7 +178,11 @@ def extract_media_meta(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ids = pc.cast(batch.column(0), pa.int64())  # (id, blob) order
             blob = batch.column(1)
             n64 = pc.cast(pc.binary_length(blob), pa.int64())
-            n = n64.to_numpy(zero_copy_only=False)
+            # a NULL blob has NULL length, width and height (SQL
+            # length(NULL)); computing on 0 and masking keeps the
+            # arithmetic in int64 — NaN cast to int64 is garbage
+            null = pc.is_null(blob).to_numpy(zero_copy_only=False)
+            n = pc.fill_null(n64, 0).to_numpy()
             w = n % 640
             h = (n * 7) % 480
             is_img = pc.or_(
@@ -191,13 +195,14 @@ def extract_media_meta(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     pc.starts_with(blob, pattern=b"GIF89a"),
                 ),
             )
-            for i in np.nonzero(is_img.to_numpy(zero_copy_only=False))[0]:
+            is_img = pc.fill_null(is_img, False).to_numpy(zero_copy_only=False)
+            for i in np.nonzero(is_img)[0]:
                 meta = decode_image(blob[i].as_py())
                 if meta is not None:  # corrupt header: keep the fake
                     w[i] = meta["width"]
                     h[i] = meta["height"]
             yield pa.record_batch(
-                [ids, n64, pa.array(w.astype(np.int64)), pa.array(h.astype(np.int64))],
+                [ids, n64, pa.array(w, mask=null), pa.array(h, mask=null)],
                 names=["doc_id", "n_bytes", "width", "height"],
             )
 

@@ -70,13 +70,9 @@ from .layout import (  # noqa: F401
 )
 from .stats import (  # noqa: F401
     _stat_scalar,
-    _stat_overlaps,
     collect_file_stats,
     _OPERATIONAL_META_KEYS,
     _inherited_meta,
-    _bloom_params,
-    _bloom_positions,
-    _bloom_key,
     _write_bloom_sidecar,
     _snapshot_files,
     _adopt_parts,

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ...sources.skipping import data_files
 from .errors import ConcurrentWriteError
 from .layout import _bucket_id, _link_tree, _write_bucketed
 from .schema import _apply_map, _snap_read
@@ -304,25 +305,20 @@ def compact_small_files(
     small: list[tuple[str, int]] = []  # (rel, size)
     keep: list[str] = []  # rel
     bytes_before = 0
-    for r, dirs, fs in os.walk(snap):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in fs:
-            if not f.endswith(".parquet"):
-                continue
-            fp = os.path.join(r, f)
-            try:
-                sz = os.path.getsize(fp)
-            except FileNotFoundError:
-                raise ConcurrentWriteError(
-                    f"{root}: snapshot {snap_name} vanished during "
-                    f"compaction (concurrent writer + gc) — retry"
-                ) from None
-            bytes_before += sz
-            rel = os.path.relpath(fp, snap)
-            if sz < min_file_bytes:
-                small.append((rel, sz))
-            else:
-                keep.append(rel)
+    for fp in data_files(snap):
+        try:
+            sz = os.path.getsize(fp)
+        except FileNotFoundError:
+            raise ConcurrentWriteError(
+                f"{root}: snapshot {snap_name} vanished during "
+                f"compaction (concurrent writer + gc) — retry"
+            ) from None
+        bytes_before += sz
+        rel = os.path.relpath(fp, snap)
+        if sz < min_file_bytes:
+            small.append((rel, sz))
+        else:
+            keep.append(rel)
     files_before = len(small) + len(keep)
     small_bytes = sum(sz for _, sz in small)
     n_new = max(1, -(-small_bytes // max(1, target_file_bytes)))

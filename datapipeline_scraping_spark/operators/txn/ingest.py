@@ -25,12 +25,8 @@ from .layout import (
     _spec_dirname,
 )
 from .schema import _apply_map, _phys_schema
-from .stats import (
-    _bloom_params,
-    _bloom_positions,
-    _incremental_stats,
-    _inherited_meta,
-)
+from ...sources.skipping import bloom_bits, data_files
+from .stats import _carry_bloom_rows, _incremental_stats, _inherited_meta
 from .table import ManifestTable
 
 
@@ -435,16 +431,11 @@ def append_files_local(
     cmap = dict(entry.get("column_map") or {})  # logical -> physical
     inv = {p: l for l, p in cmap.items()}
     # -- schema guard against a base file's arrow schema ------------------
-    base_files = []
-    for r, dirs, fs in os.walk(snap):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        base_files.extend(
-            os.path.join(r, f) for f in fs if f.endswith(".parquet")
-        )
+    base_files = data_files(snap)
     part_schema = pq.ParquetFile(part_files[0]).schema_arrow
     base_by_name = {}
     if base_files:
-        base_schema = pq.ParquetFile(sorted(base_files)[0]).schema_arrow
+        base_schema = pq.ParquetFile(min(base_files)).schema_arrow
         base_by_name = {f.name: f.type for f in base_schema}
     allowed = set(base_by_name)
     if entry.get("schema"):
@@ -592,7 +583,7 @@ def append_files_local(
         if bloom_prop:
             cols = list(bloom_prop.get("cols") or [])
             fpp = float(bloom_prop.get("fpp") or 0.01)
-            rows = {"file": [], "col": [], "m": [], "k": [], "n": [], "bits": []}
+            rows = []
             for rel in new_rels:
                 fp = os.path.join(staged, rel)
                 names = pq.ParquetFile(fp).schema_arrow.names
@@ -604,46 +595,24 @@ def append_files_local(
                         for v in pq.read_table(fp, columns=[c]).column(c).to_pylist()
                         if v is not None
                     }
-                    m, k = _bloom_params(len(vals), fpp)
-                    bits = bytearray(m // 8)
-                    for v in vals:
-                        for pos in _bloom_positions(v, m, k):
-                            bits[pos >> 3] |= 1 << (pos & 7)
-                    rows["file"].append(rel)
-                    rows["col"].append(c)
-                    rows["m"].append(m)
-                    rows["k"].append(k)
-                    rows["n"].append(len(vals))
-                    rows["bits"].append(bytes(bits))
+                    m, k, bits = bloom_bits(vals, fpp)
+                    rows.append(
+                        {"file": rel, "col": c, "m": m, "k": k,
+                         "n": len(vals), "bits": bits}
+                    )
             bdir = os.path.join(staged, ManifestTable.BLOOM_DIR)
             os.makedirs(bdir, exist_ok=True)
-            if rows["file"]:
+            if rows:
+                schema = pa.schema(
+                    [("file", pa.string()), ("col", pa.string()),
+                     ("m", pa.int64()), ("k", pa.int64()),
+                     ("n", pa.int64()), ("bits", pa.binary())]
+                )
                 pq.write_table(
-                    pa.table(
-                        {
-                            "file": pa.array(rows["file"], pa.string()),
-                            "col": pa.array(rows["col"], pa.string()),
-                            "m": pa.array(rows["m"], pa.int64()),
-                            "k": pa.array(rows["k"], pa.int64()),
-                            "n": pa.array(rows["n"], pa.int64()),
-                            "bits": pa.array(rows["bits"], pa.binary()),
-                        }
-                    ),
+                    pa.Table.from_pylist(rows, schema=schema),
                     os.path.join(bdir, f"new-{run}.parquet"),
                 )
-            try:
-                old = pq.read_table(
-                    os.path.join(snap, ManifestTable.BLOOM_DIR)
-                )
-                keep_set = set(keep_rels)
-                mask = [x in keep_set for x in old.column("file").to_pylist()]
-                carried = old.filter(mask)
-                if carried.num_rows:
-                    pq.write_table(
-                        carried, os.path.join(bdir, f"carried-{run}.parquet")
-                    )
-            except (FileNotFoundError, OSError):
-                pass
+            _carry_bloom_rows(snap, staged, keep_rels)
         tbl._acquire_lock()
         try:
             cur = tbl._pointer()

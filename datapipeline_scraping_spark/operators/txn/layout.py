@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from ...functions.bucket_hash import file_bucket_id as _bucket_id  # noqa: F401
+from ...sources.skipping import BLOOM_DIR  # noqa: F401
 
 import os
 import re
@@ -17,10 +18,10 @@ from pyspark.sql import functions as F
 #: Hadoop/Spark parquet listing treats them as hidden) — canonical
 #: here because the stats/bloom builders run on STAGED dirs before any
 #: ManifestTable exists; the class re-exposes them as attributes.
+#: BLOOM_DIR is owned by the pruning core that probes the sidecar.
 DV_DIR = "_dv"
 CDF_DIR = "_cdf"
 UPD_DIR = "_upd"
-BLOOM_DIR = "_bloom"
 
 
 

@@ -9,6 +9,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ...sources.skipping import bloom_bits, data_files
 from .layout import BLOOM_DIR
 
 
@@ -16,8 +17,9 @@ def _stat_scalar(v):
     """JSON-serializable form of a parquet footer statistic: numbers
     stay numeric, byte strings decode, temporal/decimal values become
     their ISO/str form (which compares correctly lexicographically for
-    ISO dates/timestamps — the same normalization `_stat_overlaps`
-    applies to the caller's bounds)."""
+    ISO dates/timestamps — the same normalization the pruning core's
+    comparator, ``sources.skipping.overlaps``, applies to literals;
+    decimal text it compares as Decimal)."""
     if isinstance(v, bool) or v is None:
         return None  # booleans/absent: not useful skip keys
     if isinstance(v, (int, float)):
@@ -30,57 +32,6 @@ def _stat_scalar(v):
     if isinstance(v, str):
         return v
     return str(v)  # date/datetime/Decimal
-
-
-
-def _stat_overlaps(fmin, fmax, lo, hi) -> bool:
-    """Conservative range-overlap test between a file's [fmin, fmax]
-    and the query's [lo, hi] (either bound may be None = unbounded).
-    Mixed/unknown kinds keep the file (never skip on uncertainty).
-
-    String comparisons truncate BOTH sides to the shorter length and
-    treat truncated-equal as overlap: a timestamp-backed date column
-    records file stats like ``'1997-08-31 00:00:00'`` while the
-    caller's bound is the bare date ``'1997-08-31'`` — a plain
-    lexicographic compare would call the stat *greater* than the
-    bound and wrongly SKIP a file whose min sits exactly on the
-    window's hi edge (silently dropping qualifying rows). Prefix-
-    equal means "same day, sub-day resolution unknown" — keep."""
-    def norm(x):
-        if x is None or isinstance(x, bool):
-            # None min/max (r14: a stats entry may carry ONLY null
-            # counts — [None, None, nulls, rows]) must never compare:
-            # str(None) = 'None' would order against real bounds
-            return None
-        if isinstance(x, (int, float)):
-            return (0, float(x))
-        if isinstance(x, str):
-            return (1, x)
-        return (1, str(x))  # dates etc.: ISO strings compare correctly
-
-    def lt(a, b) -> bool:
-        # strictly-less under conservative string truncation
-        if a[0] == 1:
-            k = min(len(a[1]), len(b[1]))
-            return a[1][:k] < b[1][:k]
-        return a < b
-
-    nmin, nmax = norm(fmin), norm(fmax)
-    if nmin is None or nmax is None:
-        return True
-    if lo is not None:
-        nlo = norm(lo)
-        if nlo is None or nlo[0] != nmax[0]:
-            return True
-        if lt(nmax, nlo):
-            return False
-    if hi is not None:
-        nhi = norm(hi)
-        if nhi is None or nhi[0] != nmin[0]:
-            return True
-        if lt(nhi, nmin):
-            return False
-    return True
 
 
 
@@ -104,63 +55,57 @@ def collect_file_stats(
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
-    for root, dirs, files in os.walk(path):
-        # hidden sidecars (_dv / _cdf) are not data files
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if not f.endswith(".parquet"):
+    for fp in data_files(path):
+        if only is not None and os.path.relpath(fp, path) not in only:
+            continue
+        try:
+            md = pq.ParquetFile(fp).metadata
+        except Exception:
+            continue
+        names = md.schema.names
+        per: dict[str, list] = {}
+        for c in cols:
+            if c not in names:
                 continue
-            fp = os.path.join(root, f)
-            if only is not None and os.path.relpath(fp, path) not in only:
-                continue
-            try:
-                md = pq.ParquetFile(fp).metadata
-            except Exception:
-                continue
-            names = md.schema.names
-            per: dict[str, list] = {}
-            for c in cols:
-                if c not in names:
-                    continue
-                ci = names.index(c)
-                mins: list = []
-                maxs: list = []
-                ok = True
-                nulls = 0
-                have_nulls = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None:
-                        ok = have_nulls = False
-                        break
-                    if st.has_min_max:
-                        try:
-                            mins.append(st.min)
-                            maxs.append(st.max)
-                        except Exception:
-                            # pyarrow can't EXTRACT stats for some
-                            # physical types (decimal) even when the
-                            # footer has them — no min/max, but the
-                            # null count below still stands
-                            ok = False
-                    else:
+            ci = names.index(c)
+            mins: list = []
+            maxs: list = []
+            ok = True
+            nulls = 0
+            have_nulls = True
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(ci).statistics
+                if st is None:
+                    ok = have_nulls = False
+                    break
+                if st.has_min_max:
+                    try:
+                        mins.append(st.min)
+                        maxs.append(st.max)
+                    except Exception:
+                        # pyarrow can't EXTRACT stats for some
+                        # physical types (decimal) even when the
+                        # footer has them — no min/max, but the
+                        # null count below still stands
                         ok = False
-                    if not st.has_null_count or st.null_count is None:
-                        have_nulls = False
-                    else:
-                        nulls += st.null_count
-                lo = hi = None
-                if ok and mins:
-                    lo = _stat_scalar(min(mins))
-                    hi = _stat_scalar(max(maxs))
-                    if lo is None or hi is None:
-                        lo = hi = None
-                if lo is not None or have_nulls:
-                    ent: list = [lo, hi]
-                    if have_nulls:
-                        ent += [nulls, md.num_rows]
-                    per[c] = ent
-            out[os.path.relpath(fp, path)] = per
+                else:
+                    ok = False
+                if not st.has_null_count or st.null_count is None:
+                    have_nulls = False
+                else:
+                    nulls += st.null_count
+            lo = hi = None
+            if ok and mins:
+                lo = _stat_scalar(min(mins))
+                hi = _stat_scalar(max(maxs))
+                if lo is None or hi is None:
+                    lo = hi = None
+            if lo is not None or have_nulls:
+                ent: list = [lo, hi]
+                if have_nulls:
+                    ent += [nulls, md.num_rows]
+                per[c] = ent
+        out[os.path.relpath(fp, path)] = per
     return out
 
 
@@ -198,48 +143,6 @@ def _inherited_meta(entry: dict | None) -> dict:
         for k, v in ((entry or {}).get("meta") or {}).items()
         if k not in _OPERATIONAL_META_KEYS
     }
-
-
-
-def _bloom_params(n: int, fpp: float) -> tuple[int, int]:
-    """Classic bloom sizing: bits m = -n ln p / (ln 2)^2, hashes
-    k = (m/n) ln 2; m rounded up to a whole byte, both floored at
-    sane minimums so degenerate inputs (empty file) stay valid."""
-    import math
-
-    n = max(1, int(n))
-    m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
-    m = max(64, (m + 7) // 8 * 8)
-    k = max(1, int(round(m / n * math.log(2))))
-    return m, min(k, 16)
-
-
-
-def _bloom_positions(val: str, m: int, k: int) -> list[int]:
-    """The k bit positions of ``val`` via double hashing over the two
-    64-bit halves of md5(utf-8). md5 is engine-independent and stable
-    across Python/JVM versions — build (executor-side) and probe
-    (driver-side) both call THIS function, so there is no
-    JVM-vs-Python hash-parity hazard. h2 is forced odd so the stride
-    cycles the whole table."""
-    import hashlib
-
-    d = hashlib.md5(val.encode("utf-8")).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little") | 1
-    return [(h1 + i * h2) % m for i in range(k)]
-
-
-#: canonical probe encoding: must match Spark's CAST(col AS STRING)
-#: for the column types the index supports (integral + string)
-def _bloom_key(value) -> str:
-    if isinstance(value, bool) or not isinstance(value, (int, str)):
-        raise TypeError(
-            f"bloom point lookup supports integral and string values "
-            f"(got {type(value).__name__}): other types' Python str() "
-            f"need not match Spark's CAST AS STRING"
-        )
-    return str(value)
 
 
 
@@ -283,11 +186,7 @@ def _write_bloom_sidecar(
             # default) makes applyInPandas pass (key, pdf) instead
             def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
                 vals = pdf["__v"].unique()
-                m, k = _bloom_params(len(vals), fpp)
-                bits = bytearray(m // 8)
-                for v in vals:
-                    for pos in _bloom_positions(v, m, k):
-                        bits[pos >> 3] |= 1 << (pos & 7)
+                m, k, bits = bloom_bits(vals, fpp)
                 uri = pdf["__f"].iloc[0]
                 path = uri.split("://")[-1] if "://" in uri else uri
                 rel = os.path.relpath(path, staged_abs)
@@ -298,7 +197,7 @@ def _write_bloom_sidecar(
                         "m": [m],
                         "k": [k],
                         "n": [len(vals)],
-                        "bits": [bytes(bits)],
+                        "bits": [bits],
                     }
                 )
 
@@ -319,14 +218,8 @@ def _write_bloom_sidecar(
 def _snapshot_files(path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) of a snapshot directory's parquet
     parts (metadata/_SUCCESS and hidden sidecars like _dv excluded)."""
-    n = b = 0
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.endswith(".parquet"):
-                n += 1
-                b += os.path.getsize(os.path.join(root, f))
-    return n, b
+    files = data_files(path)
+    return len(files), sum(os.path.getsize(f) for f in files)
 
 
 
@@ -391,8 +284,6 @@ def _carry_bloom_sidecar(
     bloom_prop = entry.get("bloom")
     if not bloom_prop:
         return
-    import pyarrow.parquet as pq
-
     cols = list(bloom_prop.get("cols") or [])
     fpp = float(bloom_prop.get("fpp") or 0.01)
     _write_bloom_sidecar(
@@ -402,6 +293,16 @@ def _carry_bloom_sidecar(
         fpp,
         files=[os.path.join(staged, r) for r in new_rels],
     )
+    if not _carry_bloom_rows(snap, staged, keep_rels):
+        _write_bloom_sidecar(spark, staged, cols, fpp)
+
+
+def _carry_bloom_rows(snap: str, staged: str, keep_rels: list) -> bool:
+    """Copy the previous snapshot's bloom rows for the untouched files
+    ``keep_rels`` into the staged sidecar (tiny metadata, driver-side).
+    False when the previous sidecar cannot be read or copied."""
+    import pyarrow.parquet as pq
+
     try:
         old = pq.read_table(os.path.join(snap, BLOOM_DIR))
         keep_set = set(keep_rels)
@@ -417,4 +318,5 @@ def _carry_bloom_sidecar(
                 ),
             )
     except (FileNotFoundError, OSError):
-        _write_bloom_sidecar(spark, staged, cols, fpp)
+        return False
+    return True

@@ -1,26 +1,39 @@
-"""Snapshot reads: MoR composition, time travel, diffs, and every file-skipping probe (dirs, stats, blooms, specs)."""
+"""Snapshot reads: MoR composition, time travel, diffs, and file-skipping reads."""
 
 from __future__ import annotations
 
-import json
 import os
-from urllib.parse import unquote as _unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .errors import SnapshotExpiredError
 from .layout import _entry_specs
 from .schema import _apply_map, _diff_frames, _phys_schema, _snap_read
-from .stats import _bloom_key, _bloom_positions, _stat_overlaps
+from ...sources.skipping import (
+    _bloom_key,
+    bloom_indexed,
+    conjunct,
+    kept_files,
+)
+
+
+def _range_conds(ranges: dict) -> list[tuple]:
+    """``{col: (lo, hi)}`` inclusive bounds (None = unbounded) as the
+    conjunction ``col >= lo AND col <= hi`` the pruning core reads."""
+    conds = []
+    for col, (lo, hi) in ranges.items():
+        if lo is not None:
+            conds.append(("cmp", col, ">=", lo))
+        if hi is not None:
+            conds.append(("cmp", col, "<=", hi))
+    return conds
+
 
 class _ReadMixin:
-    """Snapshot reads: MoR composition, time travel, diffs, and every file-skipping probe (dirs, stats, blooms, specs).
-
-    Split from the monolithic operators/txn.py in r14 (VERDICT r13
-    item 6) — methods are verbatim; behavior is pinned by the full
-    suite and the 195-query oracle gate."""
+    """Snapshot reads: MoR composition, time travel, diffs, and the
+    file-skipping probes (dirs, stats, buckets, blooms — one pruning
+    core shared with the SQL datasource, ``sources/skipping.py``)."""
 
     #: DV key-count ceiling for FORCING a broadcast anti-join on the
     #: clustered read path (exchange-free joins depend on the anti-join
@@ -37,24 +50,7 @@ class _ReadMixin:
         alive for ``retention_sec`` after the commit. A merge-on-read
         deletion vector (:meth:`delete_where`) recorded for the
         resolved version is applied automatically."""
-        if version is None:
-            # resolve the pointer ONCE: the snapshot scanned and the
-            # log entry consulted for the deletion vector must belong
-            # to the same version even if a writer races this read
-            ptr = self._pointer()
-            if ptr is None:
-                raise FileNotFoundError(
-                    f"no committed snapshot under {self.root}"
-                )
-            snap_name, version = ptr
-            path = os.path.join(self.root, snap_name)
-        else:
-            path = self.snapshot_path(version)
-            if path is None:
-                raise FileNotFoundError(
-                    f"no committed snapshot under {self.root}"
-                )
-        entry = self._log_entry(version)
+        path, entry = self._resolve(version)
         return self._apply_dv(
             spark, _apply_map(_snap_read(spark, path, entry), entry), entry, path
         )
@@ -151,6 +147,42 @@ class _ReadMixin:
         )
 
 
+    def _resolve(self, version: int | None) -> tuple[str, dict]:
+        """(snapshot path, log entry) of ``version`` (default: head),
+        resolved ONCE per read: the files pruned and the entry whose
+        stats, blooms and sidecars prune them must belong to the same
+        version even if a writer races this read."""
+        if version is None:
+            ptr = self._pointer()
+            if ptr is None:
+                raise FileNotFoundError(
+                    f"no committed snapshot under {self.root}"
+                )
+            snap_name, version = ptr
+            path = os.path.join(self.root, snap_name)
+        else:
+            path = self.snapshot_path(version)
+            if path is None:
+                raise FileNotFoundError(
+                    f"no committed snapshot under {self.root}"
+                )
+        return path, self._log_entry(version) or {}
+
+
+    def _kept(
+        self, conds: list, version: int | None
+    ) -> tuple[str, dict, list, int]:
+        """(snap, entry, kept_files, total) for ONE conjunction of
+        raw conditions over logical columns — the shared pruning core
+        (:func:`..sources.skipping.kept_files`): hive dirs, per-file
+        stats, bucket layout and bloom sidecar, the same tiers and
+        literal coercion the SQL ``where`` option gets. A literal that
+        does not fit its column's type raises ``ValueError``."""
+        snap, entry = self._resolve(version)
+        kept, total = kept_files(snap, entry, [conjunct(conds, entry)])
+        return snap, entry, kept, total
+
+
     def pruned_files(
         self,
         col: str,
@@ -158,160 +190,16 @@ class _ReadMixin:
         hi=None,
         version: int | None = None,
     ) -> tuple[list[str], int]:
-        """File-level data skipping (VERDICT r8 item 6): the snapshot's
-        data files whose committed [min, max] for ``col`` overlaps
-        [``lo``, ``hi``], as absolute paths, plus the snapshot's TOTAL
-        file count. Files without a recorded stat for ``col`` are
-        conservatively kept — skipping is an optimization, never a
-        correctness filter. Requires the snapshot to have been
-        committed with ``stats_by`` covering ``col``; per-file stats
-        come from the commit log (one tiny json read), not from
-        opening any data file."""
-        ptr = self._pointer()
-        ver = ptr[1] if (version is None and ptr) else version
-        if ver is None:
-            raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        snap = self.snapshot_path(ver)
-        entry = self._log_entry(ver) or {}
-        stats = entry.get("file_stats") or {}
-        # stats are keyed by the files' PHYSICAL column names; callers
-        # pass logical names (metadata-only rename, column_map)
-        col = (entry.get("column_map") or {}).get(col, col)
-        total = 0
-        kept: list[str] = []
-        for root, dirs, files in os.walk(snap):
-            # hidden sidecars (the _dv deletion vector) are not data
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                total += 1
-                fp = os.path.join(root, f)
-                st = (stats.get(os.path.relpath(fp, snap)) or {}).get(col)
-                if st is None or _stat_overlaps(st[0], st[1], lo, hi):
-                    kept.append(fp)
-        return kept, total
-
-
-    def _partition_pruned_files(
-        self, col: str, lo, hi, version: int | None = None
-    ) -> "tuple[list, int] | None":
-        """Partition-directory pruning: (kept_files, total) for a
-        range over a PARTITION column, by parsing each data file's
-        ``col=value`` path segment — or None when ``col`` is not a
-        partition column of this version. Hive null partitions
-        (``__HIVE_DEFAULT_PARTITION__``) are always kept (never prune
-        on unknowable values); numeric partition columns compare
-        numerically (dir values are strings)."""
-        ver = version if version is not None else (self.version() or 0)
-        entry = self._log_entry(ver) or {}
-        if _entry_specs(entry):
-            # EVOLVED snapshot: a column may be dir-encoded in some
-            # specs and a plain data column in others — per-file rule
-            return self._spec_pruned_files(col, lo, hi, entry, version)
-        if col not in (entry.get("partition_by") or []):
-            return None
-        numeric = False
-        sch = _phys_schema(entry)
-        if sch is not None:
-            for f in sch.fields:
-                if f.name == col:
-                    numeric = f.dataType.simpleString() in (
-                        "tinyint",
-                        "smallint",
-                        "int",
-                        "bigint",
-                        "float",
-                        "double",
-                    )
-        snap = self.snapshot_path(version)
-        seg = f"{col}="
-        kept: list[str] = []
-        total = 0
-        for r, dirs, fs in os.walk(snap):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in fs:
-                if not f.endswith(".parquet"):
-                    continue
-                total += 1
-                fp = os.path.join(r, f)
-                val = None
-                for part in os.path.relpath(r, snap).split(os.sep):
-                    if part.startswith(seg):
-                        val = part[len(seg):]
-                if val is None or val == "__HIVE_DEFAULT_PARTITION__":
-                    kept.append(fp)
-                    continue
-                # hive URL-escapes special characters into dir names
-                # ('a/b' -> 'a%2Fb'); compare the TRUE value
-                v = _unquote(val)
-                if numeric:
-                    try:
-                        v = float(v)
-                    except ValueError:
-                        pass
-                if _stat_overlaps(v, v, lo, hi):
-                    kept.append(fp)
-        return kept, total
-
-
-    def _spec_pruned_files(
-        self, col: str, lo, hi, entry: dict, version: int | None
-    ) -> "tuple[list, int]":
-        """Per-file pruning on an EVOLVED snapshot: a file whose path
-        dir-encodes ``col`` (its spec partitions by it) prunes by the
-        directory value; any other file falls back to its committed
-        [min, max] stats; files with neither are kept — never prune on
-        absent evidence. This is Iceberg's per-file spec resolution:
-        the SAME predicate partition-prunes one spec's files and
-        stats-skips another's, so a windowed read stays O(window)
-        across the spec boundary."""
-        numeric = False
-        sch = _phys_schema(entry)
-        if sch is not None:
-            for f in sch.fields:
-                if f.name == col:
-                    numeric = f.dataType.simpleString() in (
-                        "tinyint",
-                        "smallint",
-                        "int",
-                        "bigint",
-                        "float",
-                        "double",
-                    )
-        snap = self.snapshot_path(version)
-        stats = entry.get("file_stats") or {}
-        phys = (entry.get("column_map") or {}).get(col, col)
-        seg = f"{col}="
-        kept: list[str] = []
-        total = 0
-        for r, dirs, fs in os.walk(snap):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in fs:
-                if not f.endswith(".parquet"):
-                    continue
-                total += 1
-                fp = os.path.join(r, f)
-                val = None
-                for part in os.path.relpath(r, snap).split(os.sep):
-                    if part.startswith(seg):
-                        val = part[len(seg):]
-                if val is not None:
-                    if val == "__HIVE_DEFAULT_PARTITION__":
-                        kept.append(fp)
-                        continue
-                    v = _unquote(val)
-                    if numeric:
-                        try:
-                            v = float(v)
-                        except ValueError:
-                            pass
-                    if _stat_overlaps(v, v, lo, hi):
-                        kept.append(fp)
-                    continue
-                st = (stats.get(os.path.relpath(fp, snap)) or {}).get(phys)
-                if st is None or _stat_overlaps(st[0], st[1], lo, hi):
-                    kept.append(fp)
+        """File-level data skipping: the snapshot's data files (absolute
+        paths) that may hold a ``col`` value in [``lo``, ``hi``]
+        (either bound None = unbounded), plus the snapshot's TOTAL file
+        count. A partition column prunes by directory value, a data
+        column by the commit log's per-file stats (``stats_by``; files
+        without a recorded stat are kept — skipping is an optimization,
+        never a correctness filter). No data file is opened."""
+        _snap, _entry, kept, total = self._kept(
+            _range_conds({col: (lo, hi)}), version
+        )
         return kept, total
 
 
@@ -331,13 +219,13 @@ class _ReadMixin:
         predicate on the returned frame; this method only guarantees
         no qualifying row is skipped.
 
-        Partitioned snapshots compose BOTH prunings (r10): a range
-        over a partition column prunes by directory value, any other
-        column by its file stats, and the surviving explicit file
-        list reconstructs the partition columns via ``basePath``. At
-        100 TB this is the difference between listing+scanning
-        O(table) files and O(window) files for the date-windowed
-        reads every incremental consumer issues."""
+        Partitioned snapshots compose BOTH prunings: a range over a
+        partition column prunes by directory value, any other column
+        by its file stats, and the surviving explicit file list
+        reconstructs the partition columns via ``basePath``. At 100 TB
+        this is the difference between listing+scanning O(table) files
+        and O(window) files for the date-windowed reads every
+        incremental consumer issues."""
         return self.read_where(spark, {col: (lo, hi)}, version=version)
 
 
@@ -347,102 +235,40 @@ class _ReadMixin:
         ranges: dict,
         version: int | None = None,
     ) -> DataFrame:
-        """Multi-column file-skipping read: scan only files whose
-        committed [min, max] overlaps EVERY ``{col: (lo, hi)}`` range
-        (conjunctive predicate). On a z-ordered snapshot
-        (:func:`zorder_key` via ``compact_table(zorder_by=...)``)
-        each listed dimension prunes independently — the point of
-        multi-dimensional clustering. Partition columns prune by
-        directory value (r10); same coarse-pruning contract as
-        :meth:`read_range`."""
-        entry = self._log_entry(
-            version if version is not None else (self.version() or 0)
-        )
+        """Multi-column file-skipping read: scan only files that may
+        hold a row inside EVERY ``{col: (lo, hi)}`` range (conjunctive
+        predicate). On a z-ordered snapshot (:func:`zorder_key` via
+        ``compact_table(zorder_by=...)``) each listed dimension prunes
+        independently — the point of multi-dimensional clustering.
+        Partition columns prune by directory value; same coarse-pruning
+        contract as :meth:`read_range`."""
         if not ranges:
             raise ValueError("read_where requires at least one column range")
-        kept: set[str] | None = None
-        for col, (lo, hi) in ranges.items():
-            part = self._partition_pruned_files(col, lo, hi, version=version)
-            files = (
-                part[0]
-                if part is not None
-                else self.pruned_files(col, lo, hi, version=version)[0]
-            )
-            kept = set(files) if kept is None else kept & set(files)
-        return self._read_file_subset(spark, kept or set(), entry, version)
+        snap, entry, kept, _total = self._kept(_range_conds(ranges), version)
+        return self._read_file_subset(spark, kept, entry, snap)
 
 
     def bloom_pruned_files(
         self, col: str, value, version: int | None = None
     ) -> tuple[list, int, bool]:
-        """(kept_files, total_files, indexed): the data files whose
-        per-file bloom MAY contain ``value`` in ``col``. Driver-side
-        only — the sidecar is tiny metadata (~1.2 bytes/indexed key),
-        so probing reads no data files and runs no cluster job.
-        ``indexed=False`` (no bloom for this column/version) keeps
-        everything. Files missing from the sidecar are kept (never
-        prune on absent evidence). False positives are the caller's
-        exact predicate's job; false negatives cannot happen — the
-        build and probe share one hash (:func:`_bloom_positions`)."""
-        import pyarrow.parquet as pq
-
-        ver = version if version is not None else (self.version() or 0)
-        entry = self._log_entry(ver) or {}
-        snap = self.snapshot_path(version)
-        phys = (entry.get("column_map") or {}).get(col, col)
-        total = 0
-        files: list[str] = []
-        for root, dirs, fs in os.walk(snap):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in fs:
-                if f.endswith(".parquet"):
-                    total += 1
-                    files.append(os.path.join(root, f))
-        bloom_prop = entry.get("bloom") or {}
-        if phys not in (bloom_prop.get("cols") or []):
-            return files, total, False
-        # type gate (ADVICE r14): the sidecar keys are CAST(col AS
-        # STRING); only integral/string columns probe soundly with
-        # str(value). Legacy sidecars over other types (committed
-        # before bloom_by validated column types) must not prune —
-        # a "5" probe against "5.0" build keys is a false negative.
-        sj = entry.get("schema")
-        if sj:
-            from pyspark.sql.types import StructType as _St
-
-            styps = {
-                f.name: f.dataType.simpleString()
-                for f in _St.fromJson(json.loads(sj)).fields
-            }
-            if styps.get(col) not in (
-                "int", "smallint", "tinyint", "bigint", "long", "string"
-            ):
-                return files, total, False
-        side = os.path.join(snap, self.BLOOM_DIR)
-        try:
-            tbl = pq.read_table(side)
-        except (FileNotFoundError, OSError):
-            return files, total, False
-        key = _bloom_key(value)
-        probes: dict[str, bool] = {}
-        cols_np = tbl.column("col").to_pylist()
-        file_np = tbl.column("file").to_pylist()
-        m_np = tbl.column("m").to_pylist()
-        k_np = tbl.column("k").to_pylist()
-        bits_np = tbl.column("bits").to_pylist()
-        for fn, c, m, k, bits in zip(file_np, cols_np, m_np, k_np, bits_np):
-            if c != phys:
-                continue
-            probes[fn] = all(
-                bits[pos >> 3] & (1 << (pos & 7))
-                for pos in _bloom_positions(key, m, k)
-            )
-        kept = [
-            fp
-            for fp in files
-            if probes.get(os.path.relpath(fp, snap), True)
-        ]
-        return kept, total, True
+        """(kept_files, total_files, indexed): the data files that may
+        hold ``col = value`` — the files :meth:`read_point` scans.
+        ``indexed`` says whether a per-file bloom over ``col`` took
+        part; without one (no ``bloom_by`` for this column/version, or
+        a column type whose string form the sidecar cannot match)
+        only the other tiers prune. Driver-side only — the sidecar is
+        tiny metadata (~1.2 bytes/indexed key), so probing reads no
+        data files and runs no cluster job. False positives are the
+        caller's exact predicate's job; false negatives cannot happen
+        — the build and probe share one hash."""
+        snap, entry = self._resolve(version)
+        indexed = bloom_indexed(snap, entry, col)
+        if indexed:
+            _bloom_key(value)  # TypeError on an unprobeable value type
+        kept, total = kept_files(
+            snap, entry, [conjunct([("cmp", col, "=", value)], entry)]
+        )
+        return kept, total, indexed
 
 
     def read_point(
@@ -464,32 +290,18 @@ class _ReadMixin:
         ``col = value`` predicate; no qualifying row is skipped
         (merge-on-read sidecars union in even when every base file
         prunes away)."""
-        ver = version if version is not None else (self.version() or 0)
-        entry = self._log_entry(ver)
-        part = self._partition_pruned_files(col, value, value, version=version)
-        if part is not None:
-            # partition-column probe: directory pruning IS the index
-            return self._read_file_subset(
-                spark, set(part[0]), entry, version
-            )
-        b_kept, _total, indexed = self.bloom_pruned_files(
-            col, value, version=version
+        snap, entry, kept, _total = self._kept(
+            [("cmp", col, "=", value)], version
         )
-        kept = set(b_kept)
-        stats = (entry or {}).get("file_stats") or {}
-        phys = ((entry or {}).get("column_map") or {}).get(col, col)
-        if any(phys in (st or {}) for st in stats.values()):
-            s_files, _ = self.pruned_files(col, value, value, version=version)
-            kept &= set(s_files)
-        return self._read_file_subset(spark, kept, entry, version)
+        return self._read_file_subset(spark, kept, entry, snap)
 
 
     def _read_file_subset(
         self,
         spark: SparkSession,
-        kept: set,
-        entry: dict | None,
-        version: int | None,
+        kept: list,
+        entry: dict,
+        snap: str,
     ) -> DataFrame:
         """Finish a file-skipping read over an explicit surviving-file
         set: declare the physical schema, scan only ``kept``, and run
@@ -498,36 +310,17 @@ class _ReadMixin:
         update_where can move rows into ranges no base file's stats
         cover (ADVICE r9) — so the 'no qualifying row is skipped'
         contract holds on the empty path too."""
-        schema = None
-        if entry and entry.get("schema"):
-            try:
-                schema = T.StructType.fromJson(json.loads(entry["schema"]))
-            except (ValueError, KeyError, TypeError):
-                schema = None
+        # the files carry PHYSICAL names: declare the schema in
+        # physical terms (parquet matches by name), rename after
+        phys_schema = _phys_schema(entry)
         if not kept:
-            if schema is None:
-                schema = self.read(spark, version=version).schema
-            empty = spark.createDataFrame([], schema)
-            if entry and (entry.get("dv") or entry.get("mor_delta")):
-                return self._apply_dv(
-                    spark, empty, entry, self.snapshot_path(version)
-                )
-            return empty
-        reader = spark.read
-        cmap = (entry or {}).get("column_map") or {}
-        if schema is not None:
-            # the files carry PHYSICAL names: declare the schema in
-            # physical terms (parquet matches by name), rename after
-            phys_schema = T.StructType(
-                [
-                    T.StructField(
-                        cmap.get(f.name, f.name), f.dataType, f.nullable
-                    )
-                    for f in schema.fields
-                ]
+            empty = spark.createDataFrame(
+                [], phys_schema or _snap_read(spark, snap, entry).schema
             )
+            return self._apply_dv(spark, _apply_map(empty, entry), entry, snap)
+        reader = spark.read
+        if phys_schema is not None:
             reader = reader.schema(phys_schema)
-        snap = self.snapshot_path(version)
         specs = _entry_specs(entry)
         if specs:
             # EVOLVED snapshot: group the surviving files by their
@@ -539,24 +332,20 @@ class _ReadMixin:
             for fp in sorted(kept):
                 rel = os.path.relpath(fp, snap)
                 by_spec.setdefault(rel.split(os.sep, 1)[0], []).append(fp)
-            names = (
-                [f.name for f in phys_schema.fields]
-                if schema is not None
-                else None
-            )
             frames = []
             for sd, files in sorted(by_spec.items()):
-                r = spark.read
-                if schema is not None:
-                    r = r.schema(phys_schema)
-                r = r.option("basePath", os.path.join(snap, sd))
-                fr = r.parquet(*files)
-                frames.append(fr.select(*names) if names else fr)
+                fr = reader.option("basePath", os.path.join(snap, sd))
+                fr = fr.parquet(*files)
+                frames.append(
+                    fr.select(*phys_schema.names)
+                    if phys_schema is not None
+                    else fr
+                )
             out = frames[0]
             for fr in frames[1:]:
                 out = out.unionByName(fr)
             return self._apply_dv(spark, _apply_map(out, entry), entry, snap)
-        if (entry or {}).get("partition_by"):
+        if entry.get("partition_by"):
             # explicit file lists drop hive partition columns unless
             # the reader knows the tree root they were derived from
             reader = reader.option("basePath", snap)

@@ -447,9 +447,9 @@ def q184_partitioned_pruned_scan(spark, sf_dir):
             partition_by=["l_returnflag"],
             stats_by=["l_shipdate"],
         )
-    part = tbl._partition_pruned_files("l_returnflag", "R", "R")
-    assert part is not None and 0 < len(part[0]) < part[1], (
-        f"partition pruning ineffective: {len(part[0])}/{part[1]}"
+    p_kept, p_total = tbl.pruned_files("l_returnflag", "R", "R")
+    assert 0 < len(p_kept) < p_total, (
+        f"partition pruning ineffective: {len(p_kept)}/{p_total}"
     )
     s_kept, s_total = tbl.pruned_files("l_shipdate", _Q184_LO, _Q184_HI)
     assert 0 < len(s_kept) < s_total, (

@@ -241,7 +241,7 @@ def q188_partitioned_epoch_sink(spark, sf_dir):
     In-query asserts pin: (1) replaying the final epoch is a no-op
     (same version — the crash-between-commit-and-checkpoint case);
     (2) epochs landed as separate append commits; (3) the catch-up
-    read PRUNES by partition directory — ``_partition_pruned_files``
+    read PRUNES by partition directory — ``pruned_files``
     keeps a strict subset per probed type (q184's assertion reused on
     a stream-built table). The returned aggregate reads ONLY the two
     probed partitions via ``read_where``, so the pruned path is the
@@ -339,9 +339,10 @@ def q188_partitioned_epoch_sink(spark, sf_dir):
         )
         # (3) partition-directory pruning on the stream-built layout
         for t in _Q188_TYPES:
-            pruned = tbl._partition_pruned_files("event_type", t, t)
-            assert pruned is not None and 0 < len(pruned[0]) < pruned[1], (
-                f"partition pruning ineffective for {t}: {pruned}"
+            kept, total = tbl.pruned_files("event_type", t, t)
+            assert 0 < len(kept) < total, (
+                f"partition pruning ineffective for {t}: "
+                f"{len(kept)}/{total}"
             )
         tbl.annotate(tbl.version(), q188_build="v1")
     lo, hi = min(_Q188_TYPES), max(_Q188_TYPES)

@@ -391,11 +391,9 @@ def q192_partition_evolution(spark, sf_dir):
         # pruning works on BOTH sides of the spec boundary: each
         # spec's own partition column dir-prunes it while the other
         # spec falls back to stats / conservative keep
-        k1, t1 = mt._partition_pruned_files(
-            "o_orderpriority", "1-URGENT", "1-URGENT"
-        )
+        k1, t1 = mt.pruned_files("o_orderpriority", "1-URGENT", "1-URGENT")
         assert 0 < len(k1) < t1, (len(k1), t1)
-        k2, t2 = mt._partition_pruned_files("o_orderstatus", "F", "F")
+        k2, t2 = mt.pruned_files("o_orderstatus", "F", "F")
         assert 0 < len(k2) < t2, (len(k2), t2)
         # v4/v5: merge-on-read DML spans rows of BOTH specs
         mt.delete_where(

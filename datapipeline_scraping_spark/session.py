@@ -28,10 +28,6 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # default ON; individual queries whose fused stages codegen
-    # pathologically (measured 3-4x slower than interpreted eval:
-    # the minhash shingle-explode aggregate, see queries_llm) opt out
-    # per-query, and prepare() restores the default for everyone else
     "spark.sql.codegen.wholeStage": "true",
     # runtime bloom-filter join pruning: ON with production-default
     # thresholds. q141 lowers the thresholds so the rewrite fires at

@@ -57,6 +57,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .skipping import data_files
+
 
 def _pointer_version(root: str) -> int:
     """Current committed version from the pointer file (0 = none)."""
@@ -124,14 +126,7 @@ def _change_files(
                 continue  # no change in this version can match
         snap = os.path.join(root, entry["snapshot"])
         if cdf.get("initial"):
-            files = []
-            for d, dirs, fs in os.walk(snap):
-                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-                files.extend(
-                    (os.path.join(d, f), v)
-                    for f in sorted(fs)
-                    if f.endswith(".parquet")
-                )
+            files = [(f, v) for f in data_files(snap)]
         else:
             files = [
                 (f, None)

@@ -58,6 +58,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from .cdf_datasource import _log_entry, _pointer_version
+from .skipping import conjunct, kept_files, partition_values
 
 
 def _resolve_version(options) -> tuple[str, int, dict]:
@@ -93,34 +94,6 @@ def _resolve_version(options) -> tuple[str, int, dict]:
             f"its snapshot was garbage-collected"
         )
     return root, ver, entry
-
-
-def _data_files(snap: str) -> list[str]:
-    out = []
-    for d, dirs, fs in os.walk(snap):
-        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-        out.extend(
-            os.path.join(d, f) for f in sorted(fs) if f.endswith(".parquet")
-        )
-    return out
-
-
-def _partition_values(path: str, snap: str) -> dict:
-    """Hive partition values from the file's directory path. Values are
-    UNESCAPED (hive URL-encodes special characters into dir names —
-    ``a/b`` writes as ``a%2Fb``), matching what Spark's own partition
-    discovery reconstructs."""
-    from urllib.parse import unquote
-
-    vals = {}
-    rel = os.path.relpath(os.path.dirname(path), snap)
-    for seg in rel.split(os.sep):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            vals[k] = (
-                None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            )
-    return vals
 
 
 #: where-option grammar: DNF — OR of conjunctions of comparisons (r15).
@@ -416,12 +389,6 @@ def parse_where(s: str) -> list[list[tuple]]:
     return out
 
 
-_NUM_TYPES = {"int", "smallint", "tinyint", "bigint", "long", "float", "double"}
-_TEMPORAL_TYPES = {"timestamp", "timestamp_ntz"}
-#: column types whose Python str() form equals Spark's CAST(col AS
-#: STRING) — the only types the bloom sidecar may be built over or
-#: probed for (see operators.txn.stats._bloom_key)
-_BLOOMABLE_TYPES = {"int", "smallint", "tinyint", "bigint", "long", "string"}
 
 #: sentinel: this literal must NOT be pushed into the parquet decode —
 #: its decode-level comparison could diverge from the exact Arrow mask
@@ -457,85 +424,6 @@ def _decode_literal(v, patype):
             return _SKIP_PUSH  # not representable at the file's scale
         return scaled
     return v
-
-
-def _coerce_literal(lit, styp: str, col: str):
-    """Validate AND canonicalize one where-option literal against the
-    column's Spark type, at parse time on the driver — a literal the
-    reader cannot compare exactly must fail HERE, never mid-task, and
-    never mis-compare. Canonical forms: numerics stay numeric, decimal
-    columns get exact ``decimal.Decimal`` literals (a raw int in an
-    Arrow value_set raises ArrowInvalid inside executor tasks —
-    ADVICE r13), date columns get ``datetime.date``, timestamp columns
-    get naive ``datetime.datetime`` (ISO strings and epoch-second
-    numerics both accepted; zone offsets normalize to UTC)."""
-    import datetime as dt
-    import decimal
-
-    if isinstance(lit, bool):
-        if styp == "boolean":
-            return lit
-    elif isinstance(lit, dt.datetime):  # before date: datetime IS a date
-        if styp in _TEMPORAL_TYPES:
-            return lit
-    elif isinstance(lit, dt.date):
-        if styp == "date":
-            return lit
-        if styp in _TEMPORAL_TYPES:  # Spark CAST(date AS timestamp)
-            return dt.datetime(lit.year, lit.month, lit.day)
-    elif isinstance(lit, (int, float)):
-        if styp in _NUM_TYPES:
-            return lit
-        if styp.startswith("decimal"):
-            return decimal.Decimal(str(lit))
-        if styp in _TEMPORAL_TYPES:  # epoch seconds, UTC instant
-            return dt.datetime.fromtimestamp(
-                float(lit), tz=dt.timezone.utc
-            ).replace(tzinfo=None)
-    elif isinstance(lit, str):
-        if styp == "string":
-            return lit
-        if styp == "date":
-            try:
-                return dt.date.fromisoformat(lit)
-            except ValueError:
-                raise ValueError(
-                    f"where: {lit!r} is not an ISO date for DATE "
-                    f"column {col!r}"
-                ) from None
-        if styp in _TEMPORAL_TYPES:
-            try:
-                v = dt.datetime.fromisoformat(lit)
-            except ValueError:
-                raise ValueError(
-                    f"where: {lit!r} is not an ISO timestamp for "
-                    f"column {col!r} of type {styp}"
-                ) from None
-            if v.tzinfo is not None:
-                v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
-            return v
-    raise ValueError(
-        f"where: literal {lit!r} does not match column {col!r} of "
-        f"type {styp} (supported predicate column types: numeric, "
-        f"decimal, string, boolean, date, timestamp)"
-    )
-
-
-def _canonical_forms(vals) -> "tuple[set, set] | None":
-    """(lowercased string forms, numeric forms) of a literal set for
-    matching hive dir values — hive lowercases booleans, numerics may
-    render with/without a decimal point. None marks a set with an
-    uncanonicalizable member (date/datetime/Decimal): no dir pruning,
-    the range envelope / row mask still apply."""
-    if not all(isinstance(p, (str, int, float, bool)) for p in vals):
-        return None
-    nums = set()
-    for p in vals:
-        try:
-            nums.add(float(p))
-        except (TypeError, ValueError):
-            pass
-    return {str(p).lower() for p in vals}, nums
 
 
 def _like_prefix_upper(prefix: str) -> "str | None":
@@ -596,444 +484,113 @@ def _mask_literal(v, patype):
     return v
 
 
-def _norm_bound(x):
-    """Temporal bounds and stats meet as ISO strings: commit-log file
-    stats serialize date/datetime to their str() form (txn._stat_scalar)
-    and hive dirs carry them as path text, so a datetime bound
-    normalizes to the same lexicographically-ordered representation."""
-    import datetime as dt
-
-    if isinstance(x, dt.datetime):
-        return x.isoformat(sep=" ")
-    if isinstance(x, dt.date):
-        return x.isoformat()
-    return x
-
-
-def _str_lt(a: str, b: str) -> bool:
-    """Strictly-less under conservative truncation: both sides cut to
-    the shorter length, prefix-equal counts as overlap. A date bound
-    '2024-01-05' against a timestamp stat '2024-01-05 10:00:00' means
-    'same day, sub-day resolution unknown' — keep the file."""
-    k = min(len(a), len(b))
-    return a[:k] < b[:k]
-
-
-def _overlaps(mn, mx, lo, hi) -> bool:
-    """Conservative [mn, mx] ∩ [lo, hi] test: any comparison that
-    raises (mixed/incomparable types) keeps the file — skipping is an
-    optimization, never a correctness filter."""
-    mn, mx = _norm_bound(mn), _norm_bound(mx)
-    lo, hi = _norm_bound(lo), _norm_bound(hi)
-    try:
-        if lo is not None and mx is not None:
-            if isinstance(lo, str) and isinstance(mx, str):
-                if _str_lt(mx, lo):
-                    return False
-            elif mx < lo:
-                return False
-        if hi is not None and mn is not None:
-            if isinstance(hi, str) and isinstance(mn, str):
-                if _str_lt(hi, mn):
-                    return False
-            elif mn > hi:
-                return False
-    except TypeError:
-        return True
-    return True
-
-
-class _Conjunct:
-    """Planning/apply state of ONE conjunction of the where option's
-    DNF (r15): the range envelopes, equality point sets, nullness and
-    exclusion sets a single-conjunct reader carried before the grammar
-    gained OR, now one instance per disjunct. Composition in
-    :class:`ManifestReader`: the kept-file set is the UNION of
-    per-conjunct kept sets across every skipping tier, and the exact
-    row mask is the Kleene-OR of per-conjunct Kleene-AND masks (SQL
-    three-valued semantics — a row is kept iff the predicate is
-    TRUE)."""
-
-    def __init__(self, conds: list[tuple], cmap: dict, logical: dict):
-        #: coerced conditions, LOGICAL column names
-        self.conds = conds
-        #: logical float/double columns under `>`/`>=` in THIS
-        #: conjunct: Spark orders NaN GREATER than any number while
-        #: Arrow comparisons return false for NaN, so these terms must
-        #: (a) OR an is_nan branch into the exact row mask and (b)
-        #: never drive lo-bound stats pruning — parquet writers skip
-        #: NaN computing min/max, so a file's [min, max] says nothing
-        #: about NaN presence (ADVICE r13)
-        self._nan_gt_cols = {
-            name
-            for name, t in logical.items()
-            if t in ("float", "double")
-            and any(
-                cond[0] == "cmp"
-                and cond[1] == name
-                and cond[2] in (">", ">=")
-                for cond in conds
-            )
-        }
-        #: the physical-name image, for the stats tier in keep_file
-        self._nan_lo_phys = {cmap.get(c, c) for c in self._nan_gt_cols}
-        #: physical column -> [lo, hi] envelope (AND within the conjunct)
-        self.ranges: dict[str, list] = {}
-        #: physical column -> exact value SET (= / IN) — prunes
-        #: dir-encoded columns tighter than the range envelope
-        self.point_sets: dict[str, set] = {}
-        #: physical column -> required nullness (True = IS NOT NULL,
-        #: False = IS NULL) — prunes hive null-partition dirs
-        self.null_conds: dict[str, bool] = {}
-        #: physical column -> EXCLUDED values (``!=``): prunes a file
-        #: only when it provably holds ONE value and that value is
-        #: excluded (a dir-encoded partition, or numeric min == max)
-        self.neq_sets: dict[str, set] = {}
-        for cond in conds:
-            col = cmap.get(cond[1], cond[1])  # logical -> physical
-            lo = hi = None
-            if cond[0] == "null":
-                # IS NOT NULL (cond[2]=True) / IS NULL (False)
-                self.null_conds[col] = bool(cond[2])
-                continue
-            if cond[0] == "nlike":
-                continue  # exclusion-shaped: row filter only, no prune
-            if cond[0] == "like":
-                # the pattern's literal PREFIX before the first
-                # wildcard prunes as the range [prefix, prefix]: every
-                # match starts with the prefix, and _overlaps'
-                # conservative prefix-truncated string comparison
-                # (_str_lt cuts both sides to the shorter length,
-                # prefix-equal keeps) makes [prefix, prefix] mean
-                # exactly "could a string starting with prefix live in
-                # this file's [min, max]". A leading wildcard yields
-                # an empty prefix: no range, row filter only.
-                prefix = re.split(r"[%_]", cond[2], maxsplit=1)[0]
-                if prefix:
-                    lo = hi = prefix
-                    r = self.ranges.setdefault(col, [None, None])
-                    try:
-                        if r[0] is None or lo > r[0]:
-                            r[0] = lo
-                        if r[1] is None or hi < r[1]:
-                            r[1] = hi
-                    except TypeError:
-                        pass
-                continue
-            if cond[0] == "cmp":
-                op, v = cond[2], cond[3]
-                if op == "=":
-                    lo = hi = v
-                    prev = self.point_sets.get(col)
-                    self.point_sets[col] = (
-                        {v} if prev is None else prev & {v}
-                    )
-                elif op == "!=":
-                    self.neq_sets.setdefault(col, set()).add(v)
-                    continue  # no range contribution
-                elif op in (">", ">="):
-                    lo = v
-                else:
-                    hi = v
-            else:  # ("in", col, values)
-                pts = set(cond[2])
-                prev = self.point_sets.get(col)
-                self.point_sets[col] = pts if prev is None else prev & pts
-                try:
-                    lo, hi = min(pts), max(pts)
-                except TypeError:
-                    lo = hi = None
-            if lo is not None or hi is not None:
-                r = self.ranges.setdefault(col, [None, None])
-                # AND semantics: intersect with any prior range
-                try:
-                    if lo is not None and (r[0] is None or lo > r[0]):
-                        r[0] = lo
-                    if hi is not None and (r[1] is None or hi < r[1]):
-                        r[1] = hi
-                except TypeError:
-                    pass
-        # precompute each point set's comparison forms ONCE (planning
-        # runs keep_file per file — O(files), not O(files × points)):
-        # lowercased strings (hive lowercases booleans) + numeric set;
-        # None marks a set with an uncanonicalizable member (no prune)
-        self._point_forms: dict = {}
-        for col, pts in self.point_sets.items():
-            self._point_forms[col] = _canonical_forms(pts)
-
-    def keep_file(
-        self,
-        part_vals: dict,
-        stats: dict,
-        phys_types: dict,
-        float_phys: set,
-    ) -> bool:
-        """Could a row satisfying THIS conjunct exist in the file?
-        Conservative across every tier — any doubt keeps the file;
-        skipping is an optimization, never a correctness filter."""
-        # IS [NOT] NULL against dir-encoded columns: a file under
-        # col=__HIVE_DEFAULT_PARTITION__ holds ONLY null values of
-        # col, and one under col=value holds none — either side can
-        # prune exactly. Data columns prune via the commit log's
-        # per-file null counts (r14 — stats entries grew to
-        # [min, max, nulls, rows]; 2-element entries from older
-        # commits never prune on nullness): nulls == rows means no
-        # IS-NOT-NULL row can exist, nulls == 0 means no IS-NULL row.
-        for col, want_not_null in self.null_conds.items():
-            if col in part_vals:
-                is_null_dir = part_vals[col] is None
-                if is_null_dir == want_not_null:
-                    return False
-                continue
-            st = stats.get(col)
-            if st is not None and len(st) >= 4 and st[2] is not None:
-                nulls, rows = st[2], st[3]
-                if want_not_null and nulls == rows:
-                    return False
-                if not want_not_null and nulls == 0:
-                    return False
-        # point-set pruning on dir-encoded columns: tighter than the
-        # range envelope for IN-lists (`IN ('a','z')` keeps only those
-        # two dirs, not everything between). Conservative: only prunes
-        # when every point has a canonical dir form (str/int/float/
-        # bool — _point_forms), matched case-insensitively so
-        # Python's str(True)='True' meets hive's 'true'; any column
-        # whose points can't be canonicalized keeps all files.
-        for col, forms in self._point_forms.items():
-            raw = part_vals.get(col)
-            if raw is None:  # not dir-encoded here / hive null: keep
-                continue
-            if forms is None:  # uncanonicalizable point type: keep
-                continue
-            str_forms, num_forms = forms
-            if raw.lower() in str_forms:
-                continue
-            try:
-                if float(raw) in num_forms:
-                    continue
-            except (TypeError, ValueError):
-                pass
-            return False
-        # != pruning: drop a file only when it PROVABLY holds one
-        # single excluded value — a dir-encoded partition equal to an
-        # excluded literal, or a numeric column whose min == max (NaN
-        # never enters stats, so float/double columns are exempt from
-        # the stats form) — or when the column is all-null (null != x
-        # is null: excluded). The dir match is EXACT and TYPE-FAITHFUL
-        # (ADVICE r14, high): reusing the keep-side canonical forms
-        # here lowercased strings and added float aliases, so on a
-        # string partition column `s != 'G1'` pruned the dir s=g1 and
-        # `s != '5'` pruned s=5.0 — rows that DO satisfy the predicate
-        # under Spark's case-sensitive string comparison. Each column
-        # type matches only its own faithful rendering; any type
-        # without one (timestamp dirs, uncoercible raws) never prunes.
-        for col, excl in self.neq_sets.items():
-            raw = part_vals.get(col)
-            if raw is not None:
-                styp = phys_types.get(col, "")
-                try:
-                    if styp == "string":
-                        if raw in excl:  # exact, case-sensitive
-                            return False
-                    elif styp == "boolean":
-                        # hive lowercases booleans into dir names
-                        if raw.lower() in {
-                            str(v).lower()
-                            for v in excl
-                            if isinstance(v, bool)
-                        }:
-                            return False
-                    elif styp in _NUM_TYPES:
-                        # Python's cross-type numeric == is exact
-                        # (no float rounding for big ints)
-                        v_raw = (
-                            float(raw)
-                            if "." in raw or "e" in raw.lower()
-                            else int(raw)
-                        )
-                        if any(v_raw == v for v in excl):
-                            return False
-                    elif styp.startswith("decimal"):
-                        import decimal
-
-                        if any(decimal.Decimal(raw) == v for v in excl):
-                            return False
-                    elif styp == "date":
-                        if any(
-                            raw == getattr(v, "isoformat", lambda: None)()
-                            for v in excl
-                        ):
-                            return False
-                except (
-                    TypeError,
-                    ValueError,
-                    ArithmeticError,
-                ):  # unparseable raw: cannot prove equality — keep
-                    pass
-            st = stats.get(col) if col not in part_vals else None
-            if st is None:
-                continue
-            if len(st) >= 4 and st[2] is not None and st[2] == st[3]:
-                return False  # all-null: no row satisfies !=
+def _decode_terms(conj, phys: dict, cmap: dict) -> list:
+    """The parquet-decode filter terms of THIS conjunct against a
+    file's physical schema (row-group stats pruning + dictionary
+    filtering). Dropping an unpushable term only WEAKENS the
+    conjunct (AND of fewer terms keeps a superset), so this is
+    purely an optimization — the final Arrow mask re-applies
+    everything. A term whose decode-level semantics could DIVERGE
+    from Spark's (NaN under `>`, a decimal literal that does not
+    rescale exactly, nullness) is simply not pushed."""
+    flt = []
+    for cond in conj.conds:
+        pcol = cmap.get(cond[1], cond[1])
+        if pcol not in phys or cond[0] == "null":
+            continue  # nullness is checked in the final mask
+        if cond[0] == "nlike":
+            continue  # exclusion-shaped: mask only
+        if cond[0] == "like":
+            # a prefix-bearing pattern pushes its prefix INTERVAL
+            # into the decode ([prefix, next-prefix) — exact
+            # bounds for "starts with prefix", a superset of the
+            # matches) so row-group stats prune inside big files;
+            # the pattern tail stays mask-only
+            prefix = re.split(r"[%_]", cond[2], maxsplit=1)[0]
+            if prefix:
+                flt.append((pcol, ">=", prefix))
+                upper = _like_prefix_upper(prefix)
+                if upper is not None:
+                    flt.append((pcol, "<", upper))
+            continue
+        if cond[0] == "cmp":
             if (
-                st[0] is not None
-                and st[0] == st[1]
-                and isinstance(st[0], (int, float))
-                and not isinstance(st[0], bool)
-                and col not in float_phys
+                cond[1] in conj.nan_gt_cols
+                and cond[2] in (">", ">=")
             ):
-                for v in self.neq_sets[col]:
-                    try:
-                        # exact cross-type equality (int/float/Decimal
-                        # compare exactly in Python — no float() cast
-                        # that could collide distinct big ints)
-                        if not isinstance(v, (bool, str)) and v == st[0]:
-                            return False
-                    except TypeError:
-                        pass
-        for col, (lo, hi) in self.ranges.items():
-            if col in part_vals:
-                raw = part_vals[col]
-                if raw is None:  # hive null partition: never prune
-                    continue
-                v = raw
-                # dir values are strings; compare numerically when the
-                # bound is numeric (mirrors txn._partition_pruned_files)
-                if isinstance(lo, (int, float)) or isinstance(
-                    hi, (int, float)
-                ):
-                    try:
-                        v = float(raw)
-                    except (TypeError, ValueError):
-                        pass
-                if not _overlaps(v, v, lo, hi):
-                    return False
+                continue  # Arrow would drop NaN rows Spark keeps
+            v = _decode_literal(cond[3], phys[pcol])
+            if v is _SKIP_PUSH:
                 continue
-            st = stats.get(col)
-            if st is None:
+            flt.append(
+                (pcol, "==" if cond[2] == "=" else cond[2], v)
+            )
+        else:
+            vals = [_decode_literal(x, phys[pcol]) for x in cond[2]]
+            if any(v is _SKIP_PUSH for v in vals):
                 continue
-            # an ALL-NULL file (nulls == rows, r14 stats) cannot hold a
-            # row satisfying ANY comparison — SQL null comparisons
-            # exclude the row — even when min/max are absent
-            if len(st) >= 4 and st[2] is not None and st[2] == st[3]:
-                return False
-            # a float/double file's [min, max] says nothing about NaN
-            # (parquet writers skip NaN computing stats), and Spark
-            # orders NaN above every number — a `>` lo bound must not
-            # skip the file that holds only small values plus a NaN
-            if col in self._nan_lo_phys:
-                lo = None
-            if not _overlaps(st[0], st[1], lo, hi):
-                return False
-        return True
+            flt.append((pcol, "in", set(vals)))
+    return flt
 
-    def decode_terms(self, phys: dict, cmap: dict) -> list:
-        """The parquet-decode filter terms of THIS conjunct against a
-        file's physical schema (row-group stats pruning + dictionary
-        filtering). Dropping an unpushable term only WEAKENS the
-        conjunct (AND of fewer terms keeps a superset), so this is
-        purely an optimization — the final Arrow mask re-applies
-        everything. A term whose decode-level semantics could DIVERGE
-        from Spark's (NaN under `>`, a decimal literal that does not
-        rescale exactly, nullness) is simply not pushed."""
-        flt = []
-        for cond in self.conds:
-            pcol = cmap.get(cond[1], cond[1])
-            if pcol not in phys or cond[0] == "null":
-                continue  # nullness is checked in the final mask
+def _conj_mask(conj, tbl, want):
+    """This conjunct's exact row mask over the declared-schema
+    table: Kleene-AND of term masks (SQL semantics — a null
+    comparison is null, and null AND false is false; the caller's
+    filter drops non-TRUE rows). Spark's NaN ordering is honoured:
+    float `>`/`>=` keeps NaN rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ops = {
+        "=": pc.equal,
+        "!=": pc.not_equal,
+        ">": pc.greater,
+        ">=": pc.greater_equal,
+        "<": pc.less,
+        "<=": pc.less_equal,
+    }
+    out = None
+    for cond in conj.conds:
+        if cond[0] == "cmp":
+            col = tbl.column(cond[1])
+            lit = _mask_literal(cond[3], want.field(cond[1]).type)
+            m = ops[cond[2]](col, lit)
+            if (
+                cond[1] in conj.nan_gt_cols
+                and cond[2] in (">", ">=")
+            ):
+                m = pc.or_(m, pc.is_nan(col))
+        elif cond[0] == "null":
+            m = (
+                pc.is_valid(tbl.column(cond[1]))
+                if cond[2]  # IS NOT NULL
+                else pc.is_null(tbl.column(cond[1]))
+            )
+        elif cond[0] in ("like", "nlike"):
+            # SQL LIKE semantics (% any run, _ one char; null in,
+            # null out) — backslash escapes were rejected at
+            # parse, the one place LIKE dialects diverge. NOT
+            # LIKE inverts with null preserved (pc.invert), so a
+            # null still never satisfies either polarity.
+            # Translated to an anchored (?s) RE2 by hand rather
+            # than pc.match_like: Arrow's own translation maps `_`
+            # to a non-DOTALL `.` which does NOT match a newline,
+            # while Spark compiles LIKE with DOTALL and keeps
+            # 'a\nb' for 'a_b' — match_like would silently drop
+            # rows Spark keeps (ADVICE r15).
+            m = pc.match_substring_regex(
+                tbl.column(cond[1]), _like_re2(cond[2])
+            )
             if cond[0] == "nlike":
-                continue  # exclusion-shaped: mask only
-            if cond[0] == "like":
-                # a prefix-bearing pattern pushes its prefix INTERVAL
-                # into the decode ([prefix, next-prefix) — exact
-                # bounds for "starts with prefix", a superset of the
-                # matches) so row-group stats prune inside big files;
-                # the pattern tail stays mask-only
-                prefix = re.split(r"[%_]", cond[2], maxsplit=1)[0]
-                if prefix:
-                    flt.append((pcol, ">=", prefix))
-                    upper = _like_prefix_upper(prefix)
-                    if upper is not None:
-                        flt.append((pcol, "<", upper))
-                continue
-            if cond[0] == "cmp":
-                if (
-                    cond[1] in self._nan_gt_cols
-                    and cond[2] in (">", ">=")
-                ):
-                    continue  # Arrow would drop NaN rows Spark keeps
-                v = _decode_literal(cond[3], phys[pcol])
-                if v is _SKIP_PUSH:
-                    continue
-                flt.append(
-                    (pcol, "==" if cond[2] == "=" else cond[2], v)
-                )
-            else:
-                vals = [_decode_literal(x, phys[pcol]) for x in cond[2]]
-                if any(v is _SKIP_PUSH for v in vals):
-                    continue
-                flt.append((pcol, "in", set(vals)))
-        return flt
-
-    def mask(self, tbl, want):
-        """This conjunct's exact row mask over the declared-schema
-        table: Kleene-AND of term masks (SQL semantics — a null
-        comparison is null, and null AND false is false; the caller's
-        filter drops non-TRUE rows). Spark's NaN ordering is honoured:
-        float `>`/`>=` keeps NaN rows."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        ops = {
-            "=": pc.equal,
-            "!=": pc.not_equal,
-            ">": pc.greater,
-            ">=": pc.greater_equal,
-            "<": pc.less,
-            "<=": pc.less_equal,
-        }
-        out = None
-        for cond in self.conds:
-            if cond[0] == "cmp":
-                col = tbl.column(cond[1])
-                lit = _mask_literal(cond[3], want.field(cond[1]).type)
-                m = ops[cond[2]](col, lit)
-                if (
-                    cond[1] in self._nan_gt_cols
-                    and cond[2] in (">", ">=")
-                ):
-                    m = pc.or_(m, pc.is_nan(col))
-            elif cond[0] == "null":
-                m = (
-                    pc.is_valid(tbl.column(cond[1]))
-                    if cond[2]  # IS NOT NULL
-                    else pc.is_null(tbl.column(cond[1]))
-                )
-            elif cond[0] in ("like", "nlike"):
-                # SQL LIKE semantics (% any run, _ one char; null in,
-                # null out) — backslash escapes were rejected at
-                # parse, the one place LIKE dialects diverge. NOT
-                # LIKE inverts with null preserved (pc.invert), so a
-                # null still never satisfies either polarity.
-                # Translated to an anchored (?s) RE2 by hand rather
-                # than pc.match_like: Arrow's own translation maps `_`
-                # to a non-DOTALL `.` which does NOT match a newline,
-                # while Spark compiles LIKE with DOTALL and keeps
-                # 'a\nb' for 'a_b' — match_like would silently drop
-                # rows Spark keeps (ADVICE r15).
-                m = pc.match_substring_regex(
-                    tbl.column(cond[1]), _like_re2(cond[2])
-                )
-                if cond[0] == "nlike":
-                    m = pc.invert(m)
-            else:
-                typ = want.field(cond[1]).type
-                vals = [_mask_literal(v, typ) for v in cond[2]]
-                m = pc.is_in(
-                    tbl.column(cond[1]), value_set=pa.array(vals)
-                )
-            out = m if out is None else pc.and_kleene(out, m)
-        return out
+                m = pc.invert(m)
+        else:
+            typ = want.field(cond[1]).type
+            vals = [_mask_literal(v, typ) for v in cond[2]]
+            m = pc.is_in(
+                tbl.column(cond[1]), value_set=pa.array(vals)
+            )
+        out = m if out is None else pc.and_kleene(out, m)
+    return out
 
 
 # One deletion-vector parse per Python worker per snapshot (guide
@@ -1043,17 +600,21 @@ class _Conjunct:
 # lives at module level so a reused Python worker
 # (spark.python.worker.reuse, default on) keeps it across tasks; the
 # PID guard drops it in forked children. Keyed on every DV file's
-# (path, mtime_ns, size): snapshot dirs are immutable by the commit
-# contract, but a PATH can be reused across table rebuilds in one
-# process (tests do this), and the stat pair makes staleness
-# impossible — a changed file is a different key. DVs are churn-sized
-# by contract; the cache keeps a handful and clears wholesale rather
+# path AND a digest of its bytes: snapshot dirs are immutable by the
+# commit contract, but a PATH can be reused across table rebuilds in
+# one process (tests do this), and a same-size rewrite inside one
+# coarse mtime tick leaves (mtime, size) unchanged — only the content
+# tells the vectors apart. DVs are churn-sized by contract, so
+# reading their bytes per task is cheap next to the parquet decode
+# it saves; the cache keeps a handful and clears wholesale rather
 # than growing without bound.
 _DV_MEMO: dict = {"pid": None, "tables": {}}
 _DV_MEMO_MAX = 8
 
 
 def _dv_table(dv_files):
+    import hashlib
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1061,15 +622,20 @@ def _dv_table(dv_files):
     if _DV_MEMO["pid"] != pid:
         _DV_MEMO["pid"] = pid
         _DV_MEMO["tables"] = {}
+    blobs = []
+    for f in dv_files:
+        with open(f, "rb") as fh:
+            blobs.append(fh.read())
     key = tuple(
-        (f, st.st_mtime_ns, st.st_size)
-        for f in dv_files
-        for st in (os.stat(f),)
+        (f, hashlib.blake2b(b, digest_size=16).digest())
+        for f, b in zip(dv_files, blobs)
     )
     tables = _DV_MEMO["tables"]
     got = tables.get(key)
     if got is None:
-        got = pa.concat_tables([pq.read_table(f) for f in dv_files])
+        got = pa.concat_tables(
+            [pq.read_table(pa.BufferReader(b)) for b in blobs]
+        )
         if len(tables) >= _DV_MEMO_MAX:
             tables.clear()
         tables[key] = got
@@ -1085,9 +651,10 @@ class ManifestReader(DataSourceReader):
     FILE SKIPPING on the SQL path (r13 redesign): the predicate comes
     from the relation's ``where`` OPTION — OR-of-conjunctions of
     simple comparisons (see :func:`parse_where`) — applied EXACTLY (files
-    pruned at planning against hive ``col=value`` path segments, the
-    commit log's per-file min/max stats, and the clustered bucket
-    layout; surviving rows filtered in Arrow per task), so
+    pruned at planning by the pruning core the DataFrame API shares,
+    :func:`.skipping.kept_files` — hive ``col=value`` path segments,
+    the commit log's per-file stats, the clustered bucket layout, the
+    bloom sidecar; surviving rows filtered in Arrow per task), so
 
         CREATE TEMPORARY VIEW recent USING manifest
         OPTIONS (root '...', `where` 'ts >= 1700000000')
@@ -1131,259 +698,30 @@ class ManifestReader(DataSourceReader):
             else []
         )
         self.arrow_schema = to_arrow_schema(schema)
-        self.file_stats = dict(entry.get("file_stats") or {})
-        #: clustered snapshot layout (commit_clustered): bucket ids
-        #: live in the file names — the layout contract read_clustered
-        #: already depends on — so equality points on the bucket column
-        #: prune to their buckets' files (r13). The column's Spark type
-        #: drives the hash variant; clustered tables refuse renames,
-        #: so logical name == physical name here.
-        self.bucket = dict(entry.get("bucket") or {})
-        self.bucket_type = next(
-            (
-                f.dataType.simpleString()
-                for f in schema.fields
-                if f.name == self.bucket.get("col")
-            ),
-            None,
-        )
-        #: commit-time bloom-index declaration ({"cols": [...], ...},
-        #: physical names) — equality points on indexed columns consult
-        #: the `_bloom` sidecar at planning (r14, VERDICT r13 item 2)
-        self.bloom_prop = dict(entry.get("bloom") or {})
-        logical = {f.name: f.dataType.simpleString() for f in schema.fields}
-        #: physical column -> Spark simpleString type. The EXCLUSION
-        #: (`!=`) and bloom tiers key their soundness off the COLUMN's
-        #: type, not the literal's (ADVICE r14): for keep-side equality
-        #: a loose canonical match only keeps extra files, but for
-        #: exclusion a loose match PRUNES files whose rows satisfy the
-        #: predicate, and a bloom probe whose string form diverges from
-        #: the sidecar's CAST-AS-STRING build keys is a guaranteed
-        #: false negative.
-        self._phys_types: dict[str, str] = {
-            self.cmap.get(n, n): t for n, t in logical.items()
-        }
-        #: every float/double column (physical): NaN escapes min/max
-        #: stats entirely, so single-value (min == max) file pruning
-        #: for != is unsound there — a file stating [5, 5] can still
-        #: hold NaN rows that `v != 5` keeps
-        self._float_phys = {
-            self.cmap.get(n, n)
-            for n, t in logical.items()
-            if t in ("float", "double")
-        }
-        #: the where option's DNF — one _Conjunct per disjunct, each
-        #: carrying its own envelopes/points/nullness/exclusions; the
-        #: predicate is their OR, so a file survives planning if ANY
-        #: conjunct might match a row in it and the exact row mask is
-        #: the Kleene-OR of per-conjunct masks. Empty = no predicate.
-        self.disjuncts: list[_Conjunct] = []
-        for conj in (
-            parse_where(options["where"]) if "where" in options else []
-        ):
-            coerced: list[tuple] = []
-            for cond in conj:
-                if cond[1] not in logical:
-                    raise ValueError(
-                        f"where: unknown column {cond[1]!r} "
-                        f"(have {sorted(logical)})"
-                    )
-                # literals are validated AND coerced to the column's
-                # canonical comparison form AT PARSE time — 'k >= ''x'''
-                # on a bigint column would otherwise only blow up (or
-                # worse, mis-compare) inside an executor task; same for
-                # int literals on decimal columns (ArrowInvalid rescale,
-                # ADVICE r13) and ISO strings on temporal columns
-                if cond[0] == "null":
-                    coerced.append(cond)  # IS [NOT] NULL: no literal
-                    continue
-                styp = logical[cond[1]]
-                if cond[0] in ("like", "nlike"):
-                    # [NOT] LIKE is a string-column predicate; on any
-                    # other type Spark would implicitly cast, a
-                    # semantics the Arrow mask cannot reproduce
-                    # faithfully
-                    if styp != "string":
-                        raise ValueError(
-                            f"where: LIKE on column {cond[1]!r} of type "
-                            f"{styp} — LIKE supports string columns only"
-                        )
-                    coerced.append(cond)
-                    continue
-                if cond[0] == "in":
-                    coerced.append(
-                        (
-                            "in",
-                            cond[1],
-                            tuple(
-                                _coerce_literal(v, styp, cond[1])
-                                for v in cond[2]
-                            ),
-                        )
-                    )
-                else:
-                    coerced.append(
-                        (
-                            "cmp",
-                            cond[1],
-                            cond[2],
-                            _coerce_literal(cond[3], styp, cond[1]),
-                        )
-                    )
-            self.disjuncts.append(_Conjunct(coerced, self.cmap, logical))
-
-    def _keep_file(self, path: str, part_vals: dict) -> bool:
-        """OR composition over the DNF (r15): keep the file when ANY
-        conjunct might match a row in it — the kept-file set is the
-        union of per-conjunct kept sets across every skipping tier."""
-        rel = os.path.relpath(path, self.snap)
-        stats = self.file_stats.get(rel) or {}
-        return any(
-            c.keep_file(
-                part_vals, stats, self._phys_types, self._float_phys
+        #: the log entry the planning-time skipping tiers read (file
+        #: stats, bucket layout, bloom declaration, schema types)
+        self.entry = entry
+        #: the where option's DNF — one conjunct per disjunct, literals
+        #: validated and coerced against the committed column types AT
+        #: PARSE time (a string literal on a bigint column would
+        #: otherwise only blow up, or mis-compare, inside an executor
+        #: task); the predicate is their OR, so a file survives
+        #: planning if ANY conjunct might match a row in it and the
+        #: exact row mask is the Kleene-OR of per-conjunct masks.
+        #: Empty = no predicate.
+        self.disjuncts = [
+            conjunct(conds, entry)
+            for conds in (
+                parse_where(options["where"]) if "where" in options else []
             )
-            for c in self.disjuncts
-        )
-
-    def _allowed_bucket_ids(self) -> set[int] | None:
-        """Bucket ids that can satisfy the pushed equality points on a
-        clustered snapshot's bucket column; None = no pruning (not
-        clustered, no equality points, or a (value, type) pair the
-        driver-side hash doesn't cover — conservative as always)."""
-        from ..functions.bucket_hash import bucket_id
-
-        col = self.bucket.get("col")
-        n = int(self.bucket.get("n") or 0)
-        if (
-            not col
-            or n <= 0
-            or self.bucket_type is None
-            or not self.disjuncts
-        ):
-            return None
-        # DNF composition: the allowed set is the UNION of per-conjunct
-        # bucket sets; a conjunct that does not pin the bucket column
-        # (or pins it to an unhashable point) can match ANY bucket —
-        # no pruning at all
-        ids: set[int] = set()
-        for conj in self.disjuncts:
-            pts = conj.point_sets.get(col)
-            if not pts:
-                return None
-            for p in pts:
-                b = bucket_id(p, self.bucket_type, n)
-                if b is None:
-                    return None  # one unhashable point: no prune
-                ids.add(b)
-        return ids
-
-    def _bloom_rejected(self) -> set[str]:
-        """RELATIVE paths of data files whose per-file bloom sidecar
-        proves that NONE of some equality point set's values occur in
-        the indexed column — the planning-time tier that lets a point
-        lookup on a high-cardinality, non-bucket, non-dir column touch
-        O(1) files where wide min/max envelopes keep everything (r14 —
-        VERDICT r13 item 2). Driver-side only: the ``_bloom`` sidecar
-        is tiny metadata, probing reads no data file. Conservative
-        everywhere: no sidecar / unindexed column / a point the bloom
-        key cannot canonicalize (non-integral, non-string) / a file
-        missing from the sidecar all keep the file; bloom false
-        positives only cost a task whose exact Arrow mask yields zero
-        rows — false negatives cannot happen, build and probe share
-        one hash (``operators.txn._bloom_positions``). The probe is
-        additionally gated on the COLUMN's type, not just the
-        literal's (ADVICE r14, medium): the sidecar is built from
-        Spark ``CAST(col AS STRING)`` keys, and only integral and
-        string columns render identically under Python ``str()`` — an
-        integer literal probing a legacy bloom over a double column
-        would hash "5" against keys like "5.0", a guaranteed false
-        negative that prunes files HOLDING matching rows. Commit-time
-        validation now refuses such sidecars (``bloom_by`` on
-        non-integral/non-string columns), and this gate protects
-        tables committed before that check existed. DNF composition
-        (r15): a file is rejected only when EVERY conjunct's bloom
-        evidence rejects it — the intersection of per-conjunct
-        rejections — and a conjunct with no probeable point rejects
-        nothing, vetoing the whole prune."""
-        indexed = set(self.bloom_prop.get("cols") or [])
-        per_conj: list[dict[str, list[str]]] = []
-        from ..operators.txn import _bloom_key, _bloom_positions
-
-        for conj in self.disjuncts:
-            keys: dict[str, list[str]] = {}
-            for c, pts in conj.point_sets.items():
-                if (
-                    c not in indexed
-                    or self._phys_types.get(c) not in _BLOOMABLE_TYPES
-                ):
-                    continue
-                try:
-                    keys[c] = [_bloom_key(p) for p in pts]
-                except TypeError:
-                    continue  # uncanonicalizable point type: no prune
-            if not keys:
-                return set()  # this conjunct can match any file
-            per_conj.append(keys)
-        if not per_conj:
-            return set()
-        import pyarrow.parquet as pq
-
-        try:
-            tbl = pq.read_table(os.path.join(self.snap, "_bloom"))
-        except (FileNotFoundError, OSError):
-            return set()
-        rows = list(
-            zip(
-                tbl.column("file").to_pylist(),
-                tbl.column("col").to_pylist(),
-                tbl.column("m").to_pylist(),
-                tbl.column("k").to_pylist(),
-                tbl.column("bits").to_pylist(),
-            )
-        )
-        rejected: set[str] | None = None
-        for keys in per_conj:
-            rej: set[str] = set()
-            for fn, c, m, k, bits in rows:
-                pts = keys.get(c)
-                if pts is None:
-                    continue
-                if not any(
-                    all(
-                        bits[pos >> 3] & (1 << (pos & 7))
-                        for pos in _bloom_positions(key, m, k)
-                    )
-                    for key in pts
-                ):
-                    rej.add(fn)
-            rejected = rej if rejected is None else rejected & rej
-            if not rejected:
-                return set()
-        return rejected or set()
+        ]
 
     def partitions(self):
-        from ..functions.bucket_hash import file_bucket_id
-
-        allowed_buckets = self._allowed_bucket_ids()
-        bloom_rejected = self._bloom_rejected()
-        parts = []
-        for f in _data_files(self.snap):
-            pv = _partition_values(f, self.snap)
-            if self.disjuncts and not self._keep_file(f, pv):
-                continue
-            if allowed_buckets is not None:
-                fb = file_bucket_id(os.path.basename(f))
-                # a clustered data file without a parseable bucket id
-                # violates the layout contract — keep it (correctness
-                # over skipping), same stance as every other prune
-                if fb is not None and fb not in allowed_buckets:
-                    continue
-            if (
-                bloom_rejected
-                and os.path.relpath(f, self.snap) in bloom_rejected
-            ):
-                continue
-            parts.append(InputPartition((f, pv, True)))
+        kept, _total = kept_files(self.snap, self.entry, self.disjuncts)
+        parts = [
+            InputPartition((f, partition_values(f, self.snap), True))
+            for f in kept
+        ]
         # the _upd delta is churn-sized and carries no per-file stats:
         # always scanned (update_where can move rows into any range)
         parts.extend(
@@ -1429,7 +767,7 @@ class ManifestReader(DataSourceReader):
             dset = pds.dataset(path, format="parquet")
             phys = {f.name: f.type for f in dset.schema}
             dnf = [
-                c.decode_terms(phys, self.cmap) for c in self.disjuncts
+                _decode_terms(c, phys, self.cmap) for c in self.disjuncts
             ]
             tbl = dset.to_table(
                 filter=pq.filters_to_expression(dnf)
@@ -1492,7 +830,7 @@ class ManifestReader(DataSourceReader):
 
             mask = None
             for conj in self.disjuncts:
-                m = conj.mask(tbl, want)
+                m = _conj_mask(conj, tbl, want)
                 mask = m if mask is None else pc.or_kleene(mask, m)
             if mask is not None:
                 tbl = tbl.filter(mask)

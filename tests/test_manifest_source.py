@@ -491,7 +491,7 @@ def test_where_option_is_conservative_on_bools_and_escaped_dir_values(
     assert [r["id"] for r in rows] == [1], rows
     assert rows[0]["grp"] == "a/b", "dir value must surface unescaped"
     # txn-side partition pruning compares the true value too
-    kept, total = mt2._partition_pruned_files("grp", "a/b", "a/b")
+    kept, total = mt2.pruned_files("grp", "a/b", "a/b")
     assert len(kept) == 1 and total == 2
     assert mt2.read_where(spark, {"grp": ("a/b", "a/b")}).count() == 1
 
@@ -1738,8 +1738,9 @@ def test_dv_table_memo_is_per_content_not_per_path(tmp_path):
     """r17 (guide §4.5): the per-worker DV memo must (a) parse a given
     DV file set once — every further task of the same snapshot gets
     the SAME Arrow table object back — and (b) key on file content
-    identity (mtime/size), not path, so a table rebuilt at the same
-    root in one process can never be served a stale vector."""
+    identity, not path, so a table rebuilt at the same root in one
+    process can never be served a stale vector."""
+    import os
     import time
 
     import pyarrow as pa
@@ -1767,3 +1768,150 @@ def test_dv_table_memo_is_per_content_not_per_path(tmp_path):
     t3 = _dv_table((f,))
     assert t3 is not t1
     assert t3.column("id").to_pylist() == [7, 8, 9, 10]
+
+    # a same-SIZE rewrite inside one mtime tick (coarse-mtime
+    # filesystems): (path, mtime, size) are all unchanged, only the
+    # content differs — the memo must still serve the new keys
+    st = os.stat(f)
+    pq.write_table(pa.table({"id": [4, 5, 6, 7]}), f)
+    assert os.path.getsize(f) == st.st_size
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(f).st_mtime_ns == st.st_mtime_ns
+    assert _dv_table((f,)).column("id").to_pylist() == [4, 5, 6, 7]
+
+
+def test_front_ends_keep_identical_files(spark, tmp_path):
+    """Both read front ends run the one pruning core
+    (sources/skipping.py). For every predicate shape the DataFrame API
+    can express — data-column range, `=`, partition-column range, and
+    ranges across an evolved table's spec boundary — the SQL reader's
+    ``partitions()`` and ``pruned_files``/``read_point`` keep the SAME
+    files, and those include every file that really holds a matching
+    row (checked per file with pyarrow)."""
+    import json
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from datapipeline_scraping_spark.sources.manifest_datasource import (
+        ManifestReader,
+    )
+    from datapipeline_scraping_spark.sources.skipping import (
+        data_files,
+        partition_values,
+    )
+
+    def sql_kept(mt, where):
+        entry = mt._log_entry(mt.version())
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        parts = ManifestReader(
+            {"root": mt.root, "where": where}, schema
+        ).partitions()
+        return {p.value[0] for p in parts if p.value[2]}
+
+    def point_files(mt, col, value):
+        df = mt.read_point(spark, col, value)
+        got = {unquote(urlparse(u).path) for u in df.inputFiles()}
+        kept, _total, _indexed = mt.bloom_pruned_files(col, value)
+        assert got == set(kept)
+        return got
+
+    def check(mt, where, pred, df_kept):
+        kept = sql_kept(mt, where)
+        assert kept == set(df_kept), where
+        snap = mt.snapshot_path()
+        holding = {
+            f
+            for f in data_files(snap)
+            if any(
+                pred({**row, **partition_values(f, snap)})
+                for row in pq.read_table(f).to_pylist()
+            )
+        }
+        assert holding and holding <= kept, where
+        return kept
+
+    # hive-partitioned by day, stats on k, bloom on u: 2 x 4 = 8 files
+    flat = ManifestTable(str(tmp_path / "flat"))
+    flat.commit(
+        spark.range(400)
+        .select(
+            F.col("id").alias("k"),
+            F.concat(F.lit("u"), F.col("id")).alias("u"),
+            F.concat(F.lit("d"), F.col("id") % 4).alias("day"),
+        )
+        .repartitionByRange(2, "k"),
+        partition_by=["day"],
+        stats_by=["k"],
+        bloom_by=["u"],
+    )
+    n_files = flat.pruned_files("k")[1]
+    assert n_files >= 8
+    for where, pred, df_kept in [
+        (
+            "k >= 100 AND k <= 180",
+            lambda r: 100 <= r["k"] <= 180,
+            flat.pruned_files("k", 100, 180)[0],
+        ),
+        (
+            "k >= 300",
+            lambda r: r["k"] >= 300,
+            flat.pruned_files("k", 300, None)[0],
+        ),
+        (
+            "day >= 'd1' AND day <= 'd2'",
+            lambda r: "d1" <= r["day"] <= "d2",
+            flat.pruned_files("day", "d1", "d2")[0],
+        ),
+        ("k = 150", lambda r: r["k"] == 150, point_files(flat, "k", 150)),
+        (
+            "u = 'u123'",
+            lambda r: r["u"] == "u123",
+            point_files(flat, "u", "u123"),
+        ),
+        (
+            "day = 'd3'",
+            lambda r: r["day"] == "d3",
+            point_files(flat, "day", "d3"),
+        ),
+    ]:
+        assert len(check(flat, where, pred, df_kept)) < n_files, where
+
+    # the evolved-spec shape: dt-partitioned ids 0..14, evolved to
+    # region, ids 15..29 appended under the new spec
+    evo = ManifestTable(str(tmp_path / "evo"), retention_sec=3600)
+    full = spark.createDataFrame(
+        [
+            ("2024-01-0%d" % (i % 3 + 1), "r%d" % (i % 2), i, float(i))
+            for i in range(30)
+        ],
+        "dt string, region string, id int, v double",
+    )
+    evo.commit(
+        full.filter("id < 15"),
+        partition_by=["dt"],
+        stats_by=["id"],
+        keep_snapshots=50,
+    )
+    evo.evolve_partition(["region"], keep_snapshots=50)
+    evo.append(full.filter("id >= 15"), keep_snapshots=50)
+    for where, pred, df_kept in [
+        (
+            "dt >= '2024-01-01' AND dt <= '2024-01-01'",
+            lambda r: r["dt"] == "2024-01-01",
+            evo.pruned_files("dt", "2024-01-01", "2024-01-01")[0],
+        ),
+        (
+            "region >= 'r0' AND region <= 'r0'",
+            lambda r: r["region"] == "r0",
+            evo.pruned_files("region", "r0", "r0")[0],
+        ),
+        (
+            "id >= 0 AND id <= 3",
+            lambda r: 0 <= r["id"] <= 3,
+            evo.pruned_files("id", 0, 3)[0],
+        ),
+        ("id = 20", lambda r: r["id"] == 20, point_files(evo, "id", 20)),
+    ]:
+        check(evo, where, pred, df_kept)

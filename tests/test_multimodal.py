@@ -82,6 +82,7 @@ def test_extract_media_meta_mixes_real_and_fake(spark):
         (1, make_png(320, 200)),
         (2, make_jpeg(64, 48)),
         (3, b"just some text bytes"),
+        (4, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, blob binary")
     got = {r["doc_id"]: r for r in extract_media_meta(df).collect()}
@@ -90,3 +91,9 @@ def test_extract_media_meta_mixes_real_and_fake(spark):
     n = len(b"just some text bytes")
     assert (got[3]["width"], got[3]["height"]) == (n % 640, (n * 7) % 480)
     assert got[3]["n_bytes"] == n
+    # a NULL blob has NULL metadata, as SQL length(NULL) is NULL
+    assert (got[4]["n_bytes"], got[4]["width"], got[4]["height"]) == (
+        None,
+        None,
+        None,
+    )

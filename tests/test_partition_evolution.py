@@ -104,14 +104,14 @@ def test_read_where_prunes_across_the_spec_boundary(spark, evolved):
     mt, full = evolved
     # dt: partition col of spec-0 (dir prune), data col of spec-1
     # (no dt stats -> conservatively kept)
-    kept, total = mt._partition_pruned_files("dt", "2024-01-01", "2024-01-01")
+    kept, total = mt.pruned_files("dt", "2024-01-01", "2024-01-01")
     assert 0 < len(kept) < total
     got = mt.read_where(spark, {"dt": ("2024-01-01", "2024-01-01")}).filter(
         "dt = '2024-01-01'"
     )
     assert _rows(got) == _rows(full.filter("dt = '2024-01-01'"))
     # region: partition col of spec-1 (dir prune); spec-0 kept
-    kept2, total2 = mt._partition_pruned_files("region", "r0", "r0")
+    kept2, total2 = mt.pruned_files("region", "r0", "r0")
     assert 0 < len(kept2) < total2
     got2 = mt.read_where(spark, {"region": ("r0", "r0")}).filter(
         "region = 'r0'"

@@ -1072,8 +1072,8 @@ def test_where_validation_fails_closed_per_type(spark, col, op, lit):
     try:
         conds = parse_where(f"{col} {op} {lit}")
         # validation/coercion without touching any table — the same
-        # helper ManifestReader.__init__ runs per literal
-        from datapipeline_scraping_spark.sources.manifest_datasource import (
+        # helper the pruning core runs per literal for both front ends
+        from datapipeline_scraping_spark.sources.skipping import (
             _coerce_literal,
         )
 

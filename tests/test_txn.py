@@ -1047,9 +1047,7 @@ def test_read_range_composes_partition_and_stats_pruning(spark, tmp_path):
         stats_by=["k"],
     )
     # partition-column range prunes directories
-    part = tbl._partition_pruned_files("day", "d1", "d2")
-    assert part is not None
-    kept, total = part
+    kept, total = tbl.pruned_files("day", "d1", "d2")
     assert 0 < len(kept) < total
     got = tbl.read_range(spark, "day", "d1", "d2")
     assert set(got.columns) == {"k", "day", "x"}  # partition col back
@@ -1162,26 +1160,69 @@ def test_stat_overlap_boundary_date_vs_timestamp_stat():
     window's hi edge — dropping qualifying rows. The conservative
     truncate-compare must keep such boundary files (and still prune
     genuinely disjoint ones)."""
-    from datapipeline_scraping_spark.operators.txn import _stat_overlaps
+    from decimal import Decimal
+
+    from datapipeline_scraping_spark.sources.skipping import overlaps
 
     # file min == hi bound at day resolution -> MUST keep
-    assert _stat_overlaps(
+    assert overlaps(
         "1997-08-31 00:00:00", "1997-12-01 00:00:00", None, "1997-08-31"
     )
     # file max == lo bound at day resolution -> MUST keep
-    assert _stat_overlaps(
+    assert overlaps(
         "1997-01-01 00:00:00", "1997-06-01 00:00:00", "1997-06-01", None
     )
     # genuinely disjoint stays pruned in both directions
-    assert not _stat_overlaps(
+    assert not overlaps(
         "1997-09-01 00:00:00", "1997-12-01 00:00:00", None, "1997-08-31"
     )
-    assert not _stat_overlaps(
+    assert not overlaps(
         "1997-01-01 00:00:00", "1997-05-31 00:00:00", "1997-06-01", None
     )
     # numeric bounds unaffected
-    assert _stat_overlaps(10, 20, 20, 30)
-    assert not _stat_overlaps(10, 20, 21, 30)
+    assert overlaps(10, 20, 20, 30)
+    assert not overlaps(10, 20, 21, 30)
+    # decimal stats commit as text; a Decimal bound compares them as
+    # Decimal ('12.50' < '9.00' as text would prune the file)
+    assert overlaps("3.00", "12.50", Decimal("9.00"), None)
+    assert not overlaps("3.00", "12.50", Decimal("12.51"), None)
+
+
+def test_decimal_stats_prune_numerically_on_both_front_ends(spark, tmp_path):
+    """Regression: a decimal column's commit-log stats are text
+    (['3.00', '12.50']); the DataFrame path compared them with the
+    bound as text, where '12.50' < '9.00', so read_range(p >= 9.00)
+    and read_where(p = 12.50) pruned the only file and returned no
+    rows. Both front ends share one comparator now and must agree."""
+    from decimal import Decimal
+
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        predicate_view,
+    )
+
+    root = str(tmp_path / "t")
+    tbl = ManifestTable(root)
+    tbl.commit(
+        spark.createDataFrame(
+            [(1, Decimal("3.00")), (2, Decimal("12.50"))],
+            "id long, p decimal(20,2)",
+        ).coalesce(1),
+        stats_by=["p"],
+    )
+    (st,) = tbl._log_entry(1)["file_stats"].values()
+    assert st["p"][:2] == ["3.00", "12.50"]
+    ge = tbl.read_range(spark, "p", Decimal("9.00"), None).filter(
+        "p >= 9.00"
+    )
+    assert [r["id"] for r in ge.collect()] == [2]
+    eq = tbl.read_where(spark, {"p": (12.50, 12.50)}).filter("p = 12.50")
+    assert [r["id"] for r in eq.collect()] == [2]
+    predicate_view(spark, "dec_ge", root, "p >= 9.00")
+    assert spark.sql("SELECT count(*) AS n FROM dec_ge").first()["n"] == 1
+    # a bound that does not fit the column type fails loudly, as the
+    # SQL where option does, instead of silently keeping every file
+    with pytest.raises(ValueError, match="does not match column"):
+        tbl.pruned_files("p", "9.00", None)
 
 
 def test_zorder_prunes_every_listed_dimension(spark, tmp_path):

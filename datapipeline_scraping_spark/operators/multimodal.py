@@ -240,6 +240,9 @@ def extract_features(
         for pdf in batches:
             vecs = []
             for blob in pdf["blob"]:
+                if blob is None:  # SQL NULL in, NULL features out
+                    vecs.append(None)
+                    continue
                 c = hashlib.md5(bytes(blob)).hexdigest()
                 vecs.append(
                     [
@@ -288,6 +291,8 @@ def sample_frames(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_hash": []}
             for doc_id, blob in zip(pdf[id_col], pdf["blob"]):
+                if blob is None:  # a NULL payload has no frames
+                    continue
                 n = len(blob)
                 n_frames = n % 5 + 1
                 stride = n // n_frames

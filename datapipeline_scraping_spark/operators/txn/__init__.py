@@ -87,7 +87,6 @@ from .ingest import (  # noqa: F401
     delta_available,
     merge_write,
     recover_swap,
-    append_files,
     append_files_local,
 )
 from .compact import (  # noqa: F401

@@ -20,10 +20,10 @@ from .stats import (
     _adopt_parts,
     _carry_bloom_sidecar,
     _incremental_stats,
-    _inherited_meta,
     _snapshot_files,
 )
 from .table import ManifestTable
+from .table_core import _carry, _cdf_marker
 
 
 def compact_table(
@@ -177,18 +177,9 @@ def compact_table(
         # cdf_mode="noop": compaction (incl. DV purge — the deletes
         # were already fed by delete_where) preserves logical content;
         # feed readers skip the version instead of paying a diff join.
-        # Table-property meta (declared sort order etc.) inherits like
-        # every other derived-version writer — found by the r13
-        # sequence property test: a plain compaction was silently
-        # DROPPING set_sort_order, so the very maintenance pass that
-        # defaults its rewrite to the declared order un-declared it
-        # for every later append.
-        new_ver = mt.commit(
-            rewritten,
-            expect_version=version,
-            cdf_mode="noop",
-            meta=_inherited_meta(entry),
-        )
+        # commit() carries the table-property meta (declared sort
+        # order, ...) forward, so compaction keeps set_sort_order
+        new_ver = mt.commit(rewritten, expect_version=version, cdf_mode="noop")
     except FileNotFoundError as exc:
         # a racing writer committed and its GC dropped our snapshot
         # mid-rewrite: surface the documented retryable conflict, not
@@ -325,7 +316,7 @@ def compact_small_files(
     if len(small) < 2 or len(small) - n_new < min_gain_files:
         return _no_op(files_before, bytes_before)
 
-    staged = os.path.join(mt.root, f"snap-staging-{uuid.uuid4().hex[:12]}")
+    staged = mt._staging_path()
     try:
         os.makedirs(staged)
         # metadata-only carry: big data files + MoR sidecars hardlink
@@ -353,57 +344,20 @@ def compact_small_files(
         new_rels = _adopt_parts(tmp, staged, "repack")
         file_stats = _incremental_stats(entry, keep, staged, new_rels)
         _carry_bloom_sidecar(spark, entry, snap, staged, keep, new_rels)
-        committed_ver: int | None = None
-        mt._acquire_lock()
-        try:
-            cur = mt._pointer()
-            if cur is None or cur[1] != version:
-                raise ConcurrentWriteError(
-                    f"{root}: version advanced during small-file "
-                    f"compaction (expected {version}) — retry"
-                )
-            new_ver = version + 1
-            snap_new = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(mt.root, snap_new))
-            staged = os.path.join(mt.root, snap_new)
-            mt._write_log(
-                new_ver,
-                snap_new,
-                [],
-                entry.get("schema") or "",
-                meta={**_inherited_meta(entry), "bin_pack": len(small)},
-                stats_cols=entry.get("stats_cols"),
-                file_stats=file_stats,
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),
-                cdf=(
-                    {
-                        "key_cols": list(entry["cdf"]["key_cols"]),
-                        "noop": True,
-                    }
-                    if entry.get("cdf")
-                    else None
-                ),
-                column_map=entry.get("column_map"),
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-            )
-            tmp_ptr = os.path.join(mt.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap_new}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(mt.root, mt.POINTER))
-            mt.last_snapshot = snap_new
-            committed_ver = new_ver
-        finally:
-            mt._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
     except Exception:
         shutil.rmtree(staged, ignore_errors=True)
         raise
-    mt._gc(keep=2)
+    committed_ver = mt._publish(
+        staged,
+        _carry(
+            entry,
+            meta={"bin_pack": len(small)},
+            file_stats=file_stats,
+            cdf=_cdf_marker(entry, "noop"),
+        ),
+        base_version=version,
+        keep_snapshots=2,
+    )
     return {
         "compacted": True,
         "version": committed_ver,
@@ -543,8 +497,7 @@ def compact_clustered(
             "buckets_repacked": 0,
         }
     tmp = os.path.join(mt.root, f".crepack-{uuid.uuid4().hex[:8]}")
-    staged = os.path.join(mt.root, f"snap-staging-{uuid.uuid4().hex[:12]}")
-    committed_ver: int | None = None
+    staged = mt._staging_path()
     try:
         files = [f for b in sorted(affected) for f in groups.get(b, [])]
         if files:
@@ -590,58 +543,25 @@ def compact_clustered(
                 )
             os.rename(os.path.join(tmp, f), os.path.join(staged, f))
             new_files += 1
-        mt._acquire_lock()
-        try:
-            cur = mt._pointer()
-            if cur is None or cur[1] != version:
-                raise ConcurrentWriteError(
-                    f"{root}: version advanced during clustered "
-                    f"compaction (expected {version}) — retry"
-                )
-            new_ver = version + 1
-            snap_new = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(mt.root, snap_new))
-            staged = os.path.join(mt.root, snap_new)
-            mt._write_log(
-                new_ver,
-                snap_new,
-                [],
-                entry["schema"],
-                meta={
-                    **_inherited_meta(entry),
-                    "bucket_repack": len(affected),
-                    # sidecars are materialized by this commit: the
-                    # new entry carries NO dv/mor_delta
-                    **(
-                        {
-                            "mor_folded": {
-                                "dv_keys": int((dv or {}).get("n_keys", 0)),
-                                "upd_rows": int(
-                                    (delta or {}).get("n_rows", 0)
-                                ),
-                            }
-                        }
-                        if (dv or delta)
-                        else {}
-                    ),
-                },
-                bucket=dict(bucket),
-            )
-            tmp_ptr = os.path.join(mt.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap_new}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(mt.root, mt.POINTER))
-            mt.last_snapshot = snap_new
-            committed_ver = new_ver
-        finally:
-            mt._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
+    except Exception:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        if committed_ver is None:
-            shutil.rmtree(staged, ignore_errors=True)
-    mt._gc(keep=keep_snapshots)
+    meta = {"bucket_repack": len(affected)}
+    if dv or delta:
+        meta["mor_folded"] = {
+            "dv_keys": int((dv or {}).get("n_keys", 0)),
+            "upd_rows": int((delta or {}).get("n_rows", 0)),
+        }
+    committed_ver = mt._publish(
+        staged,
+        # the sidecars are materialized by this commit: the new entry
+        # carries NO dv/mor_delta
+        _carry(entry, meta=meta, dv=None, mor_delta=None),
+        base_version=version,
+        keep_snapshots=keep_snapshots,
+    )
     return {
         "compacted": True,
         "version": committed_ver,

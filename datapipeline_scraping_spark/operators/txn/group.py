@@ -68,10 +68,7 @@ def _complete_group_intent(intent: dict) -> None:
                 # superseded the entry — leave the table alone (the
                 # intent is a dead letter for this member)
                 continue
-            tmp_ptr = os.path.join(t.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{m['snapshot']}\n{m['version']}\n")
-            os.replace(tmp_ptr, os.path.join(t.root, t.POINTER))
+            t._swap_pointer(m["snapshot"], m["version"])
         finally:
             t._release_lock()
 
@@ -273,8 +270,6 @@ class TransactionGroup:
         gid = uuid.uuid4().hex[:16]
         staged: dict[str, str] = {}
         logkw: dict[str, dict] = {}
-        schemas: dict[str, str] = {}
-        layouts: dict[str, list[str]] = {}
         base_ver: dict[str, int] = {}  # append members' implicit CAS
         try:
             for t in self.tables:
@@ -331,16 +326,12 @@ class TransactionGroup:
                         f"{t.root}: group write lacks the member's "
                         f"partition columns {missing}"
                     )
-                s = os.path.join(
-                    t.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-                )
+                s = t._staging_path()
                 writer = df.write.mode("overwrite")
                 if part_by:
                     writer = writer.partitionBy(*part_by)
                 writer.parquet(s)
                 staged[rp] = s
-                schemas[rp] = df.schema.json()
-                layouts[rp] = part_by
                 logkw[rp] = dict(
                     partition_by=part_by, schema_json=df.schema.json()
                 )
@@ -399,13 +390,16 @@ class TransactionGroup:
                         f"change feed or CHECK constraints while the "
                         f"group staged — whole group aborted"
                     )
-                if list(live_now.get("partition_by") or []) != layouts[rp]:
+                live_layout = list(live_now.get("partition_by") or [])
+                if live_layout != logkw[rp]["partition_by"]:
                     raise ConcurrentWriteError(
                         f"{t.root}: partition layout changed while the "
                         f"group staged — whole group aborted, re-commit"
                     )
                 new_live = t._live_schema(ops[rp][1].sparkSession)
-                staged_schema = T.StructType.fromJson(json.loads(schemas[rp]))
+                staged_schema = T.StructType.fromJson(
+                    json.loads(logkw[rp]["schema_json"])
+                )
                 if new_live is not None and [
                     (f.name, f.dataType)
                     for f in evolve_schema(new_live, staged_schema).fields
@@ -417,10 +411,12 @@ class TransactionGroup:
             for t in self.tables:
                 ptr = t._pointer()
                 cur = 0 if ptr is None else ptr[1]
-                new_ver = cur + 1
-                snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
                 plan.append(
-                    {"root": t.root, "version": new_ver, "snapshot": snap}
+                    {
+                        "root": t.root,
+                        "version": cur + 1,
+                        "snapshot": t._snapshot_name(cur + 1),
+                    }
                 )
             intent = {"gid": gid, "members": plan}
             for t, m in zip(self.tables, plan):
@@ -447,12 +443,7 @@ class TransactionGroup:
                     json.dump(intent, fh)
                 os.replace(tmp, os.path.join(t.root, GROUP_INTENT))
             for t, m in zip(self.tables, plan):
-                tmp_ptr = os.path.join(
-                    t.root, f".ptr-{uuid.uuid4().hex[:8]}"
-                )
-                with open(tmp_ptr, "w") as fh:
-                    fh.write(f"{m['snapshot']}\n{m['version']}\n")
-                os.replace(tmp_ptr, os.path.join(t.root, t.POINTER))
+                t._swap_pointer(m["snapshot"], m["version"])
                 t.last_snapshot = m["snapshot"]
                 swapped = True
             for t in self.tables:

@@ -9,7 +9,6 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..merge import merge_into
 from .errors import (
@@ -24,10 +23,10 @@ from .layout import (
     _refuse_clustered,
     _spec_dirname,
 )
-from .schema import _apply_map, _phys_schema
 from ...sources.skipping import bloom_bits, data_files
-from .stats import _carry_bloom_rows, _incremental_stats, _inherited_meta
+from .stats import _carry_bloom_rows, _incremental_stats
 from .table import ManifestTable
+from .table_core import _carry
 
 
 def apply_diff(
@@ -222,145 +221,6 @@ def recover_swap(target_path: str) -> bool:
 
 
 
-def append_files(
-    spark: SparkSession,
-    root: str,
-    parts_dir: str,
-    *,
-    meta: dict | None = None,
-    expect_version: int | None = None,
-    keep_snapshots: int = 2,
-) -> int:
-    """APPEND pre-written parquet part files to a :class:`ManifestTable`
-    — the entry point for EXTERNAL writers whose tasks have already
-    materialized the batch (the ``manifest`` SQL datasource's
-    ``INSERT INTO`` / ``df.write.format("manifest").mode("append")``
-    path): the files in ``parts_dir`` are adopted into the new
-    snapshot unchanged, the base hardlinks forward, and every
-    :meth:`ManifestTable.append` contract applies — CHECK constraints
-    validate the batch (one aggregate over it), merge-on-read key
-    collisions refuse, stats/bloom maintain incrementally, the change
-    feed materializes the batch itself.
-
-    The parts must carry the table's PHYSICAL column layout: every
-    part column must exist in the committed schema with the exact
-    same type (missing columns null-fill through the declared-schema
-    read; unknown or retyped columns refuse — an already-written file
-    cannot be aligned). First write on an empty root commits the
-    parts as version 1. Unpartitioned tables only (an external
-    writer's flat parts cannot be adopted into partition dirs)."""
-    tbl = ManifestTable(root)
-    ptr = tbl._pointer()
-    if ptr is None:
-        df = spark.read.parquet(parts_dir)
-        ver = tbl.commit(
-            df,
-            expect_version=expect_version,
-            keep_snapshots=keep_snapshots,
-            meta=meta,
-        )
-        shutil.rmtree(parts_dir, ignore_errors=True)
-        return ver
-    snap_name, version = ptr
-    if expect_version is not None and version != expect_version:
-        raise ConcurrentWriteError(
-            f"{root}: version {version} != expected {expect_version}"
-        )
-    snap = os.path.join(tbl.root, snap_name)
-    if not os.path.isdir(snap):
-        raise ConcurrentWriteError(
-            f"{root}: snapshot {snap_name} vanished before append "
-            f"(concurrent writer + gc) — retry"
-        )
-    entry = tbl._log_entry(version) or {}
-    if entry.get("partition_by"):
-        raise ValueError(
-            f"{root}: append_files targets unpartitioned tables "
-            f"(partitioned layouts append via ManifestTable.append)"
-        )
-    _refuse_clustered(
-        root,
-        entry,
-        "externally-written flat parts cannot join a bucketed "
-        "snapshot. Use append_clustered().",
-    )
-    phys = _phys_schema(entry)
-    incoming = spark.read.parquet(parts_dir)
-    if phys is not None:
-        by_name = {f.name: f.dataType for f in phys.fields}
-        for f in incoming.schema.fields:
-            if f.name not in by_name:
-                raise SchemaEvolutionError(
-                    f"{root}: part column {f.name!r} not in the committed "
-                    f"schema — append_files cannot evolve (files are "
-                    f"already written); use ManifestTable.append"
-                )
-            if f.dataType != by_name[f.name]:
-                raise SchemaEvolutionError(
-                    f"{root}: part column {f.name!r} type "
-                    f"{f.dataType.simpleString()} != committed "
-                    f"{by_name[f.name].simpleString()}"
-                )
-    # the logical view of the batch (for checks / MoR guard / CDF):
-    # declared physical schema (missing columns null-fill), mapped to
-    # logical names
-    reader = spark.read.schema(phys) if phys is not None else spark.read
-    changes_df = _apply_map(reader.parquet(parts_dir), entry)
-    dv = entry.get("dv")
-    if dv:
-        key_cols = list(dv["key_cols"])
-        dv_keys = spark.read.parquet(
-            os.path.join(snap, ManifestTable.DV_DIR)
-        )
-        if (
-            changes_df.join(
-                F.broadcast(dv_keys), on=key_cols, how="left_semi"
-            )
-            .limit(1)
-            .count()
-        ):
-            raise ValueError(
-                f"{root}: append collides with live merge-on-read keys "
-                f"({key_cols}) — compact_table() first"
-            )
-    checks = dict(entry.get("checks") or {})
-    if checks:
-        viol = changes_df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        ~F.coalesce(F.expr(pred), F.lit(True)), 1
-                    ).otherwise(0)
-                ).alias(name)
-                for name, pred in checks.items()
-            ]
-        ).first()
-        bad = {n: viol[n] for n in checks if viol[n]}
-        if bad:
-            raise ConstraintViolationError(
-                f"{root}: CHECK constraint(s) violated, append aborted — "
-                f"rows failing each: {bad} "
-                f"(predicates: { {n: checks[n] for n in bad} })"
-            )
-    target_schema = (
-        T.StructType.fromJson(json.loads(entry["schema"]))
-        if entry.get("schema")
-        else incoming.schema
-    )
-    return tbl._append_parts(
-        spark,
-        parts_dir,
-        entry,
-        version,
-        [],
-        target_schema,
-        changes_df,
-        meta=meta,
-        keep_snapshots=keep_snapshots,
-    )
-
-
-
 def append_files_local(
     root: str,
     parts_dir: str,
@@ -369,10 +229,14 @@ def append_files_local(
     expect_version: int | None = None,
     keep_snapshots: int = 2,
 ) -> int:
-    """:func:`append_files` without a SparkSession — the driver-side
-    commit path of the ``manifest`` SQL datasource's writer, whose
-    Python worker has no JVM gateway. Every append contract is kept
-    with driver-side tools sized to the BATCH, never the table:
+    """APPEND pre-written parquet part files to a :class:`ManifestTable`
+    without a SparkSession — the driver-side commit path of the
+    ``manifest`` SQL datasource's writer (``INSERT INTO`` /
+    ``df.write.format("manifest").mode("append")``), whose Python
+    worker has no JVM gateway. The parts are adopted into the new
+    snapshot unchanged and the base hardlinks forward; every
+    :meth:`ManifestTable.append` contract is kept with driver-side
+    tools sized to the BATCH, never the table:
 
     - schema: each part column must exist in a base data file's
       parquet-arrow schema with the same type (files already written
@@ -455,8 +319,8 @@ def append_files_local(
         if allowed and f.name not in allowed:
             raise SchemaEvolutionError(
                 f"{root}: part column {f.name!r} not in the committed "
-                f"schema — append_files cannot evolve (files are already "
-                f"written); use ManifestTable.append"
+                f"schema — an external append cannot evolve (files are "
+                f"already written); use ManifestTable.append"
             )
     # -- CHECK constraints via DuckDB over the staged parts ---------------
     checks = dict(entry.get("checks") or {})
@@ -515,8 +379,7 @@ def append_files_local(
                         f"keys ({key_cols_l}) — compact_table() first"
                     )
     # -- stage: link base, adopt parts, incremental metadata --------------
-    staged = os.path.join(tbl.root, f"snap-staging-{uuid.uuid4().hex[:12]}")
-    committed_ver: int | None = None
+    staged = tbl._staging_path()
     try:
         os.makedirs(staged)
         keep_rels = []
@@ -613,49 +476,12 @@ def append_files_local(
                     os.path.join(bdir, f"new-{run}.parquet"),
                 )
             _carry_bloom_rows(snap, staged, keep_rels)
-        tbl._acquire_lock()
-        try:
-            cur = tbl._pointer()
-            if cur is None or cur[1] != version:
-                raise ConcurrentWriteError(
-                    f"{root}: version advanced during append "
-                    f"(staged against {version}) — retry"
-                )
-            new_ver = version + 1
-            snap_new = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(tbl.root, snap_new))
-            staged = os.path.join(tbl.root, snap_new)
-            tbl._write_log(
-                new_ver,
-                snap_new,
-                [],
-                entry.get("schema") or "",
-                meta={**_inherited_meta(entry), **(meta or {})},
-                stats_cols=entry.get("stats_cols"),
-                file_stats=file_stats,
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),
-                cdf=cdf_entry,
-                specs=entry.get("specs"),
-                column_map=entry.get("column_map"),
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-            )
-            tmp_ptr = os.path.join(tbl.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap_new}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(tbl.root, tbl.POINTER))
-            tbl.last_snapshot = snap_new
-            committed_ver = new_ver
-        finally:
-            tbl._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
     except Exception:
-        if committed_ver is None:
-            shutil.rmtree(staged, ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
         raise
-    tbl._gc(keep=keep_snapshots)
-    return committed_ver
+    return tbl._publish(
+        staged,
+        _carry(entry, meta=meta, file_stats=file_stats, cdf=cdf_entry),
+        base_version=version,
+        keep_snapshots=keep_snapshots,
+    )

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 
+from ...sources.manifest_log import LOG_DIR, POINTER
 from .layout import BLOOM_DIR, CDF_DIR, DV_DIR, UPD_DIR
 from .table_cluster import _ClusterMixin
 from .table_commit import _CommitMixin
@@ -77,11 +78,9 @@ class ManifestTable(
     pure count-based GC for scratch tables."""
 
 
-    POINTER = "CURRENT"
-    POINTER = "CURRENT"
+    POINTER = POINTER
     LOCK = "COMMIT_LOCK"
-    LOCK = "COMMIT_LOCK"
-    LOG_DIR = "_log"
+    LOG_DIR = LOG_DIR
     #: deletion-vector sidecar dir INSIDE a snapshot: underscore-
     #: prefixed so Hadoop/Spark parquet listing treats it as hidden
     DV_DIR = DV_DIR

@@ -18,14 +18,10 @@ from .errors import (
     SnapshotExpiredError,
 )
 from .layout import _bucket_id, _link_tree, _location_matches, _write_bucketed
-from .stats import _inherited_meta
+from .table_core import _carry
 
 class _ClusterMixin:
-    """Hash-clustered (bucketed) snapshots: layout-preserving commit/append and the catalog adoption dance.
-
-    Split from the monolithic operators/txn.py in r14 (VERDICT r13
-    item 6) — methods are verbatim; behavior is pinned by the full
-    suite and the 195-query oracle gate."""
+    """Hash-clustered (bucketed) snapshots: layout-preserving commit/append and the catalog adoption dance."""
 
 
     def commit_clustered(
@@ -71,66 +67,39 @@ class _ClusterMixin:
                 f"feed or CHECK constraints would skip them — use commit()"
             )
         sort_col = sorted_by or bucket_col
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         os.makedirs(self.root, exist_ok=True)
         _write_bucketed(spark, df, bucket_col, int(n_buckets), sort_col, staged)
-        schema_json = df.schema.json()
-        committed = False
-        self._acquire_lock()
-        try:
-            ptr = self._pointer()
-            cur = 0 if ptr is None else ptr[1]
-            if expect_version is not None and cur != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {cur} != expected "
-                    f"{expect_version}"
-                )
-            # re-run the feed/constraint guard against the LIVE entry
-            # inside the lock (ADVICE r10 TOCTOU): a concurrent commit
-            # that enabled cdf_keys or checks in the staging window
-            # must not be followed by a clustered commit that silently
-            # skips feed materialization and validation. Raising here
-            # cleans the staged dir via the finally below.
-            live_now = self._log_entry(cur) or {}
-            if (live_now.get("cdf") or {}).get("key_cols") or live_now.get(
-                "checks"
-            ):
-                raise ValueError(
-                    f"{self.root}: a concurrent commit enabled the change "
-                    f"feed or CHECK constraints while the clustered "
-                    f"snapshot staged — commit_clustered would skip them; "
-                    f"use commit()"
-                )
-            new_ver = cur + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)
-            self._write_log(
-                new_ver,
-                snap,
-                [],
-                schema_json,
+        return self._publish(
+            staged,
+            dict(
+                partition_by=[],
+                schema_json=df.schema.json(),
                 meta=meta,
                 bucket={
                     "col": bucket_col,
                     "n": int(n_buckets),
                     "sorted_by": sort_col,
                 },
+            ),
+            expect_version=expect_version,
+            validate=self._refuse_governed,
+            keep_snapshots=keep_snapshots,
+        )
+
+    def _refuse_governed(self, _cur_ver: int, live: dict) -> bool:
+        """In-lock re-run of the clustered writers' feed/constraint
+        guard (ADVICE r10 TOCTOU): a concurrent commit that enabled
+        cdf_keys or checks in the staging window must not be followed
+        by a clustered commit that silently skips feed materialization
+        and validation."""
+        if (live.get("cdf") or {}).get("key_cols") or live.get("checks"):
+            raise ValueError(
+                f"{self.root}: a concurrent commit enabled the change "
+                f"feed or CHECK constraints while the clustered snapshot "
+                f"staged — clustered writes would skip them; use commit()"
             )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed = True
-        finally:
-            self._release_lock()
-            if not committed:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return new_ver
+        return True
 
 
     def read_clustered(
@@ -292,58 +261,16 @@ class _ClusterMixin:
         entry, version, snap = self._prepare_clustered_append(
             spark, df, expect_version=expect_version
         )
-        staged: str | None = None
-        committed_ver: int | None = None
-        try:
-            staged, kw = self._stage_clustered_append(
-                spark, df, entry, snap, meta=meta
-            )
-            self._acquire_lock()
-            try:
-                cur = self._pointer()
-                if cur is None or cur[1] != version:
-                    raise ConcurrentWriteError(
-                        f"{self.root}: version advanced during clustered "
-                        f"append (staged against {version}) — retry"
-                    )
-                live_now = self._log_entry(cur[1]) or {}
-                if (live_now.get("cdf") or {}).get("key_cols") or live_now.get(
-                    "checks"
-                ):
-                    raise ValueError(
-                        f"{self.root}: a concurrent commit enabled the "
-                        f"change feed or CHECK constraints — clustered "
-                        f"append would skip them"
-                    )
-                new_ver = version + 1
-                snap_new = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-                os.rename(staged, os.path.join(self.root, snap_new))
-                staged = os.path.join(self.root, snap_new)
-                self._write_log(
-                    new_ver,
-                    snap_new,
-                    kw.pop("partition_by"),
-                    kw.pop("schema_json"),
-                    **kw,
-                )
-                tmp_ptr = os.path.join(
-                    self.root, f".ptr-{uuid.uuid4().hex[:8]}"
-                )
-                with open(tmp_ptr, "w") as fh:
-                    fh.write(f"{snap_new}\n{new_ver}\n")
-                os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-                self.last_snapshot = snap_new
-                committed_ver = new_ver
-            finally:
-                self._release_lock()
-                if committed_ver is None:
-                    shutil.rmtree(staged, ignore_errors=True)
-        except Exception:
-            if committed_ver is None and staged:
-                shutil.rmtree(staged, ignore_errors=True)
-            raise
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+        staged, fields = self._stage_clustered_append(
+            spark, df, entry, snap, meta=meta
+        )
+        return self._publish(
+            staged,
+            fields,
+            base_version=version,
+            validate=self._refuse_governed,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def _prepare_clustered_append(
@@ -438,9 +365,7 @@ class _ClusterMixin:
             spark, df, bucket["col"], int(bucket["n"]),
             bucket["sorted_by"], tmp,
         )
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         try:
             os.makedirs(staged)
             for f in os.listdir(snap):
@@ -475,11 +400,4 @@ class _ClusterMixin:
             raise
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        return staged, dict(
-            partition_by=[],
-            schema_json=entry["schema"],
-            meta={**_inherited_meta(entry), **(meta or {})},
-            bucket=dict(bucket),
-            dv=entry.get("dv"),
-            mor_delta=entry.get("mor_delta"),
-        )
+        return staged, _carry(entry, meta=meta)

@@ -28,13 +28,10 @@ from .stats import (
     _write_bloom_sidecar,
     collect_file_stats,
 )
+from .table_core import _carry
 
 class _CommitMixin:
-    """Full-snapshot commit and incremental append, including staging, stats/bloom builds, and the CAS pointer swap.
-
-    Split from the monolithic operators/txn.py in r14 (VERDICT r13
-    item 6) — methods are verbatim; behavior is pinned by the full
-    suite and the 195-query oracle gate."""
+    """Full-snapshot commit and incremental append, including staging and stats/bloom builds."""
 
 
     def commit(
@@ -239,7 +236,7 @@ class _CommitMixin:
                 )
             else:
                 cdf_prop = list(want_cdf_keys)
-            staged = f"snap-staging-{uuid.uuid4().hex[:12]}"
+            staged = self._staging_path()
             obs = None
             df_w = df
             if checks:
@@ -258,13 +255,11 @@ class _CommitMixin:
             writer = df_w.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            writer.parquet(os.path.join(self.root, staged))
+            writer.parquet(staged)
             if obs is not None:
                 bad = {n: v for n, v in obs.get.items() if v}
                 if bad:
-                    shutil.rmtree(
-                        os.path.join(self.root, staged), ignore_errors=True
-                    )
+                    shutil.rmtree(staged, ignore_errors=True)
                     raise ConstraintViolationError(
                         f"{self.root}: CHECK constraint(s) violated, "
                         f"commit aborted — rows failing each: {bad} "
@@ -277,8 +272,7 @@ class _CommitMixin:
                     cdf_entry = {"key_cols": cdf_prop, "noop": True}
                 else:
                     spark = df.sparkSession
-                    staged_path = os.path.join(self.root, staged)
-                    new_state = spark.read.parquet(staged_path)
+                    new_state = spark.read.parquet(staged)
                     if ptr is None and not partition_by:
                         # the initial load is all-insert BY DEFINITION:
                         # writing an insert sidecar would double the
@@ -306,7 +300,7 @@ class _CommitMixin:
                                 new_state,
                                 cdf_prop,
                             )
-                        cdf_path = os.path.join(staged_path, self.CDF_DIR)
+                        cdf_path = os.path.join(staged, self.CDF_DIR)
                         changes.withColumn(
                             "_commit_version", F.lit(base_ver + 1).cast("long")
                         ).write.mode("overwrite").parquet(cdf_path)
@@ -328,9 +322,7 @@ class _CommitMixin:
                         }
             schema_json = df.schema.json()
             file_stats = (
-                collect_file_stats(os.path.join(self.root, staged), stats_cols)
-                if stats_cols
-                else None
+                collect_file_stats(staged, stats_cols) if stats_cols else None
             )
             # per-file bloom index (inherited like stats_by; cols that
             # no longer exist after a drop/re-schema fall away quietly)
@@ -341,106 +333,59 @@ class _CommitMixin:
             ]
             bloom_entry = None
             if bloom_cols:
-                _write_bloom_sidecar(
-                    df.sparkSession,
-                    os.path.join(self.root, staged),
-                    bloom_cols,
-                    fpp,
-                )
+                _write_bloom_sidecar(df.sparkSession, staged, bloom_cols, fpp)
                 bloom_entry = {"cols": bloom_cols, "fpp": fpp}
-            committed_ver: int | None = None
-            self._acquire_lock()
-            try:
-                ptr = self._pointer()
-                cur_ver = 0 if ptr is None else ptr[1]
-                if expect_version is not None and cur_ver != expect_version:
-                    shutil.rmtree(
-                        os.path.join(self.root, staged), ignore_errors=True
-                    )
-                    raise ConcurrentWriteError(
-                        f"{self.root}: version {cur_ver} != expected "
-                        f"{expect_version}"
-                    )
-                restage = False
-                if (
-                    cdf_entry is not None
-                    and "n_changes" in cdf_entry
-                    and cur_ver != base_ver
-                ):
+
+            def revalidate(cur_ver: int, live: dict) -> bool:
+                """False = restage against the new live version."""
+                if cur_ver == base_ver:
+                    return True
+                if cdf_entry is not None and "n_changes" in cdf_entry:
                     # the materialized feed was diffed against a
                     # version this commit no longer supersedes —
                     # committing it would record the racing writer's
-                    # changes as this commit's (or lose them). Restage
-                    # so the feed is exact against the real base.
-                    restage = True
-                if not restage and expect_version is None and cur_ver != base_ver:
-                    # an unconditional commit whose evolution /
-                    # inheritance base is stale: re-check against the
-                    # NEW live state. Proceed only if the staged
-                    # snapshot already subsumes it (same columns after
-                    # re-evolution, same partition layout); otherwise
-                    # restage outside the lock.
-                    new_prev = self._log_entry(cur_ver)
-                    if want_partition_by is None:
-                        inherited = (
-                            list(new_prev.get("partition_by") or [])
-                            if new_prev
-                            else []
-                        )
-                        restage = inherited != partition_by
-                    if not restage and schema_mode == "evolve":
-                        new_live = self._live_schema(df.sparkSession)
-                        restage = new_live is not None and _shape(
-                            evolve_schema(new_live, df.schema)
-                        ) != _shape(df.schema)
-                if not restage:
-                    new_ver = cur_ver + 1
-                    snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-                    os.rename(
-                        os.path.join(self.root, staged),
-                        os.path.join(self.root, snap),
-                    )
-                    # log BEFORE the pointer swap: a crash in between
-                    # leaves an unpointed intent entry this version
-                    # number's retry overwrites; a crash after leaves a
-                    # fully consistent log
-                    self._write_log(
-                        new_ver,
-                        snap,
-                        partition_by,
-                        schema_json,
-                        # table-PROPERTY meta (declared sort order)
-                        # inherits from the superseded entry exactly
-                        # like stats_by/bloom_by/checks/cdf_keys do,
-                        # caller's meta winning per key — centralized
-                        # here after the r15 writer x sidecar matrix
-                        # found merge_write and publish_from's rebase
-                        # fold (both plain-commit callers) silently
-                        # dropping set_sort_order; operational keys
-                        # (epoch, predicates, provenance) never carry
-                        meta={**_inherited_meta(prev), **(meta or {})},
-                        stats_cols=stats_cols,
-                        file_stats=file_stats,
-                        checks=checks,
-                        cdf=cdf_entry,
-                        bloom=bloom_entry,
-                    )
-                    tmp_ptr = os.path.join(
-                        self.root, f".ptr-{uuid.uuid4().hex[:8]}"
-                    )
-                    with open(tmp_ptr, "w") as fh:
-                        fh.write(f"{snap}\n{new_ver}\n")
-                    os.replace(
-                        tmp_ptr, os.path.join(self.root, self.POINTER)
-                    )
-                    self.last_snapshot = snap
-                    committed_ver = new_ver
-            finally:
-                self._release_lock()
+                    # changes as this commit's (or lose them)
+                    return False
+                if expect_version is not None:
+                    return True
+                # an unconditional commit whose evolution / inheritance
+                # base is stale: proceed only if the staged snapshot
+                # already subsumes the NEW live state (same partition
+                # layout, same columns after re-evolution)
+                if want_partition_by is None and partition_by != list(
+                    live.get("partition_by") or []
+                ):
+                    return False
+                if schema_mode != "evolve":
+                    return True
+                new_live = self._live_schema(df.sparkSession)
+                return new_live is None or _shape(
+                    evolve_schema(new_live, df.schema)
+                ) == _shape(df.schema)
+
+            committed_ver = self._publish(
+                staged,
+                dict(
+                    partition_by=partition_by,
+                    schema_json=schema_json,
+                    # table-PROPERTY meta (declared sort order) inherits
+                    # from the superseded entry exactly like stats_by/
+                    # bloom_by/checks/cdf_keys do, caller's meta winning
+                    # per key; operational keys (epoch, predicates,
+                    # provenance) never carry
+                    meta={**_inherited_meta(prev), **(meta or {})},
+                    stats_cols=stats_cols,
+                    file_stats=file_stats,
+                    checks=checks,
+                    cdf=cdf_entry,
+                    bloom=bloom_entry,
+                ),
+                expect_version=expect_version,
+                validate=revalidate,
+                keep_snapshots=keep_snapshots,
+            )
             if committed_ver is not None:
-                self._gc(keep=keep_snapshots)
                 return committed_ver
-            shutil.rmtree(os.path.join(self.root, staged), ignore_errors=True)
         raise ConcurrentWriteError(
             f"{self.root}: live version kept advancing during evolve/"
             f"inheritance re-validation (5 restage attempts)"
@@ -690,14 +635,12 @@ class _CommitMixin:
         snapshot forward, adopt the pre-written part files out of
         ``tmp``, maintain stats/bloom incrementally, and materialize
         the insert-only change feed from ``changes_df``. Returns
-        ``(staged_dir, _write_log kwargs)`` — the caller owns the
+        ``(staged_dir, _publish fields)`` — the caller owns the
         lock/CAS/pointer tail (single-table: :meth:`_append_parts`;
         multi-table: :meth:`TransactionGroup.commit`'s append-shaped
         members, r12) and must remove ``staged_dir`` on failure."""
         snap = os.path.join(self.root, entry["snapshot"])
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         os.makedirs(staged)
         keep_rels: list[str] = []
         for r, dirs, fs in os.walk(snap):
@@ -721,10 +664,7 @@ class _CommitMixin:
             sp = os.path.join(snap, side)
             if os.path.isdir(sp):
                 _link_tree(sp, os.path.join(staged, side))
-        # insert-only change feed: the appended rows ARE the
-        # changes. Written BEFORE the parts are adopted — an
-        # external writer's changes_df (append_files) reads the
-        # part files at their pre-adoption location
+        # insert-only change feed: the appended rows ARE the changes
         cdf_prop = list((entry.get("cdf") or {}).get("key_cols") or [])
         cdf_entry = None
         if cdf_prop:
@@ -754,22 +694,13 @@ class _CommitMixin:
             new_rels = _adopt_parts(tmp, staged, "append")
         file_stats = _incremental_stats(entry, keep_rels, staged, new_rels)
         _carry_bloom_sidecar(spark, entry, snap, staged, keep_rels, new_rels)
-        return staged, dict(
+        return staged, _carry(
+            entry,
             partition_by=partition_by,
             schema_json=target_schema.json(),
-            meta={**_inherited_meta(entry), **(meta or {})},
-            stats_cols=entry.get("stats_cols"),
+            meta=meta,
             file_stats=file_stats,
-            checks=entry.get("checks"),
-            dv=entry.get("dv"),
-            cdf=cdf_entry
-            or ({"key_cols": cdf_prop, "noop": True} if cdf_prop else None),
-            column_map=entry.get("column_map"),
-            mor_delta=entry.get("mor_delta"),
-            dropped=entry.get("dropped"),
-            added=entry.get("added"),
-            bloom=entry.get("bloom"),
-            specs=specs,
+            cdf=cdf_entry,
         )
 
 
@@ -786,17 +717,13 @@ class _CommitMixin:
         meta: dict | None,
         keep_snapshots: int,
     ) -> int:
-        """The add-file commit tail shared by :meth:`append` (batch
-        written by this method's caller) and :func:`append_files`
-        (parts pre-written by an external writer, e.g. the SQL
-        datasource): link the base snapshot forward, adopt the part
-        files, maintain stats/bloom incrementally, materialize the
-        insert-only change feed from ``changes_df``, and CAS-commit
-        against ``version``."""
-        staged: str | None = None
-        committed_ver: int | None = None
+        """The add-file commit behind :meth:`append`: link the base
+        snapshot forward, adopt the part files written to ``tmp``,
+        maintain stats/bloom incrementally, materialize the insert-only
+        change feed from ``changes_df``, and CAS-commit against
+        ``version``."""
         try:
-            staged, kw = self._stage_append_parts(
+            staged, fields = self._stage_append_parts(
                 spark,
                 tmp,
                 entry,
@@ -806,41 +733,8 @@ class _CommitMixin:
                 changes_df,
                 meta=meta,
             )
-            self._acquire_lock()
-            try:
-                cur = self._pointer()
-                if cur is None or cur[1] != version:
-                    raise ConcurrentWriteError(
-                        f"{self.root}: version advanced during append "
-                        f"(staged against {version}) — retry"
-                    )
-                new_ver = version + 1
-                snap_new = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-                os.rename(staged, os.path.join(self.root, snap_new))
-                staged = os.path.join(self.root, snap_new)
-                self._write_log(
-                    new_ver,
-                    snap_new,
-                    kw.pop("partition_by"),
-                    kw.pop("schema_json"),
-                    **kw,
-                )
-                tmp_ptr = os.path.join(
-                    self.root, f".ptr-{uuid.uuid4().hex[:8]}"
-                )
-                with open(tmp_ptr, "w") as fh:
-                    fh.write(f"{snap_new}\n{new_ver}\n")
-                os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-                self.last_snapshot = snap_new
-                committed_ver = new_ver
-            finally:
-                self._release_lock()
-                if committed_ver is None:
-                    shutil.rmtree(staged, ignore_errors=True)
-        except Exception:
+        finally:
             shutil.rmtree(tmp, ignore_errors=True)
-            if committed_ver is None and staged:
-                shutil.rmtree(staged, ignore_errors=True)
-            raise
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+        return self._publish(
+            staged, fields, base_version=version, keep_snapshots=keep_snapshots
+        )

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -12,14 +11,10 @@ from pyspark.sql import functions as F
 from .errors import ConcurrentWriteError, ConstraintViolationError
 from .layout import _link_tree
 from .schema import _apply_map, _snap_read, align_to_schema
-from .stats import _inherited_meta
+from .table_core import _carry
 
 class _DmlMixin:
-    """Merge-on-read DML: delete_where / update_where over deletion vectors and the _upd post-image delta, with CAS retry.
-
-    Split from the monolithic operators/txn.py in r14 (VERDICT r13
-    item 6) — methods are verbatim; behavior is pinned by the full
-    suite and the 195-query oracle gate."""
+    """Merge-on-read DML: delete_where / update_where over deletion vectors and the _upd post-image delta, with CAS retry."""
 
 
     def delete_where(
@@ -161,9 +156,7 @@ class _DmlMixin:
             fresh = fresh.unionByName(
                 spark.read.parquet(os.path.join(src, self.DV_DIR))
             ).distinct()
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         new_delta_entry: dict | None = None
         try:
             _link_tree(
@@ -224,61 +217,19 @@ class _DmlMixin:
         except Exception:
             shutil.rmtree(staged, ignore_errors=True)
             raise
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            now = self._pointer()
-            live_ver = 0 if now is None else now[1]
-            if expect_version is not None and live_ver != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {live_ver} != expected "
-                    f"{expect_version}"
-                )
-            if live_ver != cur_ver:
-                # the vector was built against a superseded snapshot —
-                # committing it would silently undo the racing writer
-                raise ConcurrentWriteError(
-                    f"{self.root}: table advanced {cur_ver} -> {live_ver} "
-                    f"during delete_where — re-run against the new head"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                list(entry.get("partition_by") or []),
-                entry.get("schema"),
-                meta={
-                    **_inherited_meta(entry),
-                    "delete_predicate": str(condition),
-                },
-                stats_cols=entry.get("stats_cols"),
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
+        return self._publish(
+            staged,
+            _carry(
+                entry,
+                meta={"delete_predicate": str(condition)},
                 dv={"key_cols": list(key_cols), "n_keys": n_keys},
                 cdf=cdf_entry,
-                column_map=entry.get("column_map"),
                 mor_delta=new_delta_entry,
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-                bucket=entry.get("bucket"),
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+            ),
+            expect_version=expect_version,
+            base_version=cur_ver,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def update_where(
@@ -405,9 +356,7 @@ class _DmlMixin:
                     f"update_where post-images, commit aborted — rows "
                     f"failing each: {bad_checks}"
                 )
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         try:
             _link_tree(
                 src,
@@ -476,56 +425,16 @@ class _DmlMixin:
         except Exception:
             shutil.rmtree(staged, ignore_errors=True)
             raise
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            now = self._pointer()
-            live_ver = 0 if now is None else now[1]
-            if expect_version is not None and live_ver != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {live_ver} != expected "
-                    f"{expect_version}"
-                )
-            if live_ver != cur_ver:
-                raise ConcurrentWriteError(
-                    f"{self.root}: table advanced {cur_ver} -> {live_ver} "
-                    f"during update_where — re-run against the new head"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                list(entry.get("partition_by") or []),
-                entry.get("schema"),
-                meta={
-                    **_inherited_meta(entry),
-                    "update_predicate": str(condition),
-                },
-                stats_cols=entry.get("stats_cols"),
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
+        return self._publish(
+            staged,
+            _carry(
+                entry,
+                meta={"update_predicate": str(condition)},
                 dv={"key_cols": list(key_cols), "n_keys": n_keys},
                 cdf=cdf_entry,
-                column_map=entry.get("column_map"),
                 mor_delta={"n_rows": n_delta} if n_delta else None,
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-                bucket=entry.get("bucket"),
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+            ),
+            expect_version=expect_version,
+            base_version=cur_ver,
+            keep_snapshots=keep_snapshots,
+        )

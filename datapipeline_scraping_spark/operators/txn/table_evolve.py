@@ -25,14 +25,10 @@ from .layout import (
     _spec_dirname,
     _spec_partition_cols,
 )
-from .stats import _inherited_meta
+from .table_core import _carry, _cdf_marker
 
 class _EvolveMixin:
-    """Table evolution and lifecycle: metadata-only column ops, partition-spec evolution, restore/clone/publish/drop.
-
-    Split from the monolithic operators/txn.py in r14 (VERDICT r13
-    item 6) — methods are verbatim; behavior is pinned by the full
-    suite and the 195-query oracle gate."""
+    """Table evolution and lifecycle: metadata-only column ops, partition-spec evolution, restore/clone/publish/drop."""
 
 
     def restore(
@@ -74,9 +70,7 @@ class _EvolveMixin:
                 f"{self.root}: version {version} snapshot was garbage-"
                 f"collected; restore needs its files (raise retention)"
             )
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         try:
             # the source's _cdf holds ITS version's change rows — a
             # restore is a new version whose changes (an un-diffed
@@ -90,65 +84,19 @@ class _EvolveMixin:
                 f"{self.root}: version {version} snapshot vanished during "
                 f"restore (concurrent GC) — retry or raise retention"
             ) from exc
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            ptr = self._pointer()
-            cur_ver = 0 if ptr is None else ptr[1]
-            if expect_version is not None and cur_ver != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {cur_ver} != expected "
-                    f"{expect_version}"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                list(entry.get("partition_by") or []),
-                entry.get("schema"),
-                meta={**_inherited_meta(entry), "restore_of": version},
-                stats_cols=entry.get("stats_cols"),
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),  # restored files include its _dv
-                # a clustered version restores AS clustered: the
-                # hardlinked files keep their bucket-id names, so the
-                # spec must ride the new entry or read_clustered would
-                # refuse the rolled-back head (r12 — rollback after a
-                # bad clustered DML is the natural restore flow)
-                bucket=entry.get("bucket"),
-                cdf=(
-                    {
-                        "key_cols": list(entry["cdf"]["key_cols"]),
-                        "break": True,
-                    }
-                    if entry.get("cdf")
-                    else None
-                ),
-                column_map=entry.get("column_map"),
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-                # an evolved version restores WITH its spec history
-                # (the hardlinked tree keeps its spec-<id> subdirs)
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+        return self._publish(
+            staged,
+            # a clustered version restores AS clustered and an evolved one
+            # WITH its spec history: the hardlinked tree keeps its
+            # bucket-id file names and spec-<id> subdirs
+            _carry(
+                entry,
+                meta={"restore_of": version},
+                cdf=_cdf_marker(entry, "break"),
+            ),
+            expect_version=expect_version,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def drop(self) -> bool:
@@ -233,9 +181,7 @@ class _EvolveMixin:
                 f"clone over it"
             )
         os.makedirs(dest.root, exist_ok=True)
-        staged = os.path.join(
-            dest.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = dest._staging_path()
         try:
             _link_tree(src, staged, skip_top=(self.CDF_DIR,))
         except FileNotFoundError as exc:
@@ -244,60 +190,24 @@ class _EvolveMixin:
                 f"{self.root}: version {version} snapshot vanished during "
                 f"clone (concurrent GC) — retry or raise retention"
             ) from exc
-        committed = False
-        dest._acquire_lock()
-        try:
-            if dest._pointer() is not None:
+
+        def refuse_committed(cur_ver: int, _live: dict) -> bool:
+            if cur_ver:
                 raise FileExistsError(
                     f"{dest.root}: a concurrent writer committed first — "
                     f"refusing to clone over it"
                 )
-            snap = f"snap-{1:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(dest.root, snap))
-            staged = os.path.join(dest.root, snap)  # for error cleanup
-            dest._write_log(
-                1,
-                snap,
-                list(entry.get("partition_by") or []),
-                entry.get("schema"),
-                meta={
-                    **_inherited_meta(entry),
-                    "clone_of": {"root": self.root, "version": version},
-                },
-                stats_cols=entry.get("stats_cols"),
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),  # linked files include its _dv
-                # a clustered source clones AS clustered (bucket-id
-                # file names ride the hardlinks; the clone adopts its
-                # own catalog entries under its own root tag) — r12
-                bucket=entry.get("bucket"),
-                cdf=(
-                    {
-                        "key_cols": list(entry["cdf"]["key_cols"]),
-                        "break": True,
-                    }
-                    if entry.get("cdf")
-                    else None
-                ),
-                column_map=entry.get("column_map"),
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-                # an evolved source clones WITH its spec history
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(dest.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n1\n")
-            os.replace(tmp_ptr, os.path.join(dest.root, dest.POINTER))
-            dest.last_snapshot = snap
-            committed = True
-        finally:
-            dest._release_lock()
-            if not committed:
-                shutil.rmtree(staged, ignore_errors=True)
+            return True
+
+        dest._publish(
+            staged,
+            _carry(
+                entry,
+                meta={"clone_of": {"root": self.root, "version": version}},
+                cdf=_cdf_marker(entry, "break"),
+            ),
+            validate=refuse_committed,
+        )
         return dest
 
 
@@ -552,15 +462,13 @@ class _EvolveMixin:
             kept = b.join(g, cond, "left_anti")
             result = kept.unionByName(post, allowMissingColumns=True)
             try:
+                # commit() carries main's table-property meta (the
+                # declared sort order, ...) forward itself
                 ver = self.commit(
                     result,
                     expect_version=head,
                     keep_snapshots=keep_snapshots,
-                    # table-property meta (declared sort order, ...)
-                    # rides the rebase fold like every other derived
-                    # commit — found by the r15 writer x sidecar
-                    # matrix: the rebase path dropped set_sort_order
-                    meta={**_inherited_meta(live), **pub_meta},
+                    meta=pub_meta,
                 )
             except ConcurrentWriteError:
                 continue  # a racing writer advanced main: re-fold
@@ -605,9 +513,7 @@ class _EvolveMixin:
                 f"garbage-collected mid-publish — raise the branch's "
                 f"retention"
             )
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         try:
             _link_tree(src_snap, staged, skip_top=(self.CDF_DIR,))
         except FileNotFoundError as exc:
@@ -616,50 +522,88 @@ class _EvolveMixin:
                 f"{src.root}: snapshot vanished during publish "
                 f"(concurrent GC) — retry or raise retention"
             ) from exc
-        committed = False
-        self._acquire_lock()
-        try:
-            ptr = self._pointer()
-            cur = 0 if ptr is None else ptr[1]
-            if cur != expect_version:
-                return None
-            new_ver = cur + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)
-            self._write_log(
-                new_ver,
-                snap,
-                list(src_entry.get("partition_by") or []),
-                src_entry.get("schema"),
-                meta={**_inherited_meta(src_entry), **meta},
-                stats_cols=src_entry.get("stats_cols"),
-                file_stats=src_entry.get("file_stats"),
-                checks=src_entry.get("checks"),
-                dv=src_entry.get("dv"),
-                column_map=src_entry.get("column_map"),
-                mor_delta=src_entry.get("mor_delta"),
-                dropped=src_entry.get("dropped"),
-                added=src_entry.get("added"),
-                bloom=src_entry.get("bloom"),
-                # an adopted clustered branch head keeps its layout
-                # (bucket ids ride the hardlinked file names) — r12
-                bucket=src_entry.get("bucket"),
-                # an adopted evolved branch head keeps its spec history
-                specs=src_entry.get("specs"),
+        # an adopted clustered / evolved branch head keeps its bucket
+        # layout and spec history (both ride the hardlinked tree)
+        return self._publish(
+            staged,
+            _carry(src_entry, meta=meta),
+            validate=lambda cur_ver, _live: cur_ver == expect_version,
+            keep_snapshots=keep_snapshots,
+        )
+
+
+    def _alter_base(self) -> tuple[str, int, dict, T.StructType]:
+        """Live ``(snapshot dirname, version, entry, logical schema)`` a
+        metadata-only column change derives its commit from."""
+        ptr = self._pointer()
+        if ptr is None:
+            raise FileNotFoundError(f"no committed snapshot under {self.root}")
+        entry = self._log_entry(ptr[1]) or {}
+        _refuse_clustered(
+            self.root,
+            entry,
+            "metadata-only column changes do not propagate through "
+            "the bucketed catalog scan. Re-cluster with "
+            "commit_clustered(read(...), ...) carrying the new "
+            "schema instead.",
+        )
+        schema = T.StructType.fromJson(json.loads(entry["schema"]))
+        return ptr[0], ptr[1], entry, schema
+
+    def _refuse_physical_column(self, entry: dict, col: str) -> None:
+        """Refuse a metadata-only rename/drop of a column that live
+        state addresses by its physical name or text."""
+        if col in _spec_partition_cols(entry):
+            raise ValueError(
+                f"{self.root}: {col!r} is a partition column of a live "
+                f"spec (physical directory names) — rewrite with a new "
+                f"partition_by (compact_table migrates evolved specs)"
             )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed = True
-        finally:
-            self._release_lock()
-            if not committed:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return new_ver
+        if col in ((entry.get("dv") or {}).get("key_cols") or []):
+            raise ValueError(
+                f"{self.root}: {col!r} keys the live deletion vector — "
+                f"compact_table first to materialize it"
+            )
+        for cname, pred_sql in (entry.get("checks") or {}).items():
+            if re.search(rf"\b{re.escape(col)}\b", pred_sql):
+                raise ValueError(
+                    f"{self.root}: {col!r} is referenced by CHECK "
+                    f"constraint {cname!r} ({pred_sql}) — drop or "
+                    f"re-state the constraint first"
+                )
+
+    def _commit_alter(
+        self,
+        op: str,
+        snap_name: str,
+        cur_ver: int,
+        fields: dict,
+        *,
+        expect_version: int | None,
+        keep_snapshots: int,
+    ) -> int:
+        """Hardlink the live snapshot forward (its ``_cdf`` stays
+        version-local) and publish ``fields`` against ``cur_ver``."""
+        staged = self._staging_path()
+        try:
+            _link_tree(
+                os.path.join(self.root, snap_name),
+                staged,
+                skip_top=(self.CDF_DIR,),
+            )
+        except FileNotFoundError as exc:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise ConcurrentWriteError(
+                f"{self.root}: snapshot {snap_name} vanished during "
+                f"{op} (concurrent writer + gc) — retry"
+            ) from exc
+        return self._publish(
+            staged,
+            fields,
+            expect_version=expect_version,
+            base_version=cur_ver,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def rename_column(
@@ -695,44 +639,13 @@ class _EvolveMixin:
         Same CAS + lock protocol as every writer; raises
         :class:`ConcurrentWriteError` if the table advances mid-
         rename."""
-        ptr = self._pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        snap_name, cur_ver = ptr
-        src = os.path.join(self.root, snap_name)
-        entry = self._log_entry(cur_ver) or {}
-        _refuse_clustered(
-            self.root,
-            entry,
-            "metadata-only column changes do not propagate through "
-            "the bucketed catalog scan. Re-cluster with "
-            "commit_clustered(read(...), ...) carrying the new "
-            "schema instead.",
-        )
-        schema = T.StructType.fromJson(json.loads(entry["schema"]))
+        snap_name, cur_ver, entry, schema = self._alter_base()
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"{self.root}: no column {old!r} to rename")
         if new in names:
             raise ValueError(f"{self.root}: column {new!r} already exists")
-        if old in _spec_partition_cols(entry):
-            raise ValueError(
-                f"{self.root}: {old!r} is a partition column of a live "
-                f"spec (physical directory names) — rewrite with a new "
-                f"partition_by (compact_table migrates evolved specs)"
-            )
-        if old in ((entry.get("dv") or {}).get("key_cols") or []):
-            raise ValueError(
-                f"{self.root}: {old!r} keys the live deletion vector — "
-                f"compact_table first to materialize it"
-            )
-        for cname, pred_sql in (entry.get("checks") or {}).items():
-            if re.search(rf"\b{re.escape(old)}\b", pred_sql):
-                raise ValueError(
-                    f"{self.root}: {old!r} is referenced by CHECK "
-                    f"constraint {cname!r} ({pred_sql}) — drop or "
-                    f"re-state the constraint in the same commit instead"
-                )
+        self._refuse_physical_column(entry, old)
         new_schema = T.StructType(
             [
                 T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
@@ -746,87 +659,29 @@ class _EvolveMixin:
         stats_cols = [
             new if c == old else c for c in (entry.get("stats_cols") or [])
         ]
-        prev_cdf = entry.get("cdf")
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            _link_tree(src, staged, skip_top=(self.CDF_DIR,))
-        except FileNotFoundError as exc:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished during "
-                f"rename_column (concurrent writer + gc) — retry"
-            ) from exc
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            now = self._pointer()
-            live_ver = 0 if now is None else now[1]
-            if expect_version is not None and live_ver != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {live_ver} != expected "
-                    f"{expect_version}"
-                )
-            if live_ver != cur_ver:
-                raise ConcurrentWriteError(
-                    f"{self.root}: table advanced {cur_ver} -> {live_ver} "
-                    f"during rename_column — re-run against the new head"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                list(entry.get("partition_by") or []),
-                new_schema.json(),
-                meta={
-                    **{
-                        k: (
-                            [new if c == old else c for c in v]
-                            if k == "sort_order"
-                            else v
-                        )
-                        for k, v in _inherited_meta(entry).items()
-                    },
-                    "renamed": {old: new},
-                },
+        meta = {"renamed": {old: new}}
+        if "sort_order" in (entry.get("meta") or {}):
+            meta["sort_order"] = [
+                new if c == old else c for c in entry["meta"]["sort_order"]
+            ]
+        cdf = _cdf_marker(entry, "break")
+        if cdf:
+            cdf["key_cols"] = [new if k == old else k for k in cdf["key_cols"]]
+        return self._commit_alter(
+            "rename_column",
+            snap_name,
+            cur_ver,
+            _carry(
+                entry,
+                schema_json=new_schema.json(),
+                meta=meta,
                 stats_cols=stats_cols,
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),
-                cdf=(
-                    {
-                        "key_cols": [
-                            new if k == old else k
-                            for k in prev_cdf["key_cols"]
-                        ],
-                        "break": True,
-                    }
-                    if prev_cdf
-                    else None
-                ),
+                cdf=cdf,
                 column_map=cmap or None,
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+            ),
+            expect_version=expect_version,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def add_column(
@@ -854,21 +709,7 @@ class _EvolveMixin:
         change feed stays intact (Delta likewise needs no feed restart
         for ADD COLUMN: pre-add change files align by name with null
         fill)."""
-        ptr = self._pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        snap_name, cur_ver = ptr
-        src = os.path.join(self.root, snap_name)
-        entry = self._log_entry(cur_ver) or {}
-        _refuse_clustered(
-            self.root,
-            entry,
-            "metadata-only column changes do not propagate through "
-            "the bucketed catalog scan. Re-cluster with "
-            "commit_clustered(read(...), ...) carrying the new "
-            "schema instead.",
-        )
-        schema = T.StructType.fromJson(json.loads(entry["schema"]))
+        snap_name, cur_ver, entry, schema = self._alter_base()
         if name in [f.name for f in schema.fields]:
             raise ValueError(f"{self.root}: column {name!r} already exists")
         if isinstance(dtype, str):
@@ -876,76 +717,21 @@ class _EvolveMixin:
         new_schema = T.StructType(
             list(schema.fields) + [T.StructField(name, dtype, True)]
         )
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            _link_tree(src, staged, skip_top=(self.CDF_DIR,))
-        except FileNotFoundError as exc:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished during "
-                f"add_column (concurrent writer + gc) — retry"
-            ) from exc
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            now = self._pointer()
-            live_ver = 0 if now is None else now[1]
-            if expect_version is not None and live_ver != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {live_ver} != expected "
-                    f"{expect_version}"
-                )
-            if live_ver != cur_ver:
-                raise ConcurrentWriteError(
-                    f"{self.root}: table advanced {cur_ver} -> {live_ver} "
-                    f"during add_column — re-run against the new head"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                list(entry.get("partition_by") or []),
-                new_schema.json(),
-                meta={**_inherited_meta(entry), "added_column": name},
-                stats_cols=entry.get("stats_cols"),
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),
-                # content-preserving commit: feed readers skip it (the
-                # add changes no rows; copying the previous entry's cdf
-                # dict verbatim would point at ITS change files)
-                cdf=(
-                    {
-                        "key_cols": list(entry["cdf"]["key_cols"]),
-                        "noop": True,
-                    }
-                    if entry.get("cdf")
-                    else None
-                ),
-                column_map=entry.get("column_map"),
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
+        return self._commit_alter(
+            "add_column",
+            snap_name,
+            cur_ver,
+            _carry(
+                entry,
+                schema_json=new_schema.json(),
+                meta={"added_column": name},
+                # content-preserving commit: feed readers skip it
+                cdf=_cdf_marker(entry, "noop"),
                 added=list(entry.get("added") or []) + [name],
-                bloom=entry.get("bloom"),
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+            ),
+            expect_version=expect_version,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def drop_column(
@@ -979,21 +765,7 @@ class _EvolveMixin:
         (compact / disable the feed first), or a column referenced by
         a CHECK constraint (drop or re-state the constraint). Same
         CAS + lock protocol as every writer."""
-        ptr = self._pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        snap_name, cur_ver = ptr
-        src = os.path.join(self.root, snap_name)
-        entry = self._log_entry(cur_ver) or {}
-        _refuse_clustered(
-            self.root,
-            entry,
-            "metadata-only column changes do not propagate through "
-            "the bucketed catalog scan. Re-cluster with "
-            "commit_clustered(read(...), ...) carrying the new "
-            "schema instead.",
-        )
-        schema = T.StructType.fromJson(json.loads(entry["schema"]))
+        snap_name, cur_ver, entry, schema = self._alter_base()
         names = [f.name for f in schema.fields]
         if name not in names:
             raise ValueError(f"{self.root}: no column {name!r} to drop")
@@ -1001,29 +773,12 @@ class _EvolveMixin:
             raise ValueError(
                 f"{self.root}: {name!r} is the table's only column"
             )
-        if name in _spec_partition_cols(entry):
-            raise ValueError(
-                f"{self.root}: {name!r} is a partition column of a live "
-                f"spec (physical directory names) — rewrite with a new "
-                f"partition_by (compact_table migrates evolved specs)"
-            )
-        if name in ((entry.get("dv") or {}).get("key_cols") or []):
-            raise ValueError(
-                f"{self.root}: {name!r} keys the live deletion vector — "
-                f"compact_table first to materialize it"
-            )
         if name in ((entry.get("cdf") or {}).get("key_cols") or []):
             raise ValueError(
                 f"{self.root}: {name!r} keys the change feed — disable "
                 f"the feed (cdf_keys=[]) or re-key it first"
             )
-        for cname, pred_sql in (entry.get("checks") or {}).items():
-            if re.search(rf"\b{re.escape(name)}\b", pred_sql):
-                raise ValueError(
-                    f"{self.root}: {name!r} is referenced by CHECK "
-                    f"constraint {cname!r} ({pred_sql}) — drop or "
-                    f"re-state the constraint first"
-                )
+        self._refuse_physical_column(entry, name)
         new_schema = T.StructType(
             [f for f in schema.fields if f.name != name]
         )
@@ -1031,84 +786,27 @@ class _EvolveMixin:
         phys = cmap.pop(name, name)
         dropped = list(entry.get("dropped") or []) + [phys]
         stats_cols = [c for c in (entry.get("stats_cols") or []) if c != name]
-        prev_cdf = entry.get("cdf")
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            _link_tree(src, staged, skip_top=(self.CDF_DIR,))
-        except FileNotFoundError as exc:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished during "
-                f"drop_column (concurrent writer + gc) — retry"
-            ) from exc
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            now = self._pointer()
-            live_ver = 0 if now is None else now[1]
-            if expect_version is not None and live_ver != expect_version:
-                raise ConcurrentWriteError(
-                    f"{self.root}: version {live_ver} != expected "
-                    f"{expect_version}"
-                )
-            if live_ver != cur_ver:
-                raise ConcurrentWriteError(
-                    f"{self.root}: table advanced {cur_ver} -> {live_ver} "
-                    f"during drop_column — re-run against the new head"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                list(entry.get("partition_by") or []),
-                new_schema.json(),
-                meta={
-                    **{
-                        k: (
-                            [c for c in v if c != name]
-                            if k == "sort_order"
-                            else v
-                        )
-                        for k, v in _inherited_meta(entry).items()
-                    },
-                    "dropped_column": name,
-                },
+        meta = {"dropped_column": name}
+        if "sort_order" in (entry.get("meta") or {}):
+            meta["sort_order"] = [
+                c for c in entry["meta"]["sort_order"] if c != name
+            ]
+        return self._commit_alter(
+            "drop_column",
+            snap_name,
+            cur_ver,
+            _carry(
+                entry,
+                schema_json=new_schema.json(),
+                meta=meta,
                 stats_cols=stats_cols,
-                file_stats=entry.get("file_stats"),
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),
-                cdf=(
-                    {
-                        "key_cols": list(prev_cdf["key_cols"]),
-                        "break": True,
-                    }
-                    if prev_cdf
-                    else None
-                ),
+                cdf=_cdf_marker(entry, "break"),
                 column_map=cmap or None,
-                mor_delta=entry.get("mor_delta"),
                 dropped=dropped,
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
-                specs=entry.get("specs"),
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+            ),
+            expect_version=expect_version,
+            keep_snapshots=keep_snapshots,
+        )
 
 
     def evolve_partition(
@@ -1205,9 +903,7 @@ class _EvolveMixin:
                 f"evolve_partition (concurrent writer + gc) — retry"
             )
         specs = _entry_specs(entry)
-        staged = os.path.join(
-            self.root, f"snap-staging-{uuid.uuid4().hex[:12]}"
-        )
+        staged = self._staging_path()
         file_stats = entry.get("file_stats")
         try:
             if specs:
@@ -1304,28 +1000,12 @@ class _EvolveMixin:
         except Exception:
             shutil.rmtree(staged, ignore_errors=True)
             raise
-        committed_ver: int | None = None
-        self._acquire_lock()
-        try:
-            now = self._pointer()
-            live_ver = 0 if now is None else now[1]
-            if live_ver != cur_ver:
-                raise ConcurrentWriteError(
-                    f"{self.root}: table advanced {cur_ver} -> "
-                    f"{live_ver} during evolve_partition — re-run "
-                    f"against the new head"
-                )
-            new_ver = cur_ver + 1
-            snap = f"snap-{new_ver:06d}-{uuid.uuid4().hex[:8]}"
-            os.rename(staged, os.path.join(self.root, snap))
-            staged = os.path.join(self.root, snap)  # for error cleanup
-            self._write_log(
-                new_ver,
-                snap,
-                new_pb,
-                entry.get("schema"),
+        return self._publish(
+            staged,
+            _carry(
+                entry,
+                partition_by=new_pb,
                 meta={
-                    **_inherited_meta(entry),
                     **(meta or {}),
                     "evolve_partition": {
                         "from": cur_pb,
@@ -1333,35 +1013,11 @@ class _EvolveMixin:
                         "spec_id": new_id,
                     },
                 },
-                stats_cols=entry.get("stats_cols"),
                 file_stats=file_stats,
-                checks=entry.get("checks"),
-                dv=entry.get("dv"),
                 # content-preserving commit: feed readers skip it
-                cdf=(
-                    {
-                        "key_cols": list(entry["cdf"]["key_cols"]),
-                        "noop": True,
-                    }
-                    if (entry.get("cdf") or {}).get("key_cols")
-                    else None
-                ),
-                column_map=entry.get("column_map"),
-                mor_delta=entry.get("mor_delta"),
-                dropped=entry.get("dropped"),
-                added=entry.get("added"),
-                bloom=entry.get("bloom"),
+                cdf=_cdf_marker(entry, "noop"),
                 specs=specs,
-            )
-            tmp_ptr = os.path.join(self.root, f".ptr-{uuid.uuid4().hex[:8]}")
-            with open(tmp_ptr, "w") as fh:
-                fh.write(f"{snap}\n{new_ver}\n")
-            os.replace(tmp_ptr, os.path.join(self.root, self.POINTER))
-            self.last_snapshot = snap
-            committed_ver = new_ver
-        finally:
-            self._release_lock()
-            if committed_ver is None:
-                shutil.rmtree(staged, ignore_errors=True)
-        self._gc(keep=keep_snapshots)
-        return committed_ver
+            ),
+            base_version=cur_ver,
+            keep_snapshots=keep_snapshots,
+        )

@@ -57,25 +57,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .manifest_log import pointer_version, read_log_entry
 from .skipping import data_files
-
-
-def _pointer_version(root: str) -> int:
-    """Current committed version from the pointer file (0 = none)."""
-    try:
-        with open(os.path.join(root, "CURRENT")) as fh:
-            lines = fh.read().splitlines()
-        return int(lines[1])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-
-def _log_entry(root: str, version: int) -> dict | None:
-    try:
-        with open(os.path.join(root, "_log", f"{version:08d}.json")) as fh:
-            return json.load(fh)
-    except OSError:
-        return None
 
 
 def _change_files(
@@ -97,7 +80,7 @@ def _change_files(
     continuity is validated for every version either way."""
     out: list[tuple[str, int | None]] = []
     for v in range(v_from + 1, v_to + 1):
-        entry = _log_entry(root, v)
+        entry = read_log_entry(root, v)
         if entry is None:
             raise ValueError(
                 f"{root}: no commit log entry for version {v} — the "
@@ -169,8 +152,8 @@ def _schema_for(root: str) -> StructType:
     markers. Mid-stream widening evolution is served as-committed (the
     files carry the schema their version had); a consumer that needs
     the evolved view restarts — same guidance as Delta CDF."""
-    ver = _pointer_version(root)
-    entry = _log_entry(root, ver) or {}
+    ver = pointer_version(root)
+    entry = read_log_entry(root, ver) or {}
     sj = entry.get("schema")
     if not sj:
         raise ValueError(
@@ -270,7 +253,7 @@ class ManifestCDFBatchReader(_CDFReadMixin, DataSourceReader):
     def __init__(self, options, schema):
         self.root = options["root"]
         self.v_from = int(options.get("starting_version", 1)) - 1
-        self.v_to = int(options.get("ending_version", 0)) or _pointer_version(
+        self.v_to = int(options.get("ending_version", 0)) or pointer_version(
             self.root
         )
         self.arrow_schema = _arrow_schema(schema)
@@ -308,7 +291,7 @@ class ManifestCDFStreamReader(_CDFReadMixin, DataSourceStreamReader):
         return {"version": self.start}
 
     def latestOffset(self):
-        return {"version": max(self.start, _pointer_version(self.root))}
+        return {"version": max(self.start, pointer_version(self.root))}
 
     def partitions(self, start, end):
         files = _change_files(

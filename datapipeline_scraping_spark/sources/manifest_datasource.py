@@ -57,7 +57,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .cdf_datasource import _log_entry, _pointer_version
+from .manifest_log import pointer_version, read_log_entry
 from .skipping import conjunct, kept_files, partition_values
 
 
@@ -71,20 +71,20 @@ def _resolve_version(options) -> tuple[str, int, dict]:
         ver = int(options["version"])
     elif "asof" in options:
         ts = float(options["asof"])
-        live = _pointer_version(root)
+        live = pointer_version(root)
         ver = None
         for v in range(live, 0, -1):
-            e = _log_entry(root, v)
+            e = read_log_entry(root, v)
             if e is not None and e.get("ts", float("inf")) <= ts:
                 ver = v
                 break
         if ver is None:
             raise FileNotFoundError(f"{root}: no commit at or before ts={ts}")
     else:
-        ver = _pointer_version(root)
+        ver = pointer_version(root)
         if not ver:
             raise FileNotFoundError(f"no committed snapshot under {root}")
-    entry = _log_entry(root, ver)
+    entry = read_log_entry(root, ver)
     if entry is None:
         raise FileNotFoundError(f"{root}: no commit log entry for v{ver}")
     snap = os.path.join(root, entry["snapshot"])
@@ -900,8 +900,8 @@ class ManifestWriter(DataSourceArrowWriter):
             self.root, f".dswrite-{uuid.uuid4().hex[:8]}"
         )
         try:
-            ver = _pointer_version(self.root)
-            entry = _log_entry(self.root, ver) if ver else None
+            ver = pointer_version(self.root)
+            entry = read_log_entry(self.root, ver) if ver else None
         except (FileNotFoundError, OSError):
             entry = None
         # logical -> physical rename applied task-side

@@ -10,18 +10,21 @@ clearCache between runs, best + all samples); steal ticks are read
 before/after each subprocess so every number carries its own bracket.
 Output: one JSON line per (tree, query) block on stdout.
 """
+import argparse
 import json
 import os
 import subprocess
 import sys
 import time
 
-args = [a for a in sys.argv[1:] if not a.startswith("--")]
-runs = "5"
-for a in sys.argv[1:]:
-    if a.startswith("--runs="):
-        runs = a.split("=", 1)[1]
-tree_a, tree_b, queries = args[0], args[1], args[2:]
+ap = argparse.ArgumentParser(description="bracketed A/B of two engine trees")
+ap.add_argument("tree_a")
+ap.add_argument("tree_b")
+ap.add_argument("queries", nargs="+")
+ap.add_argument("--runs", type=int, default=5, help="timed runs per block")
+opts = ap.parse_args()
+tree_a, tree_b, queries = opts.tree_a, opts.tree_b, opts.queries
+runs = str(opts.runs)
 here = os.path.dirname(os.path.abspath(__file__))
 
 

@@ -97,3 +97,34 @@ def test_extract_media_meta_mixes_real_and_fake(spark):
         None,
         None,
     )
+
+
+def test_features_and_frames_propagate_null_blobs(spark):
+    # SQL NULL propagation in the remaining blob seams: a NULL payload
+    # yields NULL features and no frames, next to non-NULL rows of the
+    # same batch (it used to raise a worker TypeError)
+    import hashlib
+
+    from datapipeline_scraping_spark.operators.multimodal import (
+        extract_features,
+        sample_frames,
+    )
+
+    blob = b"0123456789ab"
+    df = spark.createDataFrame(
+        [(1, blob), (2, None), (3, b"")], "doc_id long, blob binary"
+    ).coalesce(1)
+    feats = {r["doc_id"]: r["features"] for r in extract_features(df, dim=4).collect()}
+    assert set(feats) == {1, 2, 3} and feats[2] is None
+    c = hashlib.md5(blob).hexdigest()
+    assert feats[1] == [
+        (int(hashlib.md5(f"{c}:{d}".encode()).hexdigest()[:8], 16) % 2001 - 1000)
+        / 1000.0
+        for d in range(4)
+    ]
+    frames = sample_frames(df).collect()
+    per_doc = {}
+    for r in frames:
+        per_doc.setdefault(r["doc_id"], []).append(r["frame_offset"])
+    # 12 bytes -> 12 % 5 + 1 = 3 frames strided by 4; b"" -> 1 frame
+    assert per_doc == {1: [0, 4, 8], 3: [0]}

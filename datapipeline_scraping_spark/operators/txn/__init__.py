@@ -75,9 +75,6 @@ from .stats import (  # noqa: F401
     _inherited_meta,
     _write_bloom_sidecar,
     _snapshot_files,
-    _adopt_parts,
-    _incremental_stats,
-    _carry_bloom_sidecar,
 )
 from .table import (  # noqa: F401
     ManifestTable,

@@ -6,7 +6,6 @@ import json
 import os
 import shutil
 import time
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -14,14 +13,10 @@ from pyspark.sql import types as T
 
 from ...sources.skipping import data_files
 from .errors import ConcurrentWriteError
-from .layout import _bucket_id, _link_tree, _write_bucketed
+from .layout import _bucket_id, _refuse_clustered, _write_bucketed
 from .schema import _apply_map, _snap_read
-from .stats import (
-    _adopt_parts,
-    _carry_bloom_sidecar,
-    _incremental_stats,
-    _snapshot_files,
-)
+from .staging import PARTS_DIR, _stage_add_files, _staging
+from .stats import _index_bloom, _snapshot_files
 from .table import ManifestTable
 from .table_core import _carry, _cdf_marker
 
@@ -79,37 +74,26 @@ def compact_table(
     # resolve the pointer ONCE: snapshot dir + version from the same
     # read, so the files measured, the data rewritten, and the CAS
     # expectation all refer to one snapshot
-    ptr = mt._pointer()
-    if ptr is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    snap_name, version = ptr
-    snap = os.path.join(mt.root, snap_name)
-    # explicit existence check: os.walk is SILENT on a missing dir, so
-    # a just-GC'd snapshot would otherwise read as "0 files" and no-op
-    if not os.path.isdir(snap):
-        raise ConcurrentWriteError(
-            f"{root}: snapshot {snap_name} vanished before compaction "
-            f"(concurrent writer + gc) — retry"
-        )
+    snap, version, c_entry = mt._resolve_base(
+        "compaction", f"no committed snapshot under {root}"
+    )
     try:
         files_before, bytes_before = _snapshot_files(snap)
         n_target = target_files or max(
             1, -(-bytes_before // max(1, target_file_bytes))
         )
-        c_entry = mt._log_entry(version) or {}
-        if c_entry.get("bucket"):
-            # a clustered snapshot's exchange-free join property lives
-            # in the bucket-id file names; a plain rewrite would
-            # silently destroy it (VERDICT r10 item 5) — refuse with
-            # the escape hatches spelled out
-            raise ValueError(
-                f"{root}: the live snapshot is CLUSTERED "
-                f"(commit_clustered bucket layout) — a plain rewrite "
-                f"would destroy the bucket-id file-name contract. Use "
-                f"compact_clustered() (per-bucket repack) or "
-                f"commit_clustered(read(...), ...) to re-cluster, or "
-                f"commit(read(...)) to deliberately drop the layout."
-            )
+        # a clustered snapshot's exchange-free join property lives
+        # in the bucket-id file names; a plain rewrite would
+        # silently destroy it (VERDICT r10 item 5) — refuse with
+        # the escape hatches spelled out
+        _refuse_clustered(
+            root,
+            c_entry,
+            "a plain rewrite would destroy the bucket-id file-name "
+            "contract. Use compact_clustered() (per-bucket repack) or "
+            "commit_clustered(read(...), ...) to re-cluster, or "
+            "commit(read(...)) to deliberately drop the layout.",
+        )
         dv = c_entry.get("dv")
         mor = dv or c_entry.get("mor_delta")
         if not zorder_by and not mor and files_before - n_target < min_gain_files:
@@ -146,14 +130,13 @@ def compact_table(
         # bounded by n_target + n_partition_values - 1 (a boundary
         # task may straddle two values), and row-group data skipping
         # on the sort keys still survives within each dir.
-        entry = mt._log_entry(version)
-        part_cols = list((entry or {}).get("partition_by") or [])
+        part_cols = list(c_entry.get("partition_by") or [])
         if not sort_by and not zorder_by:
             # default the sorted rewrite to the table's DECLARED sort
             # order (set_sort_order) so maintenance converges to the
             # same layout appends write incrementally
             declared = list(
-                ((entry or {}).get("meta") or {}).get("sort_order") or []
+                (c_entry.get("meta") or {}).get("sort_order") or []
             )
             sort_by = declared or None
         if zorder_by:
@@ -185,8 +168,8 @@ def compact_table(
         # mid-rewrite: surface the documented retryable conflict, not
         # a raw filesystem error
         raise ConcurrentWriteError(
-            f"{root}: snapshot {snap_name} vanished during compaction "
-            f"(concurrent writer + gc) — retry"
+            f"{root}: snapshot {os.path.basename(snap)} vanished during "
+            f"compaction (concurrent writer + gc) — retry"
         ) from exc
     # measure the snapshot THIS commit produced (recorded under the
     # commit lock), not a re-resolved pointer: a racing writer
@@ -242,34 +225,25 @@ def compact_small_files(
     handles layout). No-ops unless at least two small files exist and
     the repack saves ``min_gain_files`` files."""
     mt = ManifestTable(root)
-    ptr = mt._pointer()
-    if ptr is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    snap_name, version = ptr
-    snap = os.path.join(mt.root, snap_name)
-    if not os.path.isdir(snap):
-        raise ConcurrentWriteError(
-            f"{root}: snapshot {snap_name} vanished before compaction "
-            f"(concurrent writer + gc) — retry"
-        )
-    entry = mt._log_entry(version) or {}
+    snap, version, entry = mt._resolve_base(
+        "compaction", f"no committed snapshot under {root}"
+    )
     if entry.get("partition_by"):
         raise ValueError(
             f"{root}: compact_small_files targets unpartitioned snapshots "
             f"(use compact_table for partitioned layouts)"
         )
-    if entry.get("bucket"):
-        # bin-packing across bucket boundaries (or renaming merged
-        # files) would break the bucket-id file-name contract that
-        # read_clustered's exchange-free join depends on (VERDICT r10
-        # item 5) — refuse loudly instead of silently de-clustering
-        raise ValueError(
-            f"{root}: the live snapshot is CLUSTERED (commit_clustered "
-            f"bucket layout) — bin-packing would break the bucket-id "
-            f"file-name contract. Use compact_clustered() (per-bucket "
-            f"repack), or commit(read(...)) to deliberately drop the "
-            f"layout."
-        )
+    # bin-packing across bucket boundaries (or renaming merged files)
+    # would break the bucket-id file-name contract that
+    # read_clustered's exchange-free join depends on (VERDICT r10 item
+    # 5) — refuse loudly instead of silently de-clustering
+    _refuse_clustered(
+        root,
+        entry,
+        "bin-packing would break the bucket-id file-name contract. Use "
+        "compact_clustered() (per-bucket repack), or commit(read(...)) "
+        "to deliberately drop the layout.",
+    )
     if entry.get("specs"):
         # an EVOLVED snapshot mixes hive layouts across spec-<id>
         # subtrees; bin-packing files out of their spec dirs would
@@ -281,18 +255,6 @@ def compact_small_files(
             f"partition values. Use compact_table() (full rewrite "
             f"migrates everything to the active spec)."
         )
-
-    def _no_op(files_before: int, bytes_before: int) -> dict:
-        return {
-            "compacted": False,
-            "version": version,
-            "files_before": files_before,
-            "files_after": files_before,
-            "files_rewritten": 0,
-            "bytes_rewritten": 0,
-            "bytes": bytes_before,
-        }
-
     small: list[tuple[str, int]] = []  # (rel, size)
     keep: list[str] = []  # rel
     bytes_before = 0
@@ -301,8 +263,8 @@ def compact_small_files(
             sz = os.path.getsize(fp)
         except FileNotFoundError:
             raise ConcurrentWriteError(
-                f"{root}: snapshot {snap_name} vanished during "
-                f"compaction (concurrent writer + gc) — retry"
+                f"{root}: snapshot {os.path.basename(snap)} vanished "
+                f"during compaction (concurrent writer + gc) — retry"
             ) from None
         bytes_before += sz
         rel = os.path.relpath(fp, snap)
@@ -314,45 +276,37 @@ def compact_small_files(
     small_bytes = sum(sz for _, sz in small)
     n_new = max(1, -(-small_bytes // max(1, target_file_bytes)))
     if len(small) < 2 or len(small) - n_new < min_gain_files:
-        return _no_op(files_before, bytes_before)
+        return {
+            "compacted": False,
+            "version": version,
+            "files_before": files_before,
+            "files_after": files_before,
+            "files_rewritten": 0,
+            "bytes_rewritten": 0,
+            "bytes": bytes_before,
+        }
 
-    staged = mt._staging_path()
-    try:
-        os.makedirs(staged)
-        # metadata-only carry: big data files + MoR sidecars hardlink
-        for rel in keep:
-            dst = os.path.join(staged, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(os.path.join(snap, rel), dst)
-            except OSError:
-                shutil.copy2(os.path.join(snap, rel), dst)
-        for side in (ManifestTable.DV_DIR, ManifestTable.UPD_DIR):
-            sp = os.path.join(snap, side)
-            if os.path.isdir(sp):
-                _link_tree(sp, os.path.join(staged, side))
+    with _staging(mt) as staged:
         # the rewrite: read ONLY the small files (physical schema —
         # raw files; renames/drops stay metadata via the carried
-        # column_map/dropped entries) and repack them
-        tmp = os.path.join(mt.root, f".repack-{uuid.uuid4().hex[:8]}")
+        # column_map/dropped entries) and repack them; big data files
+        # and MoR sidecars hardlink forward (metadata-only carry)
         (
             spark.read.parquet(*[os.path.join(snap, rel) for rel, _ in small])
             .repartition(n_new)
             .write.mode("overwrite")
-            .parquet(tmp)
+            .parquet(os.path.join(staged, PARTS_DIR))
         )
-        new_rels = _adopt_parts(tmp, staged, "repack")
-        file_stats = _incremental_stats(entry, keep, staged, new_rels)
-        _carry_bloom_sidecar(spark, entry, snap, staged, keep, new_rels)
-    except Exception:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
+        added = _stage_add_files(
+            staged, snap, entry, keep=keep, rename="repack"
+        )
+        _index_bloom(spark, entry, staged, added.bloom_rels)
     committed_ver = mt._publish(
         staged,
         _carry(
             entry,
             meta={"bin_pack": len(small)},
-            file_stats=file_stats,
+            file_stats=added.file_stats,
             cdf=_cdf_marker(entry, "noop"),
         ),
         base_version=version,
@@ -362,7 +316,7 @@ def compact_small_files(
         "compacted": True,
         "version": committed_ver,
         "files_before": files_before,
-        "files_after": len(keep) + len(new_rels),
+        "files_after": len(keep) + len(added.new_rels),
         "files_rewritten": len(small),
         "bytes_rewritten": small_bytes,
         "bytes": bytes_before,
@@ -405,17 +359,9 @@ def compact_clustered(
     state (Delta's OPTIMIZE purging DVs). Untouched buckets still
     hardlink forward; the cost stays O(affected-bucket bytes)."""
     mt = ManifestTable(root)
-    ptr = mt._pointer()
-    if ptr is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    snap_name, version = ptr
-    snap = os.path.join(mt.root, snap_name)
-    if not os.path.isdir(snap):
-        raise ConcurrentWriteError(
-            f"{root}: snapshot {snap_name} vanished before compaction "
-            f"(concurrent writer + gc) — retry"
-        )
-    entry = mt._log_entry(version) or {}
+    snap, version, entry = mt._resolve_base(
+        "compaction", f"no committed snapshot under {root}"
+    )
     bucket = entry.get("bucket")
     if not bucket:
         raise ValueError(
@@ -496,9 +442,7 @@ def compact_clustered(
             "files_after": files_before,
             "buckets_repacked": 0,
         }
-    tmp = os.path.join(mt.root, f".crepack-{uuid.uuid4().hex[:8]}")
-    staged = mt._staging_path()
-    try:
+    with _staging(mt) as staged:
         files = [f for b in sorted(affected) for f in groups.get(b, [])]
         if files:
             df = spark.read.schema(schema).parquet(
@@ -516,38 +460,21 @@ def compact_clustered(
             df = df.unionByName(upd_df)
         _write_bucketed(
             spark, df, bucket["col"], int(bucket["n"]),
-            bucket["sorted_by"], tmp,
+            bucket["sorted_by"], os.path.join(staged, PARTS_DIR),
         )
-        os.makedirs(staged)
-        kept = 0
-        for bid, fs in groups.items():
-            if bid in affected:
-                continue
-            for f in fs:
-                try:
-                    os.link(os.path.join(snap, f), os.path.join(staged, f))
-                except OSError:
-                    shutil.copy2(
-                        os.path.join(snap, f), os.path.join(staged, f)
-                    )
-                kept += 1
-        new_files = 0
-        for f in os.listdir(tmp):
-            if not f.endswith(".parquet"):
-                continue
-            bid = _bucket_id(f)
-            if bid is None or bid not in affected:  # pragma: no cover
+        # untouched buckets link forward; the rewrite folds the MoR
+        # sidecars, so they do not
+        kept = [f for b, fs in groups.items() if b not in affected for f in fs]
+        added = _stage_add_files(
+            staged, snap, entry, keep=kept, sidecars=False
+        )
+        for f in added.new_rels:
+            if _bucket_id(f) not in affected:  # pragma: no cover
                 raise RuntimeError(
                     f"{root}: repack routed rows outside the affected "
                     f"buckets ({f!r})"
                 )
-            os.rename(os.path.join(tmp, f), os.path.join(staged, f))
-            new_files += 1
-    except Exception:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        _index_bloom(spark, entry, staged, added.bloom_rels)
     meta = {"bucket_repack": len(affected)}
     if dv or delta:
         meta["mor_folded"] = {
@@ -558,7 +485,13 @@ def compact_clustered(
         staged,
         # the sidecars are materialized by this commit: the new entry
         # carries NO dv/mor_delta
-        _carry(entry, meta=meta, dv=None, mor_delta=None),
+        _carry(
+            entry,
+            meta=meta,
+            file_stats=added.file_stats,
+            dv=None,
+            mor_delta=None,
+        ),
         base_version=version,
         keep_snapshots=keep_snapshots,
     )
@@ -566,7 +499,7 @@ def compact_clustered(
         "compacted": True,
         "version": committed_ver,
         "files_before": files_before,
-        "files_after": kept + new_files,
+        "files_after": len(kept) + len(added.new_rels),
         "buckets_repacked": len(affected),
     }
 

@@ -277,23 +277,18 @@ class TransactionGroup:
                 op, df = ops[rp]
                 os.makedirs(t.root, exist_ok=True)
                 if op == "append":
-                    tmp, entry, version, part_by, tschema, aligned = (
+                    s, entry, version, part_by, tschema = (
                         t._prepare_append_batch(df)
                     )
-                    try:
-                        s, kw = t._stage_append_parts(
-                            df.sparkSession,
-                            tmp,
-                            entry,
-                            version,
-                            part_by,
-                            tschema,
-                            aligned,
-                            meta=None,
-                        )
-                    except Exception:
-                        shutil.rmtree(tmp, ignore_errors=True)
-                        raise
+                    s, kw = t._stage_append_parts(
+                        df.sparkSession,
+                        s,
+                        entry,
+                        version,
+                        part_by,
+                        tschema,
+                        meta=None,
+                    )
                     staged[rp], logkw[rp] = s, kw
                     base_ver[rp] = version
                     continue

@@ -16,15 +16,9 @@ from .errors import (
     ConstraintViolationError,
     SchemaEvolutionError,
 )
-from .layout import (
-    _current_spec,
-    _entry_specs,
-    _link_tree,
-    _refuse_clustered,
-    _spec_dirname,
-)
+from .layout import _refuse_clustered
 from ...sources.skipping import bloom_bits, data_files
-from .stats import _carry_bloom_rows, _incremental_stats
+from .staging import _stage_add_files, _staging
 from .table import ManifestTable
 from .table_core import _carry
 
@@ -258,7 +252,6 @@ def append_files_local(
     import pyarrow.parquet as pq
 
     tbl = ManifestTable(root)
-    ptr = tbl._pointer()
     part_files = sorted(
         os.path.join(parts_dir, f)
         for f in os.listdir(parts_dir)
@@ -266,22 +259,12 @@ def append_files_local(
     )
     if not part_files:
         raise ValueError(f"{parts_dir}: no parquet parts to append")
-    if ptr is None:
-        raise FileNotFoundError(
-            f"{root}: append_files_local requires an existing table "
-            f"(create it with ManifestTable.commit / the DataFrame API)"
-        )
-    snap_name, version = ptr
-    if expect_version is not None and version != expect_version:
-        raise ConcurrentWriteError(
-            f"{root}: version {version} != expected {expect_version}"
-        )
-    snap = os.path.join(tbl.root, snap_name)
-    if not os.path.isdir(snap):
-        raise ConcurrentWriteError(
-            f"{root}: snapshot {snap_name} vanished before append — retry"
-        )
-    entry = tbl._log_entry(version) or {}
+    snap, version, entry = tbl._resolve_base(
+        "append",
+        f"{root}: append_files_local requires an existing table "
+        f"(create it with ManifestTable.commit / the DataFrame API)",
+        expect_version=expect_version,
+    )
     if entry.get("partition_by"):
         raise ValueError(
             f"{root}: append_files_local targets unpartitioned tables"
@@ -378,25 +361,8 @@ def append_files_local(
                         f"{root}: append collides with live merge-on-read "
                         f"keys ({key_cols_l}) — compact_table() first"
                     )
-    # -- stage: link base, adopt parts, incremental metadata --------------
-    staged = tbl._staging_path()
-    try:
-        os.makedirs(staged)
-        keep_rels = []
-        for fp in base_files:
-            rel = os.path.relpath(fp, snap)
-            dst = os.path.join(staged, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(fp, dst)
-            except OSError:
-                shutil.copy2(fp, dst)
-            keep_rels.append(rel)
-        for side in (ManifestTable.DV_DIR, ManifestTable.UPD_DIR):
-            sp = os.path.join(snap, side)
-            if os.path.isdir(sp):
-                _link_tree(sp, os.path.join(staged, side))
-        # change feed BEFORE adoption (reads the parts in place)
+    # -- stage: change feed from the parts, then the shared step ---------
+    with _staging(tbl) as staged:
         cdf_prop = list((entry.get("cdf") or {}).get("key_cols") or [])
         cdf_entry = None
         if cdf_prop:
@@ -405,10 +371,7 @@ def append_files_local(
             n_changes = 0
             for i, f in enumerate(part_files):
                 t = pq.read_table(f)
-                if inv:
-                    t = t.rename_columns(
-                        [inv.get(n, n) for n in t.column_names]
-                    )
+                t = t.rename_columns([inv.get(n, n) for n in t.column_names])
                 n = t.num_rows
                 t = t.add_column(
                     0, "_change_type", pa.array(["insert"] * n)
@@ -423,65 +386,42 @@ def append_files_local(
                 "n_changes": n_changes,
                 "change_types": ["insert"],
             }
-        new_rels = []
-        run = uuid.uuid4().hex[:8]
         # an EVOLVED table's flat parts land under the ACTIVE spec's
         # subtree (current spec is unpartitioned — checked above)
-        specs_e = _entry_specs(entry)
-        spec_sub = (
-            _spec_dirname(_current_spec(specs_e)["id"]) if specs_e else ""
+        added = _stage_add_files(
+            staged, snap, entry, parts=parts_dir, rename="append"
         )
-        if spec_sub:
-            os.makedirs(os.path.join(staged, spec_sub), exist_ok=True)
-        for f in part_files:
-            rel = os.path.join(
-                spec_sub, f"append-{run}-{os.path.basename(f)}"
-            )
-            os.rename(f, os.path.join(staged, rel))
-            new_rels.append(rel)
-        shutil.rmtree(parts_dir, ignore_errors=True)
-        file_stats = _incremental_stats(entry, keep_rels, staged, new_rels)
-        # bloom for the new files: pyarrow build, same hash as the probe
-        bloom_prop = entry.get("bloom")
-        if bloom_prop:
-            cols = list(bloom_prop.get("cols") or [])
-            fpp = float(bloom_prop.get("fpp") or 0.01)
-            rows = []
-            for rel in new_rels:
-                fp = os.path.join(staged, rel)
-                names = pq.ParquetFile(fp).schema_arrow.names
-                for c in cols:
-                    if c not in names:
-                        continue
-                    vals = {
-                        str(v)
-                        for v in pq.read_table(fp, columns=[c]).column(c).to_pylist()
-                        if v is not None
-                    }
-                    m, k, bits = bloom_bits(vals, fpp)
-                    rows.append(
-                        {"file": rel, "col": c, "m": m, "k": k,
-                         "n": len(vals), "bits": bits}
-                    )
+        # bloom for the new files: pyarrow build (no JVM on this path),
+        # same hash as the probe; rows infer file/col string,
+        # m/k/n int64, bits binary — the Spark build's schema
+        bloom_prop = entry.get("bloom") or {}
+        fpp = float(bloom_prop.get("fpp") or 0.01)
+        rows = []
+        for rel in added.bloom_rels:
+            fp = os.path.join(staged, rel)
+            names = pq.ParquetFile(fp).schema_arrow.names
+            for c in bloom_prop.get("cols") or []:
+                if c not in names:
+                    continue
+                vals = {
+                    str(v)
+                    for v in pq.read_table(fp, columns=[c]).column(c).to_pylist()
+                    if v is not None
+                }
+                m, k, bits = bloom_bits(vals, fpp)
+                rows.append(
+                    dict(file=rel, col=c, m=m, k=k, n=len(vals), bits=bits)
+                )
+        if rows:
             bdir = os.path.join(staged, ManifestTable.BLOOM_DIR)
             os.makedirs(bdir, exist_ok=True)
-            if rows:
-                schema = pa.schema(
-                    [("file", pa.string()), ("col", pa.string()),
-                     ("m", pa.int64()), ("k", pa.int64()),
-                     ("n", pa.int64()), ("bits", pa.binary())]
-                )
-                pq.write_table(
-                    pa.Table.from_pylist(rows, schema=schema),
-                    os.path.join(bdir, f"new-{run}.parquet"),
-                )
-            _carry_bloom_rows(snap, staged, keep_rels)
-    except Exception:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
+            pq.write_table(
+                pa.Table.from_pylist(rows),
+                os.path.join(bdir, f"new-{uuid.uuid4().hex[:8]}.parquet"),
+            )
     return tbl._publish(
         staged,
-        _carry(entry, meta=meta, file_stats=file_stats, cdf=cdf_entry),
+        _carry(entry, meta=meta, file_stats=added.file_stats, cdf=cdf_entry),
         base_version=version,
         keep_snapshots=keep_snapshots,
     )

@@ -79,11 +79,20 @@ def _write_bucketed(
 
 
 
+def _link(src: str, dst: str) -> None:
+    """Hardlink ``src`` at ``dst``, copying where the filesystem refuses
+    links — the one way a snapshot file moves forward: zero data bytes
+    move, and GC stays safe because removing either directory only
+    drops inode refcounts."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
 def _link_tree(src: str, dst: str, *, skip_top: tuple[str, ...] = ()) -> None:
-    """Hardlink ``src``'s tree under ``dst`` (copy where the filesystem
-    refuses links) — the metadata-only snapshot duplication RESTORE and
-    merge-on-read DELETE share: zero data bytes move, and GC stays safe
-    because removing either directory only drops inode refcounts.
+    """:func:`_link` ``src``'s tree under ``dst`` — the metadata-only
+    snapshot duplication RESTORE and merge-on-read DELETE share.
     ``skip_top`` names top-level entries of ``src`` to leave out."""
     for d, dirs, files in os.walk(src):
         rel = os.path.relpath(d, src)
@@ -93,11 +102,7 @@ def _link_tree(src: str, dst: str, *, skip_top: tuple[str, ...] = ()) -> None:
         dst_dir = dst if rel == "." else os.path.join(dst, rel)
         os.makedirs(dst_dir, exist_ok=True)
         for f in files:
-            sp, dp = os.path.join(d, f), os.path.join(dst_dir, f)
-            try:
-                os.link(sp, dp)
-            except OSError:
-                shutil.copy2(sp, dp)
+            _link(os.path.join(d, f), os.path.join(dst_dir, f))
 
 
 

@@ -3,8 +3,6 @@
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -209,7 +207,8 @@ def _write_bloom_sidecar(
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
-    out.coalesce(1).write.mode("overwrite").parquet(
+    # append: an add-file commit's carried rows are already there
+    out.coalesce(1).write.mode("append").parquet(
         os.path.join(staged_path, BLOOM_DIR)
     )
 
@@ -223,100 +222,18 @@ def _snapshot_files(path: str) -> tuple[int, int]:
 
 
 
-def _adopt_parts(tmp: str, staged: str, prefix: str) -> list[str]:
-    """Move a Spark write job's part files from ``tmp`` into the
-    staged snapshot under fresh collision-free names, preserving any
-    hive-partition subdirectories; returns the new RELATIVE paths."""
-    new_rels: list[str] = []
-    run = uuid.uuid4().hex[:8]
-    for r, _dirs, fs in os.walk(tmp):
-        rel_dir = os.path.relpath(r, tmp)
-        rel_dir = "" if rel_dir == "." else rel_dir
-        for f in fs:
-            if not f.endswith(".parquet"):
-                continue
-            os.makedirs(os.path.join(staged, rel_dir), exist_ok=True)
-            rel = os.path.join(rel_dir, f"{prefix}-{run}-{f}")
-            os.rename(os.path.join(r, f), os.path.join(staged, rel))
-            new_rels.append(rel)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return new_rels
-
-
-
-def _incremental_stats(
-    entry: dict, keep_rels: list, staged: str, new_rels: list
-) -> dict | None:
-    """Commit-log file stats for an incrementally staged snapshot:
-    untouched files carry their entries VERBATIM, only the newly
-    written files pay a footer walk."""
-    stats_cols = list(entry.get("stats_cols") or [])
-    if entry.get("file_stats") is None and not stats_cols:
-        return None
-    keep_set = set(keep_rels)
-    carried = {
-        rel: st
-        for rel, st in (entry.get("file_stats") or {}).items()
-        if rel in keep_set
-    }
-    fresh = (
-        collect_file_stats(staged, stats_cols, only=set(new_rels))
-        if stats_cols
-        else {}
-    )
-    return {**carried, **fresh}
-
-
-
-def _carry_bloom_sidecar(
-    spark: SparkSession,
-    entry: dict,
-    snap: str,
-    staged: str,
-    keep_rels: list,
-    new_rels: list,
+def _index_bloom(
+    spark: SparkSession, entry: dict, staged: str, rels: list
 ) -> None:
-    """Bloom sidecar for an incrementally staged snapshot: index ONLY
-    the new files with a job over them; untouched files' sidecar rows
-    re-write driver-side (tiny metadata). Falls back to indexing
-    everything if the previous sidecar is missing, so the log's bloom
-    property never overstates coverage."""
+    """The DataFrame writers' bloom build for an add-file commit: one
+    job indexes the staged files ``rels`` (the staging step's
+    ``bloom_rels``) next to the rows it carried."""
     bloom_prop = entry.get("bloom")
-    if not bloom_prop:
-        return
-    cols = list(bloom_prop.get("cols") or [])
-    fpp = float(bloom_prop.get("fpp") or 0.01)
-    _write_bloom_sidecar(
-        spark,
-        staged,
-        cols,
-        fpp,
-        files=[os.path.join(staged, r) for r in new_rels],
-    )
-    if not _carry_bloom_rows(snap, staged, keep_rels):
-        _write_bloom_sidecar(spark, staged, cols, fpp)
-
-
-def _carry_bloom_rows(snap: str, staged: str, keep_rels: list) -> bool:
-    """Copy the previous snapshot's bloom rows for the untouched files
-    ``keep_rels`` into the staged sidecar (tiny metadata, driver-side).
-    False when the previous sidecar cannot be read or copied."""
-    import pyarrow.parquet as pq
-
-    try:
-        old = pq.read_table(os.path.join(snap, BLOOM_DIR))
-        keep_set = set(keep_rels)
-        mask = [f in keep_set for f in old.column("file").to_pylist()]
-        carried = old.filter(mask)
-        if carried.num_rows:
-            pq.write_table(
-                carried,
-                os.path.join(
-                    staged,
-                    BLOOM_DIR,
-                    f"carried-{uuid.uuid4().hex[:8]}.parquet",
-                ),
-            )
-    except (FileNotFoundError, OSError):
-        return False
-    return True
+    if bloom_prop and rels:
+        _write_bloom_sidecar(
+            spark,
+            staged,
+            list(bloom_prop.get("cols") or []),
+            float(bloom_prop.get("fpp") or 0.01),
+            files=[os.path.join(staged, r) for r in rels],
+        )

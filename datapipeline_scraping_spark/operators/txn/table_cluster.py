@@ -5,19 +5,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .errors import (
-    ConcurrentWriteError,
-    SchemaEvolutionError,
-    SnapshotExpiredError,
-)
-from .layout import _bucket_id, _link_tree, _location_matches, _write_bucketed
+from .errors import SchemaEvolutionError, SnapshotExpiredError
+from .layout import _location_matches, _write_bucketed
+from .staging import PARTS_DIR, _stage_add_files, _staging
+from .stats import _index_bloom
 from .table_core import _carry
 
 class _ClusterMixin:
@@ -281,23 +276,16 @@ class _ClusterMixin:
         expect_version: int | None = None,
     ) -> tuple[dict, int, str]:
         """Validation head of a bucket-preserving append (UNLOCKED):
-        resolves the base, requires a clustered entry, the committed
-        schema verbatim, and no MoR key collisions. Returns
-        ``(base_entry, base_version, snap_dir)``."""
-        ptr = self._pointer()
-        if ptr is None:
-            raise FileNotFoundError(
-                f"{self.root}: append_clustered needs a commit_clustered "
-                f"base — commit one first"
-            )
-        snap_name, version = ptr
-        if expect_version is not None and version != expect_version:
-            raise ConcurrentWriteError(
-                f"{self.root}: version {version} != expected {expect_version}"
-            )
-        entry = self._log_entry(version) or {}
-        bucket = entry.get("bucket")
-        if not bucket:
+        resolves the base, requires a clustered entry and the committed
+        schema verbatim. Returns ``(base_entry, base_version,
+        snap_dir)``."""
+        snap, version, entry = self._resolve_base(
+            "append",
+            f"{self.root}: append_clustered needs a commit_clustered "
+            f"base — commit one first",
+            expect_version=expect_version,
+        )
+        if not entry.get("bucket"):
             raise ValueError(
                 f"{self.root}: version {version} is not a clustered "
                 f"snapshot — use append() / commit_clustered()"
@@ -311,33 +299,6 @@ class _ClusterMixin:
                 f"schema verbatim ({[f.name for f in committed_schema]}); "
                 f"re-cluster via commit_clustered to change it"
             )
-        snap = os.path.join(self.root, snap_name)
-        if not os.path.isdir(snap):
-            raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished before append "
-                f"(concurrent writer + gc) — retry"
-            )
-        dv = entry.get("dv")
-        if dv:
-            # same guard as plain append(): an appended key colliding
-            # with a live merge-on-read key would be suppressed by the
-            # key-scoped _dv on read — refuse, compact first
-            dv_keys = spark.read.parquet(os.path.join(snap, self.DV_DIR))
-            n_bad = (
-                df.join(
-                    F.broadcast(dv_keys),
-                    on=list(dv["key_cols"]),
-                    how="left_semi",
-                )
-                .limit(1)
-                .count()
-            )
-            if n_bad:
-                raise ValueError(
-                    f"{self.root}: clustered append collides with live "
-                    f"merge-on-read keys (deletion vector / update delta "
-                    f"on {dv['key_cols']}) — compact_clustered() first"
-                )
         return entry, version, snap
 
 
@@ -351,53 +312,34 @@ class _ClusterMixin:
         meta: dict | None,
     ) -> tuple[str, dict]:
         """UNLOCKED staging half of a bucket-preserving append: write
-        the batch through the bucketed writer with the table's own
-        spec, hardlink the base snapshot's bucket files and MoR
-        sidecars forward, and adopt the new per-bucket files KEEPING
-        their bucket-id names. Returns ``(staged_dir, _write_log
-        kwargs)``; the caller owns the lock/CAS/pointer tail
-        (single-table: :meth:`append_clustered`; multi-table:
-        :meth:`TransactionGroup.commit`'s append-shaped members, r12)
-        and removes ``staged_dir`` on failure."""
+        the batch through the bucketed writer with the table's own spec
+        into a fresh staging dir, then run the shared staging step
+        (link the base's bucket files and MoR sidecars forward, adopt
+        the new per-bucket files KEEPING their bucket-id names); the
+        merge-on-read key guard reads the written parts, so the batch's
+        lineage runs once. Returns
+        ``(staged_dir, _publish fields)``; the caller owns the
+        lock/CAS/pointer tail (single-table: :meth:`append_clustered`;
+        multi-table: :meth:`TransactionGroup.commit`'s append-shaped
+        members, r12). The staging dir is removed if this raises."""
         bucket = entry["bucket"]
-        tmp = os.path.join(self.root, f".cappend-{uuid.uuid4().hex[:8]}")
-        _write_bucketed(
-            spark, df, bucket["col"], int(bucket["n"]),
-            bucket["sorted_by"], tmp,
-        )
-        staged = self._staging_path()
-        try:
-            os.makedirs(staged)
-            for f in os.listdir(snap):
-                if not f.endswith(".parquet"):
-                    continue
-                try:
-                    os.link(os.path.join(snap, f), os.path.join(staged, f))
-                except OSError:
-                    shutil.copy2(os.path.join(snap, f), os.path.join(staged, f))
-            # merge-on-read sidecars ride forward by hardlink (r12 —
-            # clustered DML parity with plain append)
-            for side in (self.DV_DIR, self.UPD_DIR):
-                sp = os.path.join(snap, side)
-                if os.path.isdir(sp):
-                    _link_tree(sp, os.path.join(staged, side))
-            for f in os.listdir(tmp):
-                if not f.endswith(".parquet"):
-                    continue
-                if _bucket_id(f) is None:  # pragma: no cover - writer names
-                    raise RuntimeError(
-                        f"bucketed writer produced a non-bucket file {f!r}"
-                    )
-                # keep the ORIGINAL name: the bucket id lives in it and
-                # the job uuid makes collisions with linked base files
-                # impossible by construction
-                dst = os.path.join(staged, f)
-                if os.path.exists(dst):  # pragma: no cover - uuid clash
-                    raise RuntimeError(f"bucket file collision on {f!r}")
-                os.rename(os.path.join(tmp, f), dst)
-        except Exception:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return staged, _carry(entry, meta=meta)
+        with _staging(self) as staged:
+            parts = os.path.join(staged, PARTS_DIR)
+            _write_bucketed(
+                spark, df, bucket["col"], int(bucket["n"]),
+                bucket["sorted_by"], parts,
+            )
+            if entry.get("dv"):
+                self._refuse_mor_collision(
+                    spark,
+                    snap,
+                    entry,
+                    spark.read.schema(df.schema).parquet(parts),
+                    "clustered append",
+                    "compact_clustered() first",
+                )
+            # new per-bucket files keep their names: the bucket id
+            # lives in them
+            added = _stage_add_files(staged, snap, entry)
+            _index_bloom(spark, entry, staged, added.bloom_rels)
+        return staged, _carry(entry, meta=meta, file_stats=added.file_stats)

@@ -4,26 +4,17 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import ConcurrentWriteError, ConstraintViolationError
-from .layout import (
-    GROUP_INTENT,
-    _current_spec,
-    _entry_specs,
-    _link_tree,
-    _spec_dirname,
-)
+from .layout import GROUP_INTENT, _refuse_clustered
 from .schema import _diff_frames, align_to_schema, evolve_schema
+from .staging import PARTS_DIR, _stage_add_files, _staging
 from .stats import (
-    _adopt_parts,
-    _carry_bloom_sidecar,
-    _incremental_stats,
+    _index_bloom,
     _inherited_meta,
     _write_bloom_sidecar,
     collect_file_stats,
@@ -237,35 +228,13 @@ class _CommitMixin:
             else:
                 cdf_prop = list(want_cdf_keys)
             staged = self._staging_path()
-            obs = None
-            df_w = df
-            if checks:
-                obs = Observation()
-                df_w = df.observe(
-                    obs,
-                    *[
-                        F.sum(
-                            F.when(
-                                ~F.coalesce(F.expr(pred), F.lit(True)), 1
-                            ).otherwise(0)
-                        ).alias(name)
-                        for name, pred in checks.items()
-                    ],
-                )
+            df_w, obs = _observe_checks(df, checks)
             writer = df_w.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(staged)
-            if obs is not None:
-                bad = {n: v for n, v in obs.get.items() if v}
-                if bad:
-                    shutil.rmtree(staged, ignore_errors=True)
-                    raise ConstraintViolationError(
-                        f"{self.root}: CHECK constraint(s) violated, "
-                        f"commit aborted — rows failing each: {bad} "
-                        f"(predicates: "
-                        f"{ {n: checks[n] for n in bad} })"
-                    )
+            with _staging(self, staged):
+                _raise_violations(self.root, obs, checks, "commit")
             cdf_entry: dict | None = None
             if cdf_prop:
                 if cdf_mode == "noop":
@@ -453,7 +422,8 @@ class _CommitMixin:
         and bloom sidecar rows forward verbatim and index only the
         new files, and materialize the change feed as the appended
         rows themselves (insert-only by construction — no diff join,
-        Delta's append-commit CDF optimization).
+        Delta's append-commit CDF optimization), read back from the
+        written parts so the batch's lineage runs once.
 
         Schema evolves exactly like :meth:`commit` (new columns
         append, missing columns null-fill, lossless widenings;
@@ -481,17 +451,16 @@ class _CommitMixin:
                 keep_snapshots=keep_snapshots,
                 meta=meta,
             )
-        tmp, entry, version, partition_by, target_schema, aligned = (
+        staged, entry, version, partition_by, target_schema = (
             self._prepare_append_batch(df, expect_version=expect_version)
         )
         return self._append_parts(
             df.sparkSession,
-            tmp,
+            staged,
             entry,
             version,
             partition_by,
             target_schema,
-            aligned,
             meta=meta,
             keep_snapshots=keep_snapshots,
         )
@@ -499,80 +468,41 @@ class _CommitMixin:
 
     def _prepare_append_batch(
         self, df: DataFrame, *, expect_version: int | None = None
-    ) -> tuple[str, dict, int, list, "T.StructType", DataFrame]:
+    ) -> tuple[str, dict, int, list, "T.StructType"]:
         """UNLOCKED head of an add-file commit: validate the batch
-        against the live entry (layout, schema evolution, MoR key
-        collisions, CHECK constraints) and write its part files to a
-        temp dir. Returns ``(tmp_parts_dir, base_entry, base_version,
-        partition_by, target_schema, aligned_batch)`` for
-        :meth:`_stage_append_parts` /:meth:`_append_parts` — also the
-        staging path :meth:`TransactionGroup.commit` uses for
-        append-shaped members (r12)."""
-        ptr = self._pointer()
-        if ptr is None:
-            raise FileNotFoundError(
-                f"{self.root}: append staging needs a committed base"
-            )
-        snap_name, version = ptr
-        if expect_version is not None and version != expect_version:
-            raise ConcurrentWriteError(
-                f"{self.root}: version {version} != expected {expect_version}"
-            )
-        snap = os.path.join(self.root, snap_name)
-        if not os.path.isdir(snap):
-            raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished before append "
-                f"(concurrent writer + gc) — retry"
-            )
-        entry = self._log_entry(version) or {}
-        if entry.get("bucket"):
-            # appended plain files interleaved with bucketed ones would
-            # silently break the bucket-id file-name contract behind
-            # read_clustered's exchange-free join — refuse loudly
-            raise ValueError(
-                f"{self.root}: the live snapshot is CLUSTERED "
-                f"(commit_clustered bucket layout) — append would mix "
-                f"unbucketed files into it. Use append_clustered() "
-                f"(bucket-preserving), or commit() to drop the layout."
-            )
+        against the live entry (layout, schema evolution, CHECK
+        constraints) and write its part files into a fresh staging
+        dir's :data:`PARTS_DIR`; the merge-on-read key guard reads those
+        parts back, so the batch's lineage runs once. Returns
+        ``(staged_dir, base_entry, base_version, partition_by,
+        target_schema)`` for :meth:`_stage_append_parts` /
+        :meth:`_append_parts` — also the staging path
+        :meth:`TransactionGroup.commit` uses for append-shaped members
+        (r12). The staging dir is removed if this raises."""
+        snap, version, entry = self._resolve_base(
+            "append",
+            f"{self.root}: append staging needs a committed base",
+            expect_version=expect_version,
+        )
+        # appended plain files interleaved with bucketed ones would
+        # silently break the bucket-id file-name contract behind
+        # read_clustered's exchange-free join — refuse loudly
+        _refuse_clustered(
+            self.root,
+            entry,
+            "append would mix unbucketed files into it. Use "
+            "append_clustered() (bucket-preserving), or commit() to drop "
+            "the layout.",
+        )
         spark = df.sparkSession
         live = self._live_schema(spark)
         target_schema = (
             evolve_schema(live, df.schema) if live is not None else df.schema
         )
-        aligned = align_to_schema(df, target_schema)
-        dv = entry.get("dv")
-        if dv:
-            key_cols = list(dv["key_cols"])
-            dv_keys = spark.read.parquet(os.path.join(snap, self.DV_DIR))
-            n_bad = (
-                aligned.join(F.broadcast(dv_keys), on=key_cols, how="left_semi")
-                .limit(1)
-                .count()
-            )
-            if n_bad:
-                raise ValueError(
-                    f"{self.root}: append collides with live merge-on-read "
-                    f"keys (deletion vector / update delta on {key_cols}) — "
-                    f"the key-scoped _dv would suppress the appended rows; "
-                    f"compact_table() first to materialize MoR state"
-                )
         checks = dict(entry.get("checks") or {})
-        obs = None
-        to_write = aligned
-        if checks:
-            obs = Observation()
-            to_write = aligned.observe(
-                obs,
-                *[
-                    F.sum(
-                        F.when(
-                            ~F.coalesce(F.expr(pred), F.lit(True)), 1
-                        ).otherwise(0)
-                    ).alias(name)
-                    for name, pred in checks.items()
-                ],
-            )
+        to_write, obs = _observe_checks(
+            align_to_schema(df, target_schema), checks
+        )
         # write the batch under PHYSICAL column names so the appended
         # files match the linked base files (metadata-only renames
         # stay metadata); evolution-added columns map identity
@@ -600,106 +530,72 @@ class _CommitMixin:
                 cmap.get(c, c) for c in partition_by
             ] + [c for c in so_phys if c not in partition_by]
             to_write = to_write.sortWithinPartitions(*keys)
-        tmp = os.path.join(self.root, f".append-{uuid.uuid4().hex[:8]}")
-        writer = to_write.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(
-                *[cmap.get(c, c) for c in partition_by]
-            )
-        writer.parquet(tmp)
-        if obs is not None:
-            bad = {n: v for n, v in obs.get.items() if v}
-            if bad:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise ConstraintViolationError(
-                    f"{self.root}: CHECK constraint(s) violated, append "
-                    f"aborted — rows failing each: {bad} "
-                    f"(predicates: { {n: checks[n] for n in bad} })"
+        with _staging(self) as staged:
+            writer = to_write.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(
+                    *[cmap.get(c, c) for c in partition_by]
                 )
-        return tmp, entry, version, partition_by, target_schema, aligned
+            writer.parquet(os.path.join(staged, PARTS_DIR))
+            if entry.get("dv"):
+                self._refuse_mor_collision(
+                    spark,
+                    snap,
+                    entry,
+                    _written_batch(spark, staged, entry, target_schema),
+                    "append",
+                    "the key-scoped _dv would suppress the appended rows; "
+                    "compact_table() first to materialize MoR state",
+                )
+            _raise_violations(self.root, obs, checks, "append")
+        return staged, entry, version, partition_by, target_schema
 
 
     def _stage_append_parts(
         self,
         spark: SparkSession,
-        tmp: str,
+        staged: str,
         entry: dict,
         version: int,
         partition_by: list,
         target_schema: "T.StructType",
-        changes_df: DataFrame,
         *,
         meta: dict | None,
     ) -> tuple[str, dict]:
-        """UNLOCKED staging half of an add-file commit: link the base
-        snapshot forward, adopt the pre-written part files out of
-        ``tmp``, maintain stats/bloom incrementally, and materialize
-        the insert-only change feed from ``changes_df``. Returns
-        ``(staged_dir, _publish fields)`` — the caller owns the
+        """UNLOCKED staging half of an add-file commit: materialize the
+        insert-only change feed from the parts
+        :meth:`_prepare_append_batch` wrote into ``staged``, then run the
+        shared staging step (link the base forward, adopt the parts,
+        carry stats and bloom rows) and index the new files' blooms.
+        Returns ``(staged_dir, _publish fields)`` — the caller owns the
         lock/CAS/pointer tail (single-table: :meth:`_append_parts`;
         multi-table: :meth:`TransactionGroup.commit`'s append-shaped
-        members, r12) and must remove ``staged_dir`` on failure."""
-        snap = os.path.join(self.root, entry["snapshot"])
-        staged = self._staging_path()
-        os.makedirs(staged)
-        keep_rels: list[str] = []
-        for r, dirs, fs in os.walk(snap):
-            rel_dir = os.path.relpath(r, snap)
-            if rel_dir == ".":
-                # MoR sidecars link below; _cdf stays version-local
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                rel_dir = ""
-            for f in fs:
-                if not f.endswith(".parquet"):
-                    continue
-                rel = os.path.join(rel_dir, f) if rel_dir else f
-                dst = os.path.join(staged, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(os.path.join(snap, rel), dst)
-                except OSError:
-                    shutil.copy2(os.path.join(snap, rel), dst)
-                keep_rels.append(rel)
-        for side in (self.DV_DIR, self.UPD_DIR):
-            sp = os.path.join(snap, side)
-            if os.path.isdir(sp):
-                _link_tree(sp, os.path.join(staged, side))
-        # insert-only change feed: the appended rows ARE the changes
-        cdf_prop = list((entry.get("cdf") or {}).get("key_cols") or [])
-        cdf_entry = None
-        if cdf_prop:
-            cdf_path = os.path.join(staged, self.CDF_DIR)
-            changes = changes_df.select(
-                F.lit("insert").alias("_change_type"), "*"
-            ).withColumn(
-                "_commit_version", F.lit(version + 1).cast("long")
-            )
-            changes.write.mode("overwrite").parquet(cdf_path)
-            cdf_entry = {
-                "key_cols": cdf_prop,
-                "n_changes": int(spark.read.parquet(cdf_path).count()),
-                "change_types": ["insert"],
-            }
-        # an EVOLVED table's new batch lands under the ACTIVE spec's
-        # subtree (the batch was partitioned by that spec's columns);
-        # rel paths re-anchor to the snapshot root for stats/bloom
-        specs = _entry_specs(entry)
-        if specs:
-            sd = _spec_dirname(_current_spec(specs)["id"])
-            new_rels = [
-                os.path.join(sd, r)
-                for r in _adopt_parts(tmp, os.path.join(staged, sd), "append")
-            ]
-        else:
-            new_rels = _adopt_parts(tmp, staged, "append")
-        file_stats = _incremental_stats(entry, keep_rels, staged, new_rels)
-        _carry_bloom_sidecar(spark, entry, snap, staged, keep_rels, new_rels)
+        members, r12). ``staged`` is removed if this raises."""
+        with _staging(self, staged):
+            # insert-only change feed: the appended rows ARE the changes
+            cdf_prop = list((entry.get("cdf") or {}).get("key_cols") or [])
+            cdf_entry = None
+            if cdf_prop:
+                cdf_path = os.path.join(staged, self.CDF_DIR)
+                _written_batch(spark, staged, entry, target_schema).select(
+                    F.lit("insert").alias("_change_type"), "*"
+                ).withColumn(
+                    "_commit_version", F.lit(version + 1).cast("long")
+                ).write.mode("overwrite").parquet(cdf_path)
+                cdf_entry = {
+                    "key_cols": cdf_prop,
+                    "n_changes": int(spark.read.parquet(cdf_path).count()),
+                    "change_types": ["insert"],
+                }
+            snap = os.path.join(self.root, entry["snapshot"])
+            added = _stage_add_files(staged, snap, entry, rename="append")
+            _index_bloom(spark, entry, staged, added.bloom_rels)
         return staged, _carry(
             entry,
             partition_by=partition_by,
             schema_json=target_schema.json(),
             meta=meta,
-            file_stats=file_stats,
+            file_stats=added.file_stats,
             cdf=cdf_entry,
         )
 
@@ -707,34 +603,81 @@ class _CommitMixin:
     def _append_parts(
         self,
         spark: SparkSession,
-        tmp: str,
+        staged: str,
         entry: dict,
         version: int,
         partition_by: list,
         target_schema: "T.StructType",
-        changes_df: DataFrame,
         *,
         meta: dict | None,
         keep_snapshots: int,
     ) -> int:
-        """The add-file commit behind :meth:`append`: link the base
-        snapshot forward, adopt the part files written to ``tmp``,
-        maintain stats/bloom incrementally, materialize the insert-only
-        change feed from ``changes_df``, and CAS-commit against
-        ``version``."""
-        try:
-            staged, fields = self._stage_append_parts(
-                spark,
-                tmp,
-                entry,
-                version,
-                partition_by,
-                target_schema,
-                changes_df,
-                meta=meta,
-            )
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        """The add-file commit behind :meth:`append`: stage the parts
+        :meth:`_prepare_append_batch` wrote (:meth:`_stage_append_parts`)
+        and CAS-commit against ``version``."""
+        staged, fields = self._stage_append_parts(
+            spark,
+            staged,
+            entry,
+            version,
+            partition_by,
+            target_schema,
+            meta=meta,
+        )
         return self._publish(
             staged, fields, base_version=version, keep_snapshots=keep_snapshots
+        )
+
+
+def _written_batch(
+    spark: SparkSession, staged: str, entry: dict, schema: "T.StructType"
+) -> DataFrame:
+    """The batch :meth:`_CommitMixin._prepare_append_batch` wrote into
+    ``staged``, read back from its parts under LOGICAL names in
+    ``schema``'s order — partition values come back typed from the
+    hive dirs. Reading the parts instead of re-running the batch keeps
+    non-deterministic columns identical between table and feed."""
+    cmap = dict(entry.get("column_map") or {})
+    phys = T.StructType(
+        [
+            T.StructField(cmap.get(f.name, f.name), f.dataType, True)
+            for f in schema.fields
+        ]
+    )
+    parts = spark.read.schema(phys).parquet(os.path.join(staged, PARTS_DIR))
+    return parts.select(
+        *[F.col(cmap.get(f.name, f.name)).alias(f.name) for f in schema.fields]
+    )
+
+
+def _observe_checks(
+    df: DataFrame, checks: dict
+) -> tuple[DataFrame, "Observation | None"]:
+    """``df`` with one failing-row count per CHECK constraint riding its
+    write job (NULL satisfies a predicate), and the Observation."""
+    if not checks:
+        return df, None
+    obs = Observation()
+    return df.observe(
+        obs,
+        *[
+            F.sum(
+                F.when(~F.coalesce(F.expr(pred), F.lit(True)), 1).otherwise(0)
+            ).alias(name)
+            for name, pred in checks.items()
+        ],
+    ), obs
+
+
+def _raise_violations(
+    root: str, obs: "Observation | None", checks: dict, action: str
+) -> None:
+    """Raise :class:`ConstraintViolationError` if the observed write
+    held rows failing any CHECK constraint."""
+    bad = {n: v for n, v in (obs.get if obs else {}).items() if v}
+    if bad:
+        raise ConstraintViolationError(
+            f"{root}: CHECK constraint(s) violated, {action} aborted — "
+            f"rows failing each: {bad} "
+            f"(predicates: { {n: checks[n] for n in bad} })"
         )

@@ -9,6 +9,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ...sources.manifest_log import log_path, read_log_entry, read_pointer
@@ -82,6 +83,53 @@ class _CoreMixin:
     def version(self) -> int | None:
         ptr = self._pointer()
         return None if ptr is None else ptr[1]
+
+    def _resolve_base(
+        self, action: str, missing: str, *, expect_version: int | None = None
+    ) -> tuple[str, int, dict]:
+        """``(snapshot dir, version, log entry)`` of the live snapshot a
+        writer stages against, from ONE pointer read. Raises
+        FileNotFoundError(``missing``) on an empty root and
+        :class:`ConcurrentWriteError` on an ``expect_version`` miss or
+        a GC'd snapshot (an ``os.walk`` would read it as zero files)."""
+        ptr = self._pointer()
+        if ptr is None:
+            raise FileNotFoundError(missing)
+        snap_name, version = ptr
+        if expect_version is not None and version != expect_version:
+            raise ConcurrentWriteError(
+                f"{self.root}: version {version} != expected {expect_version}"
+            )
+        snap = os.path.join(self.root, snap_name)
+        if not os.path.isdir(snap):
+            raise ConcurrentWriteError(
+                f"{self.root}: snapshot {snap_name} vanished before "
+                f"{action} (concurrent writer + gc) — retry"
+            )
+        return snap, version, self._log_entry(version) or {}
+
+    def _refuse_mor_collision(
+        self,
+        spark: SparkSession,
+        snap: str,
+        entry: dict,
+        batch: DataFrame,
+        what: str,
+        hint: str,
+    ) -> None:
+        """Refuse an appended batch holding a key of ``entry``'s live
+        deletion vector / update delta: the key-scoped ``_dv`` would
+        suppress the appended row on read."""
+        key_cols = list(entry["dv"]["key_cols"])
+        dv_keys = spark.read.parquet(os.path.join(snap, self.DV_DIR))
+        if batch.join(
+            F.broadcast(dv_keys), on=key_cols, how="left_semi"
+        ).limit(1).count():
+            raise ValueError(
+                f"{self.root}: {what} collides with live merge-on-read "
+                f"keys (deletion vector / update delta on {key_cols}) — "
+                f"{hint}"
+            )
 
     # -- version log -------------------------------------------------------
     def _log_path(self, version: int) -> str:

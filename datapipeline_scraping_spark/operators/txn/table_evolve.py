@@ -12,6 +12,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ...sources.skipping import data_files
 from .errors import (
     AuditFailedError,
     ConcurrentWriteError,
@@ -20,6 +21,7 @@ from .errors import (
 )
 from .layout import (
     _entry_specs,
+    _link,
     _link_tree,
     _refuse_clustered,
     _spec_dirname,
@@ -852,25 +854,17 @@ class _EvolveMixin:
         the reference pins one layout per target table in config
         (``src/storage.py:41-53``); evolution is what a 100 TB ledger
         needs when that choice has to change in place."""
-        ptr = self._pointer()
-        if ptr is None:
-            raise FileNotFoundError(
-                f"no committed snapshot under {self.root}"
-            )
-        snap_name, cur_ver = ptr
-        if expect_version is not None and cur_ver != expect_version:
-            raise ConcurrentWriteError(
-                f"{self.root}: version {cur_ver} != expected "
-                f"{expect_version}"
-            )
-        entry = self._log_entry(cur_ver) or {}
-        if entry.get("bucket"):
-            raise ValueError(
-                f"{self.root}: the live snapshot is CLUSTERED "
-                f"(commit_clustered bucket layout) — partition "
-                f"evolution applies to hive layouts. commit(read(...)) "
-                f"to deliberately drop the clustering first."
-            )
+        src, cur_ver, entry = self._resolve_base(
+            "evolve_partition",
+            f"no committed snapshot under {self.root}",
+            expect_version=expect_version,
+        )
+        _refuse_clustered(
+            self.root,
+            entry,
+            "partition evolution applies to hive layouts. "
+            "commit(read(...)) to deliberately drop the clustering first.",
+        )
         new_pb = [str(c) for c in (new_partition_by or [])]
         cur_pb = list(entry.get("partition_by") or [])
         if new_pb == cur_pb:
@@ -896,12 +890,6 @@ class _EvolveMixin:
                     f"{self.root}: partition column {c!r} not in the "
                     f"table schema {sorted(names)}"
                 )
-        src = os.path.join(self.root, snap_name)
-        if not os.path.isdir(src):
-            raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished before "
-                f"evolve_partition (concurrent writer + gc) — retry"
-            )
         specs = _entry_specs(entry)
         staged = self._staging_path()
         file_stats = entry.get("file_stats")
@@ -915,40 +903,20 @@ class _EvolveMixin:
             else:
                 # first evolution: the existing data tree BECOMES
                 # spec-0; hidden sidecars stay at the snapshot top
-                os.makedirs(staged)
                 prefix = _spec_dirname(0)
-                for d, dirs, fs in os.walk(src):
-                    rel = os.path.relpath(d, src)
-                    if rel == ".":
-                        side = [
-                            x
-                            for x in dirs
-                            if x.startswith(("_", "."))
-                            and x != self.CDF_DIR
-                        ]
-                        dirs[:] = [
-                            x for x in dirs if not x.startswith(("_", "."))
-                        ]
-                        for s in side:
-                            _link_tree(
-                                os.path.join(src, s),
-                                os.path.join(staged, s),
-                            )
-                        rel = ""
-                    dst_dir = (
-                        os.path.join(staged, prefix, rel)
-                        if rel
-                        else os.path.join(staged, prefix)
-                    )
-                    os.makedirs(dst_dir, exist_ok=True)
-                    for f in fs:
-                        if not f.endswith(".parquet"):
-                            continue
-                        sp_, dp_ = os.path.join(d, f), os.path.join(dst_dir, f)
-                        try:
-                            os.link(sp_, dp_)
-                        except OSError:
-                            shutil.copy2(sp_, dp_)
+                os.makedirs(os.path.join(staged, prefix))
+                for fp in data_files(src):
+                    dst = os.path.join(staged, prefix, os.path.relpath(fp, src))
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    _link(fp, dst)
+                for side in os.listdir(src):
+                    sp = os.path.join(src, side)
+                    if (
+                        side.startswith(("_", "."))
+                        and side != self.CDF_DIR
+                        and os.path.isdir(sp)
+                    ):
+                        _link_tree(sp, os.path.join(staged, side))
                 specs = [
                     {"id": 0, "partition_by": cur_pb},
                     {"id": 1, "partition_by": new_pb},
@@ -994,8 +962,8 @@ class _EvolveMixin:
         except FileNotFoundError as exc:
             shutil.rmtree(staged, ignore_errors=True)
             raise ConcurrentWriteError(
-                f"{self.root}: snapshot {snap_name} vanished during "
-                f"evolve_partition (concurrent writer + gc) — retry"
+                f"{self.root}: snapshot {os.path.basename(src)} vanished "
+                f"during evolve_partition (concurrent writer + gc) — retry"
             ) from exc
         except Exception:
             shutil.rmtree(staged, ignore_errors=True)

@@ -15,6 +15,7 @@ cores and rely on AQE coalescing.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -69,6 +70,9 @@ _RUNTIME_CONF = {
     "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
 }
 
+#: _RUNTIME_CONF keys prepare() already warned it could not set
+_UNSET_WARNED: set[str] = set()
+
 
 def prepare(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an existing session.
@@ -79,9 +83,16 @@ def prepare(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # non-runtime-settable in this build — ignore
-            pass
+        except Exception as exc:
+            # a session built elsewhere may refuse a static conf: the
+            # query still runs, so report once per key instead of raising
+            if k not in _UNSET_WARNED:
+                _UNSET_WARNED.add(k)
+                warnings.warn(
+                    f"session.prepare could not set {k}={v!r}: {exc}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
     return spark
 
 

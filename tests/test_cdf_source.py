@@ -375,3 +375,49 @@ def test_cdf_change_types_applies_on_stream_path(spark, tmp_path):
             .start()
             .awaitTermination(60)
         )
+
+
+def _table_with_dv(spark, tmp_path):
+    """v1: pk 0..9 with the feed on; v2: a deletion vector on pk 0."""
+    tbl = ManifestTable(str(tmp_path / "t"), retention_sec=3600)
+    tbl.commit(_df(spark, [(i, f"v{i}") for i in range(10)]), cdf_keys=["pk"])
+    tbl.delete_where(spark, "pk = 0", ["pk"])
+    return tbl
+
+
+def test_append_runs_the_batch_lineage_once(spark, tmp_path):
+    """An append writes its change feed (and runs its merge-on-read key
+    guard) from the parts it wrote, so a UDF in the batch runs once per
+    row, not once for the table and again for the feed."""
+    tbl = _table_with_dv(spark, tmp_path)
+    calls = spark.sparkContext.accumulator(0)
+
+    def tag(pk):
+        calls.add(1)
+        return f"n{pk}"
+
+    batch = spark.range(100, 200).select(
+        F.col("id").alias("pk"), F.udf(tag, "string")("id").alias("v")
+    )
+    tbl.append(batch)
+    assert calls.value == 100
+    assert tbl._log_entry(tbl.version())["cdf"]["n_changes"] == 100
+
+
+def test_append_feed_rows_equal_the_committed_rows(spark, tmp_path):
+    """A non-deterministic batch column (``current_timestamp()`` is
+    fixed per query) reaches the feed with the value the table holds."""
+    tbl = _table_with_dv(spark, tmp_path)
+    batch = spark.range(100, 110).select(
+        F.col("id").alias("pk"), F.current_timestamp().cast("string").alias("v")
+    )
+    tbl.append(batch)
+    feed = {
+        (r["pk"], r["v"])
+        for r in _feed(spark, tbl.root, starting_version=3).collect()
+        if r["_change_type"] == "insert"
+    }
+    table = {
+        (r["pk"], r["v"]) for r in tbl.read(spark).where("pk >= 100").collect()
+    }
+    assert len(table) == 10 and feed == table

@@ -385,15 +385,15 @@ def test_evolution_races_serialize_through_the_cas(spark, tmp_path):
     base = _df(spark, 0, 10)
     mt.commit(base, partition_by=["dt"], keep_snapshots=50)
     # stage an append against v1...
-    tmp, entry, version, pb, schema, aligned = mt._prepare_append_batch(
+    staged, entry, version, pb, schema = mt._prepare_append_batch(
         _df(spark, 10, 13)
     )
     # ...then an evolution wins the race to v2
     mt.evolve_partition(["region"], keep_snapshots=50)
     with pytest.raises(ConcurrentWriteError):
         mt._append_parts(
-            spark, tmp, entry, version, pb, schema,
-            _df(spark, 10, 13), meta=None, keep_snapshots=50,
+            spark, staged, entry, version, pb, schema,
+            meta=None, keep_snapshots=50,
         )
     # the loser's retry goes through the normal path and lands under
     # the new active spec

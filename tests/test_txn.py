@@ -3735,3 +3735,98 @@ def test_declared_sort_order_keeps_appends_skippable(spark, tmp_path):
     assert len(ranges) >= 2
     for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
         assert a_hi <= b_lo or a_hi <= b_hi, (ranges,)
+
+
+def _leftovers(root):
+    """Root entries other than the pointer, the log and committed
+    snapshot dirs."""
+    import re
+
+    return sorted(
+        e
+        for e in os.listdir(root)
+        if e not in ("CURRENT", "_log")
+        and not re.fullmatch(r"snap-\d{6}-[0-9a-f]{8}", e)
+    )
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [
+        "append",
+        "append_clustered",
+        "compact_small_files",
+        "compact_clustered",
+        "append_files_local",
+    ],
+)
+def test_failed_add_file_writer_leaves_no_temp_dirs(
+    spark, tmp_path, monkeypatch, writer
+):
+    """Every add-file writer stages all of its temp output inside one
+    snap-staging dir and removes it when the write fails: the table
+    root keeps only CURRENT, _log and committed snapshots, and the
+    table still reads its pre-call rows. ``append`` fails in a write
+    task (a UDF that throws on one row); the other writers fail inside
+    the shared staging step, after their new parts were written."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datapipeline_scraping_spark.operators.txn import (
+        append_files_local,
+        compact_clustered,
+        compact_small_files,
+    )
+    from datapipeline_scraping_spark.operators.txn import staging
+
+    tbl = ManifestTable(str(tmp_path / "t"))
+    base = _df(spark, [(i, f"v{i}") for i in range(20)])
+    batch = _df(spark, [(i, f"v{i}") for i in range(100, 120)])
+    if writer in ("append_clustered", "compact_clustered"):
+        tbl.commit_clustered(base, "pk", 4)
+        if writer == "compact_clustered":
+            tbl.append_clustered(batch)
+    else:
+        tbl.commit(base.repartition(4))
+    before = sorted(tuple(r) for r in tbl.read(spark).collect())
+
+    def injected(*_a, **_kw):
+        raise RuntimeError("injected staging failure")
+
+    if writer == "append":
+
+        def boom(pk):
+            if pk == 105:
+                raise ValueError("bad row")
+            return f"v{pk}"
+
+        with pytest.raises(Exception):
+            tbl.append(
+                spark.range(100, 120).select(
+                    F.col("id").alias("pk"), F.udf(boom, "string")("id").alias("v")
+                )
+            )
+    else:
+        monkeypatch.setattr(staging, "_adopt", injected)
+        with pytest.raises(RuntimeError, match="injected"):
+            if writer == "append_clustered":
+                tbl.append_clustered(batch)
+            elif writer == "compact_small_files":
+                compact_small_files(spark, tbl.root)
+            elif writer == "compact_clustered":
+                compact_clustered(spark, tbl.root)
+            else:
+                parts = tmp_path / "parts"  # caller-owned: outside the root
+                parts.mkdir()
+                pq.write_table(
+                    pa.table(
+                        {
+                            "pk": pa.array([100, 101], pa.int64()),
+                            "v": ["v100", "v101"],
+                        }
+                    ),
+                    str(parts / "part-0.parquet"),
+                )
+                append_files_local(tbl.root, str(parts))
+    assert _leftovers(tbl.root) == []
+    assert sorted(tuple(r) for r in tbl.read(spark).collect()) == before

@@ -48,6 +48,20 @@ def _reader(root: str, where: str | None = None):
     return ManifestReader(opts, schema)
 
 
+def _part_files(reader) -> set:
+    """The file paths a planning-only reader's ``partitions()`` scan
+    (the all-pruned placeholder has none)."""
+    return {p.value[0] for p in reader.partitions() if p.value[0] is not None}
+
+
+def _input_files(df) -> set:
+    """The local file paths ``df``'s scans read (``inputFiles()``
+    returns percent-encoded URIs)."""
+    from urllib.parse import unquote, urlparse
+
+    return {unquote(urlparse(f).path) for f in df.inputFiles()}
+
+
 _Q196_LO = "2024-01-10 00:00:00"
 _Q196_HI = "2024-01-17 00:00:00"
 
@@ -71,18 +85,18 @@ def q196_temporal_predicate_view(spark, sf_dir):
     planning against the hive date dirs AND each file's committed
     [min, max] ts stats (temporal bounds and stats meet as ISO strings
     with conservative prefix truncation), and re-applied row-exactly
-    per task. The view itself is minted by ``predicate_view`` — the
-    ergonomic path that validates the predicate against the committed
-    schema at CREATE and writes the OPTIONS escaping, because a bare
+    as a Spark predicate over a native parquet scan of the kept files.
+    The view is minted by ``predicate_view``, which validates the
+    predicate against the committed schema at creation, because a bare
     ``USING manifest`` view scans O(table) under a plain WHERE by
     design (Spark 4.1's shared read-info slot, see the r13 redesign in
     ``sources/manifest_datasource.py``).
 
     In-query asserts pin the skipping: the 7-of-30-day window keeps
-    strictly fewer InputPartitions than the full ledger, and the
-    SQL-visible scan of the minted view launches that reduced task
-    count. At 100 TB this is THE dominant predicate shape on an events
-    ledger — O(window) tasks, not O(table)."""
+    strictly fewer files than the full ledger, and the minted view's
+    scan reads exactly those files. At 100 TB this is THE dominant
+    predicate shape on an events ledger — O(window) files, not
+    O(table)."""
     from .operators.txn import ManifestTable
     from .sources.manifest_sql import predicate_view
 
@@ -105,15 +119,15 @@ def q196_temporal_predicate_view(spark, sf_dir):
         assert mt.annotate(1, tpv_done=True)
     where = f"ts >= TIMESTAMP '{_Q196_LO}' AND ts < TIMESTAMP '{_Q196_HI}'"
     base = len(_reader(root).partitions())
-    kept = len(_reader(root, where).partitions())
-    assert 0 < kept < base, (kept, base)
+    kept_files = _part_files(_reader(root, where))
+    assert 0 < len(kept_files) < base, (len(kept_files), base)
     name = f"tpv_view_{_key(sf_dir)}"
     predicate_view(spark, name, root, where)
     view = spark.table(name)
-    # the minted view's scan launches only the window's files
-    assert view.rdd.getNumPartitions() == kept, (
-        view.rdd.getNumPartitions(),
-        kept,
+    # the minted view's scan reads exactly the window's files
+    assert _input_files(view) == kept_files, (
+        sorted(_input_files(view)),
+        sorted(kept_files),
     )
     return view.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count("*").cast("long").alias("n_events"),

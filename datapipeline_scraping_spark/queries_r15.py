@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .functions.numeric import exact_sum, sql_exact_sum
 from .queries import _t, q
-from .queries_r14 import _key, _reader
+from .queries_r14 import _input_files, _key, _part_files, _reader
 from .streaming.events import SCRATCH
 
 _Q199_A_LO = "2024-01-03 00:00:00"
@@ -59,13 +59,13 @@ def q199_dnf_predicate_view(spark, sf_dir):
     window" — the most common non-conjunctive predicate on a real
     ledger — previously required minting one view per disjunct and
     UNIONing them; now it is one relation, one scan, O(window1 +
-    window2) tasks.
+    window2) files.
 
     In-query asserts pin the composition: each 3-day window keeps
     exactly its own files, the disjunction keeps exactly their union
-    (disjoint windows: the sum), and the minted view launches that
-    task count. Rows are re-filtered exactly per task with the
-    Kleene-OR of per-conjunct masks (SQL three-valued semantics).
+    (disjoint windows: the sum), and the minted view's scan reads
+    exactly those files. Rows are re-filtered exactly by the
+    disjunction as a Spark predicate (SQL three-valued semantics).
     Shares the q196 ledger build (same table, same scratch root)."""
     from .operators.txn import ManifestTable
     from .sources.manifest_sql import predicate_view
@@ -102,7 +102,8 @@ def q199_dnf_predicate_view(spark, sf_dir):
             f"ts < TIMESTAMP '{_Q199_B_HI}'",
         ).partitions()
     )
-    kept = len(_reader(root, _Q199_WHERE).partitions())
+    kept_files = _part_files(_reader(root, _Q199_WHERE))
+    kept = len(kept_files)
     # the disjunction keeps exactly the union of the two windows'
     # files — disjoint windows on a day-partitioned ledger: the sum
     assert 0 < kept_a < base and 0 < kept_b < base, (kept_a, kept_b, base)
@@ -110,9 +111,9 @@ def q199_dnf_predicate_view(spark, sf_dir):
     name = f"dnf_view_{_key(sf_dir)}"
     predicate_view(spark, name, root, _Q199_WHERE)
     view = spark.table(name)
-    assert view.rdd.getNumPartitions() == kept, (
-        view.rdd.getNumPartitions(),
-        kept,
+    assert _input_files(view) == kept_files, (
+        sorted(_input_files(view)),
+        sorted(kept_files),
     )
     return view.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count("*").cast("long").alias("n_events"),

@@ -95,7 +95,10 @@ optimistic retry, exactly Delta's rebase-and-retry.
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
 import json
+import operator
 import os
 import re
 import weakref
@@ -106,6 +109,7 @@ from pyspark.sql import functions as F
 from ..operators.merge import merge_into
 from ..operators.txn import ConcurrentWriteError, ManifestTable
 from .manifest_datasource import register as _register_format
+from .skipping import column_types, conjunct, kept_files
 
 #: per-session registered DML targets: lowercase name -> {"root",
 #: "key_cols"}. WeakKey so a collected session's entries die with it.
@@ -170,43 +174,55 @@ def predicate_view(
     manifest`` view scans O(table) under any plain ``WHERE`` (the r13
     soundness redesign: Spark 4.1's shared read-info slot makes
     filter-dependent ``partitions()`` unsound on multi-reference
-    plans, see ``manifest_datasource.ManifestReader``), so the sound
-    way to a pruned scan is a predicate carried in the RELATION
-    IDENTITY. This helper writes the ``where`` OPTION quoting/escaping
-    for you:
+    plans, see ``manifest_datasource.ManifestReader``), so this helper
+    picks the files itself:
 
         predicate_view(spark, "recent", root,
                        "ts >= TIMESTAMP '2024-06-01 00:00:00'")
-        spark.sql("SELECT ... FROM recent")    -- O(window) tasks
+        spark.sql("SELECT ... FROM recent")    -- O(window) files
 
-    ``where`` is the option grammar (r15: DNF — OR of conjunctions of
-    comparisons, IN, BETWEEN, IS [NOT] NULL, LIKE; numeric/decimal/
-    string/boolean/date/timestamp literals) — validated HERE against
-    the committed schema so a predicate the scan cannot apply exactly
-    fails at CREATE, not mid-query. Which predicate shape prunes
-    through which skipping tier (and why ``!=``/``IS NULL``/float
-    ``>`` are narrower) is tabulated in README.md under "Which
-    predicate prunes through which tier" — scan cost is predictable
-    from the predicate's shape. The view is read-only (the datasource
-    refuses writes through a filtered relation) and version-pinned
-    like any manifest view: pass ``version``/``asof`` for time
-    travel, and re-run the helper to pick up commits made after it."""
-    from .manifest_datasource import ManifestReader, _resolve_version
+    ``where`` is the ``where``-option grammar (r15: DNF — OR of
+    conjunctions of comparisons, IN, BETWEEN, IS [NOT] NULL, LIKE;
+    numeric/decimal/string/boolean/date/timestamp literals), parsed
+    and coerced against the resolved version's committed schema by
+    the same ``parse_where``/``conjunct`` the option uses, so a typo
+    fails here, not mid-query. The kept files are the option's too
+    (``skipping.kept_files``). The view itself is a NATIVE parquet
+    scan of exactly those files through
+    :meth:`ManifestTable._read_file_subset` (declared schema, hive
+    ``basePath``, spec groups, the ``_dv`` anti-join, the ``_upd``
+    union, renames — the merge-on-read composition ``read_where``
+    runs), filtered by the same DNF as a Spark predicate
+    (:func:`_where_column`): Catalyst and AQE plan a
+    ``FileSourceScan`` and no Python worker runs. A scan's partition
+    count is Spark's split packing, not the file count — assert files
+    through ``DataFrame.inputFiles()``. The ``where`` option of a
+    ``USING manifest`` relation still masks rows in Arrow per task;
+    both agree row for row. Which predicate shape prunes through
+    which skipping tier (and why ``!=``/``IS NULL``/float ``>`` are
+    narrower) is tabulated in README.md under "Which predicate prunes
+    through which tier".
+
+    The view is read-only (``INSERT INTO`` a DataFrame view raises)
+    and pins the resolved version's files and log entry: pass
+    ``version``/``asof`` for time travel, and re-run the helper to
+    pick up commits made after it."""
+    from .manifest_datasource import _resolve_version, parse_where
 
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
         raise ValueError(f"invalid view name {name!r}")
     if any(ch in root for ch in ("'", '"', "\\", "\n", "\r")):
+        # the roots the USING manifest surface accepts (register_table
+        # interpolates them into an OPTIONS literal)
         raise ValueError(
             f"table root {root!r} contains quote/escape characters — "
             f"not representable in the view's OPTIONS clause"
         )
     if any(ch in where for ch in ("\\", "\n", "\r")):
-        # the where option is interpolated into a single-quoted SQL
-        # literal, and Spark processes backslash escapes inside those
-        # ('a\tb' reaches the view with \t collapsed to a tab) — the
-        # predicate validated below and the one the view runs must be
-        # GUARANTEED identical, so reject rather than re-escape
-        # (ADVICE r14). Quotes are safe: they render doubled.
+        # the same predicate text must mean the same rows here and in
+        # a `where` OPTION literal, where Spark processes backslash
+        # escapes ('a\tb' collapses to a tab) — reject rather than
+        # re-escape (ADVICE r14)
         raise ValueError(
             f"where {where!r} contains backslash/newline characters — "
             f"Spark's escape processing inside the OPTIONS literal "
@@ -214,29 +230,89 @@ def predicate_view(
         )
     if version is not None and asof is not None:
         raise ValueError("version and asof are mutually exclusive")
-    opts = {"root": root, "where": where}
+    opts = {"root": root}
     if version is not None:
         opts["version"] = str(int(version))
     if asof is not None:
         opts["asof"] = str(float(asof))
-    # fail-fast: parse + column/type-check the predicate against the
-    # resolved version's committed schema (same code path the scan
-    # runs), so CREATE VIEW is where a typo surfaces
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
     _root, _ver, entry = _resolve_version(opts)
-    ManifestReader(opts, _St.fromJson(_json.loads(entry["schema"])))
+    if not entry.get("schema"):
+        raise ValueError(f"{root}: no committed schema")
+    disjuncts = [conjunct(conds, entry) for conds in parse_where(where)]
+    snap = os.path.join(root, entry["snapshot"])
+    kept, _total = kept_files(snap, entry, disjuncts)
+    types = column_types(entry)
+    df = ManifestTable(root)._read_file_subset(spark, kept, entry, snap)
+    # callers go on to read format("manifest") / USING manifest
     _register_format(spark)
-    rendered = ", ".join(
-        f"`{k}` '{v.replace(chr(39), chr(39) * 2)}'"
-        for k, v in opts.items()
-    )
-    spark.sql(
-        f"CREATE OR REPLACE TEMPORARY VIEW {name} "
-        f"USING manifest OPTIONS ({rendered})"
-    )
+    df.filter(_where_column(disjuncts, types)).select(
+        *[F.col(_quoted(c)) for c in types]
+    ).createOrReplaceTempView(name)
+
+
+#: microseconds since the epoch of a naive UTC datetime
+_EPOCH = dt.datetime(1970, 1, 1)
+_MICRO = dt.timedelta(microseconds=1)
+_CMP = {
+    "=": operator.eq,
+    "!=": operator.ne,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "<": operator.lt,
+    "<=": operator.le,
+}
+
+
+def _quoted(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _lit_column(v, styp: str):
+    """One coerced ``where`` literal as a Spark literal whose meaning
+    does not depend on the session time zone. The grammar's canonical
+    datetime is naive: the UTC instant for a zoned ``timestamp``
+    column, the wall clock for ``timestamp_ntz``. A bare
+    ``F.lit(datetime)`` would read it in the Python process's zone and
+    shift it by the session zone on an NTZ cast. Dates and decimals
+    render as exact typed literals."""
+    if isinstance(v, dt.datetime):
+        if styp == "timestamp_ntz":
+            return F.expr(f"TIMESTAMP_NTZ '{v.isoformat(sep=' ')}'")
+        return F.timestamp_micros(F.lit((v - _EPOCH) // _MICRO))
+    if isinstance(v, dt.date):
+        return F.expr(f"DATE '{v.isoformat()}'")
+    if isinstance(v, decimal.Decimal):
+        # positional digits: an exponent form (1E+20) would make a
+        # negative-scale decimal
+        return F.lit(decimal.Decimal(format(v, "f")))
+    return F.lit(v)
+
+
+def _where_column(disjuncts, types: dict):
+    """The DNF of :func:`.skipping.conjunct` results as one Spark
+    predicate over LOGICAL columns. Spark supplies the semantics the
+    Arrow mask of the ``where`` option emulates: Kleene AND/OR, NaN
+    above every number, IN, and LIKE with ``%``/``_`` matching a
+    newline (backslashes were rejected at parse)."""
+    out = None
+    for conj in disjuncts:
+        term = None
+        for cond in conj.conds:
+            col = F.col(_quoted(cond[1]))
+            styp = types.get(cond[1], "")
+            if cond[0] == "cmp":
+                m = _CMP[cond[2]](col, _lit_column(cond[3], styp))
+            elif cond[0] == "in":
+                m = col.isin(*[_lit_column(v, styp) for v in cond[2]])
+            elif cond[0] == "null":
+                m = col.isNotNull() if cond[2] else col.isNull()
+            elif cond[0] == "like":
+                m = col.like(cond[2])
+            else:  # nlike
+                m = ~col.like(cond[2])
+            term = m if term is None else term & m
+        out = term if out is None else out | term
+    return out
 
 
 def _refresh_view(spark: SparkSession, name: str) -> None:

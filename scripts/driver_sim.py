@@ -11,11 +11,15 @@ import json
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in (a second checkout must import and
+#: check its own code, not another one's)
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 import __spark_entry__ as E  # noqa: E402
 
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -53,11 +57,9 @@ def stale_check() -> int:
     count — regenerate CORRECTNESS_SELF via --json after changes)."""
     import inspect
     import subprocess
-    from pathlib import Path
 
-    root = Path("/root/repo")
     evidence_time: dict[str, float] = {}
-    for p in sorted(root.glob("CORRECTNESS*.json")):
+    for p in sorted(ROOT.glob("CORRECTNESS*.json")):
         try:
             rows = json.loads(p.read_text())
         except (OSError, ValueError):
@@ -69,7 +71,7 @@ def stale_check() -> int:
     dirty = set(
         subprocess.run(
             ["git", "diff", "--name-only", "HEAD"],
-            cwd=root, capture_output=True, text=True,
+            cwd=ROOT, capture_output=True, text=True,
         ).stdout.split()
     )
 
@@ -80,13 +82,13 @@ def stale_check() -> int:
     for name, spec in REGISTRY.items():
         f = Path(inspect.getsourcefile(spec.fn))
         lines, start = inspect.getsourcelines(spec.fn)
-        rel = str(f.relative_to(root))
+        rel = str(f.relative_to(ROOT))
         key = (rel, start)
         if key not in src_cache:
             out = subprocess.run(
                 ["git", "log", "-1", "--format=%ct",
                  f"-L{start},{start + len(lines) - 1}:{rel}", "--no-patch"],
-                cwd=root, capture_output=True, text=True,
+                cwd=ROOT, capture_output=True, text=True,
             ).stdout.strip().splitlines()
             src_cache[key] = float(out[0]) if out else 0.0
         src_t = src_cache[key]

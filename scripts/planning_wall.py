@@ -27,16 +27,19 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+#: the checkout this script lives in
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql.types import StructType  # noqa: E402
 
 from datapipeline_scraping_spark.sources import manifest_datasource as MD  # noqa: E402
 
-BASE = "/root/repo/.scratch/tpv_root_testdata_sf0_01"
-OUT_ROOT = "/root/repo/.scratch/planning_wall"
-REPORT = "/root/repo/plans/r16/planning_wall.json"
+BASE = str(ROOT / ".scratch" / "tpv_root_testdata_sf0_01")
+OUT_ROOT = str(ROOT / ".scratch" / "planning_wall")
+REPORT = str(ROOT / "plans" / "r16" / "planning_wall.json")
 
 
 def synth(n_days: int) -> str:

@@ -1915,3 +1915,241 @@ def test_front_ends_keep_identical_files(spark, tmp_path):
         ("id = 20", lambda r: r["id"] == 20, point_files(evo, "id", 20)),
     ]:
         check(evo, where, pred, df_kept)
+
+
+def _data_input_files(df) -> set:
+    """``df``'s input files less the ``_dv``/``_upd`` sidecars."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    paths = {unquote(urlparse(u).path) for u in df.inputFiles()}
+    return {
+        p for p in paths
+        if not {"_dv", "_upd"} & set(p.split(os.sep))
+    }
+
+
+def _assert_view_matches_where_option(spark, mt, cases, zones):
+    """For every ``where`` in ``cases`` and every session time zone:
+    ``predicate_view`` rows equal ``format("manifest")`` rows under
+    the same ``where`` option, and the view scans exactly the data
+    files ``kept_files`` keeps. Views are minted under each zone (a
+    literal's type is fixed at analysis); each front end runs as one
+    union job per zone. Returns {where: row count}."""
+    import functools
+    import os
+
+    from pyspark.sql import DataFrame
+
+    from datapipeline_scraping_spark.sources.manifest_datasource import (
+        parse_where,
+    )
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        predicate_view,
+    )
+    from datapipeline_scraping_spark.sources.skipping import (
+        conjunct,
+        kept_files,
+    )
+
+    entry = mt._log_entry(mt.version())
+    snap = os.path.join(mt.root, entry["snapshot"])
+
+    def union(frames):
+        return functools.reduce(
+            DataFrame.unionAll,
+            [f.withColumn("_case", F.lit(i)) for i, f in enumerate(frames)],
+        )
+
+    def rows_by_case(df):
+        out = [[] for _w in cases]
+        for r in df.collect():
+            # repr keeps NaN comparable (nan != nan) and orders NULLs
+            out[r["_case"]].append(repr(tuple(r)))
+        return [sorted(v) for v in out]
+
+    wants = union([_src(spark, mt.root, where=w) for w in cases])
+    counts = {}
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in zones:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            views = []
+            for i, w in enumerate(cases):
+                predicate_view(spark, f"pv_parity_{i}", mt.root, w)
+                views.append(spark.table(f"pv_parity_{i}"))
+                kept, _total = kept_files(
+                    snap, entry, [conjunct(c, entry) for c in parse_where(w)]
+                )
+                assert _data_input_files(views[-1]) == set(kept), (tz, w)
+            got = union(views)
+            assert got.schema.simpleString() == wants.schema.simpleString()
+            for w, g, want in zip(
+                cases, rows_by_case(got), rows_by_case(wants)
+            ):
+                assert g == want, (tz, w)
+                counts[w] = len(g)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    return counts
+
+
+def test_predicate_view_rows_and_files_match_where_option(spark, tmp_path):
+    """``predicate_view`` is a native parquet scan of ``kept_files``
+    plus the ``where`` DNF as a Spark predicate; the ``where`` option
+    masks in Arrow per task. Both must return the same rows for every
+    grammar shape, with literals typed by the column's declared type
+    whatever the session time zone: a zoned ``timestamp`` compares to
+    the UTC instant, a ``timestamp_ntz`` to the wall clock. The table
+    is hive-partitioned with stats, a deletion vector, an ``_upd``
+    delta and a renamed column; its columns hold NULLs, NaN, newlines,
+    ``decimal(10,2)``, both timestamp flavours, dates and booleans."""
+    mt = ManifestTable(str(tmp_path / "parity"), retention_sec=3600)
+    k = F.col("id")
+    df = spark.range(72).select(
+        k.alias("k"),
+        F.concat(F.lit("g"), (k % 2).cast("string")).alias("grp"),
+        F.when(k % 10 == 0, F.lit(None))
+        .when(k % 10 == 1, F.lit(float("nan")))
+        .otherwise(k / 10.0)
+        .alias("f"),
+        F.element_at(
+            F.array(*[F.lit(x) for x in ("a\nb", "axbc", "ab", "a_b%", "b\na")]
+                    + [F.lit(None).cast("string")]),
+            (k % 6 + 1).cast("int"),
+        ).alias("s"),
+        F.when(k % 9 == 0, F.lit(None))
+        .otherwise(((k % 5) / 2).cast("decimal(10,2)"))
+        .alias("d"),
+        # hourly from 2024-01-01 00:00 UTC; tn is the same wall clock
+        F.when(k % 11 == 0, F.lit(None))
+        .otherwise(F.timestamp_seconds(F.lit(1704067200) + k * 3600))
+        .alias("ts"),
+        F.make_timestamp_ntz(
+            F.lit(2024), F.lit(1), (1 + F.floor(k / 24)).cast("int"),
+            (k % 24).cast("int"), F.lit(0), F.lit(0),
+        ).alias("tn"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (k % 5).cast("int"))
+        .alias("dt"),
+        F.when(k % 4 == 0, F.lit(None)).otherwise(k % 2 == 0).alias("b"),
+    )
+    mt.commit(
+        df.repartitionByRange(2, "k"),
+        partition_by=["grp"],
+        stats_by=["k", "f", "d", "ts", "tn", "dt", "s"],
+    )
+    mt.delete_where(spark, "k % 7 = 3", ["k"])
+    mt.update_where(
+        spark, "k IN (4, 5, 8)", {"f": "f + 100", "s": "'a\\nb upd'"}, ["k"]
+    )
+    mt.rename_column("s", "txt")
+    cases = [
+        "f > 0.5",
+        "f >= 5.0 AND f < 6.5",
+        "f != 1.0",
+        "txt LIKE 'a_b%'",
+        "txt NOT LIKE 'a_b%'",
+        "d = 2",
+        "d IN (1, 1.5)",
+        "d >= 1.5",
+        "ts >= 1704153600",
+        "ts < '2024-01-02T03:00:00+05:00'",
+        "ts >= TIMESTAMP '2024-01-02 05:00:00'",
+        "tn >= TIMESTAMP '2024-01-02 05:00:00'",
+        "tn < 1704160800",
+        "tn BETWEEN '2024-01-01 20:00:00' AND '2024-01-02 02:30:00'",
+        "dt = DATE '2024-01-02'",
+        "dt >= '2024-01-04'",
+        "k IN (1, 2, 3, 50)",
+        "k NOT IN (1, 2) AND k < 6",
+        "b = TRUE",
+        "b IS NULL",
+        "txt IS NOT NULL AND ts IS NULL",
+        "grp != 'g0' AND k < 12",
+        "f > 100.0 OR grp = 'g0'",
+        "(k <= 5 AND b = FALSE) OR txt IS NULL",
+        "(tn < TIMESTAMP '2024-01-01 03:00:00') OR (ts >= 1704326400)",
+    ]
+    counts = _assert_view_matches_where_option(
+        spark, mt, cases, ("UTC", "America/Lima", "Asia/Kolkata")
+    )
+    assert all(counts.values()), counts
+
+
+def test_predicate_view_on_clustered_dv_and_moved_update(spark, tmp_path):
+    """Two layouts the file picker must get right: a clustered snapshot
+    with a deletion vector (bucket pruning for ``=``/IN), and a window
+    where every base file prunes by stats but ``update_where`` moved a
+    row into it (the ``_upd`` delta is always read)."""
+    cl = ManifestTable(str(tmp_path / "cl"), retention_sec=3600)
+    cl.commit_clustered(
+        spark.range(40).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        ),
+        "k",
+        4,
+    )
+    cl.delete_where(spark, "k IN (5, 9)", ["k"])
+    counts = _assert_view_matches_where_option(
+        spark, cl, ["k = 7", "k IN (1, 5, 9, 30)", "k = 5"], ("UTC",)
+    )
+    assert counts == {"k = 7": 1, "k IN (1, 5, 9, 30)": 2, "k = 5": 0}
+
+    mv = ManifestTable(str(tmp_path / "mv"), retention_sec=3600)
+    mv.commit(
+        spark.range(40)
+        .select(F.col("id").alias("k"), F.col("id").alias("v"))
+        .repartitionByRange(4, "k"),
+        stats_by=["v"],
+    )
+    mv.update_where(spark, "k = 3", {"v": "5000"}, ["k"])
+    counts = _assert_view_matches_where_option(
+        spark, mv, ["v >= 4000"], ("UTC",)
+    )
+    assert counts == {"v >= 4000": 1}
+
+
+def test_predicate_view_contract(spark, tmp_path):
+    """What a minted predicate view promises: it keeps the rows of the
+    version it resolved until the helper runs again, ``version=`` and
+    ``asof=`` mint that version, it refuses ``INSERT INTO``, and one
+    view read twice in a plan with different filters returns both
+    branches."""
+    import time
+
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        predicate_view,
+    )
+
+    def ks(sql):
+        return sorted(r[0] for r in spark.sql(sql).collect())
+
+    root = str(tmp_path / "contract")
+    mt = ManifestTable(root, retention_sec=3600)
+    mt.commit(_df(spark, [(i, f"v{i}") for i in range(10)]), stats_by=["pk"])
+    ts_v1 = mt._log_entry(1)["ts"]
+    time.sleep(0.05)
+    predicate_view(spark, "pv_contract", root, "pk >= 6")
+    assert ks("SELECT pk FROM pv_contract") == [6, 7, 8, 9]
+
+    mt.append(_df(spark, [(10, "v10"), (11, "v11")]))
+    assert ks("SELECT pk FROM pv_contract") == [6, 7, 8, 9]
+    predicate_view(spark, "pv_contract", root, "pk >= 6")
+    assert ks("SELECT pk FROM pv_contract") == [6, 7, 8, 9, 10, 11]
+
+    predicate_view(spark, "pv_v1", root, "pk >= 6", version=1)
+    assert ks("SELECT pk FROM pv_v1") == [6, 7, 8, 9]
+    predicate_view(spark, "pv_asof", root, "pk >= 6", asof=ts_v1)
+    assert ks("SELECT pk FROM pv_asof") == [6, 7, 8, 9]
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        predicate_view(spark, "pv_bad", root, "pk >= 6", version=1, asof=ts_v1)
+
+    with pytest.raises(Exception):
+        spark.sql("INSERT INTO pv_contract VALUES (99, 'x')")
+    assert mt.version() == 2
+    assert 99 not in ks("SELECT pk FROM pv_contract")
+
+    assert ks(
+        "SELECT pk FROM pv_contract WHERE pk < 8 "
+        "UNION ALL SELECT pk FROM pv_contract WHERE pk > 9"
+    ) == [6, 7, 10, 11]

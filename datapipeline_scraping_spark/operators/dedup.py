@@ -483,21 +483,21 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
         .select(F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok"))
         .withColumn("h", _hex32(F.col("tok")))
     )
+    # SQL strings, parsed on the JVM: a Column built node by node
+    # costs one py4j call per node, ~14 per bit
     votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
-            )
-        ).alias(f"v{j}")
+        F.expr(
+            f"sum(CASE WHEN (shiftright(`h`, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
+            f" AS v{j}"
+        )
         for j in range(bits)
     ]
     agg = toks.groupBy(id_col).agg(*votes)
-    sig = None
-    for j in range(bits):
-        term = F.when(
-            F.col(f"v{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig + term
+    sig = F.expr(" + ".join(
+        f"CASE WHEN `v{j}` > 0 THEN shiftleft(CAST(1 AS BIGINT), {j}) "
+        "ELSE CAST(0 AS BIGINT) END"
+        for j in range(bits)
+    ))
     return agg.select(F.col(id_col), sig.alias("simhash"))
 
 

@@ -113,26 +113,28 @@ def srp_signs(p: int, dim: int) -> list[int]:
     ]
 
 
-def srp_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """Sign-random-projection bucket id: bit p = sign(v · h_p) with the
-    dot product computed over ``floor(v[i] * 2^20)`` integers (see
-    SRP_SCALE) so the bit pattern is bit-for-bit reproducible across
-    engines and partitionings."""
-    bucket = None
+def srp_bucket(vec_col: str, n_planes: int = 8, dim: int = 64) -> Column:
+    """Sign-random-projection bucket id of the ``DOUBLE[]`` column
+    ``vec_col``: bit p = sign(v · h_p) with the dot product computed
+    over ``floor(v[i] * 2^20)`` integers (see SRP_SCALE) so the bit
+    pattern is bit-for-bit reproducible across engines and
+    partitionings. An INT.
+
+    The family is one SQL string, parsed once on the JVM: a Column
+    built node by node costs one py4j call per node, ~0.4 s for the
+    8 × 64 sign literals. Each plane is a flat ``aggregate`` over a
+    ``zip_with`` (no higher-order function inside a lambda), and the
+    bits add left to right."""
+    bits = []
     for p in range(n_planes):
-        signs = srp_signs(p, dim)
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(s) for s in signs]),
-                lambda x, s: F.floor(x * F.lit(float(SRP_SCALE))) * s,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+        signs = ", ".join(str(s) for s in srp_signs(p, dim))
+        proj = (
+            f"aggregate(zip_with(`{vec_col}`, array({signs}), "
+            f"(x, y) -> floor(x * {float(SRP_SCALE)}D) * y), "
+            "CAST(0 AS BIGINT), (x, y) -> x + y)"
         )
-        bit = F.when(proj >= 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket
+        bits.append(f"CASE WHEN {proj} >= 0 THEN shiftleft(1, {p}) ELSE 0 END")
+    return F.expr(" + ".join(bits))
 
 
 def srp_bucket_sql(vec_expr: str, n_planes: int = 8, dim: int = 64) -> str:
@@ -427,13 +429,13 @@ def lsh_cosine_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         as_double(vec_col).alias("qv"),
-    ).withColumn("bucket", srp_bucket(F.col("qv"), n_planes, dim)).withColumn(
+    ).withColumn("bucket", srp_bucket("qv", n_planes, dim)).withColumn(
         "qn", norm(F.col("qv"))
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         as_double(vec_col).alias("cv"),
-    ).withColumn("bucket", srp_bucket(F.col("cv"), n_planes, dim)).withColumn(
+    ).withColumn("bucket", srp_bucket("cv", n_planes, dim)).withColumn(
         "cn", norm(F.col("cv"))
     )
     scored = (
@@ -757,12 +759,12 @@ def semantic_decontaminate(
     # cosine_topk for the argument).
     t = train.select(
         F.col(id_col).alias("train_id"), as_double(vec_col).alias("tv")
-    ).withColumn("bucket", srp_bucket(F.col("tv"), n_planes, dim)).withColumn(
+    ).withColumn("bucket", srp_bucket("tv", n_planes, dim)).withColumn(
         "tn", norm(F.col("tv"))
     )
     e = evalset.select(
         F.col(id_col).alias("eval_id"), as_double(vec_col).alias("ev")
-    ).withColumn("bucket", srp_bucket(F.col("ev"), n_planes, dim)).withColumn(
+    ).withColumn("bucket", srp_bucket("ev", n_planes, dim)).withColumn(
         "en", norm(F.col("ev"))
     )
     scored = (

@@ -645,7 +645,7 @@ def q105_blob_embed_buckets(spark, sf_dir):
     blobs = MM2.attach_blob(reingest, "doc_id", "text")
     feats = MM2.extract_features(blobs, "doc_id", dim=16)
     bucketed = feats.withColumn(
-        "bucket", SIM.srp_bucket(F.col("features"), n_planes=4, dim=16)
+        "bucket", SIM.srp_bucket("features", n_planes=4, dim=16)
     )
     return bucketed.groupBy("bucket").agg(
         F.count("*").cast("long").alias("n_vecs"),

@@ -77,7 +77,7 @@ def q106_incremental_ann(spark, sf_dir):
         return df.select(
             F.col("vec_id").alias(id_alias),
             vec.alias("v"),
-        ).withColumn("bucket", SIM.srp_bucket(F.col("v"), 6, 64))
+        ).withColumn("bucket", SIM.srp_bucket("v", 6, 64))
 
     # manifest-pointer state table: bootstrap is an atomic first commit
     # (two concurrent sessions on the same sf can both call init — the

@@ -93,7 +93,7 @@ def q151_cdf_incremental_index(spark, sf_dir):
     def bucketed(df):
         return df.select(
             "vec_id",
-            SIM.srp_bucket(F.col("v"), 6, 64).cast("long").alias("bucket"),
+            SIM.srp_bucket("v", 6, 64).cast("long").alias("bucket"),
         )
 
     v1 = emb.filter(F.col("vec_id") % 5 != 0)
@@ -118,7 +118,7 @@ def q151_cdf_incremental_index(spark, sf_dir):
     idx_changes = changes.select(
         "_change_type",
         "vec_id",
-        SIM.srp_bucket(F.col("v"), 6, 64).cast("long").alias("bucket"),
+        SIM.srp_bucket("v", 6, 64).cast("long").alias("bucket"),
     )
     idx.commit(apply_diff(idx.read(spark), idx_changes, ["vec_id"]))
     assert idx.version() == 2

@@ -7,8 +7,9 @@ provides the streaming twins of the batch event-time queries:
 tumbling/sliding window rollups, watermarked dedup, and session
 windows.
 
-Implementation note: the driver's ``events.parquet`` carries
-nanosecond timestamps, which the Spark 4 streaming parquet source
+Implementation note: an ``events.parquet`` may carry nanosecond
+timestamps (the local test data is µs), which the Spark 4 streaming
+parquet source
 rejects (``PARQUET_TYPE_ILLEGAL``); the batch reader handles them via
 ``nanosAsLong`` (see ``sources/tables.py``). The stream therefore
 replays a µs-normalized copy staged under the repo-local scratch dir

@@ -667,7 +667,7 @@ def cdf_catchup_evidence(spark) -> dict[str, dict[str, float]]:
         def bucketed(df):
             return df.select(
                 "vec_id",
-                SIM.srp_bucket(F.col("v"), 6, 64).cast("long").alias("bucket"),
+                SIM.srp_bucket("v", 6, 64).cast("long").alias("bucket"),
             )
 
         derived_v1 = bucketed(base.read(spark, version=1))
@@ -679,7 +679,7 @@ def cdf_catchup_evidence(spark) -> dict[str, dict[str, float]]:
             derived_v1,
             changes.select(
                 "_change_type", "vec_id",
-                SIM.srp_bucket(F.col("v"), 6, 64).cast("long").alias("bucket"),
+                SIM.srp_bucket("v", 6, 64).cast("long").alias("bucket"),
             ),
             ["vec_id"],
         )

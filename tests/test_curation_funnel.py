@@ -101,3 +101,37 @@ def test_resume_survives_lost_annotation(spark, tmp_path):
     got = _rows(run_funnel(spark, SF, checkpoint_root=root))
     assert got == clean
     assert tbl.version() == 1
+
+
+def test_q118_follows_a_corpus_rewritten_at_the_same_path(spark, tmp_path):
+    """Nothing about a corpus is remembered across funnel runs: after
+    ``documents`` is rewritten at the same path, q118's ingest and
+    quality rows equal the DuckDB oracle's over the NEW corpus."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from datapipeline_scraping_spark.queries import REGISTRY
+
+    q118 = REGISTRY["q118_curation_funnel"]
+    full = pq.read_table(f"{SF}/documents.parquet")
+    path = tmp_path / "documents.parquet"
+
+    def oracle():
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+            return sorted(con.execute(q118.oracle).fetchall())
+        finally:
+            con.close()
+
+    seen = []
+    for corpus in (full, full.slice(0, full.num_rows // 2)):
+        pq.write_table(corpus, path)
+        got = _rows(q118.fn(spark, str(tmp_path)))
+        want = oracle()
+        assert got == want
+        ingest, quality = got[0], got[1]
+        assert ingest[:3] == ("0_ingest", 0, corpus.num_rows)
+        assert quality[:2] == ("1_quality", 1)
+        seen.append((ingest, quality))
+    assert seen[0][0] != seen[1][0] and seen[0][1] != seen[1][1]

@@ -488,7 +488,10 @@ def test_salted_join_rejects_outer(spark):
 
 
 def test_srp_bucket_matches_pure_python(spark):
+    """Default 8 planes x 64 dims over float32 vectors read as double,
+    the operator's production shape; an INT bucket id."""
     import math
+    import random
 
     from datapipeline_scraping_spark.operators.similarity import (
         SRP_SCALE,
@@ -497,28 +500,62 @@ def test_srp_bucket_matches_pure_python(spark):
         srp_signs,
     )
 
-    vecs = [
-        (1, [0.5, -0.25, 0.125, 1.0]),
-        (2, [-0.1, -0.2, 0.3, -0.4]),
-        (3, [0.0, 0.0, 0.0, 0.0]),  # zero projection ties -> bit set
+    rng = random.Random(11)
+    vecs = [(1, [0.0] * 64)]  # zero projections tie -> every bit set
+    vecs += [
+        (i, [rng.choice([-1, 1]) * rng.random() * 4 for _ in range(64)])
+        for i in range(2, 202)
     ]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    got = {
-        r["vec_id"]: r["b"]
-        for r in df.select(
-            "vec_id", srp_bucket(as_double("embedding"), 4, 4).alias("b")
-        ).collect()
-    }
-    for vid, v in vecs:
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    out = df.select("vec_id", as_double("embedding").alias("v")).select(
+        "vec_id", srp_bucket("v").alias("b")
+    )
+    assert dict(out.dtypes)["b"] == "int"
+    got = {r["vec_id"]: r["b"] for r in out.collect()}
+    stored = {
+        r["vec_id"]: r["embedding"] for r in df.collect()
+    }  # the float32-rounded values the operator sees
+    assert len(set(got.values())) > 50
+    for vid, v in stored.items():
         b = 0
-        for p in range(4):
+        for p in range(8):
             proj = sum(
                 s * math.floor(x * SRP_SCALE)
-                for s, x in zip(srp_signs(p, 4), v)
+                for s, x in zip(srp_signs(p, 64), v)
             )
             if proj >= 0:
                 b += 1 << p
         assert got[vid] == b, f"vec {vid}: spark {got[vid]} != python {b}"
+
+
+def test_simhash_matches_pure_python(spark):
+    """32-bit SimHash per document against a pure-Python reference:
+    repeated tokens vote once per occurrence, an empty text is one
+    empty token, a NULL text produces no row."""
+    import hashlib
+    import random
+
+    from datapipeline_scraping_spark.operators.dedup import simhash
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = [(i, " ".join(rng.choices(vocab, k=rng.randint(1, 30))))
+            for i in range(1, 48)]
+    docs += [(48, "a a a a b"), (49, ""), (50, None), (51, "x  y ")]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    out = simhash(df, "doc_id", "text")
+    assert out.dtypes == [("doc_id", "bigint"), ("simhash", "bigint")]
+    got = {r["doc_id"]: r["simhash"] for r in out.collect()}
+
+    def ref(text):
+        votes = [0] * 32
+        for tok in text.split(" "):
+            h = int(hashlib.md5(tok.encode()).hexdigest()[:8], 16)
+            for j in range(32):
+                votes[j] += 1 if (h >> j) & 1 else -1
+        return sum(1 << j for j in range(32) if votes[j] > 0)
+
+    assert got == {i: ref(t) for i, t in docs if t is not None}
 
 
 def test_connected_components_multi_cluster(spark):

@@ -9,12 +9,11 @@ windows.
 
 Implementation note: an ``events.parquet`` may carry nanosecond
 timestamps (the local test data is µs), which the Spark 4 streaming
-parquet source
-rejects (``PARQUET_TYPE_ILLEGAL``); the batch reader handles them via
-``nanosAsLong`` (see ``sources/tables.py``). The stream therefore
-replays a µs-normalized copy staged under the repo-local scratch dir
-— at production scale the equivalent is the bronze/landing table an
-ingest job maintains.
+parquet source rejects (``PARQUET_TYPE_ILLEGAL``); the batch reader
+handles them via ``nanosAsLong`` (see ``sources/tables.py``). The
+stream therefore replays a µs-normalized copy staged under the
+repo-local scratch dir — at production scale the equivalent is the
+bronze/landing table an ingest job maintains.
 """
 
 from __future__ import annotations

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sqltext import ident, string_lit
+
 UNIT_SEP = "\x1f"
 
 
@@ -53,15 +55,28 @@ def row_checksum(cols: Iterable[Column | str], *, sort_names: bool = True) -> Co
     String column *names* are sorted to reproduce the reference's
     ``sort_keys=True`` order-insensitivity; pass Column objects (with
     ``canon()`` applied) positionally if you need explicit order.
+    A names-only checksum is one SQL string (:func:`row_checksum_sql`).
     """
     cols = list(cols)
     names = [c for c in cols if isinstance(c, str)]
     exprs = [c for c in cols if not isinstance(c, str)]
+    if not exprs:
+        return F.expr(row_checksum_sql(names, sort_names=sort_names))
     if sort_names:
         names = sorted(names)
     parts = [F.coalesce(F.col(n).cast(T.StringType()), F.lit("")) for n in names]
     parts += [F.coalesce(e.cast(T.StringType()), F.lit("")) for e in exprs]
     return F.md5(F.concat_ws(UNIT_SEP, *parts))
+
+
+def row_checksum_sql(names: Iterable[str], *, sort_names: bool = True) -> str:
+    """Spark SQL text of :func:`row_checksum` over column ``names``:
+    the same expression tree, parsed once on the JVM instead of built
+    with one py4j call per node."""
+    names = sorted(names) if sort_names else list(names)
+    args = [string_lit(UNIT_SEP)]
+    args += [f"coalesce(CAST({ident(n)} AS STRING), '')" for n in names]
+    return f"md5(concat_ws({', '.join(args)}))"
 
 
 def checksum_sql(fields: Iterable[str], *, sort_names: bool = True) -> str:

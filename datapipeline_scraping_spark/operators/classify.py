@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident, string_lit
+
 
 @dataclass(frozen=True)
 class ClassifierConfig:
@@ -63,27 +65,48 @@ DEFAULT_CONFIG = ClassifierConfig(
 )
 
 
-def rule_expr(text: Column, cfg: ClassifierConfig) -> Column:
-    """C1: ordered first-match regex chain as one Catalyst expression.
-    Case-insensitive via inline (?i); no match -> '' (the reference's
-    sentinel for 'send to the LLM')."""
-    expr = None
-    for pattern, category in cfg.rules:
-        cond = text.rlike(f"(?i){pattern}")
-        expr = (
-            F.when(cond, F.lit(category))
-            if expr is None
-            else expr.when(cond, F.lit(category))
-        )
-    return (expr.otherwise(F.lit("")) if expr is not None else F.lit("")).alias(
-        "sector"
+def rule_sql(
+    text: str, rules: tuple[tuple[str, str], ...], default: str = ""
+) -> str:
+    """C1: ordered first-match ``(regex, label)`` chain as one SQL
+    ``CASE`` over the SQL expression ``text``. Case-insensitive via
+    inline (?i); no match -> ``default`` ('' is the reference's
+    sentinel for 'send to the LLM'). Patterns go in as escaped string
+    literals, so ``\\b`` stays a word boundary and a quote in a YAML
+    pattern cannot end the literal."""
+    whens = " ".join(
+        f"WHEN {text} RLIKE {string_lit(f'(?i){pattern}')} "
+        f"THEN {string_lit(category)}"
+        for pattern, category in rules
+    )
+    if not whens:
+        return string_lit(default)
+    return f"CASE {whens} ELSE {string_lit(default)} END"
+
+
+def rule_expr(text: str, cfg: ClassifierConfig) -> Column:
+    """:func:`rule_sql` as a ``sector`` Column; ``text`` is SQL text
+    (a backtick-quoted column name or an expression)."""
+    return F.expr(rule_sql(text, cfg.rules)).alias("sector")
+
+
+def validate_domain(sector: str, cfg: ClassifierConfig) -> Column:
+    """C3: closed-domain coercion — anything outside the category set
+    becomes the fallback (reference ``src/classifier.py:147-154``).
+    ``sector`` is SQL text, like :func:`rule_expr`'s ``text``."""
+    if not cfg.categories:
+        return F.expr(string_lit(cfg.fallback))
+    cats = ", ".join(string_lit(c) for c in cfg.categories)
+    return F.expr(
+        f"CASE WHEN {sector} IN ({cats}) THEN {sector} "
+        f"ELSE {string_lit(cfg.fallback)} END"
     )
 
 
-def validate_domain(sector: Column, cfg: ClassifierConfig) -> Column:
-    """C3: closed-domain coercion — anything outside the category set
-    becomes the fallback (reference ``src/classifier.py:147-154``)."""
-    return F.when(sector.isin(*cfg.categories), sector).otherwise(F.lit(cfg.fallback))
+def _text_sql(text_cols: tuple[str, ...]) -> str:
+    """``concat_ws(' ', coalesce(c, ''), ...)`` over the text columns."""
+    parts = ", ".join(f"coalesce({ident(c)}, '')" for c in text_cols)
+    return f"concat_ws(' ', {parts})"
 
 
 def stub_backend_label(categories: tuple[str, ...]):
@@ -139,8 +162,7 @@ def classify(
         keep = [id_col, *text_cols]
         keep += [c for c in payload_cols if c not in keep]
         df = df.select(*keep)
-    text = F.concat_ws(" ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols])
-    ruled = df.withColumn("sector", rule_expr(text, cfg))
+    ruled = df.withColumn("sector", rule_expr(_text_sql(text_cols), cfg))
 
     resolved = ruled.filter(F.col("sector") != "")
     unresolved = ruled.filter(F.col("sector") == "")
@@ -190,19 +212,22 @@ def classify(
         apply_backend, schema=out_schema
     )
     merged = resolved.select(*out_cols).unionByName(backed)
-    return merged.withColumn("sector", validate_domain(F.col("sector"), cfg))
+    return merged.withColumn("sector", validate_domain("`sector`", cfg))
 
 
 def classify_rules_only(
     df: DataFrame, cfg: ClassifierConfig, text_cols: tuple[str, str]
 ) -> DataFrame:
-    """C1 + C3 without the backend ('' -> fallback directly)."""
-    text = F.concat_ws(" ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols])
-    ruled = df.withColumn("sector", rule_expr(text, cfg))
-    return ruled.withColumn(
-        "sector",
-        F.when(F.col("sector") == "", F.lit(cfg.fallback)).otherwise(F.col("sector")),
-    ).withColumn("sector", validate_domain(F.col("sector"), cfg))
+    """C1 + C3 without the backend ('' -> fallback directly), as one
+    ``CASE``: the rules and the domain are both known when the plan is
+    built, so each rule's label is validated here (out-of-domain ->
+    fallback) and no match yields the fallback."""
+    valid = set(cfg.categories)
+    rules = tuple(
+        (p, c if c in valid else cfg.fallback) for p, c in cfg.rules
+    )
+    sector = rule_sql(_text_sql(text_cols), rules, default=cfg.fallback)
+    return df.withColumn("sector", F.expr(sector))
 
 
 def load_config(path: str) -> ClassifierConfig:

@@ -29,9 +29,6 @@ def delta_split(
     state: DataFrame,
     key: str,
     hash_col: str = "row_hash",
-    *,
-    broadcast_state: bool = False,
-    state_unique: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Split ``incoming`` into ``(changed, bypass)`` against ``state``.
 
@@ -39,19 +36,14 @@ def delta_split(
     ``dags/scraping_etl.py:59-69``); ``bypass`` = unchanged rows that
     skip the expensive downstream stages (H3).
 
-    ``state_unique=True`` (r16, guide §2.4): the caller guarantees
-    ``state`` has one row per (key, hash) — e.g. it is keyed by a
-    primary key — so the defensive dropDuplicates (a HashAggregate +
-    Exchange over the whole state) is skipped. Semi/anti joins are
-    insensitive to probe-side multiplicity, so this cannot change
-    results even if the promise is broken; it only existed to shrink
-    a duplicate-heavy probe side before the shuffle.
+    ``state`` is probed as it is, with no dedup: a left-anti or
+    left-semi join emits each incoming row at most once whatever the
+    number of matching probe rows, so duplicated ``(key, hash)`` pairs
+    in the state cannot change either side. A ``dropDuplicates`` here
+    would only add an Exchange and a HashAggregate over the whole
+    state to every batch.
     """
     probe = state.select(key, hash_col)
-    if not state_unique:
-        probe = probe.dropDuplicates([key, hash_col])
-    if broadcast_state:
-        probe = F.broadcast(probe)
     changed = incoming.join(probe, on=[key, hash_col], how="left_anti")
     bypass = incoming.join(probe, on=[key, hash_col], how="left_semi")
     return changed, bypass

@@ -11,9 +11,17 @@ Without a transactional table format the engine emulates MERGE as
 which is idempotent and SQL-expressible (SURVEY.md §7.3). On a real
 deployment the same API swaps in Delta/Iceberg ``MERGE INTO``.
 
-Scale notes: the anti join shards by pk; sinks should be written
-partitioned (e.g. by date) so the rewrite touches only affected
-partitions (partition-overwrite-dynamic).
+``txn.merge_write`` runs exactly this rewrite (:func:`merge_upsert`)
+for every merge without a clause or schema evolution; only
+conditional or evolving merges pay :func:`merge_into`'s full-outer
+join.
+
+Scale notes: the source is churn-sized, so AQE broadcasts its keys
+and the anti join is a filter on the target scan — the target is read
+once and never shuffled or sorted. A source too large to broadcast
+shards both sides by pk instead. Sinks should be written partitioned
+(e.g. by date) so the rewrite touches only affected partitions
+(partition-overwrite-dynamic).
 """
 
 from __future__ import annotations
@@ -23,7 +31,14 @@ from pyspark.sql import functions as F
 
 
 def merge_upsert(target: DataFrame, source: DataFrame, pk: str) -> DataFrame:
-    """S10: source rows win on pk conflict; unmatched target rows kept."""
+    """S10: source rows win on pk conflict; unmatched target rows kept.
+
+    Same rows and schema as :func:`merge_into` with no clauses: the
+    output has the target's columns (extra source columns drop, a
+    missing one is an analysis error), NULL pks never match, and a
+    duplicated source pk inserts every copy. The source is read twice
+    (its keys, its rows), so a source with an expensive or
+    non-deterministic lineage should be cached first."""
     cols = target.columns
     kept = target.join(source.select(pk), on=pk, how="left_anti")
     return source.select(*cols).unionByName(kept)

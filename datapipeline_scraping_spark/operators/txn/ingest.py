@@ -7,10 +7,11 @@ import os
 import shutil
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_into
+from ..merge import merge_into, merge_upsert
 from .errors import (
     ConcurrentWriteError,
     ConstraintViolationError,
@@ -93,7 +94,7 @@ def merge_write(
     writer="delta"    — Delta Lake ``MERGE INTO`` (transactional, safe
                         under concurrent writers); raises RuntimeError
                         when Delta is not on the classpath.
-    writer="manifest" — :func:`merge_into` rewrite committed through
+    writer="manifest" — merge rewrite committed through
                         :class:`ManifestTable` (snapshot + atomic
                         pointer swap, optimistic-concurrency retry —
                         safe under concurrent writers on any
@@ -109,7 +110,18 @@ def merge_write(
     writer="auto"     — delta when available, else manifest.
 
     Clause semantics are identical across all paths (NULL conditions
-    do not fire; source-pk uniqueness is the caller's contract)."""
+    do not fire; source-pk uniqueness is the caller's contract).
+
+    On the manifest and parquet paths the plan follows the clause
+    shape. With no clause and no schema evolution the merge is the
+    plain upsert :func:`merge_upsert` — ``source ∪ (target ▷
+    source.pk)``: the churn-sized source keys broadcast, so the target
+    is scanned once and never shuffled or sorted. That plan reads the
+    source twice, so a source that is not already cached is persisted
+    for the call (and unpersisted after it, also when the commit
+    fails), and the result is coalesced to at most the target's
+    data-file count. Conditional or evolving merges run
+    :func:`merge_into`'s full-outer join."""
     if writer == "auto":
         writer = "delta" if delta_available(spark) else "manifest"
     if writer == "delta":
@@ -133,15 +145,15 @@ def merge_write(
         return
     if writer not in ("parquet", "manifest"):
         raise ValueError(f"unknown writer {writer!r}")
-    tbl = ManifestTable(target_path)
-    if writer == "manifest" or tbl.exists():
-        tbl.adopt_plain()
-        # optimistic-concurrency loop: re-read + re-merge on conflict,
-        # exactly a Delta commit retry
-        for attempt in range(3):
-            base_ver = tbl.version() or 0
-            target = tbl.read(spark)
-            result = merge_into(
+    upsert = (
+        matched_delete is None
+        and matched_update is None
+        and not schema_evolution
+    )
+
+    def merged(target: DataFrame) -> DataFrame:
+        if not upsert:
+            return merge_into(
                 target,
                 source,
                 pk,
@@ -149,41 +161,55 @@ def merge_write(
                 matched_update=matched_update,
                 schema_evolution=schema_evolution,
             )
-            try:
-                tbl.commit(result, expect_version=base_ver)
-                return
-            except ConcurrentWriteError:
-                if attempt == 2:
-                    raise
-        return
-    recover_swap(target_path)
-    target = spark.read.parquet(target_path)
-    result = merge_into(
-        target,
-        source,
-        pk,
-        matched_delete=matched_delete,
-        matched_update=matched_update,
-        schema_evolution=schema_evolution,
-    )
-    # write-new-then-swap: materialize the merge next to the target
-    # (sibling path — same filesystem by construction, so os.rename can
-    # never fail EXDEV), then swap directories. Each rename is atomic,
-    # but the swap is TWO renames — a crash in the window between them
-    # leaves target_path absent with the previous table preserved under
-    # the __old_ suffix; :func:`recover_swap` (run automatically at the
-    # start of the next merge_write) renames it back. A crash any
-    # earlier leaves the live table untouched. This is the honest
-    # ceiling of a plain-filesystem sink for a SINGLE writer; true
-    # atomicity (and concurrent writers, and no swap window) is exactly
-    # what the delta writer path provides — on object stores swap a
-    # manifest/partition pointer instead.
-    tmp = f"{target_path.rstrip('/')}__merge_{uuid.uuid4().hex[:8]}"
-    result.write.mode("overwrite").parquet(tmp)
-    old = f"{target_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old)
+        # the union adds the source's partitions to the target's: cap
+        # the output at the target's file count so batches add no files
+        n_files = max(1, len(target.inputFiles()))
+        return merge_upsert(target, source, pk).coalesce(n_files)
+
+    # the upsert plan reads the source twice (its keys and its rows):
+    # cache it so its lineage runs once — UDFs and non-deterministic
+    # keys are evaluated once per row. A cache the caller made stays.
+    own_cache = upsert and source.storageLevel == StorageLevel.NONE
+    if own_cache:
+        source.persist()
+    try:
+        tbl = ManifestTable(target_path)
+        if writer == "manifest" or tbl.exists():
+            tbl.adopt_plain()
+            # optimistic-concurrency loop: re-read + re-merge on
+            # conflict, exactly a Delta commit retry
+            for attempt in range(3):
+                base_ver = tbl.version() or 0
+                try:
+                    tbl.commit(merged(tbl.read(spark)), expect_version=base_ver)
+                    return
+                except ConcurrentWriteError:
+                    if attempt == 2:
+                        raise
+        recover_swap(target_path)
+        result = merged(spark.read.parquet(target_path))
+        # write-new-then-swap: materialize the merge next to the
+        # target (sibling path — same filesystem by construction, so
+        # os.rename can never fail EXDEV), then swap directories. Each
+        # rename is atomic, but the swap is TWO renames — a crash in the
+        # window between them leaves target_path absent with the
+        # previous table preserved under the __old_ suffix;
+        # :func:`recover_swap` (run automatically at the start of the
+        # next merge_write) renames it back. A crash any earlier leaves
+        # the live table untouched. This is the honest ceiling of a
+        # plain-filesystem sink for a SINGLE writer; true atomicity (and
+        # concurrent writers, and no swap window) is exactly what the
+        # delta writer path provides — on object stores swap a
+        # manifest/partition pointer instead.
+        tmp = f"{target_path.rstrip('/')}__merge_{uuid.uuid4().hex[:8]}"
+        result.write.mode("overwrite").parquet(tmp)
+        old = f"{target_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
+        os.rename(target_path, old)
+        os.rename(tmp, target_path)
+        shutil.rmtree(old)
+    finally:
+        if own_cache:
+            source.unpersist()
 
 
 

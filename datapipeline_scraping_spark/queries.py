@@ -500,13 +500,9 @@ def q12_delta_detection(spark, sf_dir):
             sort_names=False,
         ).alias("row_hash"),
     )
-    # state_unique: `state` is one row per o_orderkey by construction
-    # (orders is unique on its key; the filter only removes rows) —
-    # skips delta_split's defensive dropDuplicates (r16, guide §2.4)
-    changed, _bypass = delta_split(
-        incoming, state, "o_orderkey", state_unique=True
-    )
-    # no distinct: same uniqueness argument, so
+    changed, _bypass = delta_split(incoming, state, "o_orderkey")
+    # no distinct: `state` is one row per o_orderkey by construction
+    # (orders is unique on its key; the filter only removes rows), so
     # the membership probe needs no dedup — dropping it removes a
     # HashAggregate+Exchange pair from the plan (r16, guide §2.4)
     state_keys = state.select("o_orderkey")

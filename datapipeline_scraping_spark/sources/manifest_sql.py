@@ -106,6 +106,7 @@ import weakref
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident
 from ..operators.merge import merge_into
 from ..operators.txn import ConcurrentWriteError, ManifestTable
 from .manifest_datasource import register as _register_format
@@ -246,7 +247,7 @@ def predicate_view(
     # callers go on to read format("manifest") / USING manifest
     _register_format(spark)
     df.filter(_where_column(disjuncts, types)).select(
-        *[F.col(_quoted(c)) for c in types]
+        *[F.col(ident(c)) for c in types]
     ).createOrReplaceTempView(name)
 
 
@@ -261,10 +262,6 @@ _CMP = {
     "<": operator.lt,
     "<=": operator.le,
 }
-
-
-def _quoted(col: str) -> str:
-    return "`" + col.replace("`", "``") + "`"
 
 
 def _lit_column(v, styp: str):
@@ -298,7 +295,7 @@ def _where_column(disjuncts, types: dict):
     for conj in disjuncts:
         term = None
         for cond in conj.conds:
-            col = F.col(_quoted(cond[1]))
+            col = F.col(ident(cond[1]))
             styp = types.get(cond[1], "")
             if cond[0] == "cmp":
                 m = _CMP[cond[2]](col, _lit_column(cond[3], styp))

@@ -63,3 +63,33 @@ def test_with_row_checksum_attaches_column(spark):
     out = with_row_checksum(df, ["id", "name"])
     assert "row_hash" in out.columns
     assert out.filter(F.col("row_hash").isNull()).count() == 0
+
+
+def test_sql_string_checksum_matches_duckdb_and_python(spark):
+    """with_row_checksum's one-string expression is byte-identical to
+    checksum_sql run in DuckDB and to Python md5, on NULLs, empty
+    strings, non-ASCII text and values containing the separator."""
+    import duckdb
+
+    rows = [
+        (None, "alpha", "x"),
+        ("", "", ""),
+        ("ñandú", "日本語", "Ωmega"),
+        ("a\x1fb", "c", "\x1f"),
+        ("it's", "back\\slash", None),
+    ]
+    df = spark.createDataFrame(rows, "id string, name string, `odd col` string")
+    got = [
+        r["row_hash"]
+        for r in with_row_checksum(df, ["name", "odd col", "id"]).collect()
+    ]
+    py = [
+        _golden([r[0] or "", r[1] or "", r[2] or ""])  # sorted: id, name, odd col
+        for r in rows
+    ]
+    con = duckdb.connect()
+    con.execute('CREATE TABLE t (i INT, id VARCHAR, name VARCHAR, "odd col" VARCHAR)')
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", [(i, *r) for i, r in enumerate(rows)])
+    expr = checksum_sql(["id", "name", '"odd col"'])
+    duck = [h for (h,) in con.execute(f"SELECT {expr} FROM t ORDER BY i").fetchall()]
+    assert got == py == duck

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from datapipeline_scraping_spark.operators.classify import (
+    DEFAULT_CONFIG,
     ClassifierConfig,
     classify,
     classify_rules_only,
@@ -32,14 +33,14 @@ def test_first_match_wins_case_insensitive(spark):
     )
     out = {
         r["id"]: r["sector"]
-        for r in df.select("id", rule_expr(F.col("text"), CFG)).collect()
+        for r in df.select("id", rule_expr("`text`", CFG)).collect()
     }
     assert out == {"1": "economia", "2": "salud", "3": ""}
 
 
 def test_out_of_domain_coerced_to_otros(spark):
     df = spark.createDataFrame([("x", "bogus_label")], "id string, sector string")
-    out = df.select(validate_domain(F.col("sector"), CFG).alias("s")).collect()
+    out = df.select(validate_domain("`sector`", CFG).alias("s")).collect()
     assert out[0]["s"] == "otros"
 
 
@@ -222,3 +223,58 @@ def test_llm_backend_missing_ids_get_fallback(spark):
         for r in classify(df, cfg, "doc_id", ("title", "detail"), backend).collect()
     }
     assert out == {1: "a_cat", 2: "otros"}
+
+
+def _column_built_rules_only(df, cfg, text_cols):
+    """classify_rules_only as a node-by-node Column tree: the reference
+    the one-string expression must match label for label."""
+    text = F.concat_ws(" ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols])
+    expr = F.lit("")
+    if cfg.rules:
+        expr = None
+        for pattern, category in cfg.rules:
+            cond = text.rlike(f"(?i){pattern}")
+            expr = (
+                F.when(cond, F.lit(category))
+                if expr is None
+                else expr.when(cond, F.lit(category))
+            )
+        expr = expr.otherwise(F.lit(""))
+    sector = F.when(expr == "", F.lit(cfg.fallback)).otherwise(expr)
+    return df.withColumn(
+        "sector",
+        F.when(sector.isin(*cfg.categories), sector).otherwise(F.lit(cfg.fallback)),
+    )
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        DEFAULT_CONFIG,
+        ClassifierConfig(
+            categories=("quote", "slash", "word", "otros"),
+            rules=(
+                (r"it's", "quote"),
+                (r"a\\b", "slash"),  # a literal backslash
+                (r"\bcat\b", "word"),
+                (r"zebra", "not_in_domain"),
+            ),
+        ),
+    ],
+    ids=["default", "escapes"],
+)
+def test_rules_only_matches_column_built_version(spark, cfg):
+    texts = [
+        "a JOIN b", "group by", "the table", "stream", "hash key", "scan",
+        "it's here", "a\\b", "ab", "cat", "concat", "bobcat cat", "zebra",
+        "nothing", None, "", "ñ join", "x\bcat",
+    ]
+    df = spark.createDataFrame(
+        [(i, t, "detail" if i % 2 else None) for i, t in enumerate(texts)],
+        "id int, t string, d string",
+    )
+    got = classify_rules_only(df, cfg, ("t", "d")).orderBy("id").collect()
+    want = _column_built_rules_only(df, cfg, ("t", "d")).orderBy("id").collect()
+    assert got == want
+    labels = {r["sector"] for r in got}
+    assert len(labels) > 2

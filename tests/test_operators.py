@@ -965,3 +965,24 @@ def test_tfidf_df_subtree_reuses_tf_exchange(spark):
     assert "ReusedExchange" in final, final
     # exactly one explode executes (the reused stage covers the other)
     assert len(re.findall(r"\bGenerate\b", final)) == 1, final
+
+
+def test_delta_split_ignores_state_multiplicity(spark):
+    """Each (key, hash) of the state repeated 3 times splits incoming
+    into the same changed and bypass multisets as the deduplicated
+    state: semi/anti joins emit each probe row at most once."""
+    incoming = spark.createDataFrame(
+        [(f"k{i}", f"h{i % 7}") for i in range(60)] + [("k1", "h1"), (None, "h0")],
+        "k string, row_hash string",
+    )
+    uniq = [(f"k{i}", f"h{(i + (i % 3 == 0)) % 7}") for i in range(0, 50)] + [(None, "h0")]
+    state = spark.createDataFrame(uniq, "k string, row_hash string")
+    tripled = spark.createDataFrame(uniq * 3, "k string, row_hash string")
+
+    def bag(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    want = [bag(side) for side in delta_split(incoming, state, "k")]
+    got = [bag(side) for side in delta_split(incoming, tripled, "k")]
+    assert got == want
+    assert want[0] and want[1]

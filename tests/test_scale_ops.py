@@ -207,3 +207,98 @@ def test_scrub_pii_redacts_and_counts(spark):
     assert "<EMAIL>" in out[1]["text"] and "<IP>" in out[1]["text"]
     assert "@" not in out[1]["text"] and "192.168" not in out[1]["text"]
     assert out[2]["n_emails"] == 0 and out[2]["text"] == "no pii here"
+
+
+def _sql_executions(spark) -> list:
+    """The SQL executions the session's status store still retains."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def _final_write_plans(spark, since: int, root: str) -> list[str]:
+    """The final (post-AQE) physical plans of the file writes under
+    ``root`` that ran as SQL executions with id > ``since``, read from
+    the session's SQL status store — the plan each write really
+    executed."""
+    plans = []
+    for e in _sql_executions(spark):
+        desc = e.physicalPlanDescription()
+        if (
+            e.executionId() > since
+            and "InsertIntoHadoopFsRelationCommand" in desc
+            and root in desc
+        ):
+            if "== Final Plan ==" in desc:
+                desc = desc.split("== Final Plan ==")[1]
+            plans.append(desc.split("== Initial Plan ==")[0])
+    return plans
+
+
+def _ancestors(plan: str, marker: str) -> list[str]:
+    """Node lines above every ``marker`` line of a plan tree, by
+    indentation (a node's parent is the nearest line above it that
+    starts left of it)."""
+    lines = [ln for ln in plan.splitlines() if ln.strip()]
+
+    def depth(ln: str) -> int:
+        return next(i for i, ch in enumerate(ln) if ch.isalnum() or ch == "*")
+
+    out = []
+    for i, ln in enumerate(lines):
+        if marker not in ln:
+            continue
+        d = depth(ln)
+        for up in reversed(lines[:i]):
+            if depth(up) < d:
+                out.append(up.strip())
+                d = depth(up)
+    return out
+
+
+def test_merge_write_upsert_plan_never_shuffles_the_target(spark, tmp_path):
+    """A clause-free merge_write commits source ∪ (target ▷ source.pk):
+    the source keys broadcast, so the executed write has no sort-merge
+    join and no Exchange anywhere above the target scan."""
+    from datapipeline_scraping_spark.operators.txn import ManifestTable, merge_write
+
+    tbl = ManifestTable(str(tmp_path / "t"))
+    tbl.commit(spark.range(5000).selectExpr("id AS pk", "id * 2 AS v").repartition(3))
+    # the store evicts old executions: take the newest id, not a count
+    since = max((e.executionId() for e in _sql_executions(spark)), default=-1)
+    src = spark.range(4000, 4600).selectExpr("id AS pk", "id * 3 AS v")
+    merge_write(spark, tbl.root, src, "pk", writer="manifest")
+    (plan,) = _final_write_plans(spark, since, tbl.root)
+    assert "Scan parquet" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    above = _ancestors(plan, "Scan parquet")
+    assert above and not any("Exchange" in ln for ln in above), plan
+    assert any("BroadcastHashJoin LeftAnti" in ln for ln in above), plan
+    assert tbl.read(spark).count() == 5000
+
+
+def test_delta_split_probes_state_without_aggregate(spark):
+    """Semi/anti joins ignore probe-side multiplicity: the state side
+    of delta_split carries no dedup Aggregate."""
+    from datapipeline_scraping_spark.operators.delta import delta_split
+
+    incoming = spark.range(1000).selectExpr("CAST(id AS STRING) AS k", "'h' AS row_hash")
+    state = spark.range(800).selectExpr("CAST(id AS STRING) AS k", "'h' AS row_hash")
+    for side in delta_split(incoming, state, "k"):
+        plan = side._jdf.queryExecution().executedPlan().toString()
+        assert "Aggregate" not in plan, plan
+
+
+def test_merge_write_upsert_adds_no_files(spark, tmp_path):
+    """10 successive upserts into a 3-file table leave at most 3 data
+    files: the result is coalesced to the target's file count."""
+    from datapipeline_scraping_spark.operators.txn import ManifestTable, merge_write
+
+    tbl = ManifestTable(str(tmp_path / "t"))
+    tbl.commit(spark.range(3000).selectExpr("id AS pk", "0L AS v").repartition(3))
+    for b in range(1, 11):
+        src = spark.range(b * 100, b * 100 + 500, numPartitions=8).selectExpr(
+            "id AS pk", f"{b}L AS v"
+        )
+        merge_write(spark, tbl.root, src, "pk", writer="manifest")
+    assert len(tbl.read(spark).inputFiles()) <= 3
+    assert tbl.read(spark).count() == 3000

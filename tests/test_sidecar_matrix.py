@@ -206,11 +206,21 @@ def test_matrix_append_files_local(spark, base_root, tmp_path):
 
 
 def test_matrix_merge_write(spark, base_root, tmp_path):
+    """The clause-free upsert keeps every tier and gives the rows and
+    schema merge_into (no clauses) gives on the same target."""
+    from datapipeline_scraping_spark.operators.merge import merge_into
+
     mt = _clone(base_root, tmp_path, "t")
     src = _mk_df(spark, 150, 230).withColumnRenamed("v", "label")
+    expected = merge_into(mt.read(spark), src, "pk")
+    want_rows = sorted(tuple(r) for r in expected.collect())
+    want_shape = [(f.name, f.dataType) for f in expected.schema.fields]
     merge_write(spark, mt.root, src, "pk", writer="manifest")
     _assert_tiers(mt, "merge_write")
-    assert mt.read(spark).count() == 230
+    got = mt.read(spark)
+    assert [(f.name, f.dataType) for f in got.schema.fields] == want_shape
+    assert sorted(tuple(r) for r in got.collect()) == want_rows
+    assert len(want_rows) == 230
 
 
 def test_matrix_update_where(spark, base_root, tmp_path):

@@ -176,7 +176,7 @@ class _ReadMixin:
         raw conditions over logical columns — the shared pruning core
         (:func:`..sources.skipping.kept_files`): hive dirs, per-file
         stats, bucket layout and bloom sidecar, the same tiers and
-        literal coercion the SQL ``where`` option gets. A literal that
+        literal coercion ``predicate_view`` gets. A literal that
         does not fit its column's type raises ``ValueError``."""
         snap, entry = self._resolve(version)
         kept, total = kept_files(snap, entry, [conjunct(conds, entry)])

@@ -46,28 +46,23 @@ WHERE l_orderkey % 2 = 0
 def q193_clustered_sql_prune(spark, sf_dir):
     """Keyed lookup on the CLUSTERED ledger through pure SQL touches
     ONE bucket's files per key (r13 — VERDICT r12 item 3): the
-    ``where`` option's equality points hash driver-side with the same
+    predicate view's equality points hash driver-side with the same
     Murmur3 Spark's HashPartitioning uses (``functions/bucket_hash``,
     pinned against ``F.hash``), the bucket id comes from the file
-    name, and every other bucket's files are never listed as
-    InputPartitions. In-query asserts pin the file-count reduction:
-    a one-key predicate keeps only its bucket's files (< total), and
+    name, and every other bucket's files stay out of the view's native
+    parquet scan. In-query asserts pin the file-count reduction: a
+    one-key predicate keeps only its bucket's files (< total), and
     the kept set is exactly the hash's bucket. At 100 TB this is the
     difference between a point lookup launching O(files/buckets)
     tasks and launching O(table).
 
-    Why an option and not pushFilters: Spark 4.1 keeps one mutable
-    read-info slot per Python data source instance, so
-    filter-dependent partitions corrupt multi-reference plans — see
-    ``sources/manifest_datasource.py`` (the r13 redesign) and the
-    ``test_double_reference_plans_stay_exact`` regression."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
+    The view is minted by ``predicate_view``: a plain WHERE on a
+    ``USING manifest`` relation scans every file, because Spark 4.1's
+    shared read-info slot makes filter-dependent partitions unsound
+    (``sources/manifest_datasource.py``)."""
     from .functions.bucket_hash import bucket_id, file_bucket_id
     from .operators.txn import ManifestTable
-    from .sources.manifest_datasource import ManifestReader, register
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
@@ -83,31 +78,20 @@ def q193_clustered_sql_prune(spark, sf_dir):
         mt.commit_clustered(
             li, "l_orderkey", _Q193_BUCKETS, sorted_by="l_orderkey"
         )
-    entry = mt._log_entry(mt.version()) or {}
-    schema = _St.fromJson(_json.loads(entry["schema"]))
-    base = ManifestReader({"root": root}, schema).partitions()
     probe = _Q193_KEYS[0]
-    kept = ManifestReader(
-        {"root": root, "where": f"l_orderkey = {probe}"}, schema
-    ).partitions()
-    assert 0 < len(kept) < len(base), (len(kept), len(base))
+    kept, base = predicate_files(root, f"l_orderkey = {probe}")
+    assert 0 < len(kept) < base, (len(kept), base)
     want_b = bucket_id(probe, "bigint", _Q193_BUCKETS)
     assert all(
-        file_bucket_id(os.path.basename(p.value[0])) == want_b
-        for p in kept
+        file_bucket_id(os.path.basename(f)) == want_b for f in kept
     ), "kept a file outside the predicate's bucket"
-    register(spark)
     in_list = ", ".join(str(k) for k in _Q193_KEYS)
-    return (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", f"l_orderkey IN ({in_list})")
-        .load()
-        .agg(
-            F.count("*").cast("long").alias("n_items"),
-            F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
-            exact_sum("l_extendedprice", 18, 2).alias("total_price"),
-        )
+    name = f"clussql_view_{_key(sf_dir)}"
+    predicate_view(spark, name, root, f"l_orderkey IN ({in_list})")
+    return spark.table(name).agg(
+        F.count("*").cast("long").alias("n_items"),
+        F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
+        exact_sum("l_extendedprice", 18, 2).alias("total_price"),
     )
 
 

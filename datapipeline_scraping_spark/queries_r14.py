@@ -28,32 +28,6 @@ def _key(sf_dir: str) -> str:
     return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
 
 
-def _reader(root: str, where: str | None = None):
-    """A planning-only ManifestReader over the table's head version —
-    the in-query file-skipping asserts probe ``partitions()`` without
-    launching any Spark job."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from .operators.txn import ManifestTable
-    from .sources.manifest_datasource import ManifestReader
-
-    mt = ManifestTable(root)
-    entry = mt._log_entry(mt.version()) or {}
-    schema = _St.fromJson(_json.loads(entry["schema"]))
-    opts = {"root": root}
-    if where is not None:
-        opts["where"] = where
-    return ManifestReader(opts, schema)
-
-
-def _part_files(reader) -> set:
-    """The file paths a planning-only reader's ``partitions()`` scan
-    (the all-pruned placeholder has none)."""
-    return {p.value[0] for p in reader.partitions() if p.value[0] is not None}
-
-
 def _input_files(df) -> set:
     """The local file paths ``df``'s scans read (``inputFiles()``
     returns percent-encoded URIs)."""
@@ -89,7 +63,7 @@ def q196_temporal_predicate_view(spark, sf_dir):
     The view is minted by ``predicate_view``, which validates the
     predicate against the committed schema at creation, because a bare
     ``USING manifest`` view scans O(table) under a plain WHERE by
-    design (Spark 4.1's shared read-info slot, see the r13 redesign in
+    design (Spark 4.1's shared read-info slot, see
     ``sources/manifest_datasource.py``).
 
     In-query asserts pin the skipping: the 7-of-30-day window keeps
@@ -98,7 +72,7 @@ def q196_temporal_predicate_view(spark, sf_dir):
     predicate shape on an events ledger — O(window) files, not
     O(table)."""
     from .operators.txn import ManifestTable
-    from .sources.manifest_sql import predicate_view
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
@@ -118,16 +92,15 @@ def q196_temporal_predicate_view(spark, sf_dir):
         )
         assert mt.annotate(1, tpv_done=True)
     where = f"ts >= TIMESTAMP '{_Q196_LO}' AND ts < TIMESTAMP '{_Q196_HI}'"
-    base = len(_reader(root).partitions())
-    kept_files = _part_files(_reader(root, where))
-    assert 0 < len(kept_files) < base, (len(kept_files), base)
+    kept, base = predicate_files(root, where)
+    assert 0 < len(kept) < base, (len(kept), base)
     name = f"tpv_view_{_key(sf_dir)}"
     predicate_view(spark, name, root, where)
     view = spark.table(name)
     # the minted view's scan reads exactly the window's files
-    assert _input_files(view) == kept_files, (
+    assert _input_files(view) == set(kept), (
         sorted(_input_files(view)),
-        sorted(kept_files),
+        sorted(kept),
     )
     return view.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count("*").cast("long").alias("n_events"),
@@ -160,7 +133,7 @@ def q197_bloom_point_lookup(spark, sf_dir):
     the per-(file, column) bloom index is what turns ``l_orderkey IN
     (...)`` into an O(probed keys)-file scan. The probe is driver-side
     sidecar metadata (~1.2 bytes/key), no cluster job; bloom 'maybe'
-    keeps the file, and the exact Arrow mask still decides every row.
+    keeps the file, and the view's Spark predicate decides every row.
 
     In-query asserts pin the mechanism: the equality points keep
     strictly fewer files than the ledger holds, while a range
@@ -171,6 +144,7 @@ def q197_bloom_point_lookup(spark, sf_dir):
     with no clustering gets the same O(1) behavior from metadata
     alone."""
     from .operators.txn import ManifestTable
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
@@ -188,8 +162,9 @@ def q197_bloom_point_lookup(spark, sf_dir):
         # envelopes span the domain, so only the bloom can skip
         mt.commit(li.repartition(8, "l_orderkey"), bloom_by=["l_orderkey"])
     in_list = ", ".join(str(k) for k in _Q197_KEYS)
-    base = len(_reader(root).partitions())
-    kept = len(_reader(root, f"l_orderkey IN ({in_list})").partitions())
+    where = f"l_orderkey IN ({in_list})"
+    kept_paths, base = predicate_files(root, where)
+    kept = len(kept_paths)
     # two probed keys live in at most two files (plus bloom false
     # positives at fpp=1e-2 — none expected at 8 files)
     assert 0 < kept <= len(_Q197_KEYS), (kept, base)
@@ -197,21 +172,14 @@ def q197_bloom_point_lookup(spark, sf_dir):
     # a range predicate cannot consult the bloom and the envelopes
     # span the domain: every file stays — the reduction above is
     # attributable to the bloom sidecar alone
-    unpruned = len(_reader(root, "l_orderkey >= 0").partitions())
+    unpruned = len(predicate_files(root, "l_orderkey >= 0")[0])
     assert unpruned == base, (unpruned, base)
-    from .sources.manifest_datasource import register
-
-    register(spark)
-    return (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", f"l_orderkey IN ({in_list})")
-        .load()
-        .agg(
-            F.count("*").cast("long").alias("n_items"),
-            F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
-            exact_sum("l_extendedprice", 18, 2).alias("total_price"),
-        )
+    name = f"bloomq2_view_{_key(sf_dir)}"
+    predicate_view(spark, name, root, where)
+    return spark.table(name).agg(
+        F.count("*").cast("long").alias("n_items"),
+        F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
+        exact_sum("l_extendedprice", 18, 2).alias("total_price"),
     )
 
 
@@ -242,6 +210,7 @@ def q198_nullcount_skipping(spark, sf_dir):
     100 TB: 'rows still missing enrichment' (IS NULL over a mostly
     filled column) touches only the unfilled tail's files."""
     from .operators.txn import ManifestTable
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
@@ -264,22 +233,18 @@ def q198_nullcount_skipping(spark, sf_dir):
             stats_by=["status_audit"],
         )
         assert mt.annotate(1, nullsk_done=True)
-    base = len(_reader(root).partitions())
-    kept_nn = len(_reader(root, "status_audit IS NOT NULL").partitions())
-    kept_n = len(_reader(root, "status_audit IS NULL").partitions())
+    nn_files, base = predicate_files(root, "status_audit IS NOT NULL")
+    kept_nn = len(nn_files)
+    kept_n = len(predicate_files(root, "status_audit IS NULL")[0])
     assert 0 < kept_nn < base, (kept_nn, base)
     assert 0 < kept_n < base, (kept_n, base)
     # the two polarities cover the table (no file both all-null and
     # null-free unless empty)
     assert kept_nn + kept_n >= base
-    from .sources.manifest_datasource import register
-
-    register(spark)
+    name = f"nullsk_view_{_key(sf_dir)}"
+    predicate_view(spark, name, root, "status_audit IS NOT NULL")
     return (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "status_audit IS NOT NULL")
-        .load()
+        spark.table(name)
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("long").alias("n_orders"),

@@ -1,5 +1,5 @@
 """Round-15 registry queries — the capability closures of VERDICT
-r14: OR-of-conjuncts (DNF) in the ``where``-option grammar, where
+r14: OR-of-conjuncts (DNF) in the predicate-view grammar, where
 file skipping composes as the UNION of per-disjunct kept sets (q199),
 and LIKE-prefix predicates pruned against string min/max envelopes
 (q200).
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .functions.numeric import exact_sum, sql_exact_sum
 from .queries import _t, q
-from .queries_r14 import _input_files, _key, _part_files, _reader
+from .queries_r14 import _input_files, _key
 from .streaming.events import SCRATCH
 
 _Q199_A_LO = "2024-01-03 00:00:00"
@@ -68,7 +68,7 @@ def q199_dnf_predicate_view(spark, sf_dir):
     disjunction as a Spark predicate (SQL three-valued semantics).
     Shares the q196 ledger build (same table, same scratch root)."""
     from .operators.txn import ManifestTable
-    from .sources.manifest_sql import predicate_view
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
@@ -87,22 +87,21 @@ def q199_dnf_predicate_view(spark, sf_dir):
             stats_by=["ts"],
         )
         assert mt.annotate(1, tpv_done=True)
-    base = len(_reader(root).partitions())
     kept_a = len(
-        _reader(
+        predicate_files(
             root,
             f"ts >= TIMESTAMP '{_Q199_A_LO}' AND "
             f"ts < TIMESTAMP '{_Q199_A_HI}'",
-        ).partitions()
+        )[0]
     )
     kept_b = len(
-        _reader(
+        predicate_files(
             root,
             f"ts >= TIMESTAMP '{_Q199_B_LO}' AND "
             f"ts < TIMESTAMP '{_Q199_B_HI}'",
-        ).partitions()
+        )[0]
     )
-    kept_files = _part_files(_reader(root, _Q199_WHERE))
+    kept_files, base = predicate_files(root, _Q199_WHERE)
     kept = len(kept_files)
     # the disjunction keeps exactly the union of the two windows'
     # files — disjoint windows on a day-partitioned ledger: the sum
@@ -111,7 +110,7 @@ def q199_dnf_predicate_view(spark, sf_dir):
     name = f"dnf_view_{_key(sf_dir)}"
     predicate_view(spark, name, root, _Q199_WHERE)
     view = spark.table(name)
-    assert _input_files(view) == kept_files, (
+    assert _input_files(view) == set(kept_files), (
         sorted(_input_files(view)),
         sorted(kept_files),
     )
@@ -151,7 +150,7 @@ def q200_like_prefix_skipping(spark, sf_dir):
     starts with the prefix, so the [prefix, prefix] interval under the
     engine's conservative truncated string comparison skips every file
     whose [min, max] envelope cannot contain such a string. Rows are
-    re-filtered exactly with SQL LIKE semantics (% any run, _ one
+    re-filtered by the predicate view's Spark LIKE (% any run, _ one
     char, null in null out).
 
     In-query asserts pin the mechanism AND its limit: the prefix
@@ -161,6 +160,7 @@ def q200_like_prefix_skipping(spark, sf_dir):
     a host- or path-prefix scan over a crawl ledger sorted by url
     touches O(host) files, not O(corpus)."""
     from .operators.txn import ManifestTable
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     docs = _t(spark, sf_dir, "documents").select(
         F.concat(
@@ -189,23 +189,18 @@ def q200_like_prefix_skipping(spark, sf_dir):
             stats_by=["url"],
         )
         assert mt.annotate(1, likeurl_done=True)
-    base = len(_reader(root).partitions())
-    kept = len(
-        _reader(root, f"url LIKE '{_Q200_PREFIX}%'").partitions()
-    )
+    where = f"url LIKE '{_Q200_PREFIX}%'"
+    kept_files, base = predicate_files(root, where)
+    kept = len(kept_files)
     assert 0 < kept < base, (kept, base)
     # control: no literal prefix -> no pruning (the reduction above is
     # the prefix interval's, not an artifact of the data)
-    unpruned = len(_reader(root, "url LIKE '%example%'").partitions())
+    unpruned = len(predicate_files(root, "url LIKE '%example%'")[0])
     assert unpruned == base, (unpruned, base)
-    from .sources.manifest_datasource import register
-
-    register(spark)
+    name = f"likeurl_view_{_key(sf_dir)}"
+    predicate_view(spark, name, root, where)
     return (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", f"url LIKE '{_Q200_PREFIX}%'")
-        .load()
+        spark.table(name)
         .groupBy("lang")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -237,8 +232,8 @@ def q201_not_in_exclusion(spark, sf_dir):
     type-faithfully (case-sensitive for strings; the r15 ADVICE fix
     genus). The ledger commits one file per priority dir, so the
     in-query assert pins the exact arithmetic: 5 dirs, 2 excluded,
-    3 kept. Null semantics ride the Kleene mask: a null priority
-    would satisfy neither polarity, exactly SQL's NOT IN.
+    3 kept. The view's Spark predicate re-filters the rows: a null
+    priority would satisfy neither polarity, exactly SQL's NOT IN.
 
     The reference filters its scrape queue by status/priority columns
     on every incremental run (``src/storage.py`` state queries); at
@@ -246,6 +241,7 @@ def q201_not_in_exclusion(spark, sf_dir):
     shape of a work-queue scan, and it should touch only the
     non-terminal dirs."""
     from .operators.txn import ManifestTable
+    from .sources.manifest_sql import predicate_files, predicate_view
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -267,17 +263,13 @@ def q201_not_in_exclusion(spark, sf_dir):
         assert mt.annotate(1, notin_done=True)
     in_list = ", ".join(f"'{p}'" for p in _Q201_EXCLUDED)
     where = f"o_orderpriority NOT IN ({in_list})"
-    base = len(_reader(root).partitions())
-    kept = len(_reader(root, where).partitions())
+    kept_files, base = predicate_files(root, where)
+    kept = len(kept_files)
     assert base == 5 and kept == 3, (base, kept)
-    from .sources.manifest_datasource import register
-
-    register(spark)
+    name = f"notin_view_{_key(sf_dir)}"
+    predicate_view(spark, name, root, where)
     return (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", where)
-        .load()
+        spark.table(name)
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("long").alias("n_orders"),

@@ -54,9 +54,9 @@ _RUNTIME_CONF = {
     # r13: the manifest/CDF readers no longer implement pushFilters —
     # Spark 4.1 keeps one mutable read-info slot per Python source
     # instance, so filter-dependent partitions silently corrupt
-    # multi-reference plans (see ManifestReader docstring). Predicate
-    # pruning rides the relation's `where` OPTION instead; the
-    # filterPushdown conf is no longer needed.
+    # multi-reference plans (see manifest_datasource's docstring).
+    # Predicate pruning goes through manifest_sql.predicate_view
+    # instead; the filterPushdown conf is no longer needed.
     # keep bucketed scans BUCKETED (r13): Spark 4.1's
     # DisableUnnecessaryBucketedScan rule drops the bucket layout for
     # pure filter queries, and with it SelectedBucketsCount pruning —

@@ -1,7 +1,8 @@
 """The manifest table's commit format, read with the stdlib only: the
 ``CURRENT`` pointer file (``"<snapshot dirname>\\n<version>"``) and the
-``_log/<version>.json`` entries. The table layer and the JVM-free
-datasource planner workers both resolve versions through this pair."""
+``_log/<version>.json`` entries, and the Delta-style version / time-travel
+resolution on top of them. The table layer, ``predicate_view`` and the
+JVM-free data source's Python workers all read versions through here."""
 
 from __future__ import annotations
 
@@ -40,3 +41,39 @@ def read_log_entry(root: str, version: int) -> dict | None:
             return json.load(fh)
     except (OSError, ValueError):
         return None
+
+
+def resolve_version(options) -> tuple[str, int, dict]:
+    """``(root, version, entry)`` for the ``root`` / ``version`` / ``asof``
+    options with Delta-style time-travel semantics. Raises on a GC'd or
+    unknown version — never silently older state."""
+    root = options["root"]
+    if "version" in options and "asof" in options:
+        raise ValueError("options version and asof are mutually exclusive")
+    if "version" in options:
+        ver = int(options["version"])
+    elif "asof" in options:
+        ts = float(options["asof"])
+        live = pointer_version(root)
+        ver = None
+        for v in range(live, 0, -1):
+            e = read_log_entry(root, v)
+            if e is not None and e.get("ts", float("inf")) <= ts:
+                ver = v
+                break
+        if ver is None:
+            raise FileNotFoundError(f"{root}: no commit at or before ts={ts}")
+    else:
+        ver = pointer_version(root)
+        if not ver:
+            raise FileNotFoundError(f"no committed snapshot under {root}")
+    entry = read_log_entry(root, ver)
+    if entry is None:
+        raise FileNotFoundError(f"{root}: no commit log entry for v{ver}")
+    snap = os.path.join(root, entry["snapshot"])
+    if not os.path.isdir(snap):
+        raise FileNotFoundError(
+            f"{root}: version {ver} aged past the retention contract and "
+            f"its snapshot was garbage-collected"
+        )
+    return root, ver, entry

@@ -110,6 +110,7 @@ from ..functions.sqltext import ident
 from ..operators.merge import merge_into
 from ..operators.txn import ConcurrentWriteError, ManifestTable
 from .manifest_datasource import register as _register_format
+from .manifest_log import resolve_version
 from .skipping import column_types, conjunct, kept_files
 
 #: per-session registered DML targets: lowercase name -> {"root",
@@ -170,26 +171,24 @@ def predicate_view(
     asof: float | None = None,
 ) -> None:
     """Mint a PRUNED temporary view over the manifest table at
-    ``root`` — the ergonomic path to planning-time file skipping on
-    the SQL surface (r14, VERDICT r13 item 4). A bare ``USING
-    manifest`` view scans O(table) under any plain ``WHERE`` (the r13
-    soundness redesign: Spark 4.1's shared read-info slot makes
-    filter-dependent ``partitions()`` unsound on multi-reference
-    plans, see ``manifest_datasource.ManifestReader``), so this helper
-    picks the files itself:
+    ``root`` — the SQL surface's one path to planning-time file
+    skipping (r14, VERDICT r13 item 4). A bare ``USING manifest`` view
+    scans O(table) under any plain ``WHERE`` (Spark 4.1's shared
+    read-info slot makes filter-dependent ``partitions()`` unsound, see
+    ``manifest_datasource``), so this helper picks the files itself:
 
         predicate_view(spark, "recent", root,
                        "ts >= TIMESTAMP '2024-06-01 00:00:00'")
         spark.sql("SELECT ... FROM recent")    -- O(window) files
 
-    ``where`` is the ``where``-option grammar (r15: DNF — OR of
+    ``where`` is the :func:`parse_where` grammar (DNF — OR of
     conjunctions of comparisons, IN, BETWEEN, IS [NOT] NULL, LIKE;
-    numeric/decimal/string/boolean/date/timestamp literals), parsed
-    and coerced against the resolved version's committed schema by
-    the same ``parse_where``/``conjunct`` the option uses, so a typo
-    fails here, not mid-query. The kept files are the option's too
-    (``skipping.kept_files``). The view itself is a NATIVE parquet
-    scan of exactly those files through
+    numeric/decimal/string/boolean/date/timestamp literals), coerced
+    against the resolved version's committed schema by
+    :func:`.skipping.conjunct`, so a typo fails here, not mid-query.
+    The files come from :func:`.skipping.kept_files`
+    (:func:`predicate_files` lists them without a view). The view is a
+    NATIVE parquet scan of exactly those files through
     :meth:`ManifestTable._read_file_subset` (declared schema, hive
     ``basePath``, spec groups, the ``_dv`` anti-join, the ``_upd``
     union, renames — the merge-on-read composition ``read_where``
@@ -197,19 +196,15 @@ def predicate_view(
     (:func:`_where_column`): Catalyst and AQE plan a
     ``FileSourceScan`` and no Python worker runs. A scan's partition
     count is Spark's split packing, not the file count — assert files
-    through ``DataFrame.inputFiles()``. The ``where`` option of a
-    ``USING manifest`` relation still masks rows in Arrow per task;
-    both agree row for row. Which predicate shape prunes through
-    which skipping tier (and why ``!=``/``IS NULL``/float ``>`` are
-    narrower) is tabulated in README.md under "Which predicate prunes
-    through which tier".
+    through ``DataFrame.inputFiles()``. Which predicate shape prunes
+    through which skipping tier (and why ``!=``/``IS NULL``/float
+    ``>`` are narrower) is tabulated in README.md under "Which
+    predicate prunes through which tier".
 
     The view is read-only (``INSERT INTO`` a DataFrame view raises)
     and pins the resolved version's files and log entry: pass
     ``version``/``asof`` for time travel, and re-run the helper to
     pick up commits made after it."""
-    from .manifest_datasource import _resolve_version, parse_where
-
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
         raise ValueError(f"invalid view name {name!r}")
     if any(ch in root for ch in ("'", '"', "\\", "\n", "\r")):
@@ -220,28 +215,17 @@ def predicate_view(
             f"not representable in the view's OPTIONS clause"
         )
     if any(ch in where for ch in ("\\", "\n", "\r")):
-        # the same predicate text must mean the same rows here and in
-        # a `where` OPTION literal, where Spark processes backslash
-        # escapes ('a\tb' collapses to a tab) — reject rather than
-        # re-escape (ADVICE r14)
+        # Spark SQL reads a backslash in a string literal as an escape
+        # ('a\tb' is a tab) while this grammar takes it literally, so
+        # the same predicate text would select different rows here
+        # and in a spark.sql WHERE — rejected rather than guessed. No
+        # grammar literal needs a line break, so those go with it.
         raise ValueError(
             f"where {where!r} contains backslash/newline characters — "
-            f"Spark's escape processing inside the OPTIONS literal "
-            f"would alter the predicate the view actually runs"
+            f"Spark SQL would read its escapes differently from the "
+            f"predicate grammar"
         )
-    if version is not None and asof is not None:
-        raise ValueError("version and asof are mutually exclusive")
-    opts = {"root": root}
-    if version is not None:
-        opts["version"] = str(int(version))
-    if asof is not None:
-        opts["asof"] = str(float(asof))
-    _root, _ver, entry = _resolve_version(opts)
-    if not entry.get("schema"):
-        raise ValueError(f"{root}: no committed schema")
-    disjuncts = [conjunct(conds, entry) for conds in parse_where(where)]
-    snap = os.path.join(root, entry["snapshot"])
-    kept, _total = kept_files(snap, entry, disjuncts)
+    entry, snap, disjuncts, kept, _total = _prune(root, where, version, asof)
     types = column_types(entry)
     df = ManifestTable(root)._read_file_subset(spark, kept, entry, snap)
     # callers go on to read format("manifest") / USING manifest
@@ -249,6 +233,324 @@ def predicate_view(
     df.filter(_where_column(disjuncts, types)).select(
         *[F.col(ident(c)) for c in types]
     ).createOrReplaceTempView(name)
+
+
+def predicate_files(
+    root: str, where: str, *, version: int | None = None
+) -> tuple[list[str], int]:
+    """``(kept, total)``: the data files :func:`predicate_view` scans
+    for ``where`` (absolute paths, ``_dv``/``_upd`` sidecars aside) and
+    the snapshot's data-file count — metadata only, no Spark job."""
+    _entry, _snap, _disjuncts, kept, total = _prune(root, where, version, None)
+    return kept, total
+
+
+def _prune(root: str, where: str, version, asof):
+    """``(entry, snap, disjuncts, kept, total)`` for ``where`` on the
+    resolved version: :func:`parse_where`, :func:`.skipping.conjunct`
+    per disjunct, then :func:`.skipping.kept_files`."""
+    if version is not None and asof is not None:
+        raise ValueError("version and asof are mutually exclusive")
+    opts = {"root": root}
+    if version is not None:
+        opts["version"] = str(int(version))
+    if asof is not None:
+        opts["asof"] = str(float(asof))
+    _root, _ver, entry = resolve_version(opts)
+    if not entry.get("schema"):
+        raise ValueError(f"{root}: no committed schema")
+    disjuncts = [conjunct(conds, entry) for conds in parse_where(where)]
+    snap = os.path.join(root, entry["snapshot"])
+    kept, total = kept_files(snap, entry, disjuncts)
+    return entry, snap, disjuncts, kept, total
+
+
+#: predicate grammar: DNF — OR of conjunctions of comparisons (r15).
+#:   expr    := disjunct (OR disjunct)*
+#:   disjunct:= conj | '(' conj ')'
+#:   conj    := term (AND term)*
+#:   term    := col op literal | col [NOT] IN ( lit, ... )
+#:            | col BETWEEN lit AND lit | col IS [NOT] NULL
+#:            | col [NOT] LIKE 'pattern'
+#:   op      := = | == | != | <> | > | >= | < | <=
+#:   literal := number | 'string' ('' escapes a quote) | TRUE | FALSE
+#:            | DATE 'yyyy-mm-dd' | TIMESTAMP 'iso-8601'
+#:   col     := identifier | `identifier`
+#: AND binds tighter than OR (SQL precedence); parentheses may wrap
+#: the WHOLE expression or a whole conjunction — arbitrary nesting is
+#: outside the grammar and fails loudly like everything else. NOT IN
+#: desugars to a conjunction of != terms (same null semantics: a null
+#: never satisfies either form); NOT LIKE row-filters exactly but
+#: never prunes; NOT BETWEEN is rejected (its expansion is a
+#: disjunction — write the two comparisons with OR). LIKE (r15,
+#: VERDICT r14 item 3) takes SQL wildcards % (any run) and _ (one
+#: char) on STRING columns; backslashes are rejected at parse (an
+#: escaped wildcard would mislead the prefix pruning). A pattern's
+#: literal PREFIX before the first wildcard prunes files against the
+#: string min/max envelopes; %inner% shapes row-filter exactly but
+#: cannot prune.
+#: Temporal predicates (r14): DATE/TIMESTAMP typed literals, bare
+#: ISO-8601 strings, and epoch-second numerics all compare against
+#: date/timestamp/timestamp_ntz columns; literals are coerced ONCE at
+#: parse (fail-loudly on malformed input). A zone-offset literal on a
+#: TIMESTAMP (session-tz) column is interpreted as UTC instant; the
+#: engine's convention for zoned tables is a UTC session timezone.
+_WHERE_TOKEN = re.compile(
+    r"\s*(?:"
+    r"(?P<str>'(?:[^']|'')*')"
+    r"|(?P<num>-?\d+(?:\.\d+)?)"
+    r"|(?P<op><=|>=|==|!=|<>|=|<|>)"
+    r"|(?P<punct>[(),])"
+    r"|`(?P<qid>[^`]+)`"
+    r"|(?P<word>[A-Za-z_][A-Za-z0-9_.]*)"
+    r")"
+)
+
+
+def _temporal_literal(word: str, raw: str):
+    """A ``DATE '...'`` / ``TIMESTAMP '...'`` typed literal, parsed at
+    grammar level (column types are not known yet). Zone-offset
+    timestamps normalize to their UTC instant, carried as a naive
+    datetime — the same canonical form
+    :func:`.skipping._coerce_literal` gives bare ISO strings, so every
+    later tier compares one representation."""
+    try:
+        if word == "DATE":
+            return dt.date.fromisoformat(raw)
+        val = dt.datetime.fromisoformat(raw)
+    except ValueError:
+        raise ValueError(
+            f"where: malformed {word} literal {raw!r} (ISO-8601 required)"
+        ) from None
+    if val.tzinfo is not None:
+        val = val.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return val
+
+
+def _lit_kind(v) -> str:
+    if isinstance(v, bool):
+        return "b"
+    if isinstance(v, dt.datetime):
+        return "t"
+    if isinstance(v, dt.date):
+        return "d"
+    if isinstance(v, str):
+        return "s"
+    return "n"
+
+
+def parse_where(s: str) -> list[list[tuple]]:
+    """Parse a :func:`predicate_view` predicate into DISJUNCTS — a list
+    of conjunctions, each a list of conditions ``("cmp", col, op,
+    value)`` / ``("in", col, values)`` / ``("null", col, not_null)`` /
+    ``("like"|"nlike", col, pattern)``; the predicate is the OR of the
+    conjunctions (r15 — "this window OR that backfill window" is the
+    most common non-conjunctive shape on a real ledger). AND binds
+    tighter than OR, the SQL precedence. Raises ``ValueError`` on
+    anything outside the documented grammar: a predicate the pruning
+    core cannot read exactly must fail loudly, never prune wrongly."""
+    toks: list[tuple[str, object]] = []
+    pos = 0
+    while pos < len(s):
+        m = _WHERE_TOKEN.match(s, pos)
+        if m is None or m.end() == pos:
+            if s[pos:].strip():
+                raise ValueError(f"where: cannot tokenize at {s[pos:]!r}")
+            break
+        pos = m.end()
+        if m.group("str") is not None:
+            toks.append(("lit", m.group("str")[1:-1].replace("''", "'")))
+        elif m.group("num") is not None:
+            n = m.group("num")
+            toks.append(("lit", float(n) if "." in n else int(n)))
+        elif m.group("op") is not None:
+            op = m.group("op")
+            op = {"==": "=", "<>": "!="}.get(op, op)
+            toks.append(("op", op))
+        elif m.group("punct") is not None:
+            toks.append(("punct", m.group("punct")))
+        elif m.group("qid") is not None:
+            toks.append(("id", m.group("qid")))
+        else:
+            w = m.group("word")
+            u = w.upper()
+            if u in ("AND", "IN", "BETWEEN", "NOT", "OR", "IS", "NULL",
+                     "LIKE"):
+                toks.append(("kw", u))
+            elif u in ("TRUE", "FALSE"):
+                toks.append(("lit", u == "TRUE"))
+            else:
+                toks.append(("id", w))
+    out: list[list[tuple]] = []
+    i = 0
+
+    def expect(kind, val=None):
+        nonlocal i
+        if i >= len(toks) or toks[i][0] != kind or (
+            val is not None and toks[i][1] != val
+        ):
+            raise ValueError(f"where: unexpected syntax near token {i} in {s!r}")
+        tok = toks[i]
+        i += 1
+        return tok[1]
+
+    def lit_tok():
+        # literal position: a typed DATE/TIMESTAMP literal is an
+        # identifier word followed by a string. Contextual — a COLUMN
+        # named `date` still parses normally, because a bare id is
+        # never valid where a literal is required.
+        nonlocal i
+        if (
+            i + 1 < len(toks)
+            and toks[i][0] == "id"
+            and toks[i][1].upper() in ("DATE", "TIMESTAMP")
+            and toks[i + 1][0] == "lit"
+            and isinstance(toks[i + 1][1], str)
+        ):
+            word = toks[i][1].upper()
+            raw = toks[i + 1][1]
+            i += 2
+            return _temporal_literal(word, raw)
+        return expect("lit")
+
+    # parentheses around the WHOLE expression strip off (users write
+    # `(A OR B)` as naturally as `A OR B`): the opening paren must
+    # match exactly the final token — `(a) OR (b)` does not qualify
+    # and parses as parenthesized conjuncts instead
+    while (
+        len(toks) >= 2
+        and toks[0] == ("punct", "(")
+        and toks[-1] == ("punct", ")")
+    ):
+        depth = 0
+        matched_last = False
+        for j, t in enumerate(toks):
+            if t == ("punct", "("):
+                depth += 1
+            elif t == ("punct", ")"):
+                depth -= 1
+                if depth == 0:
+                    matched_last = j == len(toks) - 1
+                    break
+        if not matched_last:
+            break
+        toks = toks[1:-1]
+
+    def at_conj_end() -> bool:
+        return (
+            i >= len(toks)
+            or toks[i] == ("kw", "OR")
+            or toks[i] == ("punct", ")")
+        )
+
+    def parse_term(conj: list) -> None:
+        nonlocal i
+        col = expect("id")
+        neg = False
+        if i < len(toks) and toks[i] == ("kw", "NOT"):
+            # col NOT IN (...) / col NOT LIKE '...' (r15). NOT BETWEEN
+            # stays out: its expansion is a DISJUNCTION (col < lo OR
+            # col > hi), which cannot live inside one conjunct — the
+            # error below names the rewrite.
+            neg = True
+            i += 1
+            kind, val = toks[i] if i < len(toks) else ("", "")
+            if not (kind == "kw" and val in ("IN", "LIKE")):
+                raise ValueError(
+                    f"where: NOT after {col!r} supports NOT IN and "
+                    f"NOT LIKE only (NOT BETWEEN lo AND hi = "
+                    f"`{col} < lo OR {col} > hi`)"
+                )
+        kind, val = toks[i] if i < len(toks) else ("", "")
+        if kind == "op":
+            i += 1
+            conj.append(("cmp", col, val, lit_tok()))
+        elif kind == "kw" and val == "IN":
+            i += 1
+            expect("punct", "(")
+            vals = [lit_tok()]
+            while i < len(toks) and toks[i] == ("punct", ","):
+                i += 1
+                vals.append(lit_tok())
+            expect("punct", ")")
+            # one literal kind per IN list: a mixed list has no one
+            # column type to coerce to — fail at parse
+            if len({_lit_kind(v) for v in vals}) > 1:
+                raise ValueError(
+                    f"where: IN list for {col!r} mixes literal types"
+                )
+            if neg:
+                # NOT IN desugars to a conjunction of != terms — the
+                # null semantics agree (null NOT IN (...) is null,
+                # null != x is null: excluded either way), and the
+                # exclusion tier's single-value file pruning applies
+                # per excluded value
+                conj.extend(("cmp", col, "!=", v) for v in vals)
+            else:
+                conj.append(("in", col, tuple(vals)))
+        elif kind == "kw" and val == "IS":
+            i += 1
+            neg = False
+            if i < len(toks) and toks[i] == ("kw", "NOT"):
+                neg = True
+                i += 1
+            expect("kw", "NULL")
+            conj.append(("null", col, neg))  # neg=True => IS NOT NULL
+        elif kind == "kw" and val == "BETWEEN":
+            i += 1
+            lo = lit_tok()
+            expect("kw", "AND")
+            conj.append(("cmp", col, ">=", lo))
+            conj.append(("cmp", col, "<=", lit_tok()))
+        elif kind == "kw" and val == "LIKE":
+            i += 1
+            pat = expect("lit")
+            if not isinstance(pat, str):
+                raise ValueError(
+                    f"where: LIKE pattern for {col!r} must be a string "
+                    f"literal (got {pat!r})"
+                )
+            if "\\" in pat:
+                # Spark's LIKE reads \ as its escape char, while the
+                # prefix pruning cuts the pattern at the first raw % or
+                # _ — an escaped wildcard would prune files holding
+                # matches, so fail closed
+                raise ValueError(
+                    f"where: LIKE pattern {pat!r} contains a backslash "
+                    f"— escape sequences are not part of the grammar"
+                )
+            conj.append(("nlike" if neg else "like", col, pat))
+        else:
+            raise ValueError(f"where: expected comparison after {col!r}")
+
+    def parse_conj() -> list[tuple]:
+        conj: list[tuple] = []
+        while True:
+            parse_term(conj)
+            if at_conj_end():
+                return conj
+            expect("kw", "AND")
+            if at_conj_end():
+                # a dangling trailing AND is outside the grammar —
+                # fail loudly, don't silently accept (ADVICE r13)
+                raise ValueError(f"where: dangling AND in {s!r}")
+
+    while True:
+        if i < len(toks) and toks[i] == ("punct", "("):
+            i += 1
+            conj = parse_conj()
+            expect("punct", ")")
+        else:
+            conj = parse_conj()
+        out.append(conj)
+        if i >= len(toks):
+            break
+        expect("kw", "OR")
+        if i >= len(toks):
+            raise ValueError(f"where: dangling OR at end of {s!r}")
+    if not out or not all(out):
+        raise ValueError("where: empty predicate")
+    return out
 
 
 #: microseconds since the epoch of a naive UTC datetime
@@ -265,7 +567,7 @@ _CMP = {
 
 
 def _lit_column(v, styp: str):
-    """One coerced ``where`` literal as a Spark literal whose meaning
+    """One coerced predicate literal as a Spark literal whose meaning
     does not depend on the session time zone. The grammar's canonical
     datetime is naive: the UTC instant for a zoned ``timestamp``
     column, the wall clock for ``timestamp_ntz``. A bare
@@ -287,10 +589,9 @@ def _lit_column(v, styp: str):
 
 def _where_column(disjuncts, types: dict):
     """The DNF of :func:`.skipping.conjunct` results as one Spark
-    predicate over LOGICAL columns. Spark supplies the semantics the
-    Arrow mask of the ``where`` option emulates: Kleene AND/OR, NaN
-    above every number, IN, and LIKE with ``%``/``_`` matching a
-    newline (backslashes were rejected at parse)."""
+    predicate over LOGICAL columns, with Spark's own semantics: Kleene
+    AND/OR, NaN above every number, IN, and LIKE with ``%``/``_``
+    matching a newline (backslashes were rejected at parse)."""
     out = None
     for conj in disjuncts:
         term = None

@@ -4,8 +4,8 @@ both read front ends:
 - the DataFrame API (``ManifestTable.pruned_files`` / ``read_where`` /
   ``read_point`` / ``bloom_pruned_files``), which builds a conjunct
   from its ``{col: (lo, hi)}`` or point arguments;
-- the SQL ``USING manifest`` datasource, whose ``where`` option parses
-  to one conjunct per disjunct.
+- the SQL surface's ``manifest_sql.predicate_view``, whose predicate
+  parses to one conjunct per disjunct.
 
 Both call :func:`kept_files`, which lists the snapshot's data files
 once and applies the tiers in order — hive ``col=value`` dirs, the
@@ -18,9 +18,9 @@ The bloom hash lives here too, so the sidecar's build (commit time)
 and probe (planning time) share one definition.
 
 Imports only the stdlib and pyarrow (the bucket hash, stdlib-only, is
-imported for clustered snapshots alone): the datasource's planner runs
-in a Python worker without a JVM, and must not pay the
-``operators.txn`` import.
+imported for clustered snapshots alone): the manifest data source's
+Python workers import this module's listing helpers without a JVM,
+and must not pay the ``operators.txn`` import.
 """
 
 from __future__ import annotations
@@ -155,11 +155,10 @@ def overlaps(mn, mx, lo, hi) -> bool:
 # ---------------------------------------------------------------------------
 def _coerce_literal(lit, styp: str, col: str):
     """Validate AND canonicalize one predicate literal against the
-    column's Spark type, on the driver — a literal the reader cannot
-    compare exactly must fail HERE, never mid-task, and never
+    column's Spark type, on the driver — a literal that cannot be
+    compared exactly must fail HERE, never mid-query, and never
     mis-compare. Canonical forms: numerics stay numeric, decimal
-    columns get exact ``decimal.Decimal`` literals (a raw int in an
-    Arrow value_set raises ArrowInvalid inside executor tasks), date
+    columns get exact ``decimal.Decimal`` literals, date
     columns get ``datetime.date``, timestamp columns get naive
     ``datetime.datetime`` (ISO strings and epoch-second numerics both
     accepted; zone offsets normalize to UTC)."""
@@ -220,7 +219,7 @@ def _canonical_forms(vals) -> "tuple[set, set] | None":
     matching hive dir values — hive lowercases booleans, numerics may
     render with/without a decimal point. None marks a set with an
     uncanonicalizable member (date/datetime/Decimal): no dir pruning,
-    the range envelope / row mask still apply."""
+    the range envelope still applies."""
     if not all(isinstance(p, (str, int, float, bool)) for p in vals):
         return None
     nums = set()
@@ -255,8 +254,8 @@ def conjunct(conds: list[tuple], entry: dict) -> "_Conjunct":
             coerced.append(cond)  # IS [NOT] NULL: no literal
         elif cond[0] in ("like", "nlike"):
             # [NOT] LIKE is a string-column predicate; on any other
-            # type Spark would implicitly cast, a semantics the Arrow
-            # mask cannot reproduce faithfully
+            # type Spark would implicitly cast, and the prefix pruning
+            # compares string envelopes only
             if styp != "string":
                 raise ValueError(
                     f"where: LIKE on column {cond[1]!r} of type {styp} "
@@ -282,10 +281,8 @@ class _Conjunct:
         #: coerced conditions, LOGICAL column names
         self.conds = conds
         #: logical float/double columns under `>`/`>=` in THIS
-        #: conjunct: Spark orders NaN GREATER than any number while
-        #: Arrow comparisons return false for NaN, so these terms must
-        #: OR an is_nan branch into the exact row mask and stay out of
-        #: the parquet decode filter
+        #: conjunct: Spark orders NaN GREATER than any number, so these
+        #: terms keep NaN rows that a file's [min, max] never shows
         self.nan_gt_cols = {
             name
             for name, t in logical.items()

@@ -6,8 +6,9 @@ runs over O(files) manifest entries x O(disjuncts). This synthesizes
 1x/10x/100x FILE-COUNT copies of the q196/q199 temporal ledger
 (metadata only: one tiny parquet hardlinked into N date dirs + a
 fabricated commit log with per-file ts min/max stats) and times
-``ManifestReader.partitions()`` — no Spark session, no job: planning
-is pure driver Python by design.
+``skipping.kept_files`` — the file picker ``predicate_view`` runs —
+with the predicate parsed once outside the timing. No Spark session,
+no job: planning is pure driver Python by design.
 
 Shapes measured (the q196/q199/q200-adjacent planner paths):
 - window:   ts >= A AND ts < B            (constant 6-day span)
@@ -33,9 +34,8 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from pyspark.sql.types import StructType  # noqa: E402
-
-from datapipeline_scraping_spark.sources import manifest_datasource as MD  # noqa: E402
+from datapipeline_scraping_spark.sources.manifest_sql import parse_where  # noqa: E402
+from datapipeline_scraping_spark.sources.skipping import conjunct, kept_files  # noqa: E402
 
 BASE = str(ROOT / ".scratch" / "tpv_root_testdata_sf0_01")
 OUT_ROOT = str(ROOT / ".scratch" / "planning_wall")
@@ -95,21 +95,18 @@ def main() -> None:
     results = {}
     for n_days in (30, 300, 3000):
         root = synth(n_days)
-        schema_json = json.load(
-            open(os.path.join(root, "_log", "00000001.json"))
-        )["schema"]
-        schema = StructType.fromJson(json.loads(schema_json))
+        entry = json.load(open(os.path.join(root, "_log", "00000001.json")))
+        snap = os.path.join(root, entry["snapshot"])
         results[n_days] = {}
         for shape, where in SHAPES.items():
-            reader = MD.ManifestReader({"root": root, "where": where}, schema)
+            disjuncts = [conjunct(c, entry) for c in parse_where(where)]
             # warm the dir cache once, then best-of-3 timed
-            reader.partitions()
+            kept_files(snap, entry, disjuncts)
             best, kept = float("inf"), None
             for _ in range(3):
                 t0 = time.perf_counter()
-                parts = reader.partitions()
+                kept = len(kept_files(snap, entry, disjuncts)[0])
                 best = min(best, time.perf_counter() - t0)
-                kept = sum(1 for p in parts if p.value[0] is not None)
             results[n_days][shape] = {
                 "files": n_days,
                 "kept": kept,

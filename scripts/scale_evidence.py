@@ -700,28 +700,22 @@ def predicate_view_evidence(spark) -> dict:
     """r14 (VERDICT r13 item 7): measure — don't just assert — that a
     predicate view's task count and wall time track the PREDICATE, not
     the table. Over the ledgers q196/q197 build (roots keyed by
-    sf_dir; run AFTER the txn passes so they exist): tasks launched
-    (InputPartitions) and wall for the 7-of-30-day time-window view
-    and the bloom point lookup, at 1x and 10x. The 10x events ledger
-    keeps its 30-day span, so the window's share of files — and the
-    scan's task count — must stay the window's fraction while total
+    sf_dir; run AFTER the txn passes so they exist): kept data files
+    and wall (view minting included) for the 7-of-30-day time-window
+    view and the bloom point lookup, at 1x and 10x. The 10x events
+    ledger keeps its 30-day span, so the window's share of files — and
+    the scan's task count — must stay the window's fraction while total
     bytes grow 10x."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
     from datapipeline_scraping_spark.queries_r14 import (
         _Q196_HI, _Q196_LO, _Q197_KEYS, _key,
     )
     from datapipeline_scraping_spark.queries_r15 import (
         _Q199_WHERE, _Q200_PREFIX,
     )
-    from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader, register,
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        predicate_files, predicate_view,
     )
 
-    register(spark)
     in_list = ", ".join(str(k) for k in _Q197_KEYS)
     out: dict = {}
     for tag, sf in (("1x", SF1), ("10x", OUT10C)):
@@ -743,27 +737,14 @@ def predicate_view_evidence(spark) -> dict:
             ("like_prefix", "likeurl", f"url LIKE '{_Q200_PREFIX}%'"),
         ):
             root = os.path.join(SCRATCH, f"{prefix}_{_key(sf)}")
-            mt = ManifestTable(root)
-            entry = mt._log_entry(mt.version()) or {}
-            schema = _St.fromJson(_json.loads(entry["schema"]))
-            total = len(ManifestReader({"root": root}, schema).partitions())
-            kept = len(
-                ManifestReader(
-                    {"root": root, "where": where}, schema
-                ).partitions()
-            )
+            kept, total = predicate_files(root, where)
             t0 = time.perf_counter()
-            n = (
-                spark.read.format("manifest")
-                .option("root", root)
-                .option("where", where)
-                .load()
-                .count()
-            )
+            predicate_view(spark, "scale_evidence_view", root, where)
+            n = spark.table("scale_evidence_view").count()
             wall = round(time.perf_counter() - t0, 2)
             row[fam] = {
                 "files_total": total,
-                "files_kept": kept,
+                "files_kept": len(kept),
                 "wall_sec": wall,
                 "rows": n,
             }
@@ -1148,7 +1129,7 @@ def main() -> None:
         "",
         "## Predicate views: tasks launched track the predicate (r14/r15)",
         "",
-        "The `where`-option view's InputPartition count and wall time for",
+        "The `predicate_view` view's kept data files and wall time for",
         "a 7-of-30-day time window (q196's date-partitioned events",
         "ledger; the 10x ledger keeps the SAME 30-day span), a",
         "bloom-sidecar point lookup (q197's unclustered lineitem ledger,",

@@ -1,9 +1,10 @@
-"""The registered ``manifest`` data source
-(sources/manifest_datasource.py): the transaction layer readable from
-pure SQL with time travel, with the full merge-on-read visibility
-composition implemented per-task in Arrow. Every test pins PARITY
-against :meth:`ManifestTable.read` — same rows, same logical schema,
-through the SQL surface."""
+"""The manifest table's SQL surface: the registered ``manifest`` data
+source (sources/manifest_datasource.py), readable from pure SQL with
+time travel and the full merge-on-read visibility composition
+implemented per-task in Arrow, and the pruned predicate views
+(``manifest_sql.predicate_view``). Every test pins PARITY against
+:meth:`ManifestTable.read` or the same predicate as a Spark filter —
+same rows, same logical schema, through the SQL surface."""
 
 from __future__ import annotations
 
@@ -12,6 +13,10 @@ from pyspark.sql import functions as F
 
 from datapipeline_scraping_spark.operators.txn import ManifestTable
 from datapipeline_scraping_spark.sources.manifest_datasource import register
+from datapipeline_scraping_spark.sources.manifest_sql import (
+    predicate_files,
+    predicate_view,
+)
 
 
 def _df(spark, rows):
@@ -24,6 +29,18 @@ def _src(spark, root, **opts):
     for k, x in opts.items():
         r = r.option(k, x)
     return r.load()
+
+
+def _kept(root, where, **kw):
+    """``(kept, total)``: the data files a predicate view of ``where``
+    scans, and the snapshot's data-file count (metadata only)."""
+    return predicate_files(root, where, **kw)
+
+
+def _view(spark, root, where):
+    """The rows of ``where`` over ``root``, through a predicate view."""
+    predicate_view(spark, "pv_where", root, where)
+    return spark.table("pv_where")
 
 
 def _parity(spark, tbl, **opts):
@@ -99,6 +116,33 @@ def test_asof_and_error_contracts(spark, tmp_path):
         _src(spark, tbl.root, version="99").count()
     with pytest.raises(Exception, match="mutually exclusive"):
         _src(spark, tbl.root, version="1", asof=str(ts1)).count()
+
+
+def test_unknown_option_refuses_instead_of_reading_the_table(spark, tmp_path):
+    """The source takes root/version/asof only. A stale ``where``
+    option (the removed row filter) would otherwise be ignored and
+    return the WHOLE table; every entry point refuses it naming
+    ``predicate_view``, and the table is untouched."""
+    root = str(tmp_path / "t")
+    tbl = ManifestTable(root, retention_sec=3600)
+    tbl.commit(_df(spark, [(i, f"v{i}") for i in range(10)]))
+    register(spark)
+    with pytest.raises(Exception, match="predicate_view") as ei:
+        spark.read.format("manifest").option("root", root).option(
+            "where", "pk >= 8"
+        ).load().collect()
+    assert "ValueError" in str(ei.value)
+    with pytest.raises(Exception, match="predicate_view"):
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY VIEW stale_where USING manifest "
+            f"OPTIONS (root '{root}', `where` 'pk >= 8')"
+        )
+        spark.table("stale_where").collect()
+    with pytest.raises(Exception, match="predicate_view"):
+        _df(spark, [(10, "x")]).write.format("manifest").option(
+            "root", root
+        ).option("where", "pk >= 8").mode("append").save()
+    assert tbl.version() == 1 and tbl.read(spark).count() == 10
 
 
 def test_schema_evolution_nullfills_old_version(spark, tmp_path):
@@ -217,22 +261,12 @@ def test_sql_write_respects_renames_and_mor_guard(spark, tmp_path):
 
 
 def test_where_option_prunes_files_driver_side(spark, tmp_path):
-    """r13 (replacing the r12 pushFilters design — see ManifestReader
-    docstring for the Spark 4.1 shared-read-info collision): the
-    `where` OPTION drives commit-log file skipping. A predicate on a
-    partition column or a stats-covered column drops InputPartitions
-    at PLANNING time (no data file opened), and the same conditions
-    are applied row-exactly per task, so the option is a true
-    predicate view."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-
+    """A predicate view's ``where`` drives commit-log file skipping at
+    planning time (see ``sources/manifest_datasource.py`` for why a
+    plain WHERE on a ``USING manifest`` relation cannot): a predicate
+    on a partition column or a stats-covered column drops files
+    before any data file is opened, and the view's Spark predicate
+    keeps the rows exact."""
     root = str(tmp_path / "push")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -244,49 +278,34 @@ def test_where_option_prunes_files_driver_side(spark, tmp_path):
         partition_by=["grp"],
         stats_by=["id"],
     )
-    entry = mt._log_entry(mt.version())
-    schema = _St.fromJson(_json.loads(entry["schema"]))
 
-    base = len(ManifestReader({"root": root}, schema).partitions())
     # partition-dir pruning
-    r = ManifestReader({"root": root, "where": "grp = 'g1'"}, schema)
-    assert 0 < len(r.partitions()) < base
+    kept, base = _kept(root, "grp = 'g1'")
+    assert 0 < len(kept) < base
     # min/max stats pruning on a non-partition column
-    r2 = ManifestReader({"root": root, "where": "id >= 250"}, schema)
-    assert 0 < len(r2.partitions()) < base
-    # all-pruned edge: single zero-row placeholder task
-    r3 = ManifestReader({"root": root, "where": "grp = 'nope'"}, schema)
-    assert len(r3.partitions()) == 1
-    # unknown column / bad syntax fail LOUDLY (a predicate the reader
-    # cannot apply exactly must never silently return unfiltered rows)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown column"):
-        ManifestReader({"root": root, "where": "nope = 1"}, schema)
-    with _pytest.raises(ValueError):  # NOT outside IS NOT NULL: no grammar
-        ManifestReader({"root": root, "where": "NOT id = 5"}, schema)
+    kept2, _base = _kept(root, "id >= 250")
+    assert 0 < len(kept2) < base
+    # all-pruned edge: no data file scanned, zero rows
+    assert _kept(root, "grp = 'nope'")[0] == []
+    assert _view(spark, root, "grp = 'nope'").count() == 0
+    # unknown column / bad syntax fail LOUDLY (a predicate the pruning
+    # core cannot read exactly must never prune wrongly)
+    with pytest.raises(ValueError, match="unknown column"):
+        _kept(root, "nope = 1")
+    with pytest.raises(ValueError):  # NOT outside IS NOT NULL: no grammar
+        _kept(root, "NOT id = 5")
     # r15: OR joined the grammar — a disjunction plans (and prunes)
-    r4 = ManifestReader(
-        {"root": root, "where": "grp = 'g1' OR grp = 'nope'"}, schema
-    )
-    assert len(r4.partitions()) == len(r.partitions())
+    assert len(_kept(root, "grp = 'g1' OR grp = 'nope'")[0]) == len(kept)
     # end-to-end through SQL: exact rows
-    register(spark)
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "grp = 'g1' AND id >= 250")
-        .load()
-    )
+    got = _view(spark, root, "grp = 'g1' AND id >= 250")
     exp = df.filter("grp = 'g1' AND id >= 250")
     assert sorted(map(tuple, got.select("id", "grp", "v").collect())) == \
         sorted(map(tuple, exp.select("id", "grp", "v").collect()))
     assert got.count() > 0
     # a filtered view is read-only
-    with _pytest.raises(Exception, match="filtered READ view"):
-        df.limit(1).write.format("manifest").option("root", root).option(
-            "where", "id > 0"
-        ).mode("append").save()
+    with pytest.raises(Exception):
+        spark.sql("INSERT INTO pv_where VALUES (999, 'g1', 1.0)")
+    assert mt.version() == 1
 
 
 @pytest.mark.slow  # r17 tiering: measured 10s; full (evidence) tier only
@@ -296,9 +315,9 @@ def test_double_reference_plans_stay_exact(spark, tmp_path):
     depend on pushFilters state serves the LAST branch's file list to
     EVERY scan of a twice-referenced relation — r12's design returned
     only one branch of `v.filter(a).union(v.filter(b))` and emptied
-    an anti-join's build side (AQE then eliminated the join). With
-    option-driven pruning every plan run produces the same read-info,
-    so these shapes must be exact."""
+    an anti-join's build side (AQE then eliminated the join). The
+    reader's partitions depend on its options alone, so these shapes
+    must be exact."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
 
     register(spark)
@@ -340,13 +359,9 @@ def test_double_reference_plans_stay_exact(spark, tmp_path):
         "(SELECT id FROM dbl_ledger WHERE grp='g2') b ON a.id=b.id"
     ).count()
     assert n2 == 200, n2
-    # two where-option views ARE different relations: branch-safe
-    va = spark.read.format("manifest").option("root", root).option(
-        "where", "grp = 'g1'"
-    ).load()
-    vb = spark.read.format("manifest").option("root", root).option(
-        "where", "grp = 'g2'"
-    ).load()
+    # two predicate views ARE different relations: branch-safe
+    va = _view(spark, root, "grp = 'g1'")
+    vb = _view(spark, root, "grp = 'g2'")
     assert va.select("id").unionByName(vb.select("id")).count() == 200
 
 
@@ -357,7 +372,6 @@ def test_where_option_keeps_mor_and_evolved_tables_exact(spark, tmp_path):
     each file by ITS spec's dirs with a stats fallback."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
 
-    register(spark)
     root = str(tmp_path / "pm")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -384,37 +398,20 @@ def test_where_option_keeps_mor_and_evolved_tables_exact(spark, tmp_path):
         keep_snapshots=50,
     )
     mt.delete_where(spark, "id = 101", key_cols=["id"], keep_snapshots=50)
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "v >= 100000")
-        .load()
-    )
-    rows = got.collect()
+    rows = _view(spark, root, "v >= 100000").collect()
     assert [r["id"] for r in rows] == [3]
     # evolved pruning: grp dir-prunes spec-0 files, id dir-prunes
     # spec-1 files; both predicates stay exact through SQL
-    got2 = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "grp = 'g9' AND id >= 102")
-        .load()
-    )
+    got2 = _view(spark, root, "grp = 'g9' AND id >= 102")
     assert sorted(r["id"] for r in got2.collect()) == [102, 103, 104]
 
 
 def test_in_list_prunes_by_point_set_not_range_envelope(spark, tmp_path):
     """`IN ('g0','g2')` must keep only those partition dirs — the
     [min,max] envelope alone would keep 'g1' too."""
-    import json as _json
     import os
 
-    from pyspark.sql.types import StructType as _St
-
     from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     root = str(tmp_path / "inset")
     mt = ManifestTable(root, retention_sec=3600)
@@ -422,44 +419,31 @@ def test_in_list_prunes_by_point_set_not_range_envelope(spark, tmp_path):
         [(i, "g%d" % (i % 3)) for i in range(30)], "id long, grp string"
     )
     mt.commit(df, partition_by=["grp"])
-    entry = mt._log_entry(mt.version())
-    schema = _St.fromJson(_json.loads(entry["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    r2 = ManifestReader(
-        {"root": root, "where": "grp IN ('g0', 'g2')"}, schema
-    )
-    kept = r2.partitions()
+    kept, base = _kept(root, "grp IN ('g0', 'g2')")
     assert 0 < len(kept) < base
     kept_dirs = {
         seg
-        for p in kept
-        for seg in p.value[0].split(os.sep)
+        for f in kept
+        for seg in f.split(os.sep)
         if seg.startswith("grp=")
     }
     assert kept_dirs == {"grp=g0", "grp=g2"}, kept_dirs
     # end-to-end rows stay exact
-    register(spark)
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "grp IN ('g0','g2')")
-        .load()
-    )
+    got = _view(spark, root, "grp IN ('g0','g2')")
     assert got.count() == df.filter("grp IN ('g0','g2')").count()
 
 
 def test_where_option_is_conservative_on_bools_and_escaped_dir_values(
     spark, tmp_path
 ):
-    """Review fixes (r12, re-expressed on the where option): a boolean
+    """Review fixes (r12, re-expressed on predicate views): a boolean
     partition column's hive dir value is 'true' while Python's
     str(True) is 'True' — point-set pruning must match
     case-insensitively, never wrongly prune; hive URL-escaped values
     ('a/b' -> 'a%2Fb') must compare (and surface) UNESCAPED through
-    the datasource and the txn pruners."""
+    the SQL surface and the txn pruners."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
 
-    register(spark)
     # boolean partition column
     root = str(tmp_path / "bools")
     mt = ManifestTable(root, retention_sec=3600)
@@ -467,12 +451,7 @@ def test_where_option_is_conservative_on_bools_and_escaped_dir_values(
         [(i, i % 2 == 0) for i in range(20)], "id long, flag boolean"
     )
     mt.commit(df, partition_by=["flag"])
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "flag = true")
-        .load()
-    )
+    got = _view(spark, root, "flag = true")
     assert got.count() == 10, "boolean equality wrongly pruned"
     # special-character partition value, hive-escaped on disk
     root2 = str(tmp_path / "esc")
@@ -481,13 +460,7 @@ def test_where_option_is_conservative_on_bools_and_escaped_dir_values(
         [(1, "a/b"), (2, "plain")], "id long, grp string"
     )
     mt2.commit(df2, partition_by=["grp"], stats_by=["id"])
-    got2 = (
-        spark.read.format("manifest")
-        .option("root", root2)
-        .option("where", "grp = 'a/b'")
-        .load()
-    )
-    rows = got2.collect()
+    rows = _view(spark, root2, "grp = 'a/b'").collect()
     assert [r["id"] for r in rows] == [1], rows
     assert rows[0]["grp"] == "a/b", "dir value must surface unescaped"
     # txn-side partition pruning compares the true value too
@@ -548,24 +521,18 @@ def test_bucket_hash_matches_spark_f_hash(spark):
 
 def test_bucket_points_prune_clustered_files(spark, tmp_path):
     """r13 (VERDICT r12 item 3): equality points on a CLUSTERED
-    snapshot's bucket column (via the `where` option) prune to exactly
+    snapshot's bucket column (via a predicate view) prune to exactly
     those buckets' files on the SQL read path — the planning-time hash
     mirrors Spark's HashPartitioning, the bucket id comes from the
     file name (the layout contract read_clustered already depends on),
-    and the rows stay exact through the option's row filter."""
-    import json as _json
+    and the rows stay exact through the view's Spark predicate."""
     import os
-
-    from pyspark.sql.types import StructType as _St
 
     from datapipeline_scraping_spark.functions.bucket_hash import (
         bucket_id,
         file_bucket_id,
     )
     from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     root = str(tmp_path / "clus")
     mt = ManifestTable(root, retention_sec=3600)
@@ -573,59 +540,43 @@ def test_bucket_points_prune_clustered_files(spark, tmp_path):
         [(i, float(i)) for i in range(2000)], "k long, v double"
     )
     mt.commit_clustered(df, "k", 8)
-    entry = mt._log_entry(mt.version())
-    schema = _St.fromJson(_json.loads(entry["schema"]))
 
-    base = ManifestReader({"root": root}, schema).partitions()
-    assert len(base) >= 8  # one file per bucket at minimum
-
-    r = ManifestReader({"root": root, "where": "k = 1234"}, schema)
-    kept = r.partitions()
-    assert 0 < len(kept) < len(base)
+    kept, base = _kept(root, "k = 1234")
+    assert base >= 8  # one file per bucket at minimum
+    assert 0 < len(kept) < base
     want_bucket = bucket_id(1234, "bigint", 8)
     assert all(
-        file_bucket_id(os.path.basename(p.value[0])) == want_bucket
-        for p in kept
+        file_bucket_id(os.path.basename(f)) == want_bucket for f in kept
     )
 
     # IN-list spanning two buckets keeps exactly those buckets' files
-    r2 = ManifestReader({"root": root, "where": "k IN (3, 700)"}, schema)
-    kept2 = r2.partitions()
+    kept2, _base = _kept(root, "k IN (3, 700)")
     allowed = {bucket_id(3, "bigint", 8), bucket_id(700, "bigint", 8)}
-    assert 0 < len(kept2) < len(base)
+    assert 0 < len(kept2) < base
     assert all(
-        file_bucket_id(os.path.basename(p.value[0])) in allowed
-        for p in kept2
+        file_bucket_id(os.path.basename(f)) in allowed for f in kept2
     )
 
     # a range-only predicate has no equality points: bucket pruning
     # stays off (every bucket can hold ks >= 3) — conservative
-    r3 = ManifestReader({"root": root, "where": "k >= 3"}, schema)
-    assert len(r3.partitions()) == len(base)
+    assert len(_kept(root, "k >= 3")[0]) == base
 
     # end-to-end through SQL: exact rows, MoR delete composes (the DV
-    # anti-join rides every kept file's task)
-    register(spark)
+    # anti-join rides every kept file's scan)
     mt.delete_where(spark, "k = 1234", ["k"])
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "k IN (1234, 700)")
-        .load()
-        .collect()
-    )
+    got = _view(spark, root, "k IN (1234, 700)").collect()
     assert [(r["k"], r["v"]) for r in got] == [(700, 700.0)]
 
 
 def test_spark_shared_readinfo_canary(spark, tmp_path):
-    """CANARY for the Spark 4.1 behavior that forced the r13 where-
-    option redesign: a minimal Python data source whose partitions()
-    depends on pushFilters state returns WRONG results when one
-    relation is scanned twice with different predicates — the engine's
-    readers therefore must not implement pushFilters. If a Spark
-    upgrade fixes the shared read-info slot, THIS TEST FAILS, which is
-    the signal that planning-time pushFilters pruning is safe to
-    restore (see ManifestReader's docstring)."""
+    """CANARY for the Spark 4.1 behavior that keeps pruning out of the
+    ``USING manifest`` reader: a minimal Python data source whose
+    partitions() depends on pushFilters state returns WRONG results
+    when one relation is scanned twice with different predicates — the
+    engine's readers therefore must not implement pushFilters. If a
+    Spark upgrade fixes the shared read-info slot, THIS TEST FAILS,
+    which is the signal that planning-time pushFilters pruning is safe
+    to restore (see the manifest_datasource module docstring)."""
     import pyarrow as pa
     from pyspark.sql.datasource import (
         DataSource,
@@ -693,19 +644,12 @@ def test_spark_shared_readinfo_canary(spark, tmp_path):
 
 
 def test_where_option_is_null_prunes_hive_null_dirs(spark, tmp_path):
-    """IS [NOT] NULL in the where grammar: a file under
+    """IS [NOT] NULL in the predicate grammar: a file under
     col=__HIVE_DEFAULT_PARTITION__ holds ONLY nulls of col and one
     under col=value holds none, so either polarity prunes exactly on
-    dir-encoded columns; non-dir columns fall through to the row mask
-    (min/max stats carry no null counts)."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
+    dir-encoded columns; non-dir columns fall through to the view's
+    row filter (min/max stats carry no null counts)."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     root = str(tmp_path / "nulls")
     mt = ManifestTable(root, retention_sec=3600)
@@ -717,54 +661,33 @@ def test_where_option_is_null_prunes_hive_null_dirs(spark, tmp_path):
         "id long, grp string, v double",
     )
     mt.commit(df, partition_by=["grp"], stats_by=["id"])
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    kept_nn = len(
-        ManifestReader(
-            {"root": root, "where": "grp IS NOT NULL"}, schema
-        ).partitions()
-    )
-    kept_n = len(
-        ManifestReader(
-            {"root": root, "where": "grp IS NULL"}, schema
-        ).partitions()
-    )
+    nn_files, base = _kept(root, "grp IS NOT NULL")
+    kept_nn = len(nn_files)
+    kept_n = len(_kept(root, "grp IS NULL")[0])
     assert 0 < kept_nn < base and 0 < kept_n < base
     assert kept_nn + kept_n == base  # the two polarities partition
-    register(spark)
 
     def src(w):
-        return (
-            spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-        )
+        return _view(spark, root, w)
 
     assert src("grp IS NOT NULL").count() == 20
     assert src("grp IS NULL").count() == 10
     assert sorted(
         r["id"] for r in src("grp IS NULL AND id >= 21").collect()
     ) == [21, 24, 27]
-    # non-dir-encoded column: no file pruning, row mask still exact
+    # non-dir-encoded column: no file pruning, row filter still exact
     assert src("v IS NULL").count() == 0
 
 
 def test_where_temporal_literals_prune_and_stay_exact(spark, tmp_path):
     """r14 (VERDICT r13 item 1): DATE/TIMESTAMP typed literals, bare
-    ISO strings, and epoch-second numerics in the `where` grammar —
+    ISO strings, and epoch-second numerics in the predicate grammar —
     coerced once at parse, pruned through hive dirs AND per-file
     min/max stats (temporal bounds and stats meet as ISO strings with
-    conservative prefix truncation), re-applied row-exactly in Arrow.
-    Time windows are THE dominant predicate on an events ledger."""
+    conservative prefix truncation), re-applied row-exactly by the
+    view's Spark predicate. Time windows are THE dominant predicate on
+    an events ledger."""
     import datetime as dt
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     root = str(tmp_path / "temporal")
     mt = ManifestTable(root, retention_sec=3600)
@@ -779,29 +702,22 @@ def test_where_temporal_literals_prune_and_stay_exact(spark, tmp_path):
     mt.commit(
         df.repartitionByRange(4, "ts"), partition_by=["d"], stats_by=["ts"]
     )
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
 
     # typed TIMESTAMP literal: stats + dir pruning, then exact rows
     w = "ts >= TIMESTAMP '2024-03-03 12:00:00'"
-    kept = len(ManifestReader({"root": root, "where": w}, schema).partitions())
+    kept_files, base = _kept(root, w)
+    kept = len(kept_files)
     assert 0 < kept < base, (kept, base)
-    register(spark)
 
     def src(where):
-        return (
-            spark.read.format("manifest")
-            .option("root", root)
-            .option("where", where)
-            .load()
-        )
+        return _view(spark, root, where)
 
     exp = sorted(r["id"] for r in df.filter("ts >= '2024-03-03 12:00:00'").collect())
     assert sorted(r["id"] for r in src(w).collect()) == exp and exp
 
     # typed DATE literal on the dir-encoded date column: exact dirs
     w2 = "d = DATE '2024-03-02'"
-    kept2 = len(ManifestReader({"root": root, "where": w2}, schema).partitions())
+    kept2 = len(_kept(root, w2)[0])
     assert 0 < kept2 < base
     assert src(w2).count() == 24
 
@@ -826,13 +742,12 @@ def test_where_temporal_literals_prune_and_stay_exact(spark, tmp_path):
         "id > 5 AND",  # dangling AND (ADVICE r13)
     ):
         with pytest.raises(ValueError):
-            ManifestReader({"root": root, "where": bad}, schema)
+            _kept(root, bad)
 
 
 def test_where_float_nan_matches_spark_ordering(spark, tmp_path):
-    """ADVICE r13 (medium): Spark orders NaN ABOVE every number, Arrow
-    comparisons return false for NaN — so `>`/`>=` on a float/double
-    column must OR an is_nan branch into the row mask AND must not
+    """ADVICE r13 (medium): Spark orders NaN ABOVE every number — so
+    `>`/`>=` on a float/double column must keep NaN rows AND must not
     lo-prune on min/max stats (parquet writers skip NaN computing
     stats, so a file whose stats say [0, 1] can still hold NaN rows
     that `v > 100` keeps)."""
@@ -848,17 +763,9 @@ def test_where_float_nan_matches_spark_ordering(spark, tmp_path):
         spark.createDataFrame([(4, 500.0)], "id long, v double")
     )
     mt.commit(df.repartition(2, "id"), stats_by=["v"])
-    register(spark)
 
     def ids(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     full = mt.read(spark)
     for w in ("v > 100", "v >= 0", "v < 100", "v <= 1", "v = 500",
@@ -874,35 +781,25 @@ def test_where_decimal_literals_validate_and_compare_exactly(
     spark, tmp_path
 ):
     """ADVICE r13 (low): int/float literals on decimal columns coerce
-    to exact decimal.Decimal at parse — a raw int in an Arrow value_set
-    raised ArrowInvalid INSIDE executor tasks. Also pins the measured
-    pyarrow-16 hazard that forced scale-exact decode pushes: a dataset
-    equality between decimals of different scale silently matches
-    nothing, so `p = 2` on decimal(10,2) must still find 2.00."""
+    to exact decimal.Decimal at parse, and compare at the column's
+    scale: `p = 2` on decimal(10,2) must find 2.00, and a literal not
+    representable at that scale matches nothing without erroring."""
     root = str(tmp_path / "dec")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
         [(1, "2.00"), (2, "3.50"), (3, "9.99")], "id long, p string"
     ).withColumn("p", F.col("p").cast("decimal(10,2)"))
     mt.commit(df.repartition(3, "id"), stats_by=["p"])
-    register(spark)
 
     def ids(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     assert ids("p = 2") == [1]
     assert ids("p IN (2, 3.5)") == [1, 2]
     assert ids("p > 2.005") == [2, 3]
     assert ids("p BETWEEN 2 AND 4") == [1, 2]
     # literals unrepresentable at the column's scale match nothing —
-    # and never error mid-task
+    # and never error mid-query
     assert ids("p = 2.005") == []
     assert ids("p IN (2.005, 3.5)") == [2]
 
@@ -915,14 +812,6 @@ def test_where_equality_points_consult_bloom_sidecar(spark, tmp_path):
     envelope matches. Conservative contract: bloom says 'maybe' keeps
     the file; unindexed columns and uncanonicalizable points never
     prune; rows stay exact either way."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-
     root = str(tmp_path / "bloomy")
     mt = ManifestTable(root, retention_sec=3600)
     # ids are SHUFFLED across files, so every file's [min, max]
@@ -931,40 +820,22 @@ def test_where_equality_points_consult_bloom_sidecar(spark, tmp_path):
         [(i, f"u{i % 97}") for i in range(4000)], "id long, uid string"
     )
     mt.commit(df.repartition(8), bloom_by=["id"])
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
+    kept_eq, base = _kept(root, "id = 1234")
     assert base == 8
-
-    kept_eq = ManifestReader(
-        {"root": root, "where": "id = 1234"}, schema
-    ).partitions()
     assert 0 < len(kept_eq) < base, (len(kept_eq), base)
-    kept_in = ManifestReader(
-        {"root": root, "where": "id IN (1234, 77)"}, schema
-    ).partitions()
+    kept_in = _kept(root, "id IN (1234, 77)")[0]
     assert 0 < len(kept_in) < base
 
     # a range predicate doesn't consult the bloom (and can't prune
     # here — every envelope spans the domain): all files kept
-    kept_rng = ManifestReader(
-        {"root": root, "where": "id >= 0"}, schema
-    ).partitions()
+    kept_rng = _kept(root, "id >= 0")[0]
     assert len(kept_rng) == base
     # unindexed column: no bloom prune, still exact
-    kept_uid = ManifestReader(
-        {"root": root, "where": "uid = 'u5'"}, schema
-    ).partitions()
+    kept_uid = _kept(root, "uid = 'u5'")[0]
     assert len(kept_uid) == base
 
-    register(spark)
-
     def src(w):
-        return (
-            spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-        )
+        return _view(spark, root, w)
 
     assert [r["id"] for r in src("id = 1234").collect()] == [1234]
     assert sorted(r["id"] for r in src("id IN (1234, 77)").collect()) == [
@@ -986,14 +857,7 @@ def test_where_nullness_prunes_on_data_column_null_counts(
     NULL), not just dir-encoded ones — and EVERY stats-writing path
     records them (commit, append, compaction; the q194 lesson: the
     writer you forget is the one that drops it)."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
     from datapipeline_scraping_spark.operators.txn import compact_table
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     root = str(tmp_path / "nullstats")
     mt = ManifestTable(root, retention_sec=3600)
@@ -1008,12 +872,7 @@ def test_where_nullness_prunes_on_data_column_null_counts(
     )
 
     def kept(w, ver=None):
-        entry = mt._log_entry(ver or mt.version())
-        schema = _St.fromJson(_json.loads(entry["schema"]))
-        opts = {"root": root, "where": w}
-        if ver:
-            opts["version"] = str(ver)
-        return len(ManifestReader(opts, schema).partitions())
+        return len(_kept(root, w, version=ver)[0])
 
     base = kept("id >= 0")  # no null conds: every file
     assert kept("s IS NULL") < base
@@ -1044,14 +903,7 @@ def test_where_nullness_prunes_on_data_column_null_counts(
         "compacted files lost null counts"
     )
 
-    register(spark)
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "s IS NULL")
-        .load()
-        .count()
-    )
+    got = _view(spark, root, "s IS NULL").count()
     assert got == 150
 
 
@@ -1059,7 +911,7 @@ def test_predicate_view_helper_mints_pruned_sql_views(spark, tmp_path):
     """r14 (VERDICT r13 item 4): `predicate_view` is the SQL-surface
     path to predicate views — it validates the predicate against the
     committed schema at CREATE (typos fail loudly, not mid-query),
-    escapes the OPTIONS quoting, and the minted view launches only the
+    keeps quoted literals intact, and the minted view scans only the
     window's files."""
     import datetime as dt
 
@@ -1089,50 +941,37 @@ def test_predicate_view_helper_mints_pruned_sql_views(spark, tmp_path):
     n_view = spark.table("pv_recent").rdd.getNumPartitions()
     assert 0 < n_view < n_all, (n_view, n_all)
 
-    # quotes in predicate literals survive the OPTIONS escaping
+    # quotes in predicate literals survive
     predicate_view(spark, "pv_quoted", root, "note = 'it''s 5'")
     assert [r["id"] for r in spark.sql(
         "SELECT id FROM pv_quoted"
     ).collect()] == [5]
 
-    # typos fail at CREATE, and the view is read-only
+    # typos fail at CREATE
     with pytest.raises(ValueError, match="unknown column"):
         predicate_view(spark, "pv_bad", root, "nope = 1")
     with pytest.raises(ValueError):
         predicate_view(spark, "pv_bad", root, "ts >= 'garbage'")
-    # ADVICE r14 (low): a backslash in the predicate would be escape-
-    # processed inside the minted view's OPTIONS literal ('a\tb' -> a
-    # tab), silently running a DIFFERENT predicate than the one
-    # validated here — rejected, never re-interpreted
+    # ADVICE r14 (low): Spark SQL would read a backslash escape
+    # ('a\tb' -> a tab) where the grammar reads it literally — the
+    # same text would select different rows, so it is rejected,
+    # never re-interpreted
     with pytest.raises(ValueError, match="backslash"):
         predicate_view(spark, "pv_bad", root, "note = 'a\\tb'")
-    with pytest.raises(Exception, match="filtered READ view"):
-        df.limit(1).write.format("manifest").option("root", root).option(
-            "where", "id > 0"
-        ).mode("append").save()
 
 
 def test_where_temporal_on_zoned_timestamp_column(spark, tmp_path):
-    """TimestampType (session-tz) columns arrive in Arrow as
-    timestamp[us, tz=UTC]; the canonical naive literal carries the UTC
-    instant and both the decode filter and the row mask re-attach the
-    zone — cmp, IN, and epoch-numeric BETWEEN all stay Spark-exact
-    (Arrow refuses naive-vs-aware comparisons, so a missed adaptation
-    raises rather than mis-filters; this pins that it neither raises
-    nor drops). Also pins the r14 INT96 regression: Spark DEFAULTS
-    zoned-timestamp parquet writes to deprecated INT96, which carries
-    NO statistics — the engine session forces TIMESTAMP_MICROS
-    (session._RUNTIME_CONF), so committed zoned columns MUST carry
-    min/max file stats and the window predicate MUST skip files."""
+    """TimestampType (session-tz) columns: the canonical naive literal
+    carries the UTC instant, and the view types it as that instant —
+    cmp, IN, and epoch-numeric BETWEEN all stay Spark-exact. Also pins
+    the r14 INT96 regression: Spark DEFAULTS zoned-timestamp parquet
+    writes to deprecated INT96, which carries NO statistics — the
+    engine session forces TIMESTAMP_MICROS (session._RUNTIME_CONF), so
+    committed zoned columns MUST carry min/max file stats and the
+    window predicate MUST skip files."""
     import datetime as dt
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
 
     from datapipeline_scraping_spark.session import prepare
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     prepare(spark)
     root = str(tmp_path / "tz")
@@ -1146,26 +985,12 @@ def test_where_temporal_on_zoned_timestamp_column(spark, tmp_path):
     assert any("ts" in st for st in stats.values()), (
         "zoned timestamp column lost its file stats — INT96 write?"
     )
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    kept = len(
-        ManifestReader(
-            {"root": root, "where": "ts >= TIMESTAMP '2024-03-02 00:00:00'"},
-            schema,
-        ).partitions()
-    )
+    kept_files, base = _kept(root, "ts >= TIMESTAMP '2024-03-02 00:00:00'")
+    kept = len(kept_files)
     assert 0 < kept < base, (kept, base)
-    register(spark)
 
     def ids(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     for w in (
         "ts >= TIMESTAMP '2024-03-02 00:00:00'",
@@ -1195,15 +1020,7 @@ def test_where_not_equal_prunes_single_value_files_and_stays_exact(
     column whose min == max, or an all-null column (null != x is
     null). float/double columns are exempt from the stats form (NaN
     never enters min/max but satisfies != against any finite literal —
-    Spark orders NaN as a real value, Arrow comparisons agree here)."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-
+    Spark orders NaN as a real value)."""
     root = str(tmp_path / "neq")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -1218,24 +1035,12 @@ def test_where_not_equal_prunes_single_value_files_and_stays_exact(
         "id long, grp string, w double",
     )
     mt.commit(df, partition_by=["grp"], stats_by=["id", "w"])
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    kept = len(
-        ManifestReader({"root": root, "where": "grp != 'g1'"}, schema)
-        .partitions()
-    )
+    kept_files, base = _kept(root, "grp != 'g1'")
+    kept = len(kept_files)
     assert 0 < kept < base, (kept, base)
-    register(spark)
 
     def ids(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     for w in ("grp != 'g1'", "id != 4 AND id <> 5", "w != 7.0",
               "grp <> 'g0' AND id >= 10"):
@@ -1261,37 +1066,17 @@ def test_neq_dir_prune_is_exact_and_type_faithful(spark, tmp_path):
         "id long, s string",
     )
     mt.commit(df, partition_by=["s"])
-    register(spark)
 
-    def ids(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+    def ids(r, w):
+        return sorted(x["id"] for x in _view(spark, r, w).collect())
 
     # case-sensitive: s=g1 rows SATISFY s != 'G1'
-    assert ids("s != 'G1'") == [2, 3, 4]
+    assert ids(root, "s != 'G1'") == [2, 3, 4]
     # no float aliasing: s='5.0' rows SATISFY s != '5'
-    assert ids("s != '5'") == [1, 2, 3, 4]
+    assert ids(root, "s != '5'") == [1, 2, 3, 4]
     # the faithful match still prunes: the exact dir goes
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-    import json as _json
-    from pyspark.sql.types import StructType as _St
-
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    kept = len(
-        ManifestReader(
-            {"root": root, "where": "s != 'G1'"}, schema
-        ).partitions()
-    )
-    assert kept == base - 1, (kept, base)
+    kept, base = _kept(root, "s != 'G1'")
+    assert len(kept) == base - 1, (len(kept), base)
     # numeric dir exclusion stays exact on an int partition column
     root2 = str(tmp_path / "neqnum")
     mt2 = ManifestTable(root2, retention_sec=3600)
@@ -1299,14 +1084,9 @@ def test_neq_dir_prune_is_exact_and_type_faithful(spark, tmp_path):
         [(i, i % 3) for i in range(9)], "id long, b int"
     )
     mt2.commit(df2, partition_by=["b"])
-    assert sorted(
-        r["id"]
-        for r in spark.read.format("manifest")
-        .option("root", root2)
-        .option("where", "b != 1")
-        .load()
-        .collect()
-    ) == sorted(r["id"] for r in df2.filter("b != 1").collect())
+    assert ids(root2, "b != 1") == sorted(
+        r["id"] for r in df2.filter("b != 1").collect()
+    )
 
 
 def test_bloom_probe_gated_on_column_type(spark, tmp_path):
@@ -1366,19 +1146,12 @@ def test_bloom_probe_gated_on_column_type(spark, tmp_path):
     pq.write_table(
         fake, os.path.join(snap, "_bloom", "legacy-double.parquet")
     )
-    register(spark)
     # the equality point on the double column must NOT consult the
     # (unsound) sidecar: the matching row comes back
-    got = (
-        spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "w = 5")
-        .load()
-        .collect()
-    )
+    got = _view(spark, root, "w = 5").collect()
     assert [r["id"] for r in got] == [5]
     # DataFrame-API probe agrees: the double column reports unindexed
-    _kept, _total, indexed = mt.bloom_pruned_files("w", 5)
+    _kept_w, _total, indexed = mt.bloom_pruned_files("w", 5)
     assert indexed is False
     # the string column's bloom still prunes (sound types unaffected)
     kept, total, indexed = mt.bloom_pruned_files("k", "k5")
@@ -1387,20 +1160,13 @@ def test_bloom_probe_gated_on_column_type(spark, tmp_path):
 
 @pytest.mark.slow  # r17 tiering: measured 13s; full (evidence) tier only
 def test_where_dnf_union_pruning_and_kleene_or(spark, tmp_path):
-    """r15 (VERDICT r14 item 1): OR-of-conjuncts in the where grammar.
-    File skipping for a DNF is the UNION of per-disjunct kept sets —
-    'this window OR that backfill window' launches O(window1+window2)
-    tasks, not O(table) and not a parse error — and the row mask is
-    the Kleene-OR of per-conjunct masks (true OR null = true, the SQL
-    semantics a null-propagating OR would get wrong)."""
+    """r15 (VERDICT r14 item 1): OR-of-conjuncts in the predicate
+    grammar. File skipping for a DNF is the UNION of per-disjunct kept
+    sets — 'this window OR that backfill window' scans
+    O(window1+window2) files, not O(table) and not a parse error — and
+    the rows follow Kleene OR (true OR null = true, the SQL semantics
+    a null-propagating OR would get wrong)."""
     import datetime as dt
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
 
     root = str(tmp_path / "dnf")
     mt = ManifestTable(root, retention_sec=3600)
@@ -1419,14 +1185,11 @@ def test_where_dnf_union_pruning_and_kleene_or(spark, tmp_path):
     )
     # one file per day: per-disjunct windows are file-countable
     mt.commit(df.repartitionByRange(30, "ts"), stats_by=["ts", "id"])
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    assert base == 30
 
     def parts(w):
-        return len(
-            ManifestReader({"root": root, "where": w}, schema).partitions()
-        )
+        return len(_kept(root, w)[0])
+
+    assert _kept(root, "id >= 0")[1] == 30
 
     w1 = "ts >= TIMESTAMP '2024-03-27 00:00:00'"            # last 4 days
     w2 = (
@@ -1437,17 +1200,9 @@ def test_where_dnf_union_pruning_and_kleene_or(spark, tmp_path):
     assert n1 == 4 and n2 == 3, (n1, n2)
     # the disjunction keeps exactly the union of the two windows
     assert parts(f"{w1} OR {w2}") == n1 + n2
-    register(spark)
 
     def rows(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     # exactness across the union (every 7th v is NULL: exercises the
     # Kleene path inside each window too)
@@ -1462,13 +1217,6 @@ def test_where_dnf_union_pruning_and_kleene_or(spark, tmp_path):
     # parenthesized conjuncts: the documented disjunct form
     wp = "(grp = 'g0' AND id <= 6) OR (grp = 'g1' AND id >= 25)"
     assert rows(wp) == sorted(r["id"] for r in df.filter(wp).collect())
-    # predicate_view mints DNF views too
-    from datapipeline_scraping_spark.sources.manifest_sql import (
-        predicate_view,
-    )
-
-    predicate_view(spark, "pv_dnf", root, w)
-    assert spark.table("pv_dnf").count() == len(rows(w))
 
 
 def test_where_dnf_bloom_intersection(spark, tmp_path):
@@ -1476,14 +1224,6 @@ def test_where_dnf_bloom_intersection(spark, tmp_path):
     disjunct rejects it — `pk = a OR pk = b` keeps the union of the
     two point lookups' files, and a disjunct with no probeable point
     vetoes the bloom prune entirely."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-
     root = str(tmp_path / "dnfbloom")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -1491,14 +1231,11 @@ def test_where_dnf_bloom_intersection(spark, tmp_path):
         "id long, key string, v double",
     )
     mt.commit(df.repartition(8, "key"), bloom_by=["key"])
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
 
     def parts(w):
-        return len(
-            ManifestReader({"root": root, "where": w}, schema).partitions()
-        )
+        return len(_kept(root, w)[0])
 
-    base = len(ManifestReader({"root": root}, schema).partitions())
+    base = _kept(root, "v >= 0.0")[1]
     p1 = parts("key = 'pay-000037'")
     p2 = parts("key = 'pay-003700'")
     both = parts("key = 'pay-000037' OR key = 'pay-003700'")
@@ -1507,14 +1244,11 @@ def test_where_dnf_bloom_intersection(spark, tmp_path):
     # a range-only disjunct cannot probe the bloom: the OR keeps all
     # files the range side might touch (veto semantics)
     assert parts("key = 'pay-000037' OR v >= 0.0") == base
-    register(spark)
     got = sorted(
         r["id"]
-        for r in spark.read.format("manifest")
-        .option("root", root)
-        .option("where", "key = 'pay-000037' OR key = 'pay-003700'")
-        .load()
-        .collect()
+        for r in _view(
+            spark, root, "key = 'pay-000037' OR key = 'pay-003700'"
+        ).collect()
     )
     assert got == [1, 100]
 
@@ -1527,14 +1261,6 @@ def test_where_like_prefix_prunes_and_row_filters_exactly(spark, tmp_path):
     conservative truncated comparison every string bound uses);
     %inner% shapes row-filter exactly but keep every file. Null in,
     null out (SQL); non-string columns are rejected at parse."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-
     root = str(tmp_path / "like")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -1554,30 +1280,19 @@ def test_where_like_prefix_prunes_and_row_filters_exactly(spark, tmp_path):
         df.repartitionByRange(8, "url").sortWithinPartitions("url"),
         stats_by=["url"],
     )
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
 
     def parts(w):
-        return len(
-            ManifestReader({"root": root, "where": w}, schema).partitions()
-        )
+        return len(_kept(root, w)[0])
 
     # prefix pattern prunes to the prefix interval's files
-    kept = parts("url LIKE 'https://src3.example.com/%'")
+    kept_files, base = _kept(root, "url LIKE 'https://src3.example.com/%'")
+    kept = len(kept_files)
     assert 0 < kept < base, (kept, base)
     # a leading wildcard has no prefix: row filter only, no pruning
     assert parts("url LIKE '%src3%'") == base
-    register(spark)
 
     def rows(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     for w in (
         "url LIKE 'https://src3.example.com/%'",
@@ -1594,9 +1309,7 @@ def test_where_like_prefix_prunes_and_row_filters_exactly(spark, tmp_path):
     assert 0 not in rows("url LIKE '%'") and 17 not in rows("url LIKE '%'")
     # non-string column: loud parse-time rejection
     with pytest.raises(ValueError, match="string columns only"):
-        ManifestReader(
-            {"root": root, "where": "id LIKE '5%'"}, schema
-        )
+        _kept(root, "id LIKE '5%'")
     # DNF x LIKE pruning: the OR of two prefixes keeps the union
     k3 = parts("url LIKE 'https://src3.example.com/%'")
     k5 = parts("url LIKE 'https://src5.example.com/%'")
@@ -1610,11 +1323,9 @@ def test_where_like_prefix_prunes_and_row_filters_exactly(spark, tmp_path):
 @pytest.mark.slow  # r17 tiering: measured 21s; full (evidence) tier only
 def test_where_like_matches_newline_like_spark(spark, tmp_path):
     """ADVICE r15: Spark compiles LIKE with DOTALL, so `_` matches a
-    newline ('a\\nb' LIKE 'a_b' is TRUE), while Arrow's own
-    ``match_like`` maps `_` to a non-DOTALL `.` in some versions and
-    silently drops those rows. The mask translates the pattern to an
-    anchored (?s) RE2 itself; this pins the dialect row-for-row
-    against Spark's filter on newline-bearing strings."""
+    newline ('a\\nb' LIKE 'a_b' is TRUE). The view must keep those
+    rows; this pins the dialect row-for-row against Spark's filter on
+    newline-bearing strings."""
     root = str(tmp_path / "nl")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -1630,17 +1341,9 @@ def test_where_like_matches_newline_like_spark(spark, tmp_path):
         "id long, s string",
     )
     mt.commit(df)
-    register(spark)
 
     def rows(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     for w in (
         "s LIKE 'a_b'",
@@ -1665,14 +1368,6 @@ def test_where_not_in_not_like_and_whole_expr_parens(spark, tmp_path):
     exactly (null never satisfies either polarity), and parentheses
     may wrap the WHOLE expression — `(A OR B)` parses the way users
     write it. NOT BETWEEN is rejected naming its OR rewrite."""
-    import json as _json
-
-    from pyspark.sql.types import StructType as _St
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
-
     root = str(tmp_path / "notin")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -1691,28 +1386,13 @@ def test_where_not_in_not_like_and_whole_expr_parens(spark, tmp_path):
     mt.commit(
         df.repartition("prio"), partition_by=["prio"], stats_by=["id"]
     )
-    schema = _St.fromJson(_json.loads(mt._log_entry(1)["schema"]))
-    base = len(ManifestReader({"root": root}, schema).partitions())
-    assert base == 5
-
-    def parts(w):
-        return len(
-            ManifestReader({"root": root, "where": w}, schema).partitions()
-        )
-
     # NOT IN prunes the excluded dirs (2 of 5 priorities)
-    assert parts("prio NOT IN ('p1', 'p3')") == 3
-    register(spark)
+    kept, base = _kept(root, "prio NOT IN ('p1', 'p3')")
+    assert base == 5
+    assert len(kept) == 3
 
     def ids(w):
-        return sorted(
-            r["id"]
-            for r in spark.read.format("manifest")
-            .option("root", root)
-            .option("where", w)
-            .load()
-            .collect()
-        )
+        return sorted(r["id"] for r in _view(spark, root, w).collect())
 
     for w in (
         "prio NOT IN ('p1', 'p3')",
@@ -1729,9 +1409,7 @@ def test_where_not_in_not_like_and_whole_expr_parens(spark, tmp_path):
     got = set(ids("tag NOT LIKE 'zzz%'"))
     assert 0 not in got and 11 not in got and 1 in got
     with pytest.raises(ValueError, match="NOT BETWEEN"):
-        ManifestReader(
-            {"root": root, "where": "id NOT BETWEEN 1 AND 2"}, schema
-        )
+        _kept(root, "id NOT BETWEEN 1 AND 2")
 
 
 def test_dv_table_memo_is_per_content_not_per_path(tmp_path):
@@ -1784,31 +1462,18 @@ def test_front_ends_keep_identical_files(spark, tmp_path):
     """Both read front ends run the one pruning core
     (sources/skipping.py). For every predicate shape the DataFrame API
     can express — data-column range, `=`, partition-column range, and
-    ranges across an evolved table's spec boundary — the SQL reader's
-    ``partitions()`` and ``pruned_files``/``read_point`` keep the SAME
+    ranges across an evolved table's spec boundary — the predicate
+    view's files and ``pruned_files``/``read_point`` keep the SAME
     files, and those include every file that really holds a matching
     row (checked per file with pyarrow)."""
-    import json
     from urllib.parse import unquote, urlparse
 
     import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
 
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        ManifestReader,
-    )
     from datapipeline_scraping_spark.sources.skipping import (
         data_files,
         partition_values,
     )
-
-    def sql_kept(mt, where):
-        entry = mt._log_entry(mt.version())
-        schema = StructType.fromJson(json.loads(entry["schema"]))
-        parts = ManifestReader(
-            {"root": mt.root, "where": where}, schema
-        ).partitions()
-        return {p.value[0] for p in parts if p.value[2]}
 
     def point_files(mt, col, value):
         df = mt.read_point(spark, col, value)
@@ -1818,7 +1483,7 @@ def test_front_ends_keep_identical_files(spark, tmp_path):
         return got
 
     def check(mt, where, pred, df_kept):
-        kept = sql_kept(mt, where)
+        kept = set(_kept(mt.root, where)[0])
         assert kept == set(df_kept), where
         snap = mt.snapshot_path()
         holding = {
@@ -1929,31 +1594,19 @@ def _data_input_files(df) -> set:
     }
 
 
-def _assert_view_matches_where_option(spark, mt, cases, zones):
+def _assert_view_matches_unpruned_read(spark, mt, cases, zones):
     """For every ``where`` in ``cases`` and every session time zone:
-    ``predicate_view`` rows equal ``format("manifest")`` rows under
-    the same ``where`` option, and the view scans exactly the data
-    files ``kept_files`` keeps. Views are minted under each zone (a
-    literal's type is fixed at analysis); each front end runs as one
-    union job per zone. Returns {where: row count}."""
+    ``predicate_view`` rows equal the unpruned ``ManifestTable.read``
+    filtered by a Spark SQL predicate under a UTC session, and the
+    view scans exactly the data files ``predicate_files`` lists.
+    ``cases`` maps each ``where`` to its Spark SQL twin (None: the same
+    text). Views are minted under each zone (a literal's type is fixed
+    at analysis); each side runs as one union job. Returns {where: row
+    count}."""
     import functools
-    import os
+    import json
 
     from pyspark.sql import DataFrame
-
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        parse_where,
-    )
-    from datapipeline_scraping_spark.sources.manifest_sql import (
-        predicate_view,
-    )
-    from datapipeline_scraping_spark.sources.skipping import (
-        conjunct,
-        kept_files,
-    )
-
-    entry = mt._log_entry(mt.version())
-    snap = os.path.join(mt.root, entry["snapshot"])
 
     def union(frames):
         return functools.reduce(
@@ -1968,25 +1621,28 @@ def _assert_view_matches_where_option(spark, mt, cases, zones):
             out[r["_case"]].append(repr(tuple(r)))
         return [sorted(v) for v in out]
 
-    wants = union([_src(spark, mt.root, where=w) for w in cases])
-    counts = {}
     prev = spark.conf.get("spark.sql.session.timeZone")
     try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        # the committed (declared) column order; read() puts hive
+        # partition columns last
+        declared = json.loads(mt._log_entry(mt.version())["schema"])
+        full = mt.read(spark).select(*[f["name"] for f in declared["fields"]])
+        wants = union([full.filter(sq or w) for w, sq in cases.items()])
+        want_schema = wants.schema.simpleString()
+        want_rows = rows_by_case(wants)
+        counts = {}
         for tz in zones:
             spark.conf.set("spark.sql.session.timeZone", tz)
             views = []
             for i, w in enumerate(cases):
                 predicate_view(spark, f"pv_parity_{i}", mt.root, w)
                 views.append(spark.table(f"pv_parity_{i}"))
-                kept, _total = kept_files(
-                    snap, entry, [conjunct(c, entry) for c in parse_where(w)]
-                )
+                kept, _total = predicate_files(mt.root, w)
                 assert _data_input_files(views[-1]) == set(kept), (tz, w)
             got = union(views)
-            assert got.schema.simpleString() == wants.schema.simpleString()
-            for w, g, want in zip(
-                cases, rows_by_case(got), rows_by_case(wants)
-            ):
+            assert got.schema.simpleString() == want_schema
+            for w, g, want in zip(cases, rows_by_case(got), want_rows):
                 assert g == want, (tz, w)
                 counts[w] = len(g)
     finally:
@@ -1994,16 +1650,19 @@ def _assert_view_matches_where_option(spark, mt, cases, zones):
     return counts
 
 
-def test_predicate_view_rows_and_files_match_where_option(spark, tmp_path):
-    """``predicate_view`` is a native parquet scan of ``kept_files``
-    plus the ``where`` DNF as a Spark predicate; the ``where`` option
-    masks in Arrow per task. Both must return the same rows for every
-    grammar shape, with literals typed by the column's declared type
-    whatever the session time zone: a zoned ``timestamp`` compares to
-    the UTC instant, a ``timestamp_ntz`` to the wall clock. The table
-    is hive-partitioned with stats, a deletion vector, an ``_upd``
-    delta and a renamed column; its columns hold NULLs, NaN, newlines,
-    ``decimal(10,2)``, both timestamp flavours, dates and booleans."""
+def test_predicate_view_rows_match_unpruned_read(spark, tmp_path):
+    """``predicate_view`` is a native parquet scan of the kept files
+    plus the ``where`` DNF as a Spark predicate. For every grammar
+    shape its rows must equal the unpruned table read filtered by the
+    same predicate in Spark SQL under a UTC session, with literals
+    typed by the column's declared type whatever the session time
+    zone: a zoned ``timestamp`` compares to the UTC instant, a
+    ``timestamp_ntz`` to the wall clock. Epoch-second numerics on
+    temporal columns mean something else to Spark SQL, so those cases
+    carry a hand-written Spark twin. The table is hive-partitioned
+    with stats, a deletion vector, an ``_upd`` delta and a renamed
+    column; its columns hold NULLs, NaN, newlines, ``decimal(10,2)``,
+    both timestamp flavours, dates and booleans."""
     mt = ManifestTable(str(tmp_path / "parity"), retention_sec=3600)
     k = F.col("id")
     df = spark.range(72).select(
@@ -2043,34 +1702,37 @@ def test_predicate_view_rows_and_files_match_where_option(spark, tmp_path):
         spark, "k IN (4, 5, 8)", {"f": "f + 100", "s": "'a\\nb upd'"}, ["k"]
     )
     mt.rename_column("s", "txt")
-    cases = [
-        "f > 0.5",
-        "f >= 5.0 AND f < 6.5",
-        "f != 1.0",
-        "txt LIKE 'a_b%'",
-        "txt NOT LIKE 'a_b%'",
-        "d = 2",
-        "d IN (1, 1.5)",
-        "d >= 1.5",
-        "ts >= 1704153600",
-        "ts < '2024-01-02T03:00:00+05:00'",
-        "ts >= TIMESTAMP '2024-01-02 05:00:00'",
-        "tn >= TIMESTAMP '2024-01-02 05:00:00'",
-        "tn < 1704160800",
-        "tn BETWEEN '2024-01-01 20:00:00' AND '2024-01-02 02:30:00'",
-        "dt = DATE '2024-01-02'",
-        "dt >= '2024-01-04'",
-        "k IN (1, 2, 3, 50)",
-        "k NOT IN (1, 2) AND k < 6",
-        "b = TRUE",
-        "b IS NULL",
-        "txt IS NOT NULL AND ts IS NULL",
-        "grp != 'g0' AND k < 12",
-        "f > 100.0 OR grp = 'g0'",
-        "(k <= 5 AND b = FALSE) OR txt IS NULL",
-        "(tn < TIMESTAMP '2024-01-01 03:00:00') OR (ts >= 1704326400)",
-    ]
-    counts = _assert_view_matches_where_option(
+    cases = {
+        "f > 0.5": None,
+        "f >= 5.0 AND f < 6.5": None,
+        "f != 1.0": None,
+        "txt LIKE 'a_b%'": None,
+        "txt NOT LIKE 'a_b%'": None,
+        "d = 2": None,
+        "d IN (1, 1.5)": None,
+        "d >= 1.5": None,
+        "ts >= 1704153600": "ts >= TIMESTAMP '2024-01-02 00:00:00'",
+        "ts < '2024-01-02T03:00:00+05:00'": None,
+        "ts >= TIMESTAMP '2024-01-02 05:00:00'": None,
+        "tn >= TIMESTAMP '2024-01-02 05:00:00'": None,
+        "tn < 1704160800": "tn < TIMESTAMP_NTZ '2024-01-02 02:00:00'",
+        "tn BETWEEN '2024-01-01 20:00:00' AND '2024-01-02 02:30:00'": None,
+        "dt = DATE '2024-01-02'": None,
+        "dt >= '2024-01-04'": None,
+        "k IN (1, 2, 3, 50)": None,
+        "k NOT IN (1, 2) AND k < 6": None,
+        "b = TRUE": None,
+        "b IS NULL": None,
+        "txt IS NOT NULL AND ts IS NULL": None,
+        "grp != 'g0' AND k < 12": None,
+        "f > 100.0 OR grp = 'g0'": None,
+        "(k <= 5 AND b = FALSE) OR txt IS NULL": None,
+        "(tn < TIMESTAMP '2024-01-01 03:00:00') OR (ts >= 1704326400)": (
+            "(tn < TIMESTAMP '2024-01-01 03:00:00') "
+            "OR (ts >= TIMESTAMP '2024-01-04 00:00:00')"
+        ),
+    }
+    counts = _assert_view_matches_unpruned_read(
         spark, mt, cases, ("UTC", "America/Lima", "Asia/Kolkata")
     )
     assert all(counts.values()), counts
@@ -2090,8 +1752,11 @@ def test_predicate_view_on_clustered_dv_and_moved_update(spark, tmp_path):
         4,
     )
     cl.delete_where(spark, "k IN (5, 9)", ["k"])
-    counts = _assert_view_matches_where_option(
-        spark, cl, ["k = 7", "k IN (1, 5, 9, 30)", "k = 5"], ("UTC",)
+    counts = _assert_view_matches_unpruned_read(
+        spark,
+        cl,
+        {"k = 7": None, "k IN (1, 5, 9, 30)": None, "k = 5": None},
+        ("UTC",),
     )
     assert counts == {"k = 7": 1, "k IN (1, 5, 9, 30)": 2, "k = 5": 0}
 
@@ -2103,8 +1768,8 @@ def test_predicate_view_on_clustered_dv_and_moved_update(spark, tmp_path):
         stats_by=["v"],
     )
     mv.update_where(spark, "k = 3", {"v": "5000"}, ["k"])
-    counts = _assert_view_matches_where_option(
-        spark, mv, ["v >= 4000"], ("UTC",)
+    counts = _assert_view_matches_unpruned_read(
+        spark, mv, {"v >= 4000": None}, ("UTC",)
     )
     assert counts == {"v >= 4000": 1}
 

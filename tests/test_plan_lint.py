@@ -18,6 +18,8 @@ engine's scale contract (SCALE.md):
    used by the UDTF demo query.
 4. Queries that join a small dimension must plan it as a
    ``BroadcastHashJoin`` — the dim side must never shuffle the fact.
+5. Pruned manifest reads go through ``predicate_view``: their plans
+   scan parquet natively and hold no Python data-source scan.
 
 This turns the per-query plan spot checks in test_scale_ops.py into a
 CI-enforced property of the entire query surface: a regression that
@@ -143,6 +145,18 @@ MUST_COLOCATED_JOIN = [
     "q190_clustered_mor_dml",
 ]
 
+# Queries reading a manifest table through a predicate view: the
+# executed plan must be a native parquet scan (FileSourceScanExec) with
+# no Python data-source scan (BatchScan ... (Python)), whose per-task
+# Python workers the native scan replaces.
+MUST_NATIVE_SCAN = [
+    "q193_clustered_sql_prune",
+    "q197_bloom_point_lookup",
+    "q198_nullcount_skipping",
+    "q200_like_prefix_skipping",
+    "q201_not_in_exclusion",
+]
+
 ARROW_NODES = (
     "ArrowEvalPython",
     "MapInPandas",
@@ -220,6 +234,16 @@ def test_plan_lint(spark, name):
             f"{name}: expected an injected runtime bloom filter "
             f"(might_contain below the fact side) in the optimized "
             f"plan:\n{optimized[:2000]}"
+        )
+
+    if name in MUST_NATIVE_SCAN:
+        import re as _re
+
+        assert "FileScan parquet" in plan and not _re.search(
+            r"BatchScan \S+\[[^\]]*\] \(Python\)", plan
+        ), (
+            f"{name}: expected a native parquet scan of the predicate "
+            f"view's files and no Python data-source scan:\n{plan[:2000]}"
         )
 
     if name in MUST_COLOCATED_JOIN:

@@ -856,18 +856,17 @@ def test_pushdown_never_drops_qualifying_rows(
     spark, tmp_path_factory, conjs
 ):
     """Any DNF (OR of conjunctions, r15 — previously conjunctions
-    only) of pushed comparison filters through the ``manifest``
-    datasource returns EXACTLY the rows the same predicate returns on
+    only) of pushed comparison filters through a predicate view
+    returns EXACTLY the rows the same predicate returns on
     the full in-memory frame — file skipping is an optimization,
     never a correctness filter (random probes over a partitioned +
     stats-covered + evolved table). AND-binds-tighter precedence is
     Spark's own, so the same string drives both sides."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        register,
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        predicate_view,
     )
 
-    register(spark)
     root = str(tmp_path_factory.mktemp("pushprop") / "t")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -895,15 +894,13 @@ def test_pushdown_never_drops_qualifying_rows(
     where = " OR ".join(
         " AND ".join(_push_pred(*op) for op in conj) for conj in conjs
     )
-    # the predicate through the `where` OPTION (planning-time file
-    # skipping + exact Arrow row filter, r13) ...
+    # the predicate through a predicate view (planning-time file
+    # skipping + the view's Spark predicate) ...
+    predicate_view(spark, "pv_pushprop", root, where)
     got = sorted(
         map(
             tuple,
-            spark.read.format("manifest")
-            .option("root", root)
-            .option("where", where)
-            .load()
+            spark.table("pv_pushprop")
             .select("id", "grp", "v", "ts")
             .collect(),
         )
@@ -911,7 +908,7 @@ def test_pushdown_never_drops_qualifying_rows(
     exp = sorted(
         map(tuple, df.filter(where).select("id", "grp", "v", "ts").collect())
     )
-    assert got == exp, f"where-option dropped rows for WHERE {where}"
+    assert got == exp, f"predicate view dropped rows for WHERE {where}"
     # ... and as a plain Spark filter over the unfiltered relation
     got2 = sorted(
         map(
@@ -942,17 +939,16 @@ def test_pushdown_never_drops_qualifying_rows_clustered(
     """The pushdown property over a CLUSTERED table (r13; DNF r15):
     bucket pruning from equality points must compose with the DV
     anti-join and the always-scanned ``_upd`` delta — any random DNF
-    of pushed filters through the SQL path returns exactly what the
+    of pushed filters through a predicate view returns exactly what the
     same predicate returns on the equivalent in-memory frame. The
     bucket prune composes across disjuncts as a UNION of allowed
     bucket sets (vetoed entirely by any conjunct not pinning the
     bucket column)."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        register,
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        predicate_view,
     )
 
-    register(spark)
     root = str(tmp_path_factory.mktemp("pushclus") / "t")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(
@@ -984,15 +980,11 @@ def test_pushdown_never_drops_qualifying_rows_clustered(
     where = " OR ".join(
         " AND ".join(_push_pred(*op) for op in conj) for conj in conjs
     )
+    predicate_view(spark, "pv_pushclus", root, where)
     got = sorted(
         map(
             tuple,
-            spark.read.format("manifest")
-            .option("root", root)
-            .option("where", where)
-            .load()
-            .select("id", "grp", "v", "ts")
-            .collect(),
+            spark.table("pv_pushclus").select("id", "grp", "v", "ts").collect(),
         )
     )
     exp = sorted(
@@ -1001,7 +993,7 @@ def test_pushdown_never_drops_qualifying_rows_clustered(
             expected.filter(where).select("id", "grp", "v", "ts").collect(),
         )
     )
-    assert got == exp, f"clustered where-option dropped rows for {where}"
+    assert got == exp, f"clustered predicate view dropped rows for {where}"
 
 
 @given(
@@ -1019,14 +1011,12 @@ def test_pushdown_never_drops_qualifying_rows_clustered(
 @settings(max_examples=200, deadline=None)
 def test_where_grammar_fails_closed(parts):
     s = "".join(parts)
-    """Fuzz the where-option grammar: ANY input either parses to a
+    """Fuzz the predicate grammar: ANY input either parses to a
     condition list or raises ValueError — never a different exception
     and never a silent empty accept. The fail-loudly contract is what
-    lets the reader promise 'a predicate I cannot apply exactly never
-    silently returns unfiltered rows'."""
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        parse_where,
-    )
+    lets the pruning core promise 'a predicate I cannot read exactly
+    never prunes wrongly'."""
+    from datapipeline_scraping_spark.sources.manifest_sql import parse_where
 
     try:
         out = parse_where(s)
@@ -1060,9 +1050,7 @@ def test_where_validation_fails_closed_per_type(spark, col, op, lit):
     the driver — executor tasks never see an unvalidated literal."""
     from pyspark.sql.types import StructType
 
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        parse_where,
-    )
+    from datapipeline_scraping_spark.sources.manifest_sql import parse_where
 
     schema = StructType.fromDDL(
         "i bigint, s string, d date, t timestamp_ntz, "
@@ -1084,39 +1072,3 @@ def test_where_validation_fails_closed_per_type(spark, col, op, lit):
                 _coerce_literal(c[3], logical[c[1]], c[1])
     except ValueError:
         return
-
-
-@given(
-    prefix=st.text(
-        alphabet=st.characters(
-            min_codepoint=1,
-            max_codepoint=0x10FFFF,
-            exclude_categories=("Cs",),  # lone surrogates can't encode
-        ),
-        min_size=1,
-        max_size=12,
-    ),
-    tail=st.text(max_size=8),
-)
-@settings(max_examples=300, deadline=None)
-def test_like_prefix_upper_bounds_every_extension(prefix, tail):
-    """The LIKE decode-push bound (r15): for ANY prefix with an upper
-    bound U, every string starting with the prefix sorts strictly
-    below U — by codepoint AND by UTF-8 bytes (what parquet stats
-    compare) — and at or above the prefix itself. A wrong bound here
-    silently drops matching rows at decode, the one unrecoverable
-    direction."""
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        _like_prefix_upper,
-    )
-
-    upper = _like_prefix_upper(prefix)
-    s = prefix + tail
-    assert s >= prefix
-    assert prefix.encode() <= s.encode()
-    if upper is None:
-        # only an all-U+10FFFF prefix has no bound
-        assert set(prefix) == {"\U0010FFFF"}
-        return
-    assert prefix < upper and s < upper
-    assert s.encode() < upper.encode()

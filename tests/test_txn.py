@@ -1244,8 +1244,8 @@ def test_decimal_stats_prune_numerically_on_both_front_ends(spark, tmp_path):
     assert [r["id"] for r in eq.collect()] == [2]
     predicate_view(spark, "dec_ge", root, "p >= 9.00")
     assert spark.sql("SELECT count(*) AS n FROM dec_ge").first()["n"] == 1
-    # a bound that does not fit the column type fails loudly, as the
-    # SQL where option does, instead of silently keeping every file
+    # a bound that does not fit the column type fails loudly, as
+    # predicate_view does, instead of silently keeping every file
     with pytest.raises(ValueError, match="does not match column"):
         tbl.pruned_files("p", "9.00", None)
 

@@ -48,7 +48,6 @@ from .schema import (  # noqa: F401
     evolve_schema,
     align_to_schema,
     _phys_schema,
-    _snap_read,
     _apply_map,
     _diff_frames,
 )

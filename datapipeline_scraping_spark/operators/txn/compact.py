@@ -14,7 +14,6 @@ from pyspark.sql import types as T
 from ...sources.skipping import data_files
 from .errors import ConcurrentWriteError
 from .layout import _bucket_id, _refuse_clustered, _write_bucketed
-from .schema import _apply_map, _snap_read
 from .staging import PARTS_DIR, _stage_add_files, _staging
 from .stats import _index_bloom, _snapshot_files
 from .table import ManifestTable
@@ -107,19 +106,15 @@ def compact_table(
         # read the RESOLVED snapshot dir, not mt.read(): the lazy scan
         # must not re-resolve the pointer at job time (a racing writer
         # could have advanced it; the version CAS below then catches
-        # the conflict instead of silently compacting the wrong data)
-        # logical view: apply any metadata-only renames; the rewrite
-        # then writes files under the LOGICAL names, so the new commit
-        # carries no column_map — compaction materializes renames the
-        # same way it materializes deletion vectors
-        df = _apply_map(_snap_read(spark, snap, c_entry), c_entry)
-        if mor:
-            # materialize the merge-on-read state (Delta OPTIMIZE
-            # purges DVs the same way): the rewrite drops deleted rows
-            # and folds the update delta in, and the new commit
-            # carries neither sidecar. Live MoR state also forces the
-            # rewrite above — purging it is the point.
-            df = mt._apply_dv(spark, df, c_entry, snap)
+        # the conflict instead of silently compacting the wrong data).
+        # The rewrite writes the LOGICAL view: renames land under their
+        # logical names, deleted rows drop and the update delta folds
+        # in, so the new commit carries no column_map and no sidecar
+        # (Delta OPTIMIZE purges DVs the same way). Live MoR state also
+        # forces the rewrite above — purging it is the point.
+        df = mt._apply_dv(
+            spark, mt._scan(spark, snap, c_entry), c_entry, snap
+        )
         # a hive-partitioned table (layout inherited by the commit
         # below) must cluster tasks BY the partition columns: a plain
         # repartition(n) gives every task rows of every partition

@@ -1,16 +1,14 @@
-"""Schema evolution, alignment, and snapshot read shaping."""
+"""Schema evolution, alignment, and the physical-to-logical column map."""
 
 from __future__ import annotations
 
 import json
-import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import SchemaEvolutionError
-from .layout import _entry_specs, _spec_dirname
 
 # lossless scalar widenings (Delta-style type widening, Spark 4 set):
 # each maps a DataType.simpleString() -> the types it may widen INTO.
@@ -90,55 +88,6 @@ def _phys_schema(entry: dict | None) -> "T.StructType | None":
             for f in logical.fields
         ]
     )
-
-
-
-def _snap_read(spark: SparkSession, path, entry: dict | None) -> DataFrame:
-    """Raw snapshot scan with the DECLARED physical schema. Inference
-    picks one file's footer, which is wrong once a snapshot legally
-    mixes schemas — append-committed files carry columns the
-    hardlinked base files lack (metadata-only ADD + append) — and the
-    declared read also skips the footer-sampling job. Falls back to
-    inference only for legacy entries with no recorded schema.
-
-    An EVOLVED snapshot (``specs`` in the entry — partition evolution)
-    scans each spec's subtree separately and unions: every spec dir is
-    a self-consistent hive layout, the declared schema reconstructs
-    that spec's partition columns from its directory names (all other
-    columns live in the files), and Catalyst distributes any filter
-    across the union so a predicate on a given column becomes a
-    PARTITION filter on the specs that dir-encode it and a pushed
-    data filter (min/max skippable) everywhere else — Iceberg's
-    spec-at-a-time scan, as a DataFrame union."""
-    sch = _phys_schema(entry)
-    specs = _entry_specs(entry)
-    if specs:
-        if sch is None:
-            raise ValueError(
-                f"{path}: evolved snapshot without a declared schema — "
-                f"the per-spec scans cannot reconstruct one shape"
-            )
-        names = [f.name for f in sch.fields]
-        frames = []
-        for sp in sorted(specs, key=lambda s: int(s["id"])):
-            sd = os.path.join(path, _spec_dirname(sp["id"]))
-            # a spec dir may be absent (created by evolve_partition but
-            # never appended to, then not re-created by a hardlink
-            # staging walk) — it contributes zero rows
-            if not os.path.isdir(sd):
-                continue
-            # hive scans surface partition columns LAST regardless of
-            # the declared order; re-select so every spec's frame has
-            # one column order before the union
-            frames.append(spark.read.schema(sch).parquet(sd).select(*names))
-        if not frames:
-            return spark.createDataFrame([], sch)
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
-    reader = spark.read.schema(sch) if sch is not None else spark.read
-    return reader.parquet(path)
 
 
 

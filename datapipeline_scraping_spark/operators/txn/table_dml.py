@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from .errors import ConcurrentWriteError, ConstraintViolationError
 from .layout import _link_tree
-from .schema import _apply_map, _snap_read, align_to_schema
+from .schema import align_to_schema
 from .table_core import _carry
 
 class _DmlMixin:
@@ -134,7 +134,7 @@ class _DmlMixin:
             # lives only in _upd/), so match on the visible view
             matched = (
                 self._apply_dv(
-                    spark, _apply_map(_snap_read(spark, src, entry), entry), entry, src
+                    spark, self._scan(spark, src, entry), entry, src
                 )
                 .filter(pred)
                 .select(*[F.col(c) for c in key_cols])
@@ -146,7 +146,7 @@ class _DmlMixin:
             # is a no-op under the union below, and skipping the
             # anti-join keeps the match scan one pass over the files
             matched = (
-                _apply_map(_snap_read(spark, src, entry), entry)
+                self._scan(spark, src, entry)
                 .filter(pred)
                 .select(*[F.col(c) for c in key_cols])
                 .distinct()
@@ -193,7 +193,7 @@ class _DmlMixin:
                 # predicate matches now (already-deleted keys emit
                 # nothing — Delta CDF delete = pre-image of live rows)
                 visible = self._apply_dv(
-                    spark, _apply_map(_snap_read(spark, src, entry), entry), entry, src
+                    spark, self._scan(spark, src, entry), entry, src
                 )
                 cdf_path = os.path.join(staged, self.CDF_DIR)
                 visible.filter(pred).select(
@@ -324,7 +324,7 @@ class _DmlMixin:
             for c, e in updates.items()
         }
         visible = self._apply_dv(
-            spark, _apply_map(_snap_read(spark, src, entry), entry), entry, src
+            spark, self._scan(spark, src, entry), entry, src
         )
         missing = [c for c in updates if c not in visible.columns]
         if missing:

@@ -835,9 +835,10 @@ class _EvolveMixin:
         evolution just appends a spec. The commit entry records the
         full spec history under ``specs``; ``partition_by`` stays the
         ACTIVE spec so every layout-equality check sees the current
-        contract. Readers (:func:`_snap_read`, the ``manifest`` SQL
-        datasource, ``read_where``) scan spec subtrees independently
-        and union — a filter on any column partition-prunes the specs
+        contract. Readers (``ManifestTable._scan`` behind every
+        DataFrame and SQL view read, and the ``manifest`` SQL
+        datasource) scan spec subtrees independently and union — a
+        filter on any column partition-prunes the specs
         that dir-encode it and falls back to per-file min/max stats
         everywhere else, so windowed reads stay O(window) across the
         spec boundary. ``compact_table`` MIGRATES: its full rewrite

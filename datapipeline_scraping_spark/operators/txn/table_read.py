@@ -2,14 +2,16 @@
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import SnapshotExpiredError
-from .layout import _entry_specs
-from .schema import _apply_map, _diff_frames, _phys_schema, _snap_read
+from ...functions.sqltext import ident
+from .layout import _entry_specs, _spec_dirname
+from .schema import _apply_map, _diff_frames, _phys_schema
 from ...sources.skipping import (
     _bloom_key,
     bloom_indexed,
@@ -52,8 +54,65 @@ class _ReadMixin:
         resolved version is applied automatically."""
         path, entry = self._resolve(version)
         return self._apply_dv(
-            spark, _apply_map(_snap_read(spark, path, entry), entry), entry, path
+            spark, self._scan(spark, path, entry), entry, path
         )
+
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        snap: str,
+        entry: dict | None,
+        files: list | None = None,
+    ) -> DataFrame:
+        """The LOGICAL data-file frame of snapshot ``snap``, in the
+        entry's declared column order with renames and drops applied:
+        every data file, or only ``files`` (a file-skipping read's
+        survivors). :meth:`_apply_dv` then adds the sidecars.
+
+        The scan declares the committed PHYSICAL schema: inference
+        reads one file's footer, which is wrong once a snapshot mixes
+        schemas (metadata-only ADD + append), and costs a job. Only
+        legacy entries with no recorded schema infer. An EVOLVED
+        snapshot (``specs``) reads each spec subtree as its own hive
+        layout and unions them, so a filter is a partition filter on
+        the specs that dir-encode its column and a pushed data filter
+        elsewhere. Each group's ``basePath`` keeps its partition
+        columns on an explicit file list; the final select undoes the
+        hive scan's partition-columns-last order. With no file kept
+        the frame is empty but typed, and the sidecars still apply to
+        it: ``update_where`` can move rows where no base file's stats
+        reach."""
+        sch = _phys_schema(entry)
+        specs = sorted(_entry_specs(entry) or [], key=lambda s: int(s["id"]))
+        if specs and sch is None:
+            raise ValueError(
+                f"{snap}: evolved snapshot without a declared schema — "
+                f"the per-spec scans cannot reconstruct one shape"
+            )
+        bases = [os.path.join(snap, _spec_dirname(s["id"])) for s in specs]
+        frames = []
+        for base in bases or [snap]:
+            if files is None:
+                # a spec dir evolve_partition created but nothing was
+                # appended to may be absent: it holds zero rows
+                paths = [base] if base == snap or os.path.isdir(base) else []
+            else:
+                paths = sorted(f for f in files if f.startswith(base + os.sep))
+            if paths:
+                reader = spark.read.option("basePath", base)
+                if sch is not None:
+                    reader = reader.schema(sch)
+                frames.append(reader.parquet(*paths))
+        if frames:
+            out = functools.reduce(DataFrame.unionByName, frames)
+        else:
+            out = spark.createDataFrame(
+                [], sch or spark.read.parquet(snap).schema
+            )
+        if sch is not None:
+            out = out.select(*[F.col(ident(c)) for c in sch.names])
+        return _apply_map(out, entry)
 
 
     def _apply_dv(
@@ -245,7 +304,9 @@ class _ReadMixin:
         if not ranges:
             raise ValueError("read_where requires at least one column range")
         snap, entry, kept, _total = self._kept(_range_conds(ranges), version)
-        return self._read_file_subset(spark, kept, entry, snap)
+        return self._apply_dv(
+            spark, self._scan(spark, snap, entry, kept), entry, snap
+        )
 
 
     def bloom_pruned_files(
@@ -293,65 +354,7 @@ class _ReadMixin:
         snap, entry, kept, _total = self._kept(
             [("cmp", col, "=", value)], version
         )
-        return self._read_file_subset(spark, kept, entry, snap)
-
-
-    def _read_file_subset(
-        self,
-        spark: SparkSession,
-        kept: list,
-        entry: dict,
-        snap: str,
-    ) -> DataFrame:
-        """Finish a file-skipping read over an explicit surviving-file
-        set: declare the physical schema, scan only ``kept``, and run
-        the merge-on-read finisher. When EVERY base file was pruned the
-        ``_upd``/``_dv`` sidecars must still apply on an empty base —
-        update_where can move rows into ranges no base file's stats
-        cover (ADVICE r9) — so the 'no qualifying row is skipped'
-        contract holds on the empty path too."""
-        # the files carry PHYSICAL names: declare the schema in
-        # physical terms (parquet matches by name), rename after
-        phys_schema = _phys_schema(entry)
-        if not kept:
-            empty = spark.createDataFrame(
-                [], phys_schema or _snap_read(spark, snap, entry).schema
-            )
-            return self._apply_dv(spark, _apply_map(empty, entry), entry, snap)
-        reader = spark.read
-        if phys_schema is not None:
-            reader = reader.schema(phys_schema)
-        specs = _entry_specs(entry)
-        if specs:
-            # EVOLVED snapshot: group the surviving files by their
-            # spec subtree and scan each group with ITS basePath, so
-            # each spec's dir-encoded partition columns reconstruct;
-            # the union normalizes column order (hive scans put
-            # partition columns last)
-            by_spec: dict[str, list] = {}
-            for fp in sorted(kept):
-                rel = os.path.relpath(fp, snap)
-                by_spec.setdefault(rel.split(os.sep, 1)[0], []).append(fp)
-            frames = []
-            for sd, files in sorted(by_spec.items()):
-                fr = reader.option("basePath", os.path.join(snap, sd))
-                fr = fr.parquet(*files)
-                frames.append(
-                    fr.select(*phys_schema.names)
-                    if phys_schema is not None
-                    else fr
-                )
-            out = frames[0]
-            for fr in frames[1:]:
-                out = out.unionByName(fr)
-            return self._apply_dv(spark, _apply_map(out, entry), entry, snap)
-        if entry.get("partition_by"):
-            # explicit file lists drop hive partition columns unless
-            # the reader knows the tree root they were derived from
-            reader = reader.option("basePath", snap)
         return self._apply_dv(
-            spark,
-            _apply_map(reader.parquet(*sorted(kept)), entry),
-            entry,
-            snap,
+            spark, self._scan(spark, snap, entry, kept), entry, snap
         )
+

@@ -64,6 +64,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _key(sf_dir: str) -> str:
+    """``sf_dir`` as a file-name-safe suffix for a query's scratch
+    tables and view names."""
+    return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
+
+
 # ===========================================================================
 # §2.7 relational surface: aggregation
 # ===========================================================================

@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 
 from .functions.numeric import exact_sum, sql_exact_sum
 from .operators.skew import salted_join
-from .queries import _t, q
-
-
-def _key(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
+from .queries import _key, _t, q
 
 
 # ===========================================================================

@@ -15,12 +15,8 @@ from pyspark.sql import functions as F
 
 from .functions.checksum import row_checksum
 from .operators.delta import delta_split
-from .queries import _t, q
+from .queries import _key, _t, q
 from .streaming.events import SCRATCH
-
-
-def _key(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
 
 
 # ===========================================================================

@@ -18,12 +18,8 @@ import os
 from pyspark.sql import functions as F
 
 from .functions.numeric import exact_sum
-from .queries import _t, q
+from .queries import _key, _t, q
 from .streaming.events import SCRATCH
-
-
-def _key(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
 
 
 # ===========================================================================

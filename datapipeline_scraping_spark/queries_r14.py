@@ -20,12 +20,8 @@ import shutil
 from pyspark.sql import functions as F
 
 from .functions.numeric import exact_sum, sql_exact_sum
-from .queries import _t, q
+from .queries import _key, _t, q
 from .streaming.events import SCRATCH
-
-
-def _key(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
 
 
 def _input_files(df) -> set:

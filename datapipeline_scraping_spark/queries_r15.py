@@ -21,8 +21,8 @@ import shutil
 from pyspark.sql import functions as F
 
 from .functions.numeric import exact_sum, sql_exact_sum
-from .queries import _t, q
-from .queries_r14 import _input_files, _key
+from .queries import _key, _t, q
+from .queries_r14 import _input_files
 from .streaming.events import SCRATCH
 
 _Q199_A_LO = "2024-01-03 00:00:00"

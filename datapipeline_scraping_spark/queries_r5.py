@@ -12,12 +12,8 @@ from .functions.checksum import checksum_sql
 from .functions.numeric import exact_sum, sql_exact_sum
 from .operators import similarity as SIM
 from .operators.txn import ManifestTable, merge_write
-from .queries import _t, q
+from .queries import _key, _t, q
 from .streaming.events import SCRATCH
-
-
-def _key(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").replace("/", "_").lstrip("_").replace(".", "_")
 
 
 # ===========================================================================

@@ -440,7 +440,7 @@ def q166_incremental_agg_view(spark, sf_dir):
     from .functions.numeric import dec, to_double
     from .operators.ivm import apply_agg_delta, delta_aggregate
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -547,7 +547,7 @@ def q167_deletion_vectors(spark, sf_dir):
     import glob
 
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -633,7 +633,7 @@ def q168_cdf_stream_view(spark, sf_dir):
     (``dags/scraping_etl.py:59-69``)."""
     from .functions.numeric import to_double
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .sources.cdf_datasource import register
     from .streaming.events import SCRATCH
 
@@ -752,7 +752,7 @@ def q169_column_mapping_rename(spark, sf_dir):
     import glob
 
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -834,7 +834,7 @@ def q170_mor_update(spark, sf_dir):
     import glob
 
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -921,7 +921,7 @@ def q171_sql_manifest_read(spark, sf_dir):
     psql against the live table (``src/storage.py``) — no versioned
     reads at all."""
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .sources.manifest_datasource import register
     from .streaming.events import SCRATCH
 

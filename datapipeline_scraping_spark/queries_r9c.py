@@ -325,7 +325,7 @@ def q176_zero_copy_clone(spark, sf_dir):
     import glob
 
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -570,7 +570,7 @@ def q178_drop_column(spark, sf_dir):
     the column (test-pinned), and the next full rewrite materializes
     the logical schema."""
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(
@@ -642,7 +642,7 @@ def q179_add_column_backfill(spark, sf_dir):
     the lineage. Pre-add time travel has no such column
     (test-pinned)."""
     from .operators.txn import ManifestTable
-    from .queries_r9 import _key
+    from .queries import _key
     from .streaming.events import SCRATCH
 
     orders = _t(spark, sf_dir, "orders").select(

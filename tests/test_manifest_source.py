@@ -934,10 +934,7 @@ def test_predicate_view_helper_mints_pruned_sql_views(spark, tmp_path):
     got = spark.sql("SELECT id FROM pv_recent").count()
     assert got == df.filter("ts >= '2024-03-03 12:00:00'").count() > 0
     # fewer tasks than the unfiltered view: compare scan partitions
-    n_all = (
-        spark.read.format("manifest").option("root", root).load()
-        .rdd.getNumPartitions()
-    )
+    n_all = _src(spark, root).rdd.getNumPartitions()
     n_view = spark.table("pv_recent").rdd.getNumPartitions()
     assert 0 < n_view < n_all, (n_view, n_all)
 
@@ -1604,7 +1601,6 @@ def _assert_view_matches_unpruned_read(spark, mt, cases, zones):
     at analysis); each side runs as one union job. Returns {where: row
     count}."""
     import functools
-    import json
 
     from pyspark.sql import DataFrame
 
@@ -1624,10 +1620,7 @@ def _assert_view_matches_unpruned_read(spark, mt, cases, zones):
     prev = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # the committed (declared) column order; read() puts hive
-        # partition columns last
-        declared = json.loads(mt._log_entry(mt.version())["schema"])
-        full = mt.read(spark).select(*[f["name"] for f in declared["fields"]])
+        full = mt.read(spark)
         wants = union([full.filter(sq or w) for w, sq in cases.items()])
         want_schema = wants.schema.simpleString()
         want_rows = rows_by_case(wants)
@@ -1736,6 +1729,69 @@ def test_predicate_view_rows_match_unpruned_read(spark, tmp_path):
         spark, mt, cases, ("UTC", "America/Lima", "Asia/Kolkata")
     )
     assert all(counts.values()), counts
+
+
+def test_every_read_front_end_keeps_the_declared_column_order(
+    spark, tmp_path
+):
+    """One table, one column order: ``read``, ``read_where``,
+    ``read_point``, ``predicate_view``, a registered view and a
+    ``USING manifest`` relation all return the committed schema's
+    order. A hive scan lists partition columns last, so a
+    ``grp``-partitioned table (with a deletion vector and an ``_upd``
+    delta) and a partition-evolved table (with a renamed column) are
+    the layouts that could move them. The registered view is a native
+    parquet scan with the ``USING manifest`` relation's rows."""
+    import re
+
+    from datapipeline_scraping_spark.sources.manifest_sql import register_table
+
+    rows = [(i, f"g{i % 2}", float(i), i % 3) for i in range(12)]
+    schema = "pk long, grp string, v double, b long"
+    hive = ManifestTable(str(tmp_path / "hive"), retention_sec=3600)
+    hive.commit(
+        spark.createDataFrame(rows, schema).coalesce(1),
+        partition_by=["grp"],
+        stats_by=["pk"],
+    )
+    hive.delete_where(spark, "pk % 5 = 0", ["pk"])
+    hive.update_where(spark, "pk IN (1, 2)", {"v": "v + 100"}, ["pk"])
+    evo = ManifestTable(str(tmp_path / "evo"), retention_sec=3600)
+    evo.commit(
+        spark.createDataFrame(rows, schema).coalesce(1),
+        partition_by=["grp"],
+    )
+    evo.evolve_partition(["b"])
+    evo.append(spark.createDataFrame([(20, "g0", 2.0, 1)], schema))
+    evo.rename_column("v", "val")
+    register(spark)
+    for mt, declared in (
+        (hive, ["pk", "grp", "v", "b"]),
+        (evo, ["pk", "grp", "val", "b"]),
+    ):
+        register_table(spark, "order_reg", mt.root)
+        predicate_view(spark, "order_pv", mt.root, "pk < 5")
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY VIEW order_src USING manifest "
+            f"OPTIONS (root '{mt.root}')"
+        )
+        reads = {
+            "read": mt.read(spark),
+            "read_where": mt.read_where(spark, {"pk": (0, 5)}),
+            "read_point": mt.read_point(spark, "pk", 3),
+            "predicate_view": spark.table("order_pv"),
+            "register_table": spark.table("order_reg"),
+            "USING manifest": spark.table("order_src"),
+        }
+        for name, df in reads.items():
+            assert df.columns == declared, (mt.root, name, df.columns)
+        assert sorted(reads["register_table"].collect()) == sorted(
+            reads["USING manifest"].collect()
+        )
+        qe = reads["register_table"]._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert "FileScan parquet" in plan, plan
+        assert not re.search(r"BatchScan \S+\[[^\]]*\] \(Python\)", plan), plan
 
 
 def test_predicate_view_on_clustered_dv_and_moved_update(spark, tmp_path):

@@ -17,6 +17,7 @@ from datapipeline_scraping_spark.operators.txn import (
     ManifestTable,
 )
 from datapipeline_scraping_spark.sources.manifest_sql import (
+    predicate_view,
     register_table,
     sql,
 )
@@ -330,9 +331,72 @@ def test_sql_merge_subquery_source_with_nested_parens(spark, tbl):
     }
 
 
-def test_register_table_rejects_quoted_roots(spark, tmp_path):
-    with pytest.raises(ValueError, match="quote"):
-        register_table(spark, "evil", str(tmp_path) + "/a'b")
+def test_sql_surface_on_a_root_with_quotes_and_spaces(spark, tmp_path):
+    """A root is a path, not SQL text: with quotes and a space in it,
+    a registered view, ``sql()`` INSERT and UPDATE, and a predicate
+    view return the rows :meth:`ManifestTable.read` does. (A backslash
+    is not tried: Hadoop reads it as a glob escape on every Spark
+    parquet read of the table.)"""
+    t = ManifestTable(str(tmp_path / "it's a \"q\" dir"))
+    t.commit(_df(spark, [(1, "a", 10), (2, "b", 20)]))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    register_table(spark, "quoted", t.root, key_cols=["pk"])
+    assert rows(spark.table("quoted")) == rows(t.read(spark))
+    sql(spark, "INSERT INTO quoted VALUES (3, 'c', 30)")
+    assert t.version() == 2
+    sql(spark, "UPDATE quoted SET n = n + 1 WHERE pk = 1")
+    assert t.version() == 3
+    want = rows(t.read(spark))
+    assert want == [(1, "a", 11), (2, "b", 20), (3, "c", 30)]
+    assert rows(spark.table("quoted")) == want
+    predicate_view(spark, "quoted_pv", t.root, "pk <= 2")
+    assert rows(spark.table("quoted_pv")) == want[:2]
+
+
+def test_sql_insert_into_registered_table_commits(spark, tbl):
+    """``INSERT INTO`` a registered name is the data-source writer's
+    append: VALUES and a query both commit one version each and the
+    re-minted view shows them; a CHECK violation commits nothing."""
+    sql(spark, "INSERT INTO sqldml VALUES (4, 'd', 40)")
+    assert tbl.version() == 2
+    sql(
+        spark,
+        "INSERT INTO sqldml SELECT pk + 10, v, n FROM sqldml WHERE pk < 3",
+    )
+    assert tbl.version() == 3
+    assert _state(spark) == {
+        1: ("a", 10), 2: ("b", 20), 3: ("c", 30), 4: ("d", 40),
+        11: ("a", 10), 12: ("b", 20),
+    }
+    t = ManifestTable(tbl.root + "_chk")
+    t.commit(_df(spark, [(1, "a", 10)]), check={"n_pos": "n >= 0"})
+    register_table(spark, "chk_ins", t.root, key_cols=["pk"])
+    with pytest.raises(Exception, match="CHECK|n_pos"):
+        sql(spark, "INSERT INTO chk_ins VALUES (2, 'b', -1)")
+    assert t.version() == 1
+    assert spark.table("chk_ins").count() == 1
+
+
+def test_plain_spark_insert_into_registered_view_is_refused(spark, tbl):
+    """A registered view is a DataFrame over the pinned snapshot
+    directory. Spark must refuse a plain ``spark.sql`` INSERT into it:
+    were the view a bare parquet relation, Spark would write an
+    uncommitted file into the immutable snapshot and every reader of
+    that version would see the row."""
+    import os
+
+    from datapipeline_scraping_spark.sources.skipping import data_files
+
+    snap = tbl.snapshot_path()
+    before = sorted(os.listdir(snap)), data_files(snap)
+    with pytest.raises(Exception, match="UNSUPPORTED_INSERT"):
+        spark.sql("INSERT INTO sqldml VALUES (9, 'z', 90)")
+    assert (sorted(os.listdir(snap)), data_files(snap)) == before
+    assert tbl.version() == 1
+    assert tbl.read(spark).count() == 3
 
 
 @pytest.mark.slow  # >60s (r15 tiering; measured 75-343s)

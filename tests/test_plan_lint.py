@@ -145,11 +145,12 @@ MUST_COLOCATED_JOIN = [
     "q190_clustered_mor_dml",
 ]
 
-# Queries reading a manifest table through a predicate view: the
-# executed plan must be a native parquet scan (FileSourceScanExec) with
+# Queries reading a manifest table through a view the engine mints (a
+# predicate view, or a registered table's view): the executed plan must be a native parquet scan (FileSourceScanExec) with
 # no Python data-source scan (BatchScan ... (Python)), whose per-task
 # Python workers the native scan replaces.
 MUST_NATIVE_SCAN = [
+    "q187_sql_dml_ledger",
     "q193_clustered_sql_prune",
     "q197_bloom_point_lookup",
     "q198_nullcount_skipping",
@@ -242,7 +243,7 @@ def test_plan_lint(spark, name):
         assert "FileScan parquet" in plan and not _re.search(
             r"BatchScan \S+\[[^\]]*\] \(Python\)", plan
         ), (
-            f"{name}: expected a native parquet scan of the predicate "
+            f"{name}: expected a native parquet scan of the engine-minted "
             f"view's files and no Python data-source scan:\n{plan[:2000]}"
         )
 

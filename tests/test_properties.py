@@ -863,10 +863,14 @@ def test_pushdown_never_drops_qualifying_rows(
     stats-covered + evolved table). AND-binds-tighter precedence is
     Spark's own, so the same string drives both sides."""
     from datapipeline_scraping_spark.operators.txn import ManifestTable
+    from datapipeline_scraping_spark.sources.manifest_datasource import (
+        register,
+    )
     from datapipeline_scraping_spark.sources.manifest_sql import (
         predicate_view,
     )
 
+    register(spark)
     root = str(tmp_path_factory.mktemp("pushprop") / "t")
     mt = ManifestTable(root, retention_sec=3600)
     df = spark.createDataFrame(

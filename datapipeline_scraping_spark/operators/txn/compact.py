@@ -93,8 +93,7 @@ def compact_table(
             "commit_clustered(read(...), ...) to re-cluster, or "
             "commit(read(...)) to deliberately drop the layout.",
         )
-        dv = c_entry.get("dv")
-        mor = dv or c_entry.get("mor_delta")
+        mor = c_entry.get("dv") or c_entry.get("mor_delta")
         if not zorder_by and not mor and files_before - n_target < min_gain_files:
             return {
                 "compacted": False,

@@ -399,6 +399,78 @@ def test_plain_spark_insert_into_registered_view_is_refused(spark, tbl):
     assert tbl.read(spark).count() == 3
 
 
+def test_sql_insert_cast_matrix(spark, tmp_path):
+    """``sql()`` INSERT shapes its rows to the declared schema with
+    Spark's INSERT rules (ANSI store assignment): a value that does
+    not fit overflows, a string never casts into a numeric or date
+    column, a column list picks and orders the targets (an omitted
+    nullable column is NULL), VALUES must cover every column without
+    a list, and a query's wider types narrow. Each case records the
+    rows and version it committed, or the error condition with the
+    version unchanged."""
+    import datetime
+    from decimal import Decimal
+
+    t = ManifestTable(str(tmp_path / "casts"))
+    t.commit(
+        spark.createDataFrame(
+            [], "id bigint, i int, s string, x double, "
+            "d decimal(10,2), dt date",
+        )
+    )
+    register_table(spark, "casts", t.root)
+    d1 = "DATE '2024-01-01'"
+    cases = [
+        (f"VALUES (1, 1099511627776, 'a', 1.0, 1.00, {d1})",
+         "CAST_OVERFLOW_IN_TABLE_INSERT"),
+        (f"VALUES (1, 1, 'a', 1.0, 123456789.123, {d1})",
+         "CAST_OVERFLOW_IN_TABLE_INSERT"),
+        (f"VALUES (1, '12', 'a', 1.0, 1.00, {d1})",
+         "INCOMPATIBLE_DATA_FOR_TABLE.CANNOT_SAFELY_CAST"),
+        (f"VALUES (1, 'x', 'a', 1.0, 1.00, {d1})",
+         "INCOMPATIBLE_DATA_FOR_TABLE.CANNOT_SAFELY_CAST"),
+        ("VALUES (1, 2, 'a', 1.0, 1.00, '2024-02-03')",
+         "INCOMPATIBLE_DATA_FOR_TABLE.CANNOT_SAFELY_CAST"),
+        ("VALUES (NULL, NULL, NULL, NULL, NULL, NULL)",
+         [(None, None, None, None, None, None)]),
+        ("(dt, d, x, s, i, id) VALUES (DATE '2024-01-05', 2.5, 3.0, 'b', "
+         "7, 8)",
+         [(8, 7, "b", 3.0, Decimal("2.50"), datetime.date(2024, 1, 5))]),
+        ("(id, i, s, x, d) VALUES (9, 9, 'c', 9.0, 9.99)",
+         [(9, 9, "c", 9.0, Decimal("9.99"), None)]),
+        ("VALUES (10, 10, 'z')",
+         "INSERT_COLUMN_ARITY_MISMATCH.NOT_ENOUGH_DATA_COLUMNS"),
+        (f"VALUES (1, 1, 'a', 1.0, 1.00, {d1}, 5)",
+         "INSERT_COLUMN_ARITY_MISMATCH.TOO_MANY_DATA_COLUMNS"),
+        ("SELECT CAST(11 AS decimal(20,0)), CAST(12 AS bigint), 's', "
+         "2.7D, 3.14159D, TIMESTAMP '2024-03-04 05:06:07'",
+         [(11, 12, "s", 2.7, Decimal("3.14"), datetime.date(2024, 3, 4))]),
+    ]
+
+    def rows():
+        return sorted(
+            (tuple(r) for r in t.read(spark).collect()), key=repr
+        )
+
+    for body, want in cases:
+        before, v0 = rows(), t.version()
+        try:
+            sql(spark, f"INSERT INTO casts {body}")
+        except Exception as exc:  # noqa: BLE001 - the class is the record
+            got = exc.getCondition() if hasattr(exc, "getCondition") else (
+                type(exc).__name__
+            )
+            assert (body, got, t.version()) == (body, want, v0)
+            continue
+        new = [r for r in rows() if r not in before]
+        assert (body, new, t.version()) == (body, want, v0 + 1)
+    v0 = t.version()
+    with pytest.raises(Exception) as exc:
+        sql(spark, f"INSERT OVERWRITE casts VALUES (1, 1, 'a', 1.0, 1.00, {d1})")
+    assert exc.value.getCondition() == "UNSUPPORTED_INSERT.RDD_BASED"
+    assert t.version() == v0
+
+
 @pytest.mark.slow  # >60s (r15 tiering; measured 75-343s)
 def test_merge_clause_semantics_exhaustive(spark, tmp_path):
     """Every supported clause-order/condition combination against a

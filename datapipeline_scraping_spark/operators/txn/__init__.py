@@ -25,7 +25,7 @@ runs a real ``MERGE INTO`` with identical clause semantics.
 # clustered layout, evolution/lifecycle), and ingest/compact/group hold
 # the module-level drivers.  Every name importable from the old
 # operators/txn.py module is re-exported here UNCHANGED (tests, queries,
-# and the SQL datasource import through this package path).
+# and the SQL router import through this package path).
 
 from __future__ import annotations
 
@@ -41,6 +41,7 @@ from .errors import (  # noqa: F401
     SchemaEvolutionError,
     AuditFailedError,
     PublishConflictError,
+    UnreadableRootError,
 )
 from .schema import (  # noqa: F401
     _WIDEN,
@@ -83,7 +84,6 @@ from .ingest import (  # noqa: F401
     delta_available,
     merge_write,
     recover_swap,
-    append_files_local,
 )
 from .compact import (  # noqa: F401
     compact_table,

@@ -55,3 +55,14 @@ class PublishConflictError(RuntimeError):
     Deliberately NOT a :class:`ConcurrentWriteError`: retrying cannot
     fix it (the histories diverged); the caller must re-cut the
     branch or pass ``on_conflict="ours"`` to let the branch win."""
+
+
+
+class UnreadableRootError(ValueError):
+    """The table root contains a character Hadoop's path glob reads as
+    pattern syntax (``\\``, ``[``, ``]``, ``{``, ``}``). A commit there
+    would succeed, but every Spark read of the table would then fail
+    (an invalid escape, or a pattern that matches no path), so the
+    root is refused when the :class:`ManifestTable` is built. ``*``
+    and ``?`` are also glob syntax but match themselves, and those
+    roots read back."""

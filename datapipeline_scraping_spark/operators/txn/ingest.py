@@ -1,8 +1,7 @@
-"""External ingestion paths: JVM-free appends, CDF application, MERGE writer seam."""
+"""External ingestion paths: CDF application and the MERGE writer seam."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -12,16 +11,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..merge import merge_into, merge_upsert
-from .errors import (
-    ConcurrentWriteError,
-    ConstraintViolationError,
-    SchemaEvolutionError,
-)
-from .layout import _refuse_clustered
-from ...sources.skipping import bloom_bits, data_files
-from .staging import _stage_add_files, _staging
+from .errors import ConcurrentWriteError
 from .table import ManifestTable
-from .table_core import _carry
 
 
 def apply_diff(
@@ -238,216 +229,3 @@ def recover_swap(target_path: str) -> bool:
     for leftover in olds + tmps:
         shutil.rmtree(os.path.join(parent, leftover), ignore_errors=True)
     return restored
-
-
-
-def append_files_local(
-    root: str,
-    parts_dir: str,
-    *,
-    meta: dict | None = None,
-    expect_version: int | None = None,
-    keep_snapshots: int = 2,
-) -> int:
-    """APPEND pre-written parquet part files to a :class:`ManifestTable`
-    without a SparkSession — the driver-side commit path of the
-    ``manifest`` SQL datasource's writer (``INSERT INTO`` /
-    ``df.write.format("manifest").mode("append")``), whose Python
-    worker has no JVM gateway. The parts are adopted into the new
-    snapshot unchanged and the base hardlinks forward; every
-    :meth:`ManifestTable.append` contract is kept with driver-side
-    tools sized to the BATCH, never the table:
-
-    - schema: each part column must exist in a base data file's
-      parquet-arrow schema with the same type (files already written
-      cannot be aligned — evolution goes through the DataFrame API);
-    - CHECK constraints: evaluated over the staged parts with DuckDB
-      (logical names reconstructed from the column map; a predicate
-      DuckDB cannot parse refuses the write instead of skipping the
-      check);
-    - merge-on-read guard: the churn-sized ``_dv`` key set loads
-      in-memory and the parts' key columns stream against it;
-    - stats/bloom: incremental — untouched files carry verbatim, new
-      files pay one footer walk / one bloom build (pyarrow, same
-      md5 hash as the probe);
-    - change feed: the parts themselves, rewritten once with
-      ``_change_type``/``_commit_version`` under LOGICAL names;
-    - commit: the same lock/CAS/log/pointer/GC protocol as every
-      writer."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = ManifestTable(root)
-    part_files = sorted(
-        os.path.join(parts_dir, f)
-        for f in os.listdir(parts_dir)
-        if f.endswith(".parquet")
-    )
-    if not part_files:
-        raise ValueError(f"{parts_dir}: no parquet parts to append")
-    snap, version, entry = tbl._resolve_base(
-        "append",
-        f"{root}: append_files_local requires an existing table "
-        f"(create it with ManifestTable.commit / the DataFrame API)",
-        expect_version=expect_version,
-    )
-    if entry.get("partition_by"):
-        raise ValueError(
-            f"{root}: append_files_local targets unpartitioned tables"
-        )
-    _refuse_clustered(
-        root,
-        entry,
-        "externally-written flat parts cannot join a bucketed "
-        "snapshot. Use append_clustered().",
-    )
-    cmap = dict(entry.get("column_map") or {})  # logical -> physical
-    inv = {p: l for l, p in cmap.items()}
-    # -- schema guard against a base file's arrow schema ------------------
-    base_files = data_files(snap)
-    part_schema = pq.ParquetFile(part_files[0]).schema_arrow
-    base_by_name = {}
-    if base_files:
-        base_schema = pq.ParquetFile(min(base_files)).schema_arrow
-        base_by_name = {f.name: f.type for f in base_schema}
-    allowed = set(base_by_name)
-    if entry.get("schema"):
-        try:
-            fields = {
-                fd["name"] for fd in json.loads(entry["schema"])["fields"]
-            }
-            allowed |= {cmap.get(n, n) for n in fields}
-        except (ValueError, KeyError, TypeError):
-            pass
-    for f in part_schema:
-        if f.name in base_by_name and f.type != base_by_name[f.name]:
-            raise SchemaEvolutionError(
-                f"{root}: part column {f.name!r} type {f.type} != "
-                f"committed {base_by_name[f.name]}"
-            )
-        if allowed and f.name not in allowed:
-            raise SchemaEvolutionError(
-                f"{root}: part column {f.name!r} not in the committed "
-                f"schema — an external append cannot evolve (files are "
-                f"already written); use ManifestTable.append"
-            )
-    # -- CHECK constraints via DuckDB over the staged parts ---------------
-    checks = dict(entry.get("checks") or {})
-    if checks:
-        import duckdb
-
-        logical_fields = (
-            [fd["name"] for fd in json.loads(entry["schema"])["fields"]]
-            if entry.get("schema")
-            else [inv.get(f.name, f.name) for f in part_schema]
-        )
-        part_cols = {f.name for f in part_schema}
-        proj = ", ".join(
-            f'"{cmap.get(l, l)}" AS "{l}"'
-            if cmap.get(l, l) in part_cols
-            else f'NULL AS "{l}"'
-            for l in logical_fields
-        )
-        glob_sql = os.path.join(parts_dir, "*.parquet").replace("'", "''")
-        bad = {}
-        for name, pred in checks.items():
-            try:
-                n_bad = duckdb.sql(
-                    f"SELECT COUNT(*) FROM (SELECT {proj} FROM "
-                    f"read_parquet('{glob_sql}')) WHERE NOT "
-                    f"COALESCE(({pred}), TRUE)"
-                ).fetchone()[0]
-            except Exception as exc:
-                raise ValueError(
-                    f"{root}: CHECK {name!r} ({pred!r}) cannot be "
-                    f"validated on the SQL write path — use the "
-                    f"DataFrame API"
-                ) from exc
-            if n_bad:
-                bad[name] = int(n_bad)
-        if bad:
-            raise ConstraintViolationError(
-                f"{root}: CHECK constraint(s) violated, append aborted — "
-                f"rows failing each: {bad}"
-            )
-    # -- merge-on-read key guard ------------------------------------------
-    dv = entry.get("dv")
-    if dv:
-        key_cols_l = list(dv["key_cols"])
-        key_cols_p = [cmap.get(c, c) for c in key_cols_l]
-        dv_tbl = pq.read_table(os.path.join(snap, ManifestTable.DV_DIR))
-        dv_set = set(
-            zip(*(dv_tbl.column(c).to_pylist() for c in key_cols_l))
-        )
-        for f in part_files:
-            t = pq.read_table(f, columns=key_cols_p)
-            for tup in zip(*(t.column(c).to_pylist() for c in key_cols_p)):
-                if tup in dv_set:
-                    raise ValueError(
-                        f"{root}: append collides with live merge-on-read "
-                        f"keys ({key_cols_l}) — compact_table() first"
-                    )
-    # -- stage: change feed from the parts, then the shared step ---------
-    with _staging(tbl) as staged:
-        cdf_prop = list((entry.get("cdf") or {}).get("key_cols") or [])
-        cdf_entry = None
-        if cdf_prop:
-            cdf_dir = os.path.join(staged, ManifestTable.CDF_DIR)
-            os.makedirs(cdf_dir)
-            n_changes = 0
-            for i, f in enumerate(part_files):
-                t = pq.read_table(f)
-                t = t.rename_columns([inv.get(n, n) for n in t.column_names])
-                n = t.num_rows
-                t = t.add_column(
-                    0, "_change_type", pa.array(["insert"] * n)
-                ).append_column(
-                    "_commit_version",
-                    pa.array([version + 1] * n, type=pa.int64()),
-                )
-                pq.write_table(t, os.path.join(cdf_dir, f"cdf-{i}.parquet"))
-                n_changes += n
-            cdf_entry = {
-                "key_cols": cdf_prop,
-                "n_changes": n_changes,
-                "change_types": ["insert"],
-            }
-        # an EVOLVED table's flat parts land under the ACTIVE spec's
-        # subtree (current spec is unpartitioned — checked above)
-        added = _stage_add_files(
-            staged, snap, entry, parts=parts_dir, rename="append"
-        )
-        # bloom for the new files: pyarrow build (no JVM on this path),
-        # same hash as the probe; rows infer file/col string,
-        # m/k/n int64, bits binary — the Spark build's schema
-        bloom_prop = entry.get("bloom") or {}
-        fpp = float(bloom_prop.get("fpp") or 0.01)
-        rows = []
-        for rel in added.bloom_rels:
-            fp = os.path.join(staged, rel)
-            names = pq.ParquetFile(fp).schema_arrow.names
-            for c in bloom_prop.get("cols") or []:
-                if c not in names:
-                    continue
-                vals = {
-                    str(v)
-                    for v in pq.read_table(fp, columns=[c]).column(c).to_pylist()
-                    if v is not None
-                }
-                m, k, bits = bloom_bits(vals, fpp)
-                rows.append(
-                    dict(file=rel, col=c, m=m, k=k, n=len(vals), bits=bits)
-                )
-        if rows:
-            bdir = os.path.join(staged, ManifestTable.BLOOM_DIR)
-            os.makedirs(bdir, exist_ok=True)
-            pq.write_table(
-                pa.Table.from_pylist(rows),
-                os.path.join(bdir, f"new-{uuid.uuid4().hex[:8]}.parquet"),
-            )
-    return tbl._publish(
-        staged,
-        _carry(entry, meta=meta, file_stats=added.file_stats, cdf=cdf_entry),
-        base_version=version,
-        keep_snapshots=keep_snapshots,
-    )

@@ -1,7 +1,7 @@
 """The add-file staging step: every writer that lands new data files next
-to a hardlinked base (``append``, ``append_files_local``,
-``append_clustered``, ``compact_small_files``, ``compact_clustered``)
-stages its snapshot here before :meth:`_CoreMixin._publish` commits it."""
+to a hardlinked base (``append``, ``append_clustered``,
+``compact_small_files``, ``compact_clustered``) stages its snapshot here
+before :meth:`_CoreMixin._publish` commits it."""
 
 from __future__ import annotations
 
@@ -23,8 +23,8 @@ from .layout import (
 )
 from .stats import collect_file_stats
 
-#: hidden subdir of a staging dir where the writer's Spark or pyarrow
-#: output lands; data listings skip it and adoption empties it
+#: hidden subdir of a staging dir where the writer's Spark output
+#: lands; data listings skip it and adoption empties it
 PARTS_DIR = ".parts"
 
 
@@ -55,7 +55,6 @@ def _stage_add_files(
     snap: str,
     entry: dict,
     *,
-    parts: str | None = None,
     keep: list[str] | None = None,
     sidecars: bool = True,
     rename: str | None = None,
@@ -65,9 +64,9 @@ def _stage_add_files(
     Hardlinks the kept base data files ``keep`` (snapshot-relative;
     all of them by default) and, unless the writer folds them
     (``sidecars=False``), the ``_dv``/``_upd`` sidecars. Adopts every
-    parquet part under ``parts`` (default: ``staged``'s
-    :data:`PARTS_DIR`; removed afterwards), hive subdirs kept, into the
-    active partition spec's subtree — renamed ``<rename>-<run>-<name>``
+    parquet part under ``staged``'s :data:`PARTS_DIR` (removed
+    afterwards), hive subdirs kept, into the active partition spec's
+    subtree — renamed ``<rename>-<run>-<name>``
     so no name can collide with a linked base file, or keeping the
     name when ``rename`` is None (bucket ids live in it). Kept files
     carry their stats and bloom rows verbatim; new files are
@@ -85,8 +84,7 @@ def _stage_add_files(
             _link_tree(os.path.join(snap, side), os.path.join(staged, side))
     specs = _entry_specs(entry)
     sub = _spec_dirname(_current_spec(specs)["id"]) if specs else ""
-    parts = parts or os.path.join(staged, PARTS_DIR)
-    new_rels = _adopt(parts, staged, sub, rename)
+    new_rels = _adopt(os.path.join(staged, PARTS_DIR), staged, sub, rename)
     kept = set(keep)
     file_stats = None
     stats_cols = list(entry.get("stats_cols") or [])

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ...sources.manifest_log import log_path, read_log_entry, read_pointer
-from .errors import ConcurrentWriteError, SnapshotExpiredError
+from .errors import ConcurrentWriteError, SnapshotExpiredError, UnreadableRootError
 from .stats import _inherited_meta
 
 #: log-entry fields a version derived from a base entry copies forward
@@ -21,6 +21,11 @@ _CARRIED = (
     "stats_cols", "file_stats", "checks", "dv", "column_map", "mor_delta",
     "dropped", "added", "bloom", "bucket", "specs",
 )
+
+
+#: root characters Hadoop's path glob takes as syntax that does not
+#: match itself (see :class:`UnreadableRootError`)
+_GLOB_SYNTAX = "\\[]{}"
 
 
 def _carry(entry: dict, **changes) -> dict:
@@ -63,6 +68,13 @@ class _CoreMixin:
         staging_ttl_sec: float = 6 * 3600.0,
         retention_sec: float = 24 * 3600.0,
     ) -> None:
+        bad = sorted(set(root) & set(_GLOB_SYNTAX))
+        if bad:
+            raise UnreadableRootError(
+                f"{root!r}: a table root may not contain {bad} — Hadoop's "
+                f"path glob reads them as pattern syntax, so every Spark "
+                f"read of the table would fail"
+            )
         self.root = root.rstrip("/")
         self.stale_lock_sec = stale_lock_sec
         self.staging_ttl_sec = staging_ttl_sec

@@ -319,26 +319,25 @@ GROUP BY o_orderpriority
 )
 def q183_sql_insert_ledger(spark, sf_dir):
     """The WRITE half of the pure-SQL surface (q171 is the read half):
-    the ledger lands through ``INSERT INTO`` on a ``USING manifest``
-    temporary view and ``df.write.format("manifest").mode("append")``
-    — both route through the Python DataSource's Arrow writer, whose
-    tasks stream record batches straight into staged parquet parts
-    and whose driver-side commit is
-    :func:`..operators.txn.append_files_local`: the whole base
-    snapshot hardlinks forward, per-file stats carry verbatim and the
-    new parts pay one footer walk, the change feed materializes the
-    batch itself, and the commit is the same CAS every writer uses.
-    At 100 TB this gives the engine what Delta gives Spark SQL users:
-    an ingest statement whose cost is O(batch) with full
-    transactional semantics, from SQL. The in-query assert pins the
-    zero-rewrite contract by inode. Final read goes through the SQL
-    view too — write and read surfaces compose.
+    batch 2 lands through :meth:`ManifestTable.append` and batch 3
+    through ``INSERT INTO ... SELECT`` on a ``register_table`` name,
+    which :func:`..sources.manifest_sql.sql` compiles into the same
+    ``append``: the whole base snapshot hardlinks forward, per-file
+    stats carry verbatim and the new parts pay one footer walk, the
+    change feed materializes the batch itself, and the commit is the
+    same CAS every writer uses. At 100 TB this gives the engine what
+    Delta gives Spark SQL users: an ingest statement whose cost is
+    O(batch) with full transactional semantics, from SQL. The
+    in-query assert pins the zero-rewrite contract by inode. The
+    final read goes through a ``USING manifest`` view — write and
+    read surfaces compose.
 
     Reference anchor: the reference's sink is literally SQL INSERT ...
     ON CONFLICT through psycopg2 (``src/storage.py:41-53``); this is
     that statement's append half on the snapshot ledger."""
     from .operators.txn import ManifestTable
     from .sources.manifest_datasource import register
+    from .sources.manifest_sql import register_table, sql
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
@@ -361,19 +360,14 @@ def q183_sql_insert_ledger(spark, sf_dir):
             for f in os.listdir(snap)
             if f.endswith(".parquet")
         }
-        # batch 2 via the DataFrame write API
-        orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2).write.format(
-            "manifest"
-        ).option("root", root).mode("append").save()
-        # batch 3 via pure SQL INSERT INTO ... SELECT
-        spark.sql(
-            f"""CREATE OR REPLACE TEMPORARY VIEW q183_sink
-                USING manifest OPTIONS (root '{root}')"""
-        )
+        # batch 2 via the DataFrame API
+        tbl.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+        # batch 3 via SQL INSERT INTO ... SELECT on a registered name
+        register_table(spark, "q183_ledger", root)
         orders.filter(F.col("o_orderkey") % 3 == 2).createOrReplaceTempView(
             "q183_batch3"
         )
-        spark.sql("INSERT INTO q183_sink SELECT * FROM q183_batch3")
+        sql(spark, "INSERT INTO q183_ledger SELECT * FROM q183_batch3")
         assert tbl.version() == 3
         snap2 = tbl.snapshot_path()
         assert all(

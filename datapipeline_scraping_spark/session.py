@@ -125,6 +125,13 @@ def build_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame-error call sites: on, every Column call
+        # pays ~5 extra py4j round trips to record its Python line
+        # (about 740 for q01's build). A static conf, so it cannot sit
+        # in _RUNTIME_CONF; PySpark also caches it per process at the
+        # first Column call, so a driver-built session keeps its own
+        # setting. Errors then no longer name the building Python line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -43,6 +43,12 @@ any plain ``WHERE``: Spark 4.1 shares one read-info slot per Python
 data source, so ``pushFilters``-dependent partitions would be unsound
 (see ``test_spark_shared_readinfo_canary``). Pruned SQL reads go
 through :func:`.manifest_sql.predicate_view`, a native parquet scan.
+
+The source is read-only: ``df.write.format("manifest")`` and a plain
+``spark.sql`` INSERT into a ``USING manifest`` relation raise
+:class:`ManifestReadOnlyError` before any task runs. SQL appends go
+through :func:`.manifest_sql.sql` on a ``register_table`` name, which
+commits with :meth:`ManifestTable.append`.
 """
 
 from __future__ import annotations
@@ -51,20 +57,22 @@ import glob
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from .manifest_log import pointer_version, read_log_entry, resolve_version
+from .manifest_log import resolve_version
 from .skipping import data_files, partition_values
 
 #: every option the source accepts
 _OPTIONS = frozenset({"root", "version", "asof"})
+
+
+class ManifestReadOnlyError(ValueError):
+    """A write through the ``manifest`` data source
+    (``df.write.format("manifest")``, a plain ``spark.sql`` INSERT into
+    a ``USING manifest`` relation). Appends go through
+    :func:`.manifest_sql.sql` on a ``register_table`` name or
+    :meth:`ManifestTable.append`."""
 
 
 # One deletion-vector parse per Python worker per snapshot (guide
@@ -236,102 +244,12 @@ class ManifestDataSource(DataSource):
         return ManifestReader(self.options, schema)
 
     def writer(self, schema, overwrite: bool):
-        if overwrite:
-            raise ValueError(
-                "manifest: mode('overwrite') replaces the whole table — "
-                "use ManifestTable.commit via the DataFrame API; the SQL "
-                "write surface is append-only (INSERT INTO / "
-                "mode('append'))"
-            )
-        return ManifestWriter(self.options)
-
-
-class _PartsMessage(WriterCommitMessage):
-    def __init__(self, path, rows):
-        self.path = path
-        self.rows = rows
-
-
-class ManifestWriter(DataSourceArrowWriter):
-    """``df.write.format("manifest").mode("append")`` / SQL
-    ``INSERT INTO`` on a ``USING manifest`` view — the write half of
-    the SQL surface, riding the ledger's ADD-FILE commit: each task
-    streams its Arrow batches into one parquet part under a hidden
-    staging dir inside the table root (same filesystem — the commit
-    adopts the files by rename, zero copies), and the driver-side
-    ``commit`` runs :func:`..operators.txn.append_files_local` (the
-    datasource's Python worker has no JVM gateway, so the commit is
-    pure pyarrow/duckdb), which links the whole base snapshot forward
-    and applies every append contract (CHECK constraints, MoR-
-    collision refusal, incremental stats/bloom, insert-only change
-    feed, CAS). Tasks write the table's PHYSICAL column names
-    (metadata-only renames stay metadata)."""
-
-    def __init__(self, options):
-        import uuid
-
-        self.root = options["root"]
-        self.parts_dir = os.path.join(
-            self.root, f".dswrite-{uuid.uuid4().hex[:8]}"
+        raise ManifestReadOnlyError(
+            f"{self.options.get('root')}: the manifest data source is "
+            f"read-only — append through "
+            f"manifest_sql.sql(spark, 'INSERT INTO <name> ...') on a "
+            f"register_table name, or ManifestTable.append"
         )
-        try:
-            ver = pointer_version(self.root)
-            entry = read_log_entry(self.root, ver) if ver else None
-        except (FileNotFoundError, OSError):
-            entry = None
-        # logical -> physical rename applied task-side
-        self.column_map = dict((entry or {}).get("column_map") or {})
-
-    def write(self, iterator):
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        writer = None
-        rows = 0
-        path = os.path.join(
-            self.parts_dir, f"part-{uuid.uuid4().hex}.parquet"
-        )
-        try:
-            for batch in iterator:
-                if self.column_map:
-                    batch = batch.rename_columns(
-                        [
-                            self.column_map.get(n, n)
-                            for n in batch.schema.names
-                        ]
-                    )
-                if writer is None:
-                    os.makedirs(self.parts_dir, exist_ok=True)
-                    writer = pq.ParquetWriter(path, batch.schema)
-                writer.write_table(pa.Table.from_batches([batch]))
-                rows += batch.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-        if rows == 0:
-            return _PartsMessage(None, 0)
-        return _PartsMessage(path, rows)
-
-    def commit(self, messages):
-        import shutil
-
-        from ..operators.txn import append_files_local
-
-        total = sum(m.rows for m in messages if m is not None)
-        if total == 0 or not os.path.isdir(self.parts_dir):
-            shutil.rmtree(self.parts_dir, ignore_errors=True)
-            return
-        try:
-            append_files_local(self.root, self.parts_dir)
-        finally:
-            shutil.rmtree(self.parts_dir, ignore_errors=True)
-
-    def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.parts_dir, ignore_errors=True)
 
 
 def register(spark) -> None:

@@ -2,7 +2,7 @@
 ``CURRENT`` pointer file (``"<snapshot dirname>\\n<version>"``) and the
 ``_log/<version>.json`` entries, and the Delta-style version / time-travel
 resolution on top of them. The table layer, ``predicate_view`` and the
-JVM-free data source's Python workers all read versions through here."""
+read-only data source's Python workers all read versions through here."""
 
 from __future__ import annotations
 

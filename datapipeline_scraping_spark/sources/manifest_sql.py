@@ -4,8 +4,8 @@ registered-table views those statements act on. :func:`register_table`
 mints a temporary view of :meth:`ManifestTable.read` — a native
 parquet scan, so a SELECT runs no Python worker — and :func:`sql`
 routes the writes, ``INSERT INTO`` included. Direct ``CREATE ...
-USING manifest`` relations (read, q171; INSERT INTO, q183) stay on the
-Python data source.
+USING manifest`` relations (q171, q183's final read) stay on the
+Python data source, which is read-only.
 
 Spark's parser only accepts UPDATE/DELETE/MERGE for DataSource-V2
 tables implementing the row-level-operation interfaces, which the
@@ -38,9 +38,10 @@ existing transactional writers:
   version, active spec, spec count + full spec HISTORY, bucket
   layout, declared write sort order, file count, bytes), Delta's
   ``DESCRIBE DETAIL`` with the Iceberg metadata the log tracks;
-- ``INSERT INTO t ...`` → the same statement on a ``USING manifest``
-  relation over the root, so Spark's positional INSERT and casts feed
-  the data-source writer's append commit.
+- ``INSERT INTO [TABLE] t [(c1, ...)] VALUES ... | <query>`` →
+  :meth:`ManifestTable.append` of the rows Spark's own INSERT analysis
+  shapes to the declared schema (ANSI store assignment, column lists,
+  arity checks).
 
 Everything else falls through to ``spark.sql`` untouched, so the
 router composes with the whole read surface. Table-property contracts
@@ -112,7 +113,7 @@ import os
 import re
 import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import ident, string_lit
@@ -130,8 +131,9 @@ _SESSIONS: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict]]" = (
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
-#: the ``USING manifest`` relation :func:`sql` replays a registered
-#: table's ``INSERT INTO`` on; dropped after each statement
+#: the ``USING manifest`` relation :func:`sql` analyzes a registered
+#: table's ``INSERT INTO`` against (never executed); dropped after each
+#: statement
 _INSERT_TARGET = "_manifest_insert_target"
 
 
@@ -785,9 +787,9 @@ def _strip_outer_parens(s: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-#: INSERT INTO t ... — replayed on a ``USING manifest`` relation over
-#: the root, so Spark's own positional INSERT (casts, column lists,
-#: VALUES or a query) feeds the data-source writer's append commit
+#: INSERT INTO t ... — the rest (column list, VALUES or a query) is
+#: analyzed by Spark against :data:`_INSERT_TARGET`; see
+#: :func:`_insert_rows`
 _INSERT_RE = re.compile(
     r"^\s*INSERT\s+INTO\s+(?:TABLE\s+)?(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)\b"
     r"(?P<rest>.*)$",
@@ -1018,6 +1020,36 @@ def _resolve(spark: SparkSession, name: str) -> dict | None:
     return _tables(spark).get(name.lower())
 
 
+def _insert_rows(spark: SparkSession, root: str, rest: str) -> DataFrame:
+    """The rows ``INSERT INTO <table at root>{rest}`` would write, as a
+    DataFrame in the table's declared schema. Spark parses and
+    analyzes the statement against a ``USING manifest`` relation over
+    ``root`` but never executes it, so the rows are shaped by Spark's
+    own INSERT rules: ANSI store assignment (a string never casts into
+    a number or a date; an overflow raises), by-position or
+    column-list targets with omitted nullable columns NULL, and the
+    arity checks. The relation supports no overwrite, so Spark refuses
+    ``REPLACE WHERE`` and a static partition, and the analyzed plan is
+    an append whose query holds the rows."""
+    _register_format(spark)
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW {_INSERT_TARGET} "
+        f"USING manifest OPTIONS (root {string_lit(root)})"
+    )
+    try:
+        jss = spark._jsparkSession
+        state = jss.sessionState()
+        plan = state.sqlParser().parsePlan(f"INSERT INTO {_INSERT_TARGET}{rest}")
+        mode = getattr(state, "executePlan$default$2")()
+        append = state.executePlan(plan, mode).analyzed()
+    finally:
+        spark.catalog.dropTempView(_INSERT_TARGET)
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jss, append.query()
+    )
+    return DataFrame(jdf, spark)
+
+
 def _key_cols(tbl: ManifestTable, declared: list[str], stmt: str) -> list[str]:
     if declared:
         return declared
@@ -1032,29 +1064,23 @@ def _key_cols(tbl: ManifestTable, declared: list[str], stmt: str) -> list[str]:
 
 
 def sql(spark: SparkSession, statement: str, *, retries: int = 3):
-    """Execute ``statement``. UPDATE / DELETE / MERGE INTO against a
-    :func:`register_table`-ed manifest table route to the ledger's
-    transactional writers and return the committed version (int).
-    ``INSERT INTO`` a registered table runs the same statement on a
-    ``USING manifest`` relation over its root (the data-source
-    writer's append, CHECK and merge-on-read guards included) and
-    returns Spark's result. Every routed statement re-mints the
-    table's view. Anything else falls through to ``spark.sql`` and
-    returns its DataFrame."""
+    """Execute ``statement``. INSERT INTO / UPDATE / DELETE / MERGE
+    INTO against a :func:`register_table`-ed manifest table route to
+    the ledger's transactional writers and return the committed
+    version (int); an INSERT is :meth:`ManifestTable.append` of the
+    rows :func:`_insert_rows` shapes, so CHECK constraints, the
+    merge-on-read key guard, partitioning, stats, blooms and the
+    change feed are ``append``'s own. Every routed statement re-mints
+    the table's view. Anything else falls through to ``spark.sql``
+    and returns its DataFrame."""
     m = _INSERT_RE.match(statement)
     if m and _resolve(spark, m.group("tbl")):
         root = _resolve(spark, m.group("tbl"))["root"]
-        _register_format(spark)
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY VIEW {_INSERT_TARGET} "
-            f"USING manifest OPTIONS (root {string_lit(root)})"
+        ver = ManifestTable(root).append(
+            _insert_rows(spark, root, m.group("rest"))
         )
-        try:
-            out = spark.sql(f"INSERT INTO {_INSERT_TARGET}{m.group('rest')}")
-        finally:
-            spark.catalog.dropTempView(_INSERT_TARGET)
         _refresh_view(spark, m.group("tbl"))
-        return out
+        return ver
     m = _UPDATE_RE.match(statement)
     if m and _resolve(spark, m.group("tbl")):
         spec = _resolve(spark, m.group("tbl"))

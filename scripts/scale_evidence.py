@@ -399,8 +399,8 @@ TXN_QUERIES = (
     "q180_bloom_point_lookup",
     "q181_append_only_ingest",
     "q182_small_file_compaction",
-    # r10 tail: SQL INSERT ingest must stay O(batch) through the Arrow
-    # datasource writer (inode-asserted in-query); the composed
+    # r10 tail: SQL INSERT ingest must stay O(batch) through
+    # ManifestTable.append (inode-asserted in-query); the composed
     # partition+stats pruned read must keep scanning only the
     # window-within-partition files as lineitem grows 10x; WAP's
     # audit/rebase/fast paths run on the 10x doc corpus (the fast

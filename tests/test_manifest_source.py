@@ -16,6 +16,8 @@ from datapipeline_scraping_spark.sources.manifest_datasource import register
 from datapipeline_scraping_spark.sources.manifest_sql import (
     predicate_files,
     predicate_view,
+    register_table,
+    sql,
 )
 
 
@@ -159,11 +161,10 @@ def test_schema_evolution_nullfills_old_version(spark, tmp_path):
 
 
 @pytest.mark.slow  # r17 tiering: measured 16s; full (evidence) tier only
-def test_sql_write_appends_through_datasource(spark, tmp_path):
-    """r10: the write half of the SQL surface — df.write append and
-    SQL INSERT INTO both land as add-file commits with every append
-    contract (stats/bloom/CDF maintained, constraints enforced,
-    physical names under renames, MoR collision refusal)."""
+def test_sql_insert_appends_with_every_contract(spark, tmp_path):
+    """r10: the write half of the SQL surface — ``sql()`` INSERT INTO
+    a registered name lands as an add-file commit with every append
+    contract (stats/bloom/CDF maintained, constraints enforced)."""
     import os
 
     from datapipeline_scraping_spark.operators.txn import (
@@ -181,17 +182,14 @@ def test_sql_write_appends_through_datasource(spark, tmp_path):
         cdf_keys=["pk"],
         check={"pk_pos": "pk >= 0"},
     )
-    register(spark)
+    register_table(spark, "wledger", root, key_cols=["pk"])
     snap1 = tbl.snapshot_path()
     inodes = {
         f: os.stat(os.path.join(snap1, f)).st_ino
         for f in os.listdir(snap1)
         if f.endswith(".parquet")
     }
-    # DataFrame write API
-    spark.createDataFrame([(500, "a"), (501, "b")], "pk long, v string").coalesce(
-        1
-    ).write.format("manifest").option("root", root).mode("append").save()
+    sql(spark, "INSERT INTO wledger VALUES (500, 'a'), (501, 'b')")
     assert tbl.version() == 2 and tbl.read(spark).count() == 502
     snap2 = tbl.snapshot_path()
     for f, ino in inodes.items():  # add-file commit: base untouched
@@ -205,48 +203,32 @@ def test_sql_write_appends_through_datasource(spark, tmp_path):
         .count()
     )
     assert got == 2
-    # SQL INSERT INTO on the USING view
-    spark.sql(
-        f"""CREATE OR REPLACE TEMPORARY VIEW wledger
-            USING manifest OPTIONS (root '{root}')"""
-    )
-    spark.sql("INSERT INTO wledger VALUES (600, 'sqlrow')")
+    sql(spark, "INSERT INTO wledger SELECT 600, 'sqlrow'")
     assert tbl.version() == 3
     assert [
         (r["pk"], r["v"])
         for r in tbl.read(spark).filter("pk = 600").collect()
     ] == [(600, "sqlrow")]
-    # constraint violation aborts atomically (DuckDB-validated)
+    # constraint violation aborts atomically
     with pytest.raises(Exception) as ei:
-        spark.createDataFrame([(-1, "bad")], "pk long, v string").write.format(
-            "manifest"
-        ).option("root", root).mode("append").save()
+        sql(spark, "INSERT INTO wledger VALUES (-1, 'bad')")
     assert "CHECK" in str(ei.value) or isinstance(
         ei.value, ConstraintViolationError
     )
     assert tbl.version() == 3 and tbl.read(spark).count() == 503
-    # overwrite refuses with direction to the DataFrame API
-    with pytest.raises(Exception, match="append-only"):
-        spark.range(1).select(
-            F.col("id").alias("pk"), F.lit("x").alias("v")
-        ).write.format("manifest").option("root", root).mode(
-            "overwrite"
-        ).save()
 
 
 @pytest.mark.slow  # r17 tiering: measured 14s; full (evidence) tier only
-def test_sql_write_respects_renames_and_mor_guard(spark, tmp_path):
-    """Writes through the SQL surface keep metadata-only renames
-    metadata (parts carry PHYSICAL names) and refuse appending keys a
-    live deletion vector covers."""
+def test_sql_insert_respects_renames_and_mor_guard(spark, tmp_path):
+    """``sql()`` INSERT keeps metadata-only renames metadata (new files
+    carry PHYSICAL names) and refuses appending keys a live deletion
+    vector covers."""
     root = str(tmp_path / "t")
     tbl = ManifestTable(root, retention_sec=3600)
     tbl.commit(_df(spark, [(i, f"v{i}") for i in range(50)]).coalesce(1))
     tbl.rename_column("v", "val")
-    register(spark)
-    spark.createDataFrame([(50, "new")], "pk long, val string").write.format(
-        "manifest"
-    ).option("root", root).mode("append").save()
+    register_table(spark, "renamed", root, key_cols=["pk"])
+    sql(spark, "INSERT INTO renamed VALUES (50, 'new')")
     out = tbl.read(spark)
     assert out.columns == ["pk", "val"]
     assert out.filter("pk = 50").first()["val"] == "new"
@@ -255,9 +237,40 @@ def test_sql_write_respects_renames_and_mor_guard(spark, tmp_path):
     # appending a dv-covered key refuses
     tbl.delete_where(spark, "pk = 10", ["pk"])
     with pytest.raises(Exception, match="merge-on-read"):
-        spark.createDataFrame(
-            [(10, "resurrect")], "pk long, val string"
-        ).write.format("manifest").option("root", root).mode("append").save()
+        sql(spark, "INSERT INTO renamed VALUES (10, 'resurrect')")
+
+
+def test_writes_through_the_source_are_refused(spark, tmp_path):
+    """The data source is read-only: ``df.write.format("manifest")`` and
+    a plain ``spark.sql`` INSERT into a ``USING manifest`` relation
+    raise :class:`ManifestReadOnlyError` naming the append paths, the
+    version stays, and no staging dir is left under the root."""
+    import os
+
+    root = str(tmp_path / "t")
+    tbl = ManifestTable(root, retention_sec=3600)
+    tbl.commit(_df(spark, [(1, "a")]))
+    register(spark)
+    with pytest.raises(Exception, match="ManifestReadOnlyError") as ei:
+        _df(spark, [(2, "b")]).write.format("manifest").option(
+            "root", root
+        ).mode("append").save()
+    assert "register_table" in str(ei.value)
+    with pytest.raises(Exception, match="ManifestReadOnlyError"):
+        _df(spark, [(2, "b")]).write.format("manifest").option(
+            "root", root
+        ).mode("overwrite").save()
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW ro_ledger USING manifest "
+        f"OPTIONS (root '{root}')"
+    )
+    with pytest.raises(Exception, match="ManifestReadOnlyError"):
+        spark.sql("INSERT INTO ro_ledger VALUES (3, 'c')")
+    assert tbl.version() == 1
+    assert sorted(os.listdir(root)) == sorted(
+        ["CURRENT", "_log", os.path.basename(tbl.snapshot_path())]
+    )
+    assert sorted(tuple(r) for r in _src(spark, root).collect()) == [(1, "a")]
 
 
 def test_where_option_prunes_files_driver_side(spark, tmp_path):

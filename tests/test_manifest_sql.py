@@ -9,6 +9,8 @@ surface on the snapshot ledger."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,7 @@ from datapipeline_scraping_spark.sources.manifest_sql import (
     register_table,
     sql,
 )
+from datapipeline_scraping_spark.sources.skipping import data_files
 
 
 def _df(spark, rows):
@@ -335,8 +338,9 @@ def test_sql_surface_on_a_root_with_quotes_and_spaces(spark, tmp_path):
     """A root is a path, not SQL text: with quotes and a space in it,
     a registered view, ``sql()`` INSERT and UPDATE, and a predicate
     view return the rows :meth:`ManifestTable.read` does. (A backslash
-    is not tried: Hadoop reads it as a glob escape on every Spark
-    parquet read of the table.)"""
+    cannot be tried: Hadoop reads it as a glob escape, so
+    ``ManifestTable`` refuses such a root with
+    :class:`UnreadableRootError`.)"""
     t = ManifestTable(str(tmp_path / "it's a \"q\" dir"))
     t.commit(_df(spark, [(1, "a", 10), (2, "b", 20)]))
 
@@ -357,9 +361,9 @@ def test_sql_surface_on_a_root_with_quotes_and_spaces(spark, tmp_path):
 
 
 def test_sql_insert_into_registered_table_commits(spark, tbl):
-    """``INSERT INTO`` a registered name is the data-source writer's
-    append: VALUES and a query both commit one version each and the
-    re-minted view shows them; a CHECK violation commits nothing."""
+    """``INSERT INTO`` a registered name is :meth:`ManifestTable.append`:
+    VALUES and a query both commit one version each and the re-minted
+    view shows them; a CHECK violation commits nothing."""
     sql(spark, "INSERT INTO sqldml VALUES (4, 'd', 40)")
     assert tbl.version() == 2
     sql(
@@ -380,16 +384,51 @@ def test_sql_insert_into_registered_table_commits(spark, tbl):
     assert spark.table("chk_ins").count() == 1
 
 
+def test_sql_insert_into_hive_partitioned_table(spark, tmp_path):
+    """A ``grp``-partitioned table takes ``sql()`` INSERT of VALUES and
+    of a query, one version each, and the view keeps the declared
+    column order (the partition column in the middle)."""
+    t = ManifestTable(str(tmp_path / "parted"))
+    t.commit(
+        _df(spark, [(1, "a", 10), (2, "b", 20)]).withColumnRenamed("v", "grp"),
+        partition_by=["grp"],
+    )
+    register_table(spark, "parted", t.root, key_cols=["pk"])
+    assert sql(spark, "INSERT INTO parted VALUES (3, 'c', 30), (4, 'a', 40)") == 2
+    assert sql(
+        spark, "INSERT INTO TABLE parted SELECT pk + 10, grp, n FROM parted"
+    ) == 3
+    view = spark.table("parted")
+    assert view.columns == ["pk", "grp", "n"]
+    assert sorted(tuple(r) for r in view.collect()) == [
+        (1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "a", 40),
+        (11, "a", 10), (12, "b", 20), (13, "c", 30), (14, "a", 40),
+    ]
+    assert {os.path.basename(os.path.dirname(f)) for f in data_files(
+        t.snapshot_path()
+    )} == {"grp=a", "grp=b", "grp=c"}
+
+
+def test_sql_insert_checks_spark_sql_constraints(spark, tmp_path):
+    """CHECK constraints are Spark SQL: an INSERT evaluates them with
+    Spark, so ``pmod`` works, a passing row commits and a failing row
+    raises :class:`ConstraintViolationError` with no new version."""
+    t = ManifestTable(str(tmp_path / "pmod"))
+    t.commit(_df(spark, [(1, "a", 1)]), check={"n_mod": "pmod(n, 7) <> 3"})
+    register_table(spark, "pmod_t", t.root, key_cols=["pk"])
+    assert sql(spark, "INSERT INTO pmod_t VALUES (2, 'b', 9), (3, 'c', NULL)") == 2
+    with pytest.raises(ConstraintViolationError, match="n_mod"):
+        sql(spark, "INSERT INTO pmod_t VALUES (4, 'd', 10)")
+    assert t.version() == 2
+    assert sorted(r["pk"] for r in spark.table("pmod_t").collect()) == [1, 2, 3]
+
+
 def test_plain_spark_insert_into_registered_view_is_refused(spark, tbl):
     """A registered view is a DataFrame over the pinned snapshot
     directory. Spark must refuse a plain ``spark.sql`` INSERT into it:
     were the view a bare parquet relation, Spark would write an
     uncommitted file into the immutable snapshot and every reader of
     that version would see the row."""
-    import os
-
-    from datapipeline_scraping_spark.sources.skipping import data_files
-
     snap = tbl.snapshot_path()
     before = sorted(os.listdir(snap)), data_files(snap)
     with pytest.raises(Exception, match="UNSUPPORTED_INSERT"):

@@ -20,7 +20,6 @@ from datapipeline_scraping_spark.operators.txn import (
     ConcurrentWriteError,
     ManifestTable,
     TransactionGroup,
-    append_files_local,
     compact_small_files,
     compact_table,
 )
@@ -270,27 +269,6 @@ def test_group_append_member_on_evolved_table(spark, evolved, tmp_path):
     assert mt._log_entry(mt.version())["specs"]
 
 
-def test_append_files_local_routes_into_active_spec(spark, tmp_path):
-    mt = ManifestTable(str(tmp_path / "t"), retention_sec=3600)
-    base = spark.createDataFrame([(i, float(i)) for i in range(5)], "id int, v double")
-    mt.commit(base, keep_snapshots=50)
-    mt.evolve_partition(["id"], keep_snapshots=50)
-    mt.evolve_partition([], keep_snapshots=50)  # active spec: flat again
-    parts = tmp_path / "parts"
-    os.makedirs(parts)
-    spark.createDataFrame(
-        [(i, float(i)) for i in range(5, 8)], "id int, v double"
-    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "w"))
-    for i, f in enumerate(glob.glob(str(tmp_path / "w" / "*.parquet"))):
-        os.link(f, parts / f"p{i}.parquet")
-    append_files_local(mt.root, str(parts))
-    entry = mt._log_entry(mt.version())
-    assert entry["specs"]
-    snap = os.path.join(mt.root, entry["snapshot"])
-    assert glob.glob(snap + "/spec-2/append-*.parquet")
-    assert sorted(r["id"] for r in mt.read(spark).collect()) == list(range(8))
-
-
 def test_sql_datasource_reads_evolved_snapshots(spark, evolved):
     mt, full = evolved
     from datapipeline_scraping_spark.sources.manifest_datasource import (
@@ -341,16 +319,15 @@ def test_cdf_skips_the_evolution_commit_and_keeps_the_feed(spark, tmp_path):
 def test_sql_insert_into_evolved_table_lands_under_active_spec(
     spark, tmp_path
 ):
-    """The external-writer path (``INSERT INTO`` on the ``USING
-    manifest`` view -> datasource writer -> ``append_files_local``)
-    adopts its flat parts into the ACTIVE spec's subtree, so pure-SQL
-    ingest keeps working across a partition evolution (the active spec
-    must be unpartitioned — the same contract as append_files)."""
-    from datapipeline_scraping_spark.sources.manifest_datasource import (
-        register,
+    """``sql()`` INSERT is :meth:`ManifestTable.append`, so its files
+    land under the ACTIVE spec's subtree — partitioned or flat — and
+    pure-SQL ingest keeps working across a partition evolution with
+    the spec history intact."""
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        register_table,
+        sql,
     )
 
-    register(spark)
     mt = ManifestTable(str(tmp_path / "t"), retention_sec=3600)
     mt.commit(
         spark.createDataFrame(
@@ -358,21 +335,21 @@ def test_sql_insert_into_evolved_table_lands_under_active_spec(
         ),
         keep_snapshots=50,
     )
+    register_table(spark, "evol_ins", mt.root)
     mt.evolve_partition(["id"], keep_snapshots=50)
+    sql(spark, "INSERT INTO evol_ins VALUES (50, 0.5)")
+    snap = mt.snapshot_path()
+    assert glob.glob(snap + "/spec-1/id=50/append-*.parquet")
     mt.evolve_partition([], keep_snapshots=50)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY VIEW evol_ins "
-        f"USING manifest OPTIONS (root '{mt.root}')"
-    )
-    spark.sql("INSERT INTO evol_ins VALUES (100, 1.5)")
+    sql(spark, "INSERT INTO evol_ins VALUES (100, 1.5)")
     entry = mt._log_entry(mt.version())
     assert entry["specs"], "SQL append dropped the spec history"
     snap = os.path.join(mt.root, entry["snapshot"])
-    assert glob.glob(snap + "/spec-2/*.parquet"), (
+    assert glob.glob(snap + "/spec-2/append-*.parquet"), (
         "SQL-inserted parts must land under the active spec dir"
     )
     got = sorted(r["id"] for r in mt.read(spark).collect())
-    assert got == [0, 1, 2, 3, 100]
+    assert got == [0, 1, 2, 3, 50, 100]
 
 
 def test_evolution_races_serialize_through_the_cas(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""session.prepare() on a session that refuses some confs."""
+"""session.prepare() on a session that refuses some confs, and the
+static conf build_spark sets."""
 
 from __future__ import annotations
 
@@ -35,3 +36,13 @@ def test_prepare_warns_once_per_refused_key_and_never_raises(monkeypatch):
     assert len(msgs) == 1 and refused in msgs[0]
     # every other key is still applied
     assert set(stub.conf.set_keys) == set(session._RUNTIME_CONF) - {refused}
+
+
+def test_build_spark_turns_off_column_call_sites(spark):
+    """build_spark sets PySpark's DataFrame-error call-site capture off
+    (a static conf), so Column calls skip its py4j round trips."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    assert is_debugging_enabled() is False

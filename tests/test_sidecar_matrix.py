@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from datapipeline_scraping_spark.operators.txn import (
     ManifestTable,
-    append_files_local,
     compact_small_files,
     compact_table,
     merge_write,
@@ -181,27 +180,19 @@ def test_matrix_append(spark, base_root, tmp_path):
     assert mt.read(spark).count() == 260
 
 
-def test_matrix_append_files_local(spark, base_root, tmp_path):
-    """The SQL datasource's commit path (no JVM gateway): incremental
-    stats AND bloom rows for the adopted parts, checks enforced."""
-    import pyarrow as pa
+def test_matrix_sql_insert(spark, base_root, tmp_path):
+    """``sql()`` INSERT on a registered name: incremental stats AND
+    bloom rows for the new files, checks enforced."""
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        register_table,
+        sql,
+    )
 
     mt = _clone(base_root, tmp_path, "t")
-    parts = tmp_path / "parts"
-    parts.mkdir()
-    n = 40
-    tblpa = pa.table(
-        {
-            "pk": pa.array(range(300, 300 + n), type=pa.int64()),
-            "b": pa.array([i % 4 for i in range(n)], type=pa.int64()),
-            "k": pa.array([i * 3 for i in range(300, 300 + n)], type=pa.int64()),
-            "s": pa.array(["g%d" % (i % 4) for i in range(n)]),
-            "v": pa.array(["v%d" % i for i in range(300, 300 + n)]),
-        }
-    )
-    pq.write_table(tblpa, str(parts / "part-0.parquet"))
-    append_files_local(mt.root, str(parts), keep_snapshots=50)
-    _assert_tiers(mt, "append_files_local")
+    _mk_df(spark, 300, 340).createOrReplaceTempView("matrix_batch")
+    register_table(spark, "matrix_t", mt.root)
+    sql(spark, "INSERT INTO matrix_t SELECT * FROM matrix_batch")
+    _assert_tiers(mt, "sql_insert")
     assert mt.read(spark).count() == 240
 
 

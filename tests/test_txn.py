@@ -26,6 +26,25 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "pk long, v string")
 
 
+def test_glob_syntax_roots_are_refused_at_construction(spark, tmp_path):
+    """Hadoop's path glob reads ``\\``, ``[ ]`` and ``{ }`` as syntax
+    that does not match itself: a table there would commit and then
+    fail every Spark read, so ``ManifestTable`` refuses the root with
+    a ``ValueError`` subclass before anything is written. ``*`` and
+    ``?`` match themselves, and those roots commit and read back."""
+    from datapipeline_scraping_spark.operators.txn import UnreadableRootError
+
+    assert issubclass(UnreadableRootError, ValueError)
+    for name in ("t[1]", "t{a,b}", "tb\\z", "t]", "t}"):
+        with pytest.raises(UnreadableRootError):
+            ManifestTable(str(tmp_path / name))
+        assert not os.path.exists(tmp_path / name)
+    for name in ("t*x", "t?y"):
+        tbl = ManifestTable(str(tmp_path / name))
+        tbl.commit(_df(spark, [(1, "a")]))
+        assert [tuple(r) for r in tbl.read(spark).collect()] == [(1, "a")]
+
+
 def test_commit_read_roundtrip_and_versioning(spark, tmp_path):
     tbl = ManifestTable(str(tmp_path / "t"))
     assert not tbl.exists() and tbl.version() is None
@@ -3626,9 +3645,10 @@ def test_clustered_snapshots_refuse_metadata_alters_and_flat_appends(
     propagate through the bucketed catalog scan, and flat external
     parts would break the bucket-id file-name contract — all four
     paths refuse loudly instead of silently de-clustering."""
-    import os
-
-    from datapipeline_scraping_spark.operators.txn import append_files_local
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        register_table,
+        sql,
+    )
 
     tbl = ManifestTable(str(tmp_path / "cl"))
     tbl.commit_clustered(_df(spark, [(1, "a"), (2, "b")]), "pk", 4)
@@ -3638,17 +3658,9 @@ def test_clustered_snapshots_refuse_metadata_alters_and_flat_appends(
         tbl.add_column("note", "string")
     with pytest.raises(ValueError, match="CLUSTERED"):
         tbl.drop_column("v")
-    parts = tmp_path / "parts"
-    os.makedirs(parts)
-    _df(spark, [(3, "c")]).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "w")
-    )
-    import glob as _g
-
-    for i, f in enumerate(_g.glob(str(tmp_path / "w" / "*.parquet"))):
-        os.link(f, parts / f"p{i}.parquet")
+    register_table(spark, "cl_ins", tbl.root)
     with pytest.raises(ValueError, match="CLUSTERED"):
-        append_files_local(tbl.root, str(parts))
+        sql(spark, "INSERT INTO cl_ins VALUES (3, 'c')")
     # the clustered read still works — nothing was de-clustered
     assert tbl.read_clustered(spark).count() == 2
 
@@ -3757,7 +3769,6 @@ def _leftovers(root):
         "append_clustered",
         "compact_small_files",
         "compact_clustered",
-        "append_files_local",
     ],
 )
 def test_failed_add_file_writer_leaves_no_temp_dirs(
@@ -3769,11 +3780,7 @@ def test_failed_add_file_writer_leaves_no_temp_dirs(
     table still reads its pre-call rows. ``append`` fails in a write
     task (a UDF that throws on one row); the other writers fail inside
     the shared staging step, after their new parts were written."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from datapipeline_scraping_spark.operators.txn import (
-        append_files_local,
         compact_clustered,
         compact_small_files,
     )
@@ -3813,20 +3820,7 @@ def test_failed_add_file_writer_leaves_no_temp_dirs(
                 tbl.append_clustered(batch)
             elif writer == "compact_small_files":
                 compact_small_files(spark, tbl.root)
-            elif writer == "compact_clustered":
-                compact_clustered(spark, tbl.root)
             else:
-                parts = tmp_path / "parts"  # caller-owned: outside the root
-                parts.mkdir()
-                pq.write_table(
-                    pa.table(
-                        {
-                            "pk": pa.array([100, 101], pa.int64()),
-                            "v": ["v100", "v101"],
-                        }
-                    ),
-                    str(parts / "part-0.parquet"),
-                )
-                append_files_local(tbl.root, str(parts))
+                compact_clustered(spark, tbl.root)
     assert _leftovers(tbl.root) == []
     assert sorted(tuple(r) for r in tbl.read(spark).collect()) == before

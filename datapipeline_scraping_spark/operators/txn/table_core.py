@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ...sources.manifest_log import log_path, read_log_entry, read_pointer
-from .errors import ConcurrentWriteError, SnapshotExpiredError, UnreadableRootError
+from .errors import (
+    ConcurrentWriteError,
+    SnapshotExpiredError,
+    UnreadableRootError,
+)
 from .stats import _inherited_meta
 
 #: log-entry fields a version derived from a base entry copies forward

@@ -1039,7 +1039,9 @@ def _insert_rows(spark: SparkSession, root: str, rest: str) -> DataFrame:
     try:
         jss = spark._jsparkSession
         state = jss.sessionState()
-        plan = state.sqlParser().parsePlan(f"INSERT INTO {_INSERT_TARGET}{rest}")
+        plan = state.sqlParser().parsePlan(
+            f"INSERT INTO {_INSERT_TARGET}{rest}"
+        )
         mode = getattr(state, "executePlan$default$2")()
         append = state.executePlan(plan, mode).analyzed()
     finally:

@@ -269,6 +269,37 @@ def test_group_append_member_on_evolved_table(spark, evolved, tmp_path):
     assert mt._log_entry(mt.version())["specs"]
 
 
+def test_append_files_local_routes_into_active_spec(spark, tmp_path):
+    """Parquet parts written outside the table (the job the deleted
+    ``append_files_local`` did) now land through ``sql()`` INSERT ...
+    SELECT over the files, i.e. :meth:`ManifestTable.append`: they go
+    under the ACTIVE (flat, after two evolutions) spec's subtree and
+    the spec history is kept."""
+    from datapipeline_scraping_spark.sources.manifest_sql import (
+        register_table,
+        sql,
+    )
+
+    mt = ManifestTable(str(tmp_path / "t"), retention_sec=3600)
+    base = spark.createDataFrame([(i, float(i)) for i in range(5)], "id int, v double")
+    mt.commit(base, keep_snapshots=50)
+    mt.evolve_partition(["id"], keep_snapshots=50)
+    mt.evolve_partition([], keep_snapshots=50)  # active spec: flat again
+    spark.createDataFrame(
+        [(i, float(i)) for i in range(5, 8)], "id int, v double"
+    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "w"))
+    register_table(spark, "evol_files", mt.root)
+    sql(
+        spark,
+        f"INSERT INTO evol_files SELECT * FROM parquet.`{tmp_path / 'w'}`",
+    )
+    entry = mt._log_entry(mt.version())
+    assert entry["specs"]
+    snap = os.path.join(mt.root, entry["snapshot"])
+    assert glob.glob(snap + "/spec-2/append-*.parquet")
+    assert sorted(r["id"] for r in mt.read(spark).collect()) == list(range(8))
+
+
 def test_sql_datasource_reads_evolved_snapshots(spark, evolved):
     mt, full = evolved
     from datapipeline_scraping_spark.sources.manifest_datasource import (

@@ -11,10 +11,10 @@ Without a transactional table format the engine emulates MERGE as
 which is idempotent and SQL-expressible (SURVEY.md §7.3). On a real
 deployment the same API swaps in Delta/Iceberg ``MERGE INTO``.
 
-``txn.merge_write`` runs exactly this rewrite (:func:`merge_upsert`)
-for every merge without a clause or schema evolution; only
-conditional or evolving merges pay :func:`merge_into`'s full-outer
-join.
+``txn.merge_commit`` — behind both ``merge_write`` and SQL ``MERGE
+INTO`` — runs exactly this rewrite (:func:`merge_upsert`) for every
+merge without a clause or schema evolution; only conditional or
+evolving merges pay :func:`merge_into`'s full-outer join.
 
 Scale notes: the source is churn-sized, so AQE broadcasts its keys
 and the anti join is a filter on the target scan — the target is read
@@ -30,8 +30,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def merge_upsert(target: DataFrame, source: DataFrame, pk: str) -> DataFrame:
+def merge_upsert(
+    target: DataFrame, source: DataFrame, pk: str | list[str]
+) -> DataFrame:
     """S10: source rows win on pk conflict; unmatched target rows kept.
+    A list ``pk`` is a composite key (a row with any NULL key column
+    matches nothing).
 
     Same rows and schema as :func:`merge_into` with no clauses: the
     output has the target's columns (extra source columns drop, a

@@ -1,10 +1,8 @@
-"""External ingestion paths: CDF application and the MERGE writer seam."""
+"""External ingestion paths: CDF application and the one MERGE planner."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -48,25 +46,103 @@ def apply_diff(
     return kept.unionByName(add.select(*base.columns))
 
 
+def merge_commit(
+    spark: SparkSession,
+    tbl: ManifestTable,
+    source: DataFrame,
+    pk: str | list[str],
+    *,
+    clauses: Callable[[dict], dict | None] | None = None,
+    schema_evolution: bool = False,
+    unique_matches: str | None = None,
+    retries: int = 2,
+) -> int:
+    """MERGE ``source`` into ``tbl`` and commit; returns the committed
+    version. The one MERGE planner: :func:`merge_write` and SQL
+    ``MERGE INTO`` (``sources/manifest_sql.py``) both call it.
 
-def delta_available(spark: SparkSession | None = None) -> bool:
-    """True iff the delta-spark Python binding AND its jar are usable.
+    Each attempt reads the live snapshot, plans the merge over it and
+    commits against that version; a concurrent commit re-runs the
+    attempt (optimistic concurrency, Delta's rebase-and-retry) up to
+    ``retries`` times before :class:`ConcurrentWriteError` propagates.
+    ``clauses(entry)`` runs first in every attempt with the attempt's
+    base log entry and returns :func:`merge_into`'s clause keywords,
+    or None for no clause — whatever the caller derives from the live
+    table (a layout guard, a ``SET *`` expansion) is re-derived there.
 
-    Probe only — no session mutation. Delta needs both the ``delta``
-    Python package and the SQL extension jar on the JVM classpath; the
-    jar check is done lazily via the py4j JVM view when a session is
-    supplied (``DeltaTable.isDeltaTable`` would raise ClassNotFound)."""
+    The plan follows the clause shape. With no clause and no schema
+    evolution the merge is the plain upsert :func:`merge_upsert` —
+    ``source ∪ (target ▷ source.pk)``: the churn-sized source keys
+    broadcast, so the target is scanned once and never shuffled or
+    sorted. That plan reads the source twice, so a source that is not
+    already cached is persisted for the call (and unpersisted after
+    it, also when the commit fails), and the result is coalesced to at
+    most the target's data-file count. Conditional or evolving merges
+    run :func:`merge_into`'s full-outer join.
+
+    Source-key uniqueness is the caller's contract (NULL pks never
+    match). ``unique_matches`` names a statement that enforces ANSI
+    instead: several source rows matching one target row raise
+    ``ValueError``. The source's duplicated keys are looked up once,
+    and the target is probed only when there are some."""
+    keys = [pk] if isinstance(pk, str) else list(pk)
+    own_cache = False
+    has_dups = None  # does the source repeat a key?
     try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    if spark is not None:
-        try:
-            spark._jvm.io.delta.tables.DeltaTable  # noqa: B018
-        except Exception:
-            return False
-    return True
-
+        for attempt in range(retries + 1):
+            base_ver = tbl.version() or 0
+            kw = clauses(tbl._log_entry(base_ver) or {}) if clauses else None
+            upsert = kw is None and not schema_evolution
+            # cache the twice-read source so its lineage runs once —
+            # UDFs and non-deterministic keys are evaluated once per
+            # row. A cache the caller made stays.
+            if upsert and source.storageLevel == StorageLevel.NONE:
+                source.persist()
+                own_cache = True
+            target = tbl.read(spark)
+            if unique_matches:
+                # a repeated NULL key is probed too and matches nothing
+                # (dropna would also drop NaN, which does match NaN)
+                dups = (
+                    source.groupBy(*keys)
+                    .count()
+                    .filter(F.col("count") > 1)
+                    .select(*keys)
+                )
+                if has_dups is None:
+                    has_dups = not dups.isEmpty()
+                if has_dups and not dups.join(
+                    target.select(*keys), on=keys, how="left_semi"
+                ).isEmpty():
+                    raise ValueError(
+                        f"{unique_matches}: multiple source rows match a "
+                        f"single target row on {keys} — ANSI requires an "
+                        f"error (duplicate source keys are only legal when "
+                        f"they match no target row)"
+                    )
+            if upsert:
+                # the union adds the source's partitions to the
+                # target's: cap the output at the target's file count
+                # so batches add no files
+                n_files = max(1, len(target.inputFiles()))
+                result = merge_upsert(target, source, keys).coalesce(n_files)
+            else:
+                result = merge_into(
+                    target,
+                    source,
+                    keys,
+                    schema_evolution=schema_evolution,
+                    **(kw or {}),
+                )
+            try:
+                return tbl.commit(result, expect_version=base_ver)
+            except ConcurrentWriteError:
+                if attempt == retries:
+                    raise
+    finally:
+        if own_cache:
+            source.unpersist()
+    raise AssertionError("unreachable")
 
 
 def merge_write(
@@ -77,155 +153,30 @@ def merge_write(
     *,
     matched_delete: Column | None = None,
     matched_update: Column | None = None,
-    writer: str = "auto",
+    writer: str = "manifest",
     schema_evolution: bool = False,
 ) -> None:
-    """MERGE ``source`` into the table stored at ``target_path``.
+    """MERGE ``source`` into the manifest table at ``target_path``
+    through :func:`merge_commit` (snapshot + atomic pointer swap,
+    optimistic-concurrency retry — safe under concurrent writers on
+    any atomic-rename filesystem). A legacy plain parquet dir at
+    ``target_path`` is migrated in place on first use.
 
-    writer="delta"    — Delta Lake ``MERGE INTO`` (transactional, safe
-                        under concurrent writers); raises RuntimeError
-                        when Delta is not on the classpath.
-    writer="manifest" — merge rewrite committed through
-                        :class:`ManifestTable` (snapshot + atomic
-                        pointer swap, optimistic-concurrency retry —
-                        safe under concurrent writers on any
-                        atomic-rename filesystem). A legacy plain
-                        parquet dir at ``target_path`` is migrated in
-                        place on first use.
-    writer="parquet"  — legacy write-new-then-swap on a PLAIN parquet
-                        dir (single-writer only; kept for targets that
-                        other readers address with a bare
-                        ``spark.read.parquet(path)``). If the target
-                        is already manifest-backed, this upgrades to
-                        the manifest protocol automatically.
-    writer="auto"     — delta when available, else manifest.
-
-    Clause semantics are identical across all paths (NULL conditions
-    do not fire; source-pk uniqueness is the caller's contract).
-
-    On the manifest and parquet paths the plan follows the clause
-    shape. With no clause and no schema evolution the merge is the
-    plain upsert :func:`merge_upsert` — ``source ∪ (target ▷
-    source.pk)``: the churn-sized source keys broadcast, so the target
-    is scanned once and never shuffled or sorted. That plan reads the
-    source twice, so a source that is not already cached is persisted
-    for the call (and unpersisted after it, also when the commit
-    fails), and the result is coalesced to at most the target's
-    data-file count. Conditional or evolving merges run
-    :func:`merge_into`'s full-outer join."""
-    if writer == "auto":
-        writer = "delta" if delta_available(spark) else "manifest"
-    if writer == "delta":
-        if not delta_available(spark):
-            raise RuntimeError(
-                "writer='delta' requested but delta-spark is not usable in "
-                "this environment (see docs/DELTA_PROBE.md); use "
-                "writer='parquet' or 'auto'"
-            )
-        from delta.tables import DeltaTable  # pragma: no cover (no delta here)
-
-        tgt = DeltaTable.forPath(spark, target_path)
-        m = tgt.alias("t").merge(source.alias("s"), f"t.{pk} = s.{pk}")
-        if matched_delete is not None:
-            m = m.whenMatchedDelete(condition=matched_delete)
-        if matched_update is not None:
-            m = m.whenMatchedUpdateAll(condition=matched_update)
-        else:
-            m = m.whenMatchedUpdateAll()
-        m.whenNotMatchedInsertAll().execute()
-        return
-    if writer not in ("parquet", "manifest"):
-        raise ValueError(f"unknown writer {writer!r}")
-    upsert = (
-        matched_delete is None
-        and matched_update is None
-        and not schema_evolution
+    ``matched_delete`` / ``matched_update`` are :func:`merge_into`'s
+    conditions (NULL does not fire); with neither and no
+    ``schema_evolution`` the merge is the broadcast anti-join upsert.
+    ``writer`` has one value, ``"manifest"``."""
+    if writer != "manifest":
+        raise ValueError(
+            f"unknown writer {writer!r}: 'manifest' is the only writer "
+            f"(the 'delta', 'parquet' and 'auto' writers were removed)"
+        )
+    tbl = ManifestTable(target_path)
+    tbl.adopt_plain()
+    clauses = None
+    if matched_delete is not None or matched_update is not None:
+        kw = {"matched_delete": matched_delete, "matched_update": matched_update}
+        clauses = lambda _entry: kw  # noqa: E731
+    merge_commit(
+        spark, tbl, source, pk, clauses=clauses, schema_evolution=schema_evolution
     )
-
-    def merged(target: DataFrame) -> DataFrame:
-        if not upsert:
-            return merge_into(
-                target,
-                source,
-                pk,
-                matched_delete=matched_delete,
-                matched_update=matched_update,
-                schema_evolution=schema_evolution,
-            )
-        # the union adds the source's partitions to the target's: cap
-        # the output at the target's file count so batches add no files
-        n_files = max(1, len(target.inputFiles()))
-        return merge_upsert(target, source, pk).coalesce(n_files)
-
-    # the upsert plan reads the source twice (its keys and its rows):
-    # cache it so its lineage runs once — UDFs and non-deterministic
-    # keys are evaluated once per row. A cache the caller made stays.
-    own_cache = upsert and source.storageLevel == StorageLevel.NONE
-    if own_cache:
-        source.persist()
-    try:
-        tbl = ManifestTable(target_path)
-        if writer == "manifest" or tbl.exists():
-            tbl.adopt_plain()
-            # optimistic-concurrency loop: re-read + re-merge on
-            # conflict, exactly a Delta commit retry
-            for attempt in range(3):
-                base_ver = tbl.version() or 0
-                try:
-                    tbl.commit(merged(tbl.read(spark)), expect_version=base_ver)
-                    return
-                except ConcurrentWriteError:
-                    if attempt == 2:
-                        raise
-        recover_swap(target_path)
-        result = merged(spark.read.parquet(target_path))
-        # write-new-then-swap: materialize the merge next to the
-        # target (sibling path — same filesystem by construction, so
-        # os.rename can never fail EXDEV), then swap directories. Each
-        # rename is atomic, but the swap is TWO renames — a crash in the
-        # window between them leaves target_path absent with the
-        # previous table preserved under the __old_ suffix;
-        # :func:`recover_swap` (run automatically at the start of the
-        # next merge_write) renames it back. A crash any earlier leaves
-        # the live table untouched. This is the honest ceiling of a
-        # plain-filesystem sink for a SINGLE writer; true atomicity (and
-        # concurrent writers, and no swap window) is exactly what the
-        # delta writer path provides — on object stores swap a
-        # manifest/partition pointer instead.
-        tmp = f"{target_path.rstrip('/')}__merge_{uuid.uuid4().hex[:8]}"
-        result.write.mode("overwrite").parquet(tmp)
-        old = f"{target_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old)
-    finally:
-        if own_cache:
-            source.unpersist()
-
-
-
-def recover_swap(target_path: str) -> bool:
-    """Repair a crash inside merge_write's two-rename swap window.
-
-    If ``target_path`` is absent but a ``__old_`` snapshot of it exists
-    (the only state the swap can strand), rename the snapshot back and
-    return True. Orphaned ``__merge_`` staging dirs (crash before the
-    first rename) and leftover ``__old_`` dirs next to a LIVE target
-    (crash before the final rmtree) are deleted either way — the live
-    table supersedes both."""
-    base = target_path.rstrip("/")
-    parent, name = os.path.split(base)
-    try:
-        siblings = os.listdir(parent or ".")
-    except FileNotFoundError:
-        return False
-    olds = sorted(s for s in siblings if s.startswith(f"{name}__old_"))
-    tmps = [s for s in siblings if s.startswith(f"{name}__merge_")]
-    restored = False
-    if not os.path.exists(base) and olds:
-        os.rename(os.path.join(parent, olds[0]), base)
-        olds = olds[1:]
-        restored = True
-    for leftover in olds + tmps:
-        shutil.rmtree(os.path.join(parent, leftover), ignore_errors=True)
-    return restored

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -186,7 +187,9 @@ def _write_bloom_sidecar(
                 vals = pdf["__v"].unique()
                 m, k, bits = bloom_bits(vals, fpp)
                 uri = pdf["__f"].iloc[0]
-                path = uri.split("://")[-1] if "://" in uri else uri
+                # a percent-encoded URI: decode it, or a root with a
+                # space or a '%' keys no data file
+                path = unquote(urlsplit(uri).path) if "://" in uri else uri
                 rel = os.path.relpath(path, staged_abs)
                 return pd.DataFrame(
                     {

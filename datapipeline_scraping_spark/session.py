@@ -15,6 +15,7 @@ cores and rely on AQE coalescing.
 from __future__ import annotations
 
 import os
+import re
 import warnings
 
 from pyspark.sql import SparkSession
@@ -104,11 +105,15 @@ def build_spark(
 ) -> SparkSession:
     """Build a tuned local/cluster SparkSession.
 
-    Local parallelism follows ``SPARK_GRAFT_CPUS`` (driver contract);
-    on a real cluster pass ``master=None`` with external spark-submit
-    conf and only the SQL conf below applies.
+    Local parallelism follows a ``local[N]`` master's N, else
+    ``SPARK_GRAFT_CPUS`` (driver contract); on a real cluster pass
+    ``master=None`` with external spark-submit conf and only the SQL
+    conf below applies.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    local_n = re.fullmatch(r"local\[(\d+)\]", master or "")
+    cpus = int(
+        local_n.group(1) if local_n else os.environ.get("SPARK_GRAFT_CPUS", "32")
+    )
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

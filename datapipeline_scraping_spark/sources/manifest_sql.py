@@ -18,9 +18,11 @@ existing transactional writers:
   files + ``_upd/`` post-image sidecar, O(matched rows) not O(table));
 - ``DELETE FROM t [WHERE pred]`` → :meth:`ManifestTable.delete_where`
   (deletion-vector sidecar, same cost shape);
-- ``MERGE INTO t [AS a] USING s [AS b] ON <key equalities> WHEN ...``
-  → :func:`..operators.merge.merge_into` + CAS commit (copy-on-write,
-  the same path ``merge_write(writer="manifest")`` takes);
+- ``MERGE INTO t [[AS] a] USING s [[AS] b] ON <key equalities> WHEN ...``
+  → :func:`..operators.txn.merge_commit`, the planner and CAS retry
+  loop ``merge_write`` runs (copy-on-write; ``UPDATE SET *`` plus
+  ``INSERT *`` is the broadcast anti-join upsert, any other clause set
+  :func:`..operators.merge.merge_into`'s full-outer join);
 - ``ALTER TABLE t PARTITION BY (c1[, c2 ...])`` →
   :meth:`ManifestTable.evolve_partition` (r12 — metadata-only
   partition evolution; ``()`` evolves to unpartitioned);
@@ -99,7 +101,8 @@ the snapshot ledger.
 
 Scale shape: UPDATE/DELETE route merge-on-read (churn-sized sidecars,
 zero data-file rewrites — the only affordable DML at 100 TB);
-MERGE is one keyed full-outer join + CAS commit with bounded
+MERGE is one keyed join (a broadcast anti join for the plain upsert,
+a full outer join for conditional clauses) + CAS commit with bounded
 optimistic retry, exactly Delta's rebase-and-retry.
 """
 
@@ -117,8 +120,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import ident, string_lit
-from ..operators.merge import merge_into
-from ..operators.txn import ConcurrentWriteError, ManifestTable
+from ..operators.txn import ManifestTable, merge_commit
 from .manifest_datasource import register as _register_format
 from .manifest_log import resolve_version
 from .skipping import column_types, conjunct, kept_files
@@ -804,9 +806,13 @@ _DELETE_RE = re.compile(
     r"(?:\s+WHERE\s+(?P<pred>.*))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+#: a MERGE alias, ``AS`` optional; the keywords around it are no alias
+_MERGE_ALIAS = (
+    r"(?:AS\s+)?(?!(?:AS|USING|ON|WHEN)\b)(?P<{}>[A-Za-z_][A-Za-z0-9_]*)"
+)
 _MERGE_HEAD = re.compile(
     r"^\s*MERGE\s+INTO\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
-    r"(?:\s+AS\s+(?P<talias>[A-Za-z_][A-Za-z0-9_]*))?"
+    rf"(?:\s+{_MERGE_ALIAS.format('talias')})?"
     r"\s+USING\s+",
     re.IGNORECASE | re.DOTALL,
 )
@@ -931,12 +937,12 @@ def _parse_merge(statement: str) -> dict | None:
             )
         src, rest = mi.group(0), rest[mi.end() :]
     mt = re.match(
-        r"\s*(?:AS\s+(?P<salias>[A-Za-z_][A-Za-z0-9_]*)\s+)?ON\s",
+        rf"\s*(?:{_MERGE_ALIAS.format('salias')}\s+)?ON\s",
         rest,
         re.IGNORECASE | re.DOTALL,
     )
     if mt is None:
-        raise ValueError("MERGE: expected [AS <alias>] ON <condition>")
+        raise ValueError("MERGE: expected [[AS] <alias>] ON <condition>")
     rest = rest[mt.end() :]
     whens = _keyword_spans(rest, "WHEN")
     if not whens:
@@ -1294,10 +1300,6 @@ def _guard_unclustered_merge(root: str, entry: dict) -> None:
 
 def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
     spec = _resolve(spark, p["tbl"])
-    tbl = ManifestTable(spec["root"])
-    _guard_unclustered_merge(
-        spec["root"], tbl._log_entry(tbl.version() or 0) or {}
-    )
     talias = (p["talias"] or p["tbl"]).lower()
     src_s = p["src"]
     if src_s.startswith("("):
@@ -1462,50 +1464,34 @@ def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
         if ins is not None
         else F.lit(False)
     )
+    # UPDATE SET * + INSERT *, both unconditional: the plain upsert
+    upsert = ins == {"cond": None} and matched == [
+        {"kind": "U", "cond": None, "set": None}
+    ]
 
-    for attempt in range(retries + 1):
-        base_ver = tbl.version() or 0
-        # re-check the layout at THIS attempt's base: a concurrent
+    def clauses(entry_now: dict) -> dict | None:
+        # re-checked at every attempt's base: a concurrent
         # commit_clustered between retries must refuse, and the CAS
-        # against base_ver guarantees the checked entry is the one
+        # against that base guarantees the checked entry is the one
         # the commit supersedes
-        entry_now = tbl._log_entry(base_ver) or {}
         _guard_unclustered_merge(spec["root"], entry_now)
-        matched_set = _compile_matched_set(entry_now)
-        target = tbl.read(spark)
-        # ANSI/Delta: multiple source rows matching ONE TARGET row
-        # must error — but duplicate source keys that match no target
-        # row are legal (both INSERT, or both no-op). Scope the
-        # uniqueness check to keys present in the target.
-        n_dup_matched = (
-            source.groupBy(*pk)
-            .count()
-            .filter(F.col("count") > 1)
-            .join(target.select(*pk).distinct(), on=list(pk), how="left_semi")
-            .limit(1)
-            .count()
-        )
-        if n_dup_matched:
-            raise ValueError(
-                f"MERGE INTO {p['tbl']}: multiple source rows match a "
-                f"single target row on {list(pk)} — ANSI requires an "
-                f"error (duplicate source keys are only legal when "
-                f"they match no target row)"
-            )
-        result = merge_into(
-            target,
-            source=source,
-            pk=pk,
-            matched_delete=matched_delete,
-            matched_update=matched_update,
-            matched_set=matched_set,
-            not_matched_insert=not_matched_insert,
-        )
-        try:
-            ver = tbl.commit(result, expect_version=base_ver)
-            _refresh_view(spark, p["tbl"])
-            return ver
-        except ConcurrentWriteError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+        if upsert:
+            return None
+        return {
+            "matched_delete": matched_delete,
+            "matched_update": matched_update,
+            "matched_set": _compile_matched_set(entry_now),
+            "not_matched_insert": not_matched_insert,
+        }
+
+    ver = merge_commit(
+        spark,
+        ManifestTable(spec["root"]),
+        source,
+        pk,
+        clauses=clauses,
+        unique_matches=f"MERGE INTO {p['tbl']}",
+        retries=retries,
+    )
+    _refresh_view(spark, p["tbl"])
+    return ver

@@ -825,3 +825,19 @@ def test_sql_merge_allows_ansi_legal_duplicate_inserts(spark, tmp_path):
         ).collect()
     )
     assert got == [(1, "a"), (5, "x"), (5, "y")]
+    # the same aliases without AS route too (both bare)
+    spark.createDataFrame(
+        [(1, "b", 3), (6, "z", 4), (6, "w", 5)], "pk long, v string, n long"
+    ).createOrReplaceTempView("ansi_src")
+    sql(
+        spark,
+        "MERGE INTO ansi_sql t USING ansi_src s ON t.pk = s.pk "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+    )
+    got = sorted(
+        (r["pk"], r["v"]) for r in spark.sql(
+            "SELECT pk, v FROM ansi_sql"
+        ).collect()
+    )
+    assert got == [(1, "b"), (5, "x"), (5, "y"), (6, "w"), (6, "z")]

@@ -1,10 +1,13 @@
-"""Clause-free ``merge_write``: the broadcast anti-join upsert.
+"""Clause-free MERGE: the broadcast anti-join upsert.
 
-With no clause and no schema evolution, ``merge_write`` commits
-``source ∪ (target ▷ source.pk)`` (``operators/merge.py::merge_upsert``)
-instead of ``merge_into``'s full-outer join. These tests pin that the
-two give the same table, that the source lineage runs once, and that
-the call leaves the session's cache as it found it.
+With no clause and no schema evolution, ``merge_commit`` — behind
+``merge_write`` and SQL ``MERGE INTO ... UPDATE SET * ... INSERT *`` —
+commits ``source ∪ (target ▷ source.pk)``
+(``operators/merge.py::merge_upsert``) instead of ``merge_into``'s
+full-outer join. These tests pin that the two give the same table,
+that SQL ``MERGE`` and ``merge_write`` leave identical tables, that
+the source lineage runs once, and that the call leaves the session's
+cache as it found it.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ from datapipeline_scraping_spark.operators.txn import (
     ManifestTable,
     merge_write,
 )
+from datapipeline_scraping_spark.sources.manifest_sql import register_table, sql
 
 SCHEMA = "pk long, v string, n long"
 
@@ -109,13 +113,139 @@ def test_parity_target_with_deletion_vector_and_update_delta(spark, tmp_path):
     _check_parity(spark, tbl, src)
 
 
-def test_parity_legacy_parquet_writer(spark, tmp_path):
+def test_parity_legacy_plain_dir_is_adopted(spark, tmp_path):
     path = str(tmp_path / "plain")
     spark.createDataFrame([(1, "a", 1), (2, "b", 2)], SCHEMA).write.parquet(path)
     src = spark.createDataFrame([(2, "B", 20), (3, "C", 30)], SCHEMA)
     expected = _rows(merge_into(spark.read.parquet(path), src, "pk"))
-    merge_write(spark, path, src, "pk", writer="parquet")
-    assert _rows(spark.read.parquet(path)) == expected
+    merge_write(spark, path, src, "pk", writer="manifest")
+    tbl = ManifestTable(path)
+    assert tbl.version() == 2  # adopted (1), then merged
+    assert _rows(tbl.read(spark)) == expected
+
+
+@pytest.mark.parametrize("writer", ["delta", "parquet", "auto"])
+def test_removed_writers_raise(spark, tmp_path, writer):
+    tbl = _table(spark, tmp_path, [(1, "a", 1)])
+    src = spark.createDataFrame([(1, "A", 10)], SCHEMA)
+    with pytest.raises(ValueError, match="only writer"):
+        merge_write(spark, tbl.root, src, "pk", writer=writer)
+    assert tbl.version() == 1
+
+
+# --- SQL MERGE and merge_write leave the same table -----------------------
+
+UPSERT_SQL = (
+    "MERGE INTO {name} AS t USING {src} AS s ON t.pk = s.pk "
+    "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+)
+
+
+def _twin_tables(spark, tmp_path, rows, mor=False):
+    """Two tables with the same rows: one for merge_write, one
+    registered for SQL MERGE. ``mor`` leaves a deletion vector and an
+    update delta on both."""
+    out = []
+    for side in ("df", "sql"):
+        tbl = ManifestTable(str(tmp_path / side))
+        tbl.commit(spark.createDataFrame(rows, SCHEMA).repartition(2))
+        if mor:
+            tbl.delete_where(spark, "pk IN (1, 2)", ["pk"])
+            tbl.update_where(spark, "pk IN (3, 4)", {"v": "'upd'"}, ["pk"])
+        out.append(tbl)
+    register_table(spark, "twin_sql", out[1].root, key_cols=["pk"])
+    return out
+
+
+SQL_PARITY_CASES = {
+    "null_pks": (
+        [(1, "a", 1), (None, "tn", 2), (3, "c", 3)],
+        [(1, "A", 10), (None, "sn", 20), (None, "sn2", 21), (4, "D", 40)],
+        SCHEMA,
+        False,
+    ),
+    "duplicate_unmatched_source_pks": (
+        [(1, "a", 1), (2, "b", 2)],
+        [(1, "x", 10), (5, "e", 50), (5, "f", 51)],
+        SCHEMA,
+        False,
+    ),
+    "extra_source_column": (
+        [(1, "a", 1), (2, "b", 2)],
+        [(2, "B", 20, "junk"), (3, "C", 30, "junk")],
+        SCHEMA + ", extra string",
+        False,
+    ),
+    "merge_on_read_target": (
+        [(i, f"v{i}", i) for i in range(10)],
+        [(2, "s2", 20), (3, "s3", 30), (11, "s11", 110)],
+        SCHEMA,
+        True,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SQL_PARITY_CASES))
+def test_sql_merge_matches_merge_write(spark, tmp_path, case):
+    rows, src_rows, src_schema, mor = SQL_PARITY_CASES[case]
+    df_tbl, sql_tbl = _twin_tables(spark, tmp_path, rows, mor)
+    src = spark.createDataFrame(src_rows, src_schema)
+    src.createOrReplaceTempView("twin_src")
+    merge_write(spark, df_tbl.root, src, "pk", writer="manifest")
+    sql(spark, UPSERT_SQL.format(name="twin_sql", src="twin_src"))
+    want, got = df_tbl.read(spark), sql_tbl.read(spark)
+    assert _shape(got.schema) == _shape(want.schema)
+    assert _rows(got) == _rows(want)
+    assert sql_tbl.version() == df_tbl.version()
+
+
+def test_sql_merge_missing_source_column_raises_like_merge_write(spark, tmp_path):
+    df_tbl, sql_tbl = _twin_tables(spark, tmp_path, [(1, "a", 1)])
+    src = spark.createDataFrame([(1, "A")], "pk long, v string")
+    src.createOrReplaceTempView("twin_src")
+    before = _persisted(spark)
+    with pytest.raises(AnalysisException):
+        merge_write(spark, df_tbl.root, src, "pk", writer="manifest")
+    with pytest.raises(AnalysisException):
+        sql(spark, UPSERT_SQL.format(name="twin_sql", src="twin_src"))
+    assert df_tbl.version() == sql_tbl.version() == 1
+    assert _persisted(spark) == before
+
+
+@pytest.mark.parametrize("clause_free", [True, False])
+def test_sql_merge_duplicate_source_keys_matching_a_target_row_raise(
+    spark, tmp_path, clause_free
+):
+    """ANSI: several source rows matching one target row is an error on
+    the upsert plan and on the full-outer one; duplicated keys that
+    match no target row (5) or are NULL insert every copy."""
+    tbl = _table(spark, tmp_path, [(1, "a", 1), (2, "b", 2)])
+    register_table(spark, "dup_tgt", tbl.root, key_cols=["pk"])
+    clauses = (
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        if clause_free
+        else "WHEN MATCHED AND s.n > 0 THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    stmt = f"MERGE INTO dup_tgt AS t USING dup_src AS s ON t.pk = s.pk {clauses}"
+    spark.createDataFrame(
+        [(2, "x", 20), (2, "y", 21), (5, "e", 50)], SCHEMA
+    ).createOrReplaceTempView("dup_src")
+    before = _persisted(spark)
+    with pytest.raises(ValueError, match="multiple source rows match"):
+        sql(spark, stmt)
+    assert tbl.version() == 1
+    assert _persisted(spark) == before
+    spark.createDataFrame(
+        [(2, "x", 20), (5, "e", 50), (5, "f", 51), (None, "n", 1), (None, "m", 2)],
+        SCHEMA,
+    ).createOrReplaceTempView("dup_src")
+    sql(spark, stmt)
+    assert _rows(tbl.read(spark)) == sorted(
+        [(1, "a", 1), (2, "x", 20), (5, "e", 50), (5, "f", 51),
+         (None, "n", 1), (None, "m", 2)],
+        key=repr,
+    )
 
 
 # --- the source lineage runs once -----------------------------------------

@@ -420,62 +420,6 @@ def test_merge_into_defaults_are_plain_upsert(spark):
     assert got == want == {1: "a", 2: "B", 3: "C"}
 
 
-def test_merge_write_parquet_fallback_roundtrip(spark, tmp_path):
-    """merge_write on a parquet target: conditional MERGE applied and
-    atomically swapped in place; old contents fully replaced."""
-    from datapipeline_scraping_spark.operators.txn import merge_write
-
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "gone")], "pk long, v string"
-    ).write.parquet(path)
-    source = spark.createDataFrame(
-        [(2, "B"), (3, "gone"), (4, "D")], "pk long, v string"
-    )
-    merge_write(
-        spark,
-        path,
-        source,
-        "pk",
-        matched_delete=F.col("s.v") == "gone",
-        writer="parquet",
-    )
-    got = {r["pk"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B", 4: "D"}
-    # no leftover staging/backup dirs next to the target
-    leftovers = [p.name for p in tmp_path.iterdir() if p.name != "tbl"]
-    assert leftovers == []
-
-
-def test_merge_write_auto_selects_available_writer(spark, tmp_path):
-    """auto == delta iff delta is importable (probed, not assumed);
-    in this container the probe is False (docs/DELTA_PROBE.md) and the
-    manifest fallback must engage (migrating the plain dir in place);
-    writer='delta' must then refuse loudly rather than silently
-    downgrade."""
-    import pytest as _pytest
-
-    from datapipeline_scraping_spark.operators.txn import (
-        ManifestTable,
-        delta_available,
-        merge_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(1, "a")], "pk long, v string").write.parquet(path)
-    source = spark.createDataFrame([(1, "A")], "pk long, v string")
-    if delta_available(spark):  # pragma: no cover — not this container
-        merge_write(spark, path, source, "pk", writer="delta")
-    else:
-        with _pytest.raises(RuntimeError, match="delta"):
-            merge_write(spark, path, source, "pk", writer="delta")
-        merge_write(spark, path, source, "pk", writer="auto")
-        tbl = ManifestTable(path)
-        assert tbl.exists()  # auto upgraded the plain dir to manifest
-        got = {r["pk"]: r["v"] for r in tbl.read(spark).collect()}
-        assert got == {1: "A"}
-
-
 def test_salted_join_rejects_outer(spark):
     import pytest as _pytest
 
@@ -626,52 +570,6 @@ def test_html_detail_parser_handles_tag_soup(spark):
     assert row["title"] == "A & B"
     assert row["links"] == ["/one", "/two"]
     assert "trailing text" in row["full_text"]
-
-
-def test_recover_swap_restores_stranded_snapshot(tmp_path):
-    """Crash inside merge_write's two-rename window: target absent,
-    __old_ snapshot present -> recover_swap renames it back and clears
-    leftover staging dirs (the round-4 crash-recovery contract)."""
-    import os
-
-    from datapipeline_scraping_spark.operators.txn import recover_swap
-
-    base = str(tmp_path / "tbl")
-    old = f"{base}__old_deadbeef"
-    stage = f"{base}__merge_cafebabe"
-    os.makedirs(old)
-    open(os.path.join(old, "part-0.parquet"), "w").write("data")
-    os.makedirs(stage)
-
-    assert recover_swap(base) is True
-    assert os.path.isdir(base)
-    assert open(os.path.join(base, "part-0.parquet")).read() == "data"
-    assert not os.path.exists(old) and not os.path.exists(stage)
-
-
-def test_recover_swap_live_target_cleans_leftovers_only(tmp_path):
-    """Live target + stale __old_/__merge_ siblings: the live table
-    supersedes both; recover_swap deletes the leftovers untouched."""
-    import os
-
-    from datapipeline_scraping_spark.operators.txn import recover_swap
-
-    base = str(tmp_path / "tbl")
-    os.makedirs(base)
-    open(os.path.join(base, "part-0.parquet"), "w").write("live")
-    os.makedirs(f"{base}__old_00000001")
-    os.makedirs(f"{base}__merge_00000002")
-
-    assert recover_swap(base) is False
-    assert open(os.path.join(base, "part-0.parquet")).read() == "live"
-    assert not os.path.exists(f"{base}__old_00000001")
-    assert not os.path.exists(f"{base}__merge_00000002")
-
-
-def test_recover_swap_noop_without_siblings(tmp_path):
-    from datapipeline_scraping_spark.operators.txn import recover_swap
-
-    assert recover_swap(str(tmp_path / "absent")) is False
 
 
 def test_sketch_estimates_within_error_bounds(spark):

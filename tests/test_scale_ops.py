@@ -276,6 +276,40 @@ def test_merge_write_upsert_plan_never_shuffles_the_target(spark, tmp_path):
     assert tbl.read(spark).count() == 5000
 
 
+def test_sql_merge_plan_follows_the_clause_shape(spark, tmp_path):
+    """SQL MERGE shares merge_write's planner: UPDATE SET * plus
+    INSERT * commits the broadcast anti-join upsert (no sort-merge or
+    full-outer join over the target); a conditional clause still
+    commits merge_into's full-outer join."""
+    from datapipeline_scraping_spark.operators.txn import ManifestTable
+    from datapipeline_scraping_spark.sources.manifest_sql import register_table, sql
+
+    tbl = ManifestTable(str(tmp_path / "t"))
+    tbl.commit(spark.range(5000).selectExpr("id AS pk", "id * 2 AS v").repartition(3))
+    register_table(spark, "plan_tgt", tbl.root, key_cols=["pk"])
+    spark.range(4000, 4600).selectExpr("id AS pk", "id * 3 AS v").createOrReplaceTempView(
+        "plan_src"
+    )
+    head = "MERGE INTO plan_tgt AS t USING plan_src AS s ON t.pk = s.pk "
+    since = max((e.executionId() for e in _sql_executions(spark)), default=-1)
+    sql(spark, head + "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    (plan,) = _final_write_plans(spark, since, tbl.root)
+    assert "SortMergeJoin" not in plan and "FullOuter" not in plan, plan
+    above = _ancestors(plan, "Scan parquet")
+    assert any("BroadcastHashJoin LeftAnti" in ln for ln in above), plan
+    assert tbl.read(spark).count() == 5000
+
+    since = max(e.executionId() for e in _sql_executions(spark))
+    sql(
+        spark,
+        head + "WHEN MATCHED AND s.v > 0 THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    )
+    (plan,) = _final_write_plans(spark, since, tbl.root)
+    above = _ancestors(plan, "Scan parquet")
+    assert any("FullOuter" in ln for ln in above), plan
+    assert tbl.read(spark).count() == 5000
+
+
 def test_delta_split_probes_state_without_aggregate(spark):
     """Semi/anti joins ignore probe-side multiplicity: the state side
     of delta_split carries no dedup Aggregate."""

@@ -46,3 +46,31 @@ def test_build_spark_turns_off_column_call_sites(spark):
     key = "spark.python.sql.dataFrameDebugging.enabled"
     assert spark.conf.get(key) == "false"
     assert is_debugging_enabled() is False
+
+
+def test_build_spark_parallelism_follows_a_local_master():
+    """``master="local[N]"`` sets the default parallelism to N, whatever
+    SPARK_GRAFT_CPUS defaults to. A fresh interpreter: the test
+    session already owns this process's SparkContext."""
+    import os
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = (
+        "from datapipeline_scraping_spark.session import build_spark\n"
+        "s = build_spark(master='local[2]', extra_conf="
+        "{'spark.driver.memory': '1g'})\n"
+        "print(s.sparkContext.defaultParallelism)\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-1] == "2"

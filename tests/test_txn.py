@@ -170,18 +170,6 @@ def test_merge_write_manifest_end_to_end_with_migration(spark, tmp_path):
     assert tbl.version() == 3  # adopt(1) + two merges
 
 
-def test_merge_write_parquet_upgrades_on_manifest_target(spark, tmp_path):
-    """A manifest-backed target stays manifest-backed even if a caller
-    passes writer='parquet' — no silent downgrade to the racy swap."""
-    path = str(tmp_path / "t")
-    tbl = ManifestTable(path)
-    tbl.commit(_df(spark, [(1, "a")]))
-    merge_write(spark, path, _df(spark, [(2, "b")]), "pk", writer="parquet")
-    assert tbl.version() == 2
-    got = {r["pk"]: r["v"] for r in tbl.read(spark).collect()}
-    assert got == {1: "a", 2: "b"}
-
-
 def test_concurrent_unconditional_commits_serialize(spark, tmp_path):
     """N threads committing unconditionally: every commit lands (N
     distinct versions), the final pointer is a complete snapshot, and

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ..merge import merge_into, merge_upsert
 from .errors import ConcurrentWriteError
+from .layout import _refuse_clustered
 from .table import ManifestTable
 
 
@@ -68,7 +69,9 @@ def merge_commit(
     ``clauses(entry)`` runs first in every attempt with the attempt's
     base log entry and returns :func:`merge_into`'s clause keywords,
     or None for no clause — whatever the caller derives from the live
-    table (a layout guard, a ``SET *`` expansion) is re-derived there.
+    table (a ``SET *`` expansion) is re-derived there. A CLUSTERED base
+    raises ``ValueError`` in every attempt: the copy-on-write commit
+    would drop its bucket layout.
 
     The plan follows the clause shape. With no clause and no schema
     evolution the merge is the plain upsert :func:`merge_upsert` —
@@ -91,7 +94,18 @@ def merge_commit(
     try:
         for attempt in range(retries + 1):
             base_ver = tbl.version() or 0
-            kw = clauses(tbl._log_entry(base_ver) or {}) if clauses else None
+            entry = tbl._log_entry(base_ver) or {}
+            # re-checked at every attempt's base, so a concurrent
+            # commit_clustered between retries refuses too; the CAS
+            # against that base makes it the entry the commit supersedes
+            _refuse_clustered(
+                tbl.root,
+                entry,
+                "a MERGE commits copy-on-write and would drop the layout. "
+                "Use the keyed writers (UPDATE/DELETE route merge-on-read) "
+                "or re-cluster with commit_clustered(merge result).",
+            )
+            kw = clauses(entry) if clauses else None
             upsert = kw is None and not schema_evolution
             # cache the twice-read source so its lineage runs once —
             # UDFs and non-deterministic keys are evaluated once per

@@ -3,12 +3,11 @@
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote, urlsplit
+import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from ...sources.skipping import bloom_bits, data_files
+from ...sources.skipping import BLOOM_SCHEMA, bloom_rows, data_files
 from .layout import BLOOM_DIR
 
 
@@ -145,6 +144,13 @@ def _inherited_meta(entry: dict | None) -> dict:
 
 
 
+#: bloom builds over at most this many rows (summed from the files'
+#: footers) run in the driver process, starting no Spark job and no
+#: Python worker: about 0.6 s of kernel time at ~2.5 us a row, the cost
+#: of one warm Spark index job. Larger builds run one task per file.
+IN_PROCESS_ROWS = 1 << 18
+
+
 def _write_bloom_sidecar(
     spark: SparkSession,
     staged_path: str,
@@ -154,66 +160,46 @@ def _write_bloom_sidecar(
     files: list | None = None,
 ) -> None:
     """Build the per-(file, column) bloom sidecar for a freshly staged
-    snapshot: one column-pruned scan per indexed column, grouped by
-    ``input_file_name`` so each file's keys land in one Arrow batch
-    group, where a vectorized-enough pandas kernel sets the bits over
-    the file's DISTINCT keys. The sidecar is churn-free metadata
-    (~1.2 bytes/key at fpp=1e-2): at 100 TB the index build is one
-    extra scan of the indexed key columns only — the same cost Delta
-    pays writing its bloom index — and probing is a driver-side
-    sidecar read, no cluster job. ``files`` restricts the build to
-    those data files (incremental compaction indexes only its newly
-    written files; untouched files' rows carry forward)."""
-    import pandas as pd
+    snapshot with ``skipping.bloom_rows``, which reads each data
+    file's indexed columns once and shuffles nothing. ``files``
+    restricts the build to those data files: an add-file commit
+    indexes only its new files and appends their rows to the ones it
+    carried. A small build runs in the driver (:data:`IN_PROCESS_ROWS`);
+    a larger one runs the kernel in one ``mapInArrow`` task per file
+    over a path list split without a shuffle, so at 100 TB the index
+    build is one extra read of the indexed key columns spread over the
+    cluster, the cost Delta pays writing its bloom index. The sidecar
+    is churn-free metadata (~1.2 bytes/key at fpp=1e-2), and probing it
+    is a driver-side read, no cluster job."""
+    import pyarrow.parquet as pq
 
-    staged_abs = os.path.abspath(staged_path)
-    out_schema = "file string, col string, m long, k long, n long, bits binary"
-    frames = []
-    src = list(files) if files else [staged_path]
-    for c in cols:
-        keys = (
-            spark.read.parquet(*src)
-            .select(
-                F.input_file_name().alias("__f"),
-                F.col(c).cast("string").alias("__v"),
-            )
-            .where(F.col("__v").isNotNull())
-        )
-
-        def make_build(_c):
-            # single-arg closure: a second parameter (even with a
-            # default) makes applyInPandas pass (key, pdf) instead
-            def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-                vals = pdf["__v"].unique()
-                m, k, bits = bloom_bits(vals, fpp)
-                uri = pdf["__f"].iloc[0]
-                # a percent-encoded URI: decode it, or a root with a
-                # space or a '%' keys no data file
-                path = unquote(urlsplit(uri).path) if "://" in uri else uri
-                rel = os.path.relpath(path, staged_abs)
-                return pd.DataFrame(
-                    {
-                        "file": [rel],
-                        "col": [_c],
-                        "m": [m],
-                        "k": [k],
-                        "n": [len(vals)],
-                        "bits": [bits],
-                    }
-                )
-
-            return build
-
-        frames.append(
-            keys.groupBy("__f").applyInPandas(make_build(c), schema=out_schema)
-        )
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    # append: an add-file commit's carried rows are already there
-    out.coalesce(1).write.mode("append").parquet(
-        os.path.join(staged_path, BLOOM_DIR)
+    base = os.path.abspath(staged_path)
+    paths = (
+        [os.path.abspath(f) for f in files] if files else data_files(base)
     )
+    bdir = os.path.join(base, BLOOM_DIR)
+    rows = 0
+    for p in paths:
+        rows += pq.ParquetFile(p).metadata.num_rows
+        if rows > IN_PROCESS_ROWS:
+            break
+    if rows <= IN_PROCESS_ROWS:
+        os.makedirs(bdir, exist_ok=True)
+        pq.write_table(
+            bloom_rows(paths, cols, fpp, base),
+            os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet"),
+        )
+        return
+
+    def build(batches):
+        for b in batches:
+            paths_b = b.column(0).to_pylist()
+            yield from bloom_rows(paths_b, cols, fpp, base).to_batches()
+
+    tasks = spark.sparkContext.parallelize([(p,) for p in paths], len(paths))
+    spark.createDataFrame(tasks, "path string").mapInArrow(
+        build, BLOOM_SCHEMA
+    ).write.mode("append").parquet(bdir)
 
 
 
@@ -228,9 +214,9 @@ def _snapshot_files(path: str) -> tuple[int, int]:
 def _index_bloom(
     spark: SparkSession, entry: dict, staged: str, rels: list
 ) -> None:
-    """The DataFrame writers' bloom build for an add-file commit: one
-    job indexes the staged files ``rels`` (the staging step's
-    ``bloom_rels``) next to the rows it carried."""
+    """The DataFrame writers' bloom build for an add-file commit: index
+    the staged files ``rels`` (the staging step's ``bloom_rels``) next
+    to the rows it carried."""
     bloom_prop = entry.get("bloom")
     if bloom_prop and rels:
         _write_bloom_sidecar(

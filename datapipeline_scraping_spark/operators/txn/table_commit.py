@@ -233,77 +233,84 @@ class _CommitMixin:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(staged)
+            # the post-write steps run inside the staging cleanup: one
+            # that raises removes the staged snapshot
             with _staging(self, staged):
                 _raise_violations(self.root, obs, checks, "commit")
-            cdf_entry: dict | None = None
-            if cdf_prop:
-                if cdf_mode == "noop":
-                    cdf_entry = {"key_cols": cdf_prop, "noop": True}
-                else:
-                    spark = df.sparkSession
-                    new_state = spark.read.parquet(staged)
-                    if ptr is None and not partition_by:
-                        # the initial load is all-insert BY DEFINITION:
-                        # writing an insert sidecar would double the
-                        # table's first write (fatal at 100 TB), so the
-                        # entry marks it `initial` and feed readers
-                        # serve inserts from the DATA files directly —
-                        # Delta's append-commit CDF optimization.
-                        # (Partitioned initial loads fall through to
-                        # the sidecar: their data files don't carry the
-                        # partition columns.)
-                        cdf_entry = {
-                            "key_cols": cdf_prop,
-                            "n_changes": int(new_state.count()),
-                            "initial": True,
-                            "change_types": ["insert"],
-                        }
+                cdf_entry: dict | None = None
+                if cdf_prop:
+                    if cdf_mode == "noop":
+                        cdf_entry = {"key_cols": cdf_prop, "noop": True}
                     else:
-                        if ptr is None:
-                            changes = new_state.select(
-                                F.lit("insert").alias("_change_type"), "*"
-                            )
+                        spark = df.sparkSession
+                        new_state = spark.read.parquet(staged)
+                        if ptr is None and not partition_by:
+                            # the initial load is all-insert BY DEFINITION:
+                            # writing an insert sidecar would double the
+                            # table's first write (fatal at 100 TB), so the
+                            # entry marks it `initial` and feed readers
+                            # serve inserts from the DATA files directly —
+                            # Delta's append-commit CDF optimization.
+                            # (Partitioned initial loads fall through to
+                            # the sidecar: their data files don't carry the
+                            # partition columns.)
+                            cdf_entry = {
+                                "key_cols": cdf_prop,
+                                "n_changes": int(new_state.count()),
+                                "initial": True,
+                                "change_types": ["insert"],
+                            }
                         else:
-                            changes = _diff_frames(
-                                self.read(spark, version=base_ver),
-                                new_state,
-                                cdf_prop,
+                            if ptr is None:
+                                changes = new_state.select(
+                                    F.lit("insert").alias("_change_type"), "*"
+                                )
+                            else:
+                                changes = _diff_frames(
+                                    self.read(spark, version=base_ver),
+                                    new_state,
+                                    cdf_prop,
+                                )
+                            cdf_path = os.path.join(staged, self.CDF_DIR)
+                            changes.withColumn(
+                                "_commit_version",
+                                F.lit(base_ver + 1).cast("long"),
+                            ).write.mode("overwrite").parquet(cdf_path)
+                            # count + distinct change types in ONE pass over
+                            # the churn-sized sidecar (types let a filtered
+                            # feed read skip the whole version, r13)
+                            stat = (
+                                spark.read.parquet(cdf_path)
+                                .agg(
+                                    F.count("*").alias("n"),
+                                    F.collect_set("_change_type").alias("t"),
+                                )
+                                .first()
                             )
-                        cdf_path = os.path.join(staged, self.CDF_DIR)
-                        changes.withColumn(
-                            "_commit_version", F.lit(base_ver + 1).cast("long")
-                        ).write.mode("overwrite").parquet(cdf_path)
-                        # count + distinct change types in ONE pass over
-                        # the churn-sized sidecar (types let a filtered
-                        # feed read skip the whole version, r13)
-                        stat = (
-                            spark.read.parquet(cdf_path)
-                            .agg(
-                                F.count("*").alias("n"),
-                                F.collect_set("_change_type").alias("t"),
-                            )
-                            .first()
-                        )
-                        cdf_entry = {
-                            "key_cols": cdf_prop,
-                            "n_changes": int(stat["n"]),
-                            "change_types": sorted(stat["t"]),
-                        }
-            schema_json = df.schema.json()
-            file_stats = (
-                collect_file_stats(staged, stats_cols) if stats_cols else None
-            )
-            # per-file bloom index (inherited like stats_by; cols that
-            # no longer exist after a drop/re-schema fall away quietly)
-            bloom_cols = [
-                c
-                for c in bloom_cols
-                if c in df.columns and c not in partition_by
-            ]
-            bloom_entry = None
-            if bloom_cols:
-                _write_bloom_sidecar(df.sparkSession, staged, bloom_cols, fpp)
-                bloom_entry = {"cols": bloom_cols, "fpp": fpp}
+                            cdf_entry = {
+                                "key_cols": cdf_prop,
+                                "n_changes": int(stat["n"]),
+                                "change_types": sorted(stat["t"]),
+                            }
+                schema_json = df.schema.json()
+                file_stats = (
+                    collect_file_stats(staged, stats_cols)
+                    if stats_cols
+                    else None
+                )
+                # per-file bloom index (inherited like stats_by; cols that
+                # no longer exist after a drop/re-schema fall away quietly)
+                bloom_cols = [
+                    c
+                    for c in bloom_cols
+                    if c in df.columns and c not in partition_by
+                ]
+                bloom_entry = None
+                if bloom_cols:
+                    _write_bloom_sidecar(
+                        df.sparkSession, staged, bloom_cols, fpp
+                    )
+                    bloom_entry = {"cols": bloom_cols, "fpp": fpp}
 
             def revalidate(cur_ver: int, live: dict) -> bool:
                 """False = restage against the new live version."""

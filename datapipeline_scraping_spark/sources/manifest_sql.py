@@ -1282,22 +1282,6 @@ def sql(spark: SparkSession, statement: str, *, retries: int = 3):
     return spark.sql(statement)
 
 
-def _guard_unclustered_merge(root: str, entry: dict) -> None:
-    """The merge commits copy-on-write through tbl.commit, which would
-    silently drop the bucket layout behind read_clustered — the exact
-    silent de-clustering the writers refuse elsewhere. Re-checked per
-    commit attempt: a concurrent commit_clustered between attempts
-    must also refuse, not slip through the retry."""
-    if entry.get("bucket"):
-        raise ValueError(
-            f"{root}: the live snapshot is CLUSTERED "
-            f"(commit_clustered bucket layout) — SQL MERGE commits "
-            f"copy-on-write and would drop the layout. Use the keyed "
-            f"writers (UPDATE/DELETE route merge-on-read) or "
-            f"re-cluster with commit_clustered(merge result)."
-        )
-
-
 def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
     spec = _resolve(spark, p["tbl"])
     talias = (p["talias"] or p["tbl"]).lower()
@@ -1470,11 +1454,6 @@ def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
     ]
 
     def clauses(entry_now: dict) -> dict | None:
-        # re-checked at every attempt's base: a concurrent
-        # commit_clustered between retries must refuse, and the CAS
-        # against that base guarantees the checked entry is the one
-        # the commit supersedes
-        _guard_unclustered_merge(spec["root"], entry_now)
         if upsert:
             return None
         return {

@@ -14,13 +14,15 @@ bucket layout, the per-file bloom sidecar. Every tier is conservative:
 a file is dropped only when it provably holds no qualifying row, so
 skipping is an optimization, never a correctness filter.
 
-The bloom hash lives here too, so the sidecar's build (commit time)
-and probe (planning time) share one definition.
+The bloom hash lives here too, so the sidecar's build (commit time,
+:func:`bloom_rows`) and probe (planning time) share one definition.
 
-Imports only the stdlib and pyarrow (the bucket hash, stdlib-only, is
-imported for clustered snapshots alone): the manifest data source's
-Python workers import this module's listing helpers without a JVM,
-and must not pay the ``operators.txn`` import.
+Imports only the stdlib, pyarrow and, in the bloom kernel, numpy (the
+bucket hash, stdlib-only, is imported for clustered snapshots alone):
+the manifest data source's Python workers import this module's
+listing helpers without a JVM, the bloom build's Spark tasks import
+its kernel, and neither must pay the ``operators.txn`` or pandas
+import.
 """
 
 from __future__ import annotations
@@ -569,15 +571,81 @@ def _bloom_positions(val: str, m: int, k: int) -> list[int]:
     return [(h1 + i * h2) % m for i in range(k)]
 
 
-def bloom_bits(vals, fpp: float) -> tuple[int, int, bytes]:
-    """``(m, k, bits)`` of one file's bloom over its DISTINCT string
-    keys ``vals`` (Spark ``CAST(col AS STRING)`` renderings)."""
-    m, k = _bloom_params(len(vals), fpp)
-    bits = bytearray(m // 8)
-    for v in vals:
-        for pos in _bloom_positions(v, m, k):
-            bits[pos >> 3] |= 1 << (pos & 7)
-    return m, k, bytes(bits)
+#: the sidecar's columns, one row per (data file, indexed column);
+#: Spark DDL in :data:`BLOOM_SCHEMA`
+_BLOOM_COLS = (
+    ("file", "string"),
+    ("col", "string"),
+    ("m", "long"),
+    ("k", "long"),
+    ("n", "long"),
+    ("bits", "binary"),
+)
+BLOOM_SCHEMA = ", ".join(f"{c} {t}" for c, t in _BLOOM_COLS)
+#: keys hashed per numpy block: bounds the kernel's temporaries
+_BLOOM_BLOCK = 1 << 16
+
+
+def _bloom_of(keys, fpp: float) -> "tuple[int, int, int, bytes] | None":
+    """``(m, k, n, bits)`` of one bloom over a pyarrow (chunked) array
+    of keys, NULLs and repeats allowed; None when no key is set. Keys
+    render as Spark's ``CAST(col AS STRING)`` does (integral values by
+    an Arrow cast to string) and hash by their raw bytes, so a
+    non-UTF-8 string is indexed too; a ``str`` probe encodes to valid
+    UTF-8, so it never matches one. Sets the bits
+    :func:`_bloom_positions` probes, ``(h1 + i*h2) mod m``, computed as
+    ``(h1 mod m + i*(h2 mod m)) mod m`` in uint64 (no overflow for
+    k <= 16)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vals = pc.unique(keys.drop_null())
+    if not len(vals):
+        return None
+    if pa.types.is_integer(vals.type):
+        vals = vals.cast(pa.string())
+    raw = vals.cast(pa.large_binary()).to_pylist()
+    m, k = _bloom_params(len(raw), fpp)
+    mm = np.uint64(m)
+    steps = np.arange(k, dtype=np.uint64)
+    seen = np.zeros(m, dtype=bool)
+    md5 = hashlib.md5
+    for i in range(0, len(raw), _BLOOM_BLOCK):
+        d = b"".join([md5(v).digest() for v in raw[i : i + _BLOOM_BLOCK]])
+        h = np.frombuffer(d, dtype="<u8").reshape(-1, 2)
+        h1 = h[:, 0] % mm
+        h2 = (h[:, 1] | np.uint64(1)) % mm
+        seen[(h1[:, None] + steps * h2[:, None]) % mm] = True
+    return m, k, len(raw), np.packbits(seen, bitorder="little").tobytes()
+
+
+def bloom_rows(paths: list[str], cols: list[str], fpp: float, base: str):
+    """The one bloom kernel: the sidecar rows of the data files
+    ``paths`` as a pyarrow table of :data:`BLOOM_SCHEMA`, each keyed by
+    its file's path relative to the snapshot dir ``base``. Per file it
+    reads only the indexed ``cols`` and builds one :func:`_bloom_of`
+    per column; a column with no key in a file (all NULL, or absent)
+    gets no row, and the probe keeps a file it has no row for. The
+    commit-time build runs it in the driver or inside Spark tasks, so
+    it imports no pandas."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = []
+    for p in paths:
+        pf = pq.ParquetFile(p)
+        have = [c for c in cols if c in pf.schema_arrow.names]
+        tbl = pf.read(columns=have)
+        for c in have:
+            got = _bloom_of(tbl.column(c), fpp)
+            if got is not None:
+                rows.append((os.path.relpath(p, base), c) + got)
+    arrow = {"string": pa.string(), "long": pa.int64(), "binary": pa.binary()}
+    schema = pa.schema([(c, arrow[t]) for c, t in _BLOOM_COLS])
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
 
 
 def _bloom_key(value) -> str:

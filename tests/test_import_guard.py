@@ -1,11 +1,13 @@
-"""The table layer imports no oracle engine.
+"""Import rules of the table layer, checked by parsing the modules, so
+a lazy import inside a function counts too.
 
-DuckDB is the oracle the queries are checked against (tests, scripts
-and the ``oracle=`` SQL strings). A table-layer module that evaluated
-anything with it would check Spark SQL text in another dialect, so a
-dialect difference could pass or refuse the wrong rows. The modules
-are parsed, not imported, so a lazy import inside a function counts
-too."""
+- No oracle engine. DuckDB is the oracle the queries are checked
+  against (tests, scripts and the ``oracle=`` SQL strings). A
+  table-layer module that evaluated anything with it would check Spark
+  SQL text in another dialect, so a dialect difference could pass or
+  refuse the wrong rows.
+- No pandas in the bloom build. Its kernel runs inside Spark's Python
+  workers, where importing pandas costs about 0.5 s a worker."""
 
 from __future__ import annotations
 
@@ -16,6 +18,8 @@ import datapipeline_scraping_spark
 
 PKG = pathlib.Path(datapipeline_scraping_spark.__file__).parent
 FORBIDDEN = {"duckdb"}
+#: the bloom kernel and its builder
+NO_PANDAS = ("sources/skipping.py", "operators/txn/stats.py")
 
 
 def _imported_roots(path: pathlib.Path) -> set[str]:
@@ -41,3 +45,8 @@ def test_table_layer_imports_no_oracle_engine():
         if _imported_roots(f) & FORBIDDEN
     }
     assert bad == {}
+
+
+def test_bloom_build_imports_no_pandas():
+    bad = [f for f in NO_PANDAS if "pandas" in _imported_roots(PKG / f)]
+    assert bad == []

@@ -133,6 +133,23 @@ def test_removed_writers_raise(spark, tmp_path, writer):
     assert tbl.version() == 1
 
 
+@pytest.mark.parametrize("clauses", [False, True], ids=["upsert", "clauses"])
+def test_merge_write_refuses_a_clustered_table(spark, tmp_path, clauses):
+    """A MERGE commits copy-on-write, which would drop a clustered
+    table's bucket layout, so ``merge_write`` refuses it as SQL
+    ``MERGE`` does, and the live log entry keeps its ``bucket``."""
+    tbl = ManifestTable(str(tmp_path / "cl"))
+    tbl.commit_clustered(
+        spark.createDataFrame([(1, "a", 1), (2, "b", 2)], SCHEMA), "pk", 4
+    )
+    src = spark.createDataFrame([(1, "A", 10), (3, "c", 3)], SCHEMA)
+    kw = {"matched_update": F.lit(True)} if clauses else {}
+    with pytest.raises(ValueError, match="CLUSTERED"):
+        merge_write(spark, tbl.root, src, "pk", **kw)
+    assert tbl.version() == 1
+    assert tbl._log_entry(1)["bucket"]["col"] == "pk"
+
+
 # --- SQL MERGE and merge_write leave the same table -----------------------
 
 UPSERT_SQL = (

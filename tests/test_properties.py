@@ -1076,3 +1076,56 @@ def test_where_validation_fails_closed_per_type(spark, col, op, lit):
                 _coerce_literal(c[3], logical[c[1]], c[1])
     except ValueError:
         return
+
+
+def _probe_bits(keys, fpp):
+    """(m, k, n, bits) setting every bit ``_bloom_positions`` probes for
+    the distinct str() forms of ``keys`` (None skipped)."""
+    from datapipeline_scraping_spark.sources.skipping import (
+        _bloom_params,
+        _bloom_positions,
+    )
+
+    vals = {str(v) for v in keys if v is not None}
+    m, k = _bloom_params(len(vals), fpp)
+    bits = bytearray(m // 8)
+    for v in vals:
+        for pos in _bloom_positions(v, m, k):
+            bits[pos >> 3] |= 1 << (pos & 7)
+    return m, k, len(vals), bytes(bits)
+
+
+_INT64 = st.one_of(
+    st.integers(-(2**63), 2**63 - 1),
+    st.sampled_from([-(2**63), -(2**63) + 1, -1, 0, 1, 2**63 - 1]),
+)
+
+
+@given(
+    keys=st.one_of(
+        st.lists(st.one_of(st.none(), st.text(max_size=6)), max_size=80),
+        st.lists(st.one_of(st.none(), _INT64), max_size=80),
+    ),
+    # around the sizing boundaries: m's 64-bit floor and byte rounding,
+    # and k's clamp at 16 (fpp 1e-6 asks for k = 20)
+    fpp=st.sampled_from([1e-6, 0.001, 0.01, 0.05, 0.3]),
+)
+@settings(max_examples=150, deadline=None)
+def test_bloom_kernel_sets_the_probed_bits(keys, fpp):
+    """The sidecar's vectorized kernel sets exactly the bits the probe
+    checks: the bloom of a column equals the per-key
+    ``_bloom_positions`` bits over its distinct non-NULL str() forms,
+    for unicode strings (the empty one too) and int64 values to both
+    extremes; an all-NULL or empty column gets no bloom."""
+    import pyarrow as pa
+
+    from datapipeline_scraping_spark.sources.skipping import _bloom_of
+
+    strings = any(isinstance(v, str) for v in keys)
+    arr = pa.array(keys, pa.string() if strings else pa.int64())
+    half = len(arr) // 2  # two chunks, as a multi-row-group file reads
+    got = _bloom_of(pa.chunked_array([arr[:half], arr[half:]]), fpp)
+    if all(v is None for v in keys):
+        assert got is None
+    else:
+        assert got == _probe_bits(keys, fpp)

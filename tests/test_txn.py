@@ -2247,6 +2247,158 @@ def test_bloom_index_no_false_negatives(spark, tmp_path):
         assert got == expected[k], f"key {k}: {got} != {expected[k]}"
 
 
+def _sidecar_rows(snap):
+    """The committed bloom sidecar of ``snap`` as sorted
+    ``(file, col, m, k, n, bits)`` rows."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(snap, ManifestTable.BLOOM_DIR))
+    cols = ("file", "col", "m", "k", "n", "bits")
+    return sorted(zip(*(t.column(c).to_pylist() for c in cols)))
+
+
+def _reference_sidecar(snap, cols, fpp=0.01):
+    """The sidecar rows the probe expects, built without the kernel:
+    each data file's distinct non-NULL keys through ``str()`` and the
+    probe's own ``_bloom_positions``."""
+    import pyarrow.parquet as pq
+
+    from datapipeline_scraping_spark.sources.skipping import (
+        _bloom_params,
+        _bloom_positions,
+        data_files,
+    )
+
+    rows = []
+    for f in data_files(snap):
+        pf = pq.ParquetFile(f)
+        for c in cols:
+            if c not in pf.schema_arrow.names:
+                continue
+            vals = {
+                str(v)
+                for v in pf.read(columns=[c]).column(c).to_pylist()
+                if v is not None
+            }
+            if not vals:
+                continue
+            m, k = _bloom_params(len(vals), fpp)
+            bits = bytearray(m // 8)
+            for v in vals:
+                for pos in _bloom_positions(v, m, k):
+                    bits[pos >> 3] |= 1 << (pos & 7)
+            rows.append(
+                (os.path.relpath(f, snap), c, m, k, len(vals), bytes(bits))
+            )
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("in_process", [True, False], ids=["driver", "tasks"])
+def test_bloom_sidecar_paths_write_the_reference_rows(
+    spark, tmp_path, monkeypatch, in_process
+):
+    """Both bloom build paths, the driver-side one and one Spark task per
+    file (forced by ``IN_PROCESS_ROWS = 0``), write exactly the rows
+    the probe expects, through a hive-partitioned commit, an append and
+    a compaction on a root with a space and a ``%``: NULL keys skipped,
+    non-ASCII and empty strings hashed as UTF-8, and no row for a file
+    whose indexed column is all NULL."""
+    from datapipeline_scraping_spark.operators.txn import compact_table
+    from datapipeline_scraping_spark.operators.txn import stats
+
+    if not in_process:
+        monkeypatch.setattr(stats, "IN_PROCESS_ROWS", 0)
+    cols = ["k", "s"]
+    tbl = ManifestTable(str(tmp_path / "root with space%25"))
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [
+                (
+                    i % 3,
+                    None if i % 3 == 2 or i % 7 == 0 else i - 50,
+                    [None, "", f"ñandú-{i}", f"日本{i % 5}"][i % 4],
+                )
+                for i in range(lo, hi)
+            ],
+            "p int, k long, s string",
+        )
+
+    tbl.commit(batch(0, 90).repartition(2), partition_by=["p"], bloom_by=cols)
+    all_null_k = [r for r in _sidecar_rows(tbl.snapshot_path())]
+    assert not any("p=2" in r[0] and r[1] == "k" for r in all_null_k)
+    assert _sidecar_rows(tbl.snapshot_path()) == _reference_sidecar(
+        tbl.snapshot_path(), cols
+    )
+    tbl.append(batch(90, 120).coalesce(1))
+    assert _sidecar_rows(tbl.snapshot_path()) == _reference_sidecar(
+        tbl.snapshot_path(), cols
+    )
+    res = compact_table(spark, tbl.root, target_files=1, min_gain_files=-16)
+    assert res["compacted"]
+    assert _sidecar_rows(tbl.snapshot_path()) == _reference_sidecar(
+        tbl.snapshot_path(), cols
+    )
+    kept, total, indexed = tbl.bloom_pruned_files("s", "ñandú-5")
+    assert indexed and len(kept) < total
+
+
+def test_small_bloom_build_starts_no_spark_job(spark, tmp_path):
+    """A ``bloom_by`` commit under ``IN_PROCESS_ROWS`` builds its sidecar
+    in the driver: it launches no more Spark jobs than the same commit
+    without ``bloom_by``."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(2000)], "pk long, v string"
+    ).repartition(4)
+
+    def jobs(name, **kw):
+        group = f"bloom-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            ManifestTable(str(tmp_path / name)).commit(df, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs("plain")
+    assert jobs("bloom", bloom_by=["pk", "v"]) <= plain
+
+
+def test_non_utf8_bloom_key_commits_and_probes(spark, tmp_path):
+    """A string key that is not valid UTF-8 is indexed by its raw bytes:
+    the commit succeeds, and a ``str`` probe, which can never equal
+    such a key, keeps the file that holds its match and no other."""
+    tbl = ManifestTable(str(tmp_path / "t"))
+    bad = spark.sql("SELECT CAST(X'C328' AS STRING) AS s, 1L AS id")
+    tbl.commit(bad.coalesce(1), bloom_by=["s"])
+    tbl.append(spark.sql("SELECT 'ok' AS s, 2L AS id").coalesce(1))
+    assert tbl.read(spark).count() == 2
+    kept, total, indexed = tbl.bloom_pruned_files("s", "ok")
+    assert indexed and (len(kept), total) == (1, 2)
+    assert spark.read.parquet(*kept).first()["s"] == "ok"
+
+
+def test_failed_bloom_build_removes_the_staged_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """``commit``'s post-write steps run inside the staging cleanup: a
+    bloom build that raises leaves no ``snap-staging-*`` dir and no new
+    version."""
+    from datapipeline_scraping_spark.operators.txn import stats
+
+    def boom(*_a, **_k):
+        raise RuntimeError("bloom kernel failed")
+
+    tbl = ManifestTable(str(tmp_path / "t"))
+    tbl.commit(_df(spark, [(1, "a")]))
+    monkeypatch.setattr(stats, "bloom_rows", boom)
+    with pytest.raises(RuntimeError, match="bloom kernel failed"):
+        tbl.commit(_df(spark, [(2, "b")]), bloom_by=["pk"])
+    assert tbl.version() == 1
+    assert not [d for d in os.listdir(tbl.root) if d.startswith("snap-staging-")]
+
+
 def test_append_links_base_and_adds_rows(spark, tmp_path):
     """r10 append-commit: base files hardlink forward (zero copy),
     only the batch is written, readers see the union, time travel

@@ -2303,8 +2303,7 @@ def test_bloom_sidecar_paths_write_the_reference_rows(
     a compaction on a root with a space and a ``%``: NULL keys skipped,
     non-ASCII and empty strings hashed as UTF-8, and no row for a file
     whose indexed column is all NULL."""
-    from datapipeline_scraping_spark.operators.txn import compact_table
-    from datapipeline_scraping_spark.operators.txn import stats
+    from datapipeline_scraping_spark.operators.txn import compact_table, stats
 
     if not in_process:
         monkeypatch.setattr(stats, "IN_PROCESS_ROWS", 0)
@@ -2325,11 +2324,9 @@ def test_bloom_sidecar_paths_write_the_reference_rows(
         )
 
     tbl.commit(batch(0, 90).repartition(2), partition_by=["p"], bloom_by=cols)
-    all_null_k = [r for r in _sidecar_rows(tbl.snapshot_path())]
-    assert not any("p=2" in r[0] and r[1] == "k" for r in all_null_k)
-    assert _sidecar_rows(tbl.snapshot_path()) == _reference_sidecar(
-        tbl.snapshot_path(), cols
-    )
+    rows = _sidecar_rows(tbl.snapshot_path())
+    assert not any("p=2" in r[0] and r[1] == "k" for r in rows)
+    assert rows == _reference_sidecar(tbl.snapshot_path(), cols)
     tbl.append(batch(90, 120).coalesce(1))
     assert _sidecar_rows(tbl.snapshot_path()) == _reference_sidecar(
         tbl.snapshot_path(), cols

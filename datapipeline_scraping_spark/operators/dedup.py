@@ -10,21 +10,40 @@ training-data pipeline needs at 100 TB.
 Scale design:
 - Exact/first-wins: key-partitioned window/groupBy — shards by key,
   one shuffle, no driver state.
-- MinHash signatures are computed with ARRAY HIGHER-ORDER FUNCTIONS
-  entirely within a row (no shuffle, no explode, whole-stage codegen):
-  ``sig[s] = array_min(transform(shingles, x -> md5(s || ':' || x)))``.
-  Lexicographic min over md5 hex strings is a uniform min-hash.
+- SimHash, the MinHash-LSH band rows and the Jaccard verification are
+  row-local ``mapInArrow`` kernels (pyarrow, numpy and hashlib; no
+  pandas). Each signature depends on one document only, so no token
+  or shingle ever becomes a Spark row and nothing is shuffled by
+  document: the kernels find tokens as byte spans of the Arrow text
+  buffer and md5 each span in place (``sources/skipping.py::
+  md5_spans``). MinHash is one md5 per shingle reduced to 32 bits,
+  then ``n_hashes`` affine maps ``(A*hx + B) mod P`` and a min.
 - LSH banding: each doc emits ``n_bands`` (band, bucket) rows; the
   candidate-pair self-join shuffles on the bucket key only. Bucket
   skew (giant near-dup clusters) is handled by AQE skew-join.
-- Verification (n-gram Jaccard) runs only on candidate pairs via the
-  shared-shingle join formulation — never all-pairs.
+- Verification (exact shingle-set Jaccard) runs only on candidate
+  pairs: the pairs join both texts and a kernel scores each pair in
+  its row — never all-pairs.
+
+The kernels reproduce Spark's ``split(text, ' ')`` byte for byte, so
+their outputs equal the Spark-expression forms (``shingle_relation``,
+the DuckDB oracles of q20/q22/q91/q95). Their id contract: ids are
+unique. A repeated id gets one signature per row; its texts' shingles
+or tokens are not merged.
 """
 
 from __future__ import annotations
 
+import binascii
+import codecs
+import functools
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sources.skipping import binary_spans, md5_spans
 
 
 def spread_small_input(df: DataFrame, key) -> DataFrame:
@@ -145,39 +164,194 @@ def exact_dup_groups(df: DataFrame, content_hash: Column, id_col: str) -> DataFr
 
 
 # --------------------------------------------------------------------------
-# shingling + MinHash + LSH
+# row-local Arrow kernels: tokens, shingles and hashes of one batch
 # --------------------------------------------------------------------------
 
-def shingles(text: Column | str, k: int = 3, sep: str = " ") -> Column:
-    """Word k-shingles as an array column, computed row-locally:
-    tokens[i..i+k-1] joined by ``sep`` for i in 1..max(1, n-k+1)."""
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(c, " ")
-    n = F.greatest(F.lit(1), F.size(toks) - F.lit(k - 1))
-    return F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.concat_ws(sep, F.slice(toks, i, k))
+def _jvm_replacement(exc: UnicodeDecodeError) -> tuple[str, int]:
+    """Decode-error handler that reproduces the JVM's ``new String(bytes,
+    UTF_8)``, which Spark's ``split`` runs before it splits: one U+FFFD
+    per malformed sequence, as Python's ``replace`` gives, except that
+    an encoded surrogate (lead ``ED`` then ``A0``-``BF``) is ONE U+FFFD
+    with its next continuation byte, where ``replace`` gives one per
+    byte. Pinned against Spark's own ``split`` by ``tests/
+    test_properties.py::test_dedup_kernels_read_texts_as_spark_split_does``."""
+    b, i = exc.object, exc.start
+    if b[i] == 0xED and i + 1 < len(b) and 0xA0 <= b[i + 1] <= 0xBF:
+        cont = i + 2 < len(b) and 0x80 <= b[i + 2] <= 0xBF
+        return "\ufffd", i + (3 if cont else 2)
+    return "\ufffd", exc.end
+
+
+codecs.register_error("jvm_replace", _jvm_replacement)
+
+
+def _tokens(texts):
+    """Spark's ``split(text, ' ')`` of each text of a NULL-free pyarrow
+    string array, as byte spans of one buffer: returns ``(data, starts,
+    ends, offs)``, where text j's tokens are ``data[starts[i]:ends[i]]``
+    for i in ``offs[j]..offs[j + 1] - 1``; split on the single byte
+    ``' '``, empty tokens kept, so at least one per text. A valid UTF-8
+    text is split as its raw bytes. One that is not is first re-encoded
+    as the JVM decodes it (:func:`_jvm_replacement`), because Spark
+    splits the decoded string: its tokens, and their md5, are the
+    replaced bytes."""
+    import pyarrow as pa
+
+    try:
+        texts.validate(full=True)
+    except pa.ArrowInvalid:
+        raw = texts.cast(pa.large_binary()).to_pylist()
+        texts = pa.array([v.decode("utf-8", "jvm_replace") for v in raw], pa.large_string())
+    data, t_off = binary_spans(texts)
+    buf = np.frombuffer(data, dtype=np.uint8)
+    spaces = t_off[0] + np.flatnonzero(buf[t_off[0] : t_off[-1]] == 0x20)
+    # a token starts at its text's start or after a space and ends at a
+    # space or its text's end; equal positions of adjacent texts tie
+    starts = np.sort(np.concatenate((t_off[:-1], spaces + 1)))
+    ends = np.sort(np.concatenate((spaces, t_off[1:])))
+    offs = np.concatenate(([0], np.cumsum(np.diff(np.searchsorted(spaces, t_off)) + 1)))
+    return data, starts, ends, offs
+
+
+def _ranges(starts, sizes) -> tuple[np.ndarray, np.ndarray]:
+    """The concatenated ``range(s, s + n)`` of each ``(s, n)``, and the
+    offsets of each range in it."""
+    offs = np.concatenate(([0], np.cumsum(sizes)))
+    return np.repeat(starts - offs[:-1], sizes) + np.arange(offs[-1]), offs
+
+
+def _shingles(texts, k: int):
+    """Word k-shingles of each text of a pyarrow string array, as
+    :func:`shingle_relation` builds them: for i in 1..max(1, n-k+1),
+    tokens i..i+k-1 (all n when n < k) joined by ``' '``; a NULL text
+    is one ``''`` shingle, as ``concat_ws`` of its NULL token array is.
+    Tokens are separated by one space, so a shingle is the text's byte
+    span from its first token's start to its last token's end. Returns
+    ``(data, starts, ends, offs)`` as :func:`_tokens` does, with text
+    j's shingles, repeats included, at ``offs[j]..offs[j + 1] - 1``."""
+    import pyarrow.compute as pc
+
+    data, starts, ends, t_off = _tokens(pc.fill_null(texts, ""))
+    ntok = np.diff(t_off)
+    first, offs = _ranges(t_off[:-1], np.maximum(1, ntok - (k - 1)))
+    last = first + np.repeat(np.minimum(ntok, k), np.diff(offs)) - 1
+    return data, starts[first], ends[last], offs
+
+
+def _hx(data, starts, ends) -> np.ndarray:
+    """Spark's ``conv(substring(md5(s), 1, 8), 16, 10)`` of each span:
+    the first 32 bits of its md5, big-endian, as int64."""
+    digests = md5_spans(data, starts, ends)
+    return np.frombuffer(digests, dtype=">u4")[::4].astype(np.int64)
+
+
+def _md5_hex(strings):
+    """Spark's ``md5`` of each element of a pyarrow string array: its
+    lowercase hex digest, as a pyarrow string array."""
+    import pyarrow as pa
+
+    data, offs = binary_spans(strings)
+    hexed = binascii.hexlify(md5_spans(data, offs[:-1], offs[1:]))
+    hex_offs = np.arange(len(strings) + 1, dtype=np.int32) * 32
+    return pa.Array.from_buffers(
+        pa.string(), len(strings), [None, pa.py_buffer(hex_offs), pa.py_buffer(hexed)]
     )
 
 
-def minhash_signature(shingle_col: Column, n_hashes: int = 8) -> list[Column]:
-    """One min-hash per seed: lexicographic min of seed-salted md5 over
-    the shingle set. min() over a multiset equals min() over the
-    distinct set, so no dedup pass is needed.
+def _simhash_batches(batches, bits: int):
+    """mapInArrow kernel of :func:`simhash` over ``(id, text)``."""
+    import pyarrow as pa
 
-    WARNING — do not use on hot paths: evaluating ``md5`` inside
-    ``transform`` over a ``concat_ws(slice(...))``-built array returns
-    NONDETERMINISTIC garbage on Spark 4.1 (observed: different wrong
-    hashes every run — unsafe string buffer reuse inside nested HOF
-    codegen). Kept for documentation/regression; the engine path is
-    :func:`minhash_signatures` (explode + map-side-combinable min
-    aggregate), which is verified against DuckDB and pure Python."""
-    return [
-        F.array_min(
-            F.transform(shingle_col, lambda x, s=s: F.md5(F.concat(F.lit(f"{s}:"), x)))
-        ).alias(f"mh{s}")
-        for s in range(n_hashes)
-    ]
+    for batch in batches:
+        keep = batch.column(1).is_valid()  # a NULL text votes on nothing
+        ids, texts = batch.column(0).filter(keep), batch.column(1).filter(keep)
+        if not len(ids):
+            continue
+        data, starts, ends, offs = _tokens(texts)
+        h = _hx(data, starts, ends)
+        n = np.diff(offs)
+        sig = np.zeros(len(ids), dtype=np.int64)
+        for j in range(bits):
+            ones = np.add.reduceat((h >> j) & 1, offs[:-1])
+            sig |= (2 * ones > n).astype(np.int64) << j  # +1/-1 votes sum > 0
+        yield pa.record_batch([ids, pa.array(sig)], names=[batch.schema.names[0], "simhash"])
 
+
+def _band_batches(batches, k: int, n_hashes: int, n_bands: int):
+    """mapInArrow kernel of :func:`lsh_bands` over ``(id, text)``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = n_hashes // n_bands
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        data, starts, ends, offs = _shingles(batch.column(1), k)
+        hx = _hx(data, starts, ends)
+        mh = [
+            pa.array(
+                np.minimum.reduceat((MINHASH_A[s] * hx + MINHASH_B[s]) % MINHASH_P, offs[:-1])
+            ).cast(pa.string())
+            for s in range(n_hashes)
+        ]
+        buckets = [
+            _md5_hex(pc.binary_join_element_wise(*mh[b * rows : (b + 1) * rows], "|"))
+            for b in range(n_bands)
+        ]
+        yield pa.record_batch(
+            [
+                pa.concat_arrays([batch.column(0)] * n_bands),
+                pa.array(np.repeat(np.arange(n_bands, dtype=np.int32), n)),
+                pa.concat_arrays(buckets),
+            ],
+            names=[batch.schema.names[0], "band", "bucket"],
+        )
+
+
+def _jaccard_batches(batches, k: int, threshold: float):
+    """mapInArrow kernel of :func:`jaccard_verify` over ``(id_a, id_b,
+    text_a, text_b)``."""
+    import pyarrow as pa
+
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        # one integer code per distinct shingle string: exact sets, no
+        # hash collisions
+        index: dict = {}
+        keys = []
+        for col in (2, 3):
+            data, starts, ends, offs = _shingles(batch.column(col), k)
+            code = np.fromiter(
+                (index.setdefault(data[s:e].tobytes(), len(index))
+                 for s, e in zip(starts.tolist(), ends.tolist())),
+                dtype=np.int64, count=len(starts),
+            )
+            keys.append((np.repeat(np.arange(n), np.diff(offs)), code))
+        m = len(index)
+        a, b = (np.unique(pair * m + code) for pair, code in keys)
+        n_a = np.bincount(a // m, minlength=n)
+        n_b = np.bincount(b // m, minlength=n)
+        shared = np.bincount(np.intersect1d(a, b, assume_unique=True) // m, minlength=n)
+        # int/int -> double, as Spark's `/` divides two counts. The
+        # ratio is emitted unrounded: the division is the same double on
+        # every engine, while round(x, 6) is NOT (Java rounds the
+        # shortest decimal repr, C the binary value; they disagree on
+        # exact .xxxxxx5 boundaries)
+        jac = shared / (n_a + n_b - shared)
+        keep = pa.array((shared > 0) & (jac >= threshold))
+        yield pa.record_batch(
+            [batch.column(0).filter(keep), batch.column(1).filter(keep),
+             pa.array(jac).filter(keep)],
+            names=["id_a", "id_b", "jaccard"],
+        )
+
+
+# --------------------------------------------------------------------------
+# shingling + MinHash + LSH
+# --------------------------------------------------------------------------
 
 # Universal-hash family for MinHash seeds: h_s(x) = (A[s]*x + B[s]) mod P
 # over the md5-derived 32-bit shingle hash x. One md5 per shingle (the
@@ -195,21 +369,12 @@ MINHASH_B = (2147483647, 2147483629, 2147483587, 2147483579,
 def shingle_relation(
     df: DataFrame, id_col: str, text_col: str, *, k: int = 3
 ) -> DataFrame:
-    """Exploded k-shingle occurrence relation ``[id, s, hx]`` — the ONE
-    relation both the MinHash signature aggregation and the Jaccard
-    verification derive from.  ``s`` is the shingle string (Jaccard
-    joins on it exactly; a 32-bit hash join would admit collisions),
-    ``hx`` its md5-derived 32-bit integer hash (what MinHash minimizes).
-
-    When one query feeds both consumers (q20), ``persist()`` this and
-    pass it via their ``shingle_rel`` parameter so the explode + md5 —
-    the dominant cost of the whole near-dup pipeline — runs once.
-    Persist contract: the caller materializes its result before
-    releasing the cache (``df.unpersist()`` or
-    ``spark.catalog.clearCache()``); ``persist()`` defaults to
-    MEMORY_AND_DISK so an exploded 100 TB corpus spills rather than
-    OOMs, but recomputing (no persist) is the better trade when the
-    two consumers run in separate jobs anyway.
+    """Exploded k-shingle occurrence relation ``[id, s, hx]``, one row
+    per shingle occurrence, for consumers that count or join on the
+    shingles themselves (repetition statistics, benchmark
+    contamination). ``s`` is the shingle string, ``hx`` its
+    md5-derived 32-bit integer hash. The near-dup operators below never
+    build it: their kernels shingle each document inside its own row.
 
     A too-small input is repartitioned by id first (a one-file corpus
     = one task would serialize the md5 work); a large input skips the
@@ -217,13 +382,13 @@ def shingle_relation(
 
     Codegen note: the naive ``explode(transform(sequence, i ->
     concat_ws(slice(toks, i, k))))`` nests higher-order functions,
-    which whole-stage codegen MISCOMPILES on Spark 4.1 (see
-    :func:`minhash_signature`) and evaluates pathologically slowly in
-    interpreted mode (JIT-cold paths: 1-10 s run-to-run variance on
-    the same 5k-doc input).  This formulation explodes the start index
-    FIRST (one plain generator) and builds each shingle with flat
-    ``slice``/``concat_ws`` projections — no nested HOF, so it stays
-    inside whole-stage codegen and needs no per-query conf opt-out."""
+    which whole-stage codegen MISCOMPILES on Spark 4.1 (md5 inside such
+    a ``transform`` returned different wrong hashes run to run) and
+    evaluates pathologically slowly in interpreted mode.  This
+    formulation explodes the start index FIRST (one plain generator)
+    and builds each shingle with flat ``slice``/``concat_ws``
+    projections — no nested HOF, so it stays inside whole-stage
+    codegen."""
     toks = F.split(F.col(text_col), " ")
     n = F.greatest(F.lit(1), F.size(F.col("__toks")) - F.lit(k - 1))
     return (
@@ -248,59 +413,41 @@ def shingle_relation(
     )
 
 
-def minhash_signatures(
+def lsh_bands(
     df: DataFrame,
     id_col: str,
     text_col: str,
     *,
     k: int = 3,
     n_hashes: int = 8,
-    shingle_rel: DataFrame | None = None,
+    n_bands: int = 4,
 ) -> DataFrame:
-    """Per-doc MinHash signature table via explode + grouped min.
+    """MinHash-LSH band rows ``[id, band, bucket]``, ``n_bands`` per
+    document, computed inside each document's row by one ``mapInArrow``
+    kernel: no shingle row exists and nothing shuffles by document.
 
-    One explode (k-shingles), ONE md5 per shingle reduced to a 32-bit
-    int, then ``n_hashes`` parallel MIN aggregates over cheap affine
-    derived hashes — all map-side combinable, so the shuffle carries
-    only one partially-aggregated signature row per doc per map task.
-    min() over the occurrence multiset equals min() over the distinct
-    shingle set, so no dedup pass is needed.
+    Per document: its distinct k-shingles (:func:`shingle_relation`'s
+    shingles, a NULL text one ``''`` shingle) each hash to ``hx``, the
+    first 32 bits of their md5; signature ``mh[s] = min((A[s]*hx +
+    B[s]) mod P)`` for s < ``n_hashes``; band b is ``md5(concat_ws('|',
+    mh[b*r .. b*r+r-1]))`` with ``r = n_hashes // n_bands``. Two
+    documents sharing any (band, bucket) are candidates.
 
-    Pass ``shingle_rel`` (a persisted :func:`shingle_relation`) to
-    share the explode with a downstream Jaccard verification."""
-    sh = (
-        shingle_rel
-        if shingle_rel is not None
-        else shingle_relation(df, id_col, text_col, k=k)
-    ).select(F.col(id_col), F.col("hx"))
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_A[s]) * F.col("hx") + F.lit(MINHASH_B[s]))
-            % F.lit(MINHASH_P)
-        ).alias(f"mh{s}")
-        for s in range(n_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
-def lsh_buckets(
-    sig_df: DataFrame, id_col: str, n_hashes: int = 8, n_bands: int = 4
-) -> DataFrame:
-    """Band the signature (rows per doc = n_bands) and hash each band
-    to a bucket id. Docs sharing any band bucket are candidates."""
-    rows_per_band = n_hashes // n_bands
-    entries = []
-    for b in range(n_bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bucket")
-            )
+    Id contract: ids are unique. A repeated id gets bands per row; its
+    texts' shingles are not merged into one signature. The id column
+    keeps its input type."""
+    if not 1 <= n_bands <= n_hashes <= len(MINHASH_A):
+        raise ValueError(
+            f"need 1 <= n_bands <= n_hashes <= {len(MINHASH_A)}, "
+            f"got n_hashes={n_hashes}, n_bands={n_bands}"
         )
-    return (
-        sig_df.select(id_col, F.explode(F.array(*entries)).alias("e"))
-        .select(id_col, F.col("e.band").alias("band"), F.col("e.bucket").alias("bucket"))
+    docs = spread_small_input(df.select(F.col(id_col), F.col(text_col)), id_col)
+    schema = T.StructType(
+        [docs.schema[id_col], T.StructField("band", T.IntegerType()),
+         T.StructField("bucket", T.StringType())]
     )
+    kernel = functools.partial(_band_batches, k=k, n_hashes=n_hashes, n_bands=n_bands)
+    return docs.mapInArrow(kernel, schema)
 
 
 def lsh_candidate_pairs(buckets: DataFrame, id_col: str) -> DataFrame:
@@ -337,11 +484,15 @@ def minhash_lsh_pairs(
     n_bands: int = 4,
     shingle_rel: DataFrame | None = None,
 ) -> DataFrame:
-    """End-to-end near-dup candidate pairs over a text column."""
-    sig = minhash_signatures(
-        df, id_col, text_col, k=k, n_hashes=n_hashes, shingle_rel=shingle_rel
+    """End-to-end near-dup candidate pairs over a text column: the
+    :func:`lsh_bands` rows self-joined on (band, bucket). Ids must be
+    unique (see :func:`lsh_bands`). ``shingle_rel`` is accepted for
+    callers that still pass a :func:`shingle_relation` and is not
+    read: the band kernel shingles each document in its own row."""
+    return lsh_candidate_pairs(
+        lsh_bands(df, id_col, text_col, k=k, n_hashes=n_hashes, n_bands=n_bands),
+        id_col,
     )
-    return lsh_candidate_pairs(lsh_buckets(sig, id_col, n_hashes, n_bands), id_col)
 
 
 def incremental_lsh_pairs(
@@ -363,17 +514,16 @@ def incremental_lsh_pairs(
     the property that makes dedup sustainable at 100 TB ingest.
 
     Output: (id_corpus, id_new) distinct candidate pairs; verify with
-    :func:`jaccard_verify` over ``corpus ∪ incoming``."""
-    bkt_c = lsh_buckets(
-        minhash_signatures(corpus, id_col, text_col, k=k, n_hashes=n_hashes),
-        id_col, n_hashes, n_bands,
-    ).select(F.col(id_col).alias("id_corpus"), "band", "bucket")
-    bkt_i = lsh_buckets(
-        minhash_signatures(incoming, id_col, text_col, k=k, n_hashes=n_hashes),
-        id_col, n_hashes, n_bands,
-    ).select(F.col(id_col).alias("id_new"), "band", "bucket")
+    :func:`jaccard_verify` over ``corpus ∪ incoming``. Ids must be
+    unique within each side (see :func:`lsh_bands`)."""
+    def bands(df, name):
+        return lsh_bands(
+            df, id_col, text_col, k=k, n_hashes=n_hashes, n_bands=n_bands
+        ).select(F.col(id_col).alias(name), "band", "bucket")
+
     return (
-        bkt_i.join(bkt_c, on=["band", "bucket"])
+        bands(incoming, "id_new")
+        .join(bands(corpus, "id_corpus"), on=["band", "bucket"])
         .select("id_corpus", "id_new")
         .distinct()
     )
@@ -393,112 +543,59 @@ def jaccard_verify(
     threshold: float = 0.7,
     shingle_rel: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact k-shingle Jaccard for each candidate pair via the
-    shared-shingle join formulation:
+    """Exact k-shingle Jaccard ``[id_a, id_b, jaccard]`` of each
+    candidate pair of ``pairs`` (``id_a``, ``id_b``; distinct pairs, as
+    :func:`lsh_candidate_pairs` gives) whose score is at least
+    ``threshold``:
 
         J(a,b) = |A ∩ B| / (|A| + |B| - |A ∩ B|)
 
-    computed from distinct-shingle counts — scalable because only
-    candidate docs are exploded, and the intersection is a join on the
-    shingle value, never an all-pairs comparison.
+    over the distinct-shingle sets of :func:`lsh_bands`. The pairs
+    join both texts by id, and one ``mapInArrow`` kernel compares the
+    two shingle sets inside each pair's row: only candidate pairs are
+    scored, never all pairs, and no shingle row exists. A pair that
+    shares no shingle gives no row.
 
-    Pass ``shingle_rel`` (a persisted :func:`shingle_relation`, already
-    exploded over ALL docs) to reuse the explode the MinHash signature
-    pass already paid for; the candidate semi-join then filters the
-    cached relation instead of re-exploding.  Persist contract: see
-    :func:`shingle_relation`."""
-    # pairs is consumed three times (candidate-id semi join, a-side,
-    # b-side); persist so the LSH candidate pipeline runs once
-    pairs = pairs.persist()
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select("id_b"))
-        .distinct()
-    )
-    if shingle_rel is not None:
-        # already-exploded (and typically persisted) relation: filter
-        # the cached rows to candidates — no second explode
-        base = shingle_rel.join(cand_ids, on=id_col, how="left_semi").select(
-            F.col(id_col), F.col("s").alias("sh")
+    Id contract: ids are unique in ``df`` (a repeated id yields one
+    row per matching text, not the Jaccard of the merged shingle sets).
+    The id columns keep the types they have in ``pairs``.
+    ``shingle_rel`` is accepted for callers that still pass a
+    :func:`shingle_relation` and is not read."""
+    texts = df.select(F.col(id_col), F.col(text_col))
+
+    def side(s):
+        return texts.select(
+            F.col(id_col).alias(f"id_{s}"), F.col(text_col).alias(f"text_{s}")
         )
-    else:
-        # standalone path: filter docs to candidates FIRST, then pay
-        # the explode only for candidate docs (codegen-safe index
-        # explode via shingle_relation; the unused hx column is pruned)
-        base = shingle_relation(
-            df.join(cand_ids, on=id_col, how="left_semi"), id_col, text_col, k=k
-        ).select(F.col(id_col), F.col("s").alias("sh"))
-    sh = (
-        base.distinct()
-        # reused three ways below (a-side, b-side, sizes): persist the
-        # candidate shingle table instead of recomputing the explode
-        .persist()
+
+    both = pairs.select("id_a", "id_b").join(side("a"), "id_a").join(side("b"), "id_b")
+    schema = T.StructType(
+        [both.schema["id_a"], both.schema["id_b"],
+         T.StructField("jaccard", T.DoubleType())]
     )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    shared = (
-        pairs.join(a, on="id_a")
-        .join(b, on=["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("shared"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
-    # NB: the ratio is emitted unrounded — int/int division is the
-    # same double on every engine, while round(x, 6) is NOT (Java
-    # rounds the shortest decimal repr, C rounds the binary value;
-    # they disagree on exact .xxxxxx5 boundaries).
-    return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    kernel = functools.partial(_jaccard_batches, k=k, threshold=threshold)
+    return both.select("id_a", "id_b", "text_a", "text_b").mapInArrow(kernel, schema)
 
 
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
 
-def _hex32(c: Column) -> Column:
-    """First 8 hex chars of md5 as a non-negative 32-bit value in a
-    LongType — cross-engine reproducible (DuckDB:
-    ``('0x' || substr(md5(x),1,8))::BIGINT``)."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
-    """32-bit SimHash per document: each token votes ±1 on every bit of
-    its 32-bit hash; the signature sets bits with positive vote sums.
-    Implemented as one explode + ``bits`` parallel conditional sums —
-    a single map-side-combinable aggregation, no per-bit explode."""
-    toks = (
-        # scale-adaptive repartition (r16): see spread_small_input
-        spread_small_input(df.select(F.col(id_col), F.col(text_col)), id_col)
-        .select(F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-        .withColumn("h", _hex32(F.col("tok")))
-    )
-    # SQL strings, parsed on the JVM: a Column built node by node
-    # costs one py4j call per node, ~14 per bit
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(`h`, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
-            f" AS v{j}"
-        )
-        for j in range(bits)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
-    sig = F.expr(" + ".join(
-        f"CASE WHEN `v{j}` > 0 THEN shiftleft(CAST(1 AS BIGINT), {j}) "
-        "ELSE CAST(0 AS BIGINT) END"
-        for j in range(bits)
-    ))
-    return agg.select(F.col(id_col), sig.alias("simhash"))
+    """SimHash ``[id, simhash]`` per document: each
+    token of Spark's ``split(text, ' ')`` votes ±1 on every bit of its
+    32-bit md5 prefix, once per occurrence; the signature sets the bits
+    with positive vote sums. A NULL text gives no row, an empty text is
+    one empty token. Computed inside each document's row by one
+    ``mapInArrow`` kernel, so no token row exists and nothing shuffles
+    by document.
+
+    Id contract: ids are unique. A repeated id gets one row per text;
+    its texts' votes are not summed. The id column keeps its input
+    type."""
+    docs = spread_small_input(df.select(F.col(id_col), F.col(text_col)), id_col)
+    schema = T.StructType([docs.schema[id_col], T.StructField("simhash", T.LongType())])
+    return docs.mapInArrow(functools.partial(_simhash_batches, bits=bits), schema)
 
 
 def positional_shingles(

@@ -60,9 +60,10 @@ def q13_exact_dedup(spark, sf_dir):
 
 
 def _minhash_cte(k: int = 3, n_hashes: int = 8, relation: str = "documents") -> str:
-    """Shared CTE prefix: shingles + per-seed min-hash signature,
-    formula-identical to operators.dedup.minhash_signatures (one md5
-    per shingle -> 32-bit int -> affine universal hashes mod P).
+    """Shared CTE prefix: shingles + per-seed min-hash signature + LSH
+    bands + candidate pairs, formula-identical to operators.dedup.
+    lsh_bands (one md5 per shingle -> 32-bit int -> affine universal
+    hashes mod P -> md5 of each band's joined hashes).
     ``relation`` lets composers (q95) shingle a derived corpus."""
     mins = ",\n    ".join(
         f"min(({D.MINHASH_A[s]} * hx + {D.MINHASH_B[s]}) % {D.MINHASH_P})"
@@ -94,15 +95,6 @@ pairs AS (
   FROM bkt a JOIN bkt b
     ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
 )"""
-
-
-# History note: rounds 1-2 disabled whole-stage codegen for q19/q20
-# because the then-current shingle explode nested higher-order
-# functions (explode(transform(sequence…))), which Spark 4.1 codegen
-# miscompiles (operators/dedup.py::minhash_signature) and interpreted
-# eval ran with 1-10 s JIT-cold variance.  shingle_relation now
-# explodes the start index first and builds shingles with flat
-# slice/concat_ws projections — codegen-safe, so the opt-out is gone.
 
 
 # q19_minhash_lsh_pairs RETIRED (r14, registry hygiene — VERDICT r13
@@ -138,22 +130,15 @@ WHERE s.shared / (x.n + y.n - s.shared) >= 0.7
 """,
 )
 def q20_jaccard_neardup(spark, sf_dir):
-    """n-gram Jaccard verification of the LSH candidates (shared-
-    shingle join formulation — never all-pairs).  One persisted shingle
-    relation feeds BOTH the MinHash signature pass and the Jaccard
-    verification, so the explode + md5 (the dominant cost) runs once.
-    Persist contract: the harness that materializes the returned frame
-    releases the cache afterwards — bench.py AND driver_sim both call
-    ``spark.catalog.clearCache()`` between queries (a lingering cache
-    is MEMORY_AND_DISK, so a harness that doesn't merely spills)."""
+    """n-gram Jaccard verification of the LSH candidates: the MinHash-
+    LSH band kernel's candidate pairs, each scored by the exact
+    shingle-set Jaccard inside its row (operators/dedup.py::
+    jaccard_verify) — never all-pairs, and no shingle relation is
+    built. The oracle computes the same scores with the shared-shingle
+    join formulation."""
     docs = _t(spark, sf_dir, "documents")
-    sh_rel = D.shingle_relation(docs, "doc_id", "text", k=3).persist()
-    pairs = D.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, n_hashes=8, n_bands=4, shingle_rel=sh_rel
-    )
-    return D.jaccard_verify(
-        docs, pairs, "doc_id", "text", k=3, threshold=0.7, shingle_rel=sh_rel
-    )
+    pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", k=3, n_hashes=8, n_bands=4)
+    return D.jaccard_verify(docs, pairs, "doc_id", "text", k=3, threshold=0.7)
 
 
 def _simhash_sql(bits: int = 32) -> str:
@@ -184,8 +169,9 @@ SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM v
 @q("q22_simhash", oracle=_simhash_sql())
 def q22_simhash(spark, sf_dir):
     """32-bit SimHash signatures per document (see
-    operators/dedup.py:simhash — one explode + 32 parallel
-    map-side-combinable sums)."""
+    operators/dedup.py::simhash — a row-local kernel: each document's
+    tokens vote on the 32 bits inside its own row, with no token
+    explode and no shuffle by document)."""
     docs = _t(spark, sf_dir, "documents")
     return D.simhash(docs, "doc_id", "text", bits=32)
 

@@ -17,8 +17,9 @@ skipping is an optimization, never a correctness filter.
 The bloom hash lives here too, so the sidecar's build (commit time,
 :func:`bloom_rows`) and probe (planning time) share one definition.
 
-Imports only the stdlib, pyarrow and, in the bloom kernel, numpy (the
-bucket hash, stdlib-only, is imported for clustered snapshots alone):
+Imports only the stdlib, pyarrow and, in the bloom kernel and the span
+hashing it shares with the dedup kernels, numpy (the bucket hash,
+stdlib-only, is imported for clustered snapshots alone):
 the manifest data source's Python workers import this module's
 listing helpers without a JVM, the bloom build's Spark tasks import
 its kernel, and neither must pay the ``operators.txn`` or pandas
@@ -586,6 +587,36 @@ BLOOM_SCHEMA = ", ".join(f"{c} {t}" for c, t in _BLOOM_COLS)
 _BLOOM_BLOCK = 1 << 16
 
 
+def binary_spans(arr) -> "tuple[memoryview, numpy.ndarray]":
+    """The data buffer of a pyarrow string or binary array (either
+    offset width) as a ``memoryview``, and the int64 numpy offsets of
+    the array's elements in it: element i is ``data[offs[i]:offs[i +
+    1]]``. A NULL slot spans whatever its offsets say: drop or fill
+    NULLs first."""
+    import numpy as np
+    import pyarrow as pa
+
+    wide = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    _, offsets, data = arr.buffers()
+    offs = np.frombuffer(offsets, np.int64 if wide else np.int32)
+    offs = offs[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    return memoryview(data if data is not None else b""), offs
+
+
+def md5_spans(data: memoryview, starts, ends) -> bytes:
+    """The md5 digest of each span ``data[s:e]``, concatenated in span
+    order, 16 bytes each. Each span hashes by its raw bytes through a
+    ``memoryview`` slice, so no span becomes a Python ``bytes`` object
+    and a non-UTF-8 string hashes as stored. With
+    :func:`binary_spans`, the md5 of every element of an Arrow array;
+    the dedup kernels pass the spans of tokens and shingles inside the
+    text buffer."""
+    md5 = hashlib.md5
+    return b"".join(
+        [md5(data[a:b]).digest() for a, b in zip(starts.tolist(), ends.tolist())]
+    )
+
+
 def _bloom_of(keys, fpp: float) -> "tuple[int, int, int, bytes] | None":
     """``(m, k, n, bits)`` of one bloom over a pyarrow (chunked) array
     of keys, NULLs and repeats allowed; None when no key is set. Keys
@@ -605,19 +636,18 @@ def _bloom_of(keys, fpp: float) -> "tuple[int, int, int, bytes] | None":
         return None
     if pa.types.is_integer(vals.type):
         vals = vals.cast(pa.string())
-    raw = vals.cast(pa.large_binary()).to_pylist()
-    m, k = _bloom_params(len(raw), fpp)
+    m, k = _bloom_params(len(vals), fpp)
     mm = np.uint64(m)
     steps = np.arange(k, dtype=np.uint64)
     seen = np.zeros(m, dtype=bool)
-    md5 = hashlib.md5
-    for i in range(0, len(raw), _BLOOM_BLOCK):
-        d = b"".join([md5(v).digest() for v in raw[i : i + _BLOOM_BLOCK]])
+    for i in range(0, len(vals), _BLOOM_BLOCK):
+        data, offs = binary_spans(vals.slice(i, _BLOOM_BLOCK))
+        d = md5_spans(data, offs[:-1], offs[1:])
         h = np.frombuffer(d, dtype="<u8").reshape(-1, 2)
         h1 = h[:, 0] % mm
         h2 = (h[:, 1] | np.uint64(1)) % mm
         seen[(h1[:, None] + steps * h2[:, None]) % mm] = True
-    return m, k, len(raw), np.packbits(seen, bitorder="little").tobytes()
+    return m, k, len(vals), np.packbits(seen, bitorder="little").tobytes()
 
 
 def bloom_rows(paths: list[str], cols: list[str], fpp: float, base: str):

@@ -245,15 +245,11 @@ def bench_family(spark, docs, emb, events) -> dict[str, tuple[float, int]]:
     )
 
     def jacc():
-        sh = D.shingle_relation(docs, "doc_id", "text", k=3).persist()
-        pairs = D.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=3, n_hashes=8, n_bands=4, shingle_rel=sh
-        )
-        n = D.jaccard_verify(
-            docs, pairs, "doc_id", "text", k=3, threshold=0.7, shingle_rel=sh
+        pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", k=3, n_hashes=8,
+                                    n_bands=4)
+        return D.jaccard_verify(
+            docs, pairs, "doc_id", "text", k=3, threshold=0.7
         ).count()
-        sh.unpersist()
-        return n
 
     out["jaccard_verify"] = timed(jacc)
 
@@ -554,11 +550,8 @@ def skew_split_evidence(spark, docs) -> tuple[str, float, int]:
         hot = spark.range(5000).select(
             (F.col("id") + 90_000_000).alias("doc_id"), F.lit(HOT_TEXT).alias("text")
         )
-        buckets = D.lsh_buckets(
-            D.minhash_signatures(
-                docs.unionByName(hot), "doc_id", "text", k=3, n_hashes=8
-            ),
-            "doc_id", 8, 4,
+        buckets = D.lsh_bands(
+            docs.unionByName(hot), "doc_id", "text", k=3, n_hashes=8, n_bands=4
         )
         a = buckets.select(F.col("doc_id").alias("id_a"), "band", "bucket")
         b = buckets.select(F.col("doc_id").alias("id_b"), "band", "bucket")
@@ -598,14 +591,12 @@ def incremental_probe_evidence(spark, docs1, docs10) -> dict[str, float]:
     for tag, docs in (("1x", docs1), ("10x", docs10)):
         idx_path = os.path.join(OUT10, f"lsh_index_{tag}")
         if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-            D.lsh_buckets(
-                D.minhash_signatures(docs, "doc_id", "text", k=3, n_hashes=8),
-                "doc_id", 8, 4,
+            D.lsh_bands(
+                docs, "doc_id", "text", k=3, n_hashes=8, n_bands=4
             ).write.mode("overwrite").parquet(idx_path)
         index = spark.read.parquet(idx_path)
-        bkt_b = D.lsh_buckets(
-            D.minhash_signatures(batch, "doc_id", "text", k=3, n_hashes=8),
-            "doc_id", 8, 4,
+        bkt_b = D.lsh_bands(
+            batch, "doc_id", "text", k=3, n_hashes=8, n_bands=4
         ).select(F.col("doc_id").alias("id_new"), "band", "bucket")
         t0 = time.perf_counter()
         (

@@ -6,8 +6,9 @@ a lazy import inside a function counts too.
   table-layer module that evaluated anything with it would check Spark
   SQL text in another dialect, so a dialect difference could pass or
   refuse the wrong rows.
-- No pandas in the bloom build. Its kernel runs inside Spark's Python
-  workers, where importing pandas costs about 0.5 s a worker."""
+- No pandas in the bloom build or the dedup kernels. Their kernels run
+  inside Spark's Python workers, where importing pandas costs about
+  0.5 s a worker."""
 
 from __future__ import annotations
 
@@ -50,3 +51,7 @@ def test_table_layer_imports_no_oracle_engine():
 def test_bloom_build_imports_no_pandas():
     bad = [f for f in NO_PANDAS if "pandas" in _imported_roots(PKG / f)]
     assert bad == []
+
+
+def test_dedup_kernels_import_no_pandas():
+    assert "pandas" not in _imported_roots(PKG / "operators/dedup.py")

@@ -4,6 +4,8 @@ plumbing."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -500,6 +502,144 @@ def test_simhash_matches_pure_python(spark):
         return sum(1 << j for j in range(32) if votes[j] > 0)
 
     assert got == {i: ref(t) for i, t in docs if t is not None}
+
+
+def test_simhash_matches_pure_python_on_invalid_utf8(spark):
+    """SimHash of texts that are not valid UTF-8: Spark's ``split``
+    decodes the text first, so each malformed sequence votes as the
+    U+FFFD it decodes to, not as its raw bytes."""
+    from datapipeline_scraping_spark.operators.dedup import simhash
+
+    hexes = ["61FF20620A", "FF", "FE20FF", "E28220C3", "6120F09F9820C0AF"]
+    df = spark.createDataFrame(
+        list(enumerate(hexes)), "doc_id long, h string"
+    ).select("doc_id", F.unhex("h").cast("string").alias("text"))
+    got = {r["doc_id"]: r["simhash"] for r in simhash(df, "doc_id", "text").collect()}
+
+    def ref(raw):
+        votes = [0] * 32
+        for tok in raw.decode("utf-8", "replace").split(" "):
+            h = int(hashlib.md5(tok.encode()).hexdigest()[:8], 16)
+            for j in range(32):
+                votes[j] += 1 if (h >> j) & 1 else -1
+        return sum(1 << j for j in range(32) if votes[j] > 0)
+
+    assert got == {i: ref(bytes.fromhex(h)) for i, h in enumerate(hexes)}
+
+
+# Pure-Python twins of the MinHash-LSH and Jaccard operators. A text is
+# raw bytes or None; Spark's split(text, ' ') decodes it first, and on
+# the malformed sequences used here the JVM replaces exactly as
+# Python's "replace" does.
+def _ref_shingles(raw, k):
+    toks = (raw or b"").decode("utf-8", "replace").encode().split(b" ")
+    return {b" ".join(toks[i : i + k]) for i in range(max(1, len(toks) - k + 1))}
+
+
+def _ref_hx(shingle):
+    return int(hashlib.md5(shingle).hexdigest()[:8], 16)
+
+
+def _ref_bands(raw, k, n_hashes, n_bands):
+    from datapipeline_scraping_spark.operators.dedup import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_P,
+    )
+
+    hx = [_ref_hx(s) for s in _ref_shingles(raw, k)]
+    mh = [min((MINHASH_A[s] * h + MINHASH_B[s]) % MINHASH_P for h in hx)
+          for s in range(n_hashes)]
+    r = n_hashes // n_bands
+    return {
+        (b, hashlib.md5("|".join(map(str, mh[b * r : (b + 1) * r])).encode()).hexdigest())
+        for b in range(n_bands)
+    }
+
+
+def _dedup_docs(spark, id_type):
+    """Random texts with planted near-duplicates, plus the edge cases:
+    NULL and '' (both one '' shingle), double and trailing spaces,
+    fewer than k tokens, non-ASCII, and invalid UTF-8 (two byte strings
+    that decode alike, so they collide)."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(25)] + ["é", "日本", "ß"]
+    texts = []
+    for _ in range(40):
+        toks = rng.choices(vocab, k=rng.randint(4, 14))
+        texts.append(" ".join(toks).encode())
+        if rng.random() < 0.4:
+            toks[rng.randrange(len(toks))] = "zz"
+            texts.append(" ".join(toks).encode())
+    texts += [None, b"", None, b"a  b  c", b"a b c d ", b" a b c", b"a b",
+              b"x", b"x", "über 日本 straße".encode(), "über 日本 strasse".encode(),
+              bytes.fromhex("61FF20620A"), bytes.fromhex("61FE20620A"),
+              bytes.fromhex("61FF20620A20632064")]
+    ids = [i + 1 if id_type == "long" else f"d{i + 1:03d}" for i in range(len(texts))]
+    df = spark.createDataFrame(
+        [(i, None if t is None else t.hex()) for i, t in zip(ids, texts)],
+        f"doc_id {id_type}, h string",
+    ).select("doc_id", F.unhex("h").cast("string").alias("text"))
+    return df, dict(zip(ids, texts))
+
+
+def test_lsh_bands_match_pure_python(spark):
+    """MinHash-LSH candidate pairs against a pure-Python twin: docs
+    sharing any (band, bucket) of the reference bands, for long and
+    string ids and several (k, n_hashes, n_bands)."""
+    from datapipeline_scraping_spark.operators.dedup import incremental_lsh_pairs
+
+    # the reference's hash of the one shingle of unhex('61FF20620A')
+    assert _ref_hx("a\ufffd b\n".encode()) == 604058874
+    for id_type, k, n_hashes, n_bands in (
+        ("long", 3, 8, 4), ("string", 3, 6, 3), ("long", 2, 8, 2), ("string", 3, 7, 3),
+    ):
+        df, texts = _dedup_docs(spark, id_type)
+        bands = {i: _ref_bands(t, k, n_hashes, n_bands) for i, t in texts.items()}
+        exp = {(a, b) for a in texts for b in texts if a < b and bands[a] & bands[b]}
+        got = minhash_lsh_pairs(df, "doc_id", "text", k=k, n_hashes=n_hashes, n_bands=n_bands)
+        assert dict(got.dtypes) == {"id_a": df.dtypes[0][1], "id_b": df.dtypes[0][1]}
+        got = {(r["id_a"], r["id_b"]) for r in got.collect()}
+        assert got == exp, (id_type, k, n_hashes, n_bands)
+        assert len(exp) > 5
+    # the probe of an incoming batch against a corpus: the same bands
+    df, texts = _dedup_docs(spark, "long")
+    old, new = df.filter("doc_id % 2 = 0"), df.filter("doc_id % 2 = 1")
+    bands = {i: _ref_bands(t, 3, 8, 4) for i, t in texts.items()}
+    exp = {(a, b) for a in texts for b in texts if a % 2 == 0 and b % 2 == 1
+           and bands[a] & bands[b]}
+    got = incremental_lsh_pairs(old, new, "doc_id", "text").collect()
+    assert {(r["id_corpus"], r["id_new"]) for r in got} == exp
+
+
+def test_jaccard_verify_matches_pure_python(spark):
+    """Exact shingle-set Jaccard of every pair against a pure-Python
+    twin: int/int -> double, equal to the last bit; a pair sharing no
+    shingle gives no row, and a pair naming an absent id is dropped."""
+    from datapipeline_scraping_spark.operators.dedup import jaccard_verify
+
+    for id_type, k, threshold in (("long", 3, 0.0), ("string", 2, 0.5), ("long", 1, 0.3)):
+        df, texts = _dedup_docs(spark, id_type)
+        ids = sorted(texts)
+        pairs = [(a, b) for a in ids for b in ids if a < b]
+        absent = 999 if id_type == "long" else "d999"
+        pairs_df = spark.createDataFrame(
+            pairs + [(ids[0], absent)], f"id_a {id_type}, id_b {id_type}"
+        )
+        exp = {}
+        for a, b in pairs:
+            sa, sb = _ref_shingles(texts[a], k), _ref_shingles(texts[b], k)
+            j = len(sa & sb) / len(sa | sb)
+            if sa & sb and j >= threshold:
+                exp[(a, b)] = j
+        out = jaccard_verify(df, pairs_df, "doc_id", "text", k=k, threshold=threshold)
+        assert out.dtypes == [("id_a", df.dtypes[0][1]), ("id_b", df.dtypes[0][1]),
+                              ("jaccard", "double")]
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+        assert got == exp, (id_type, k, threshold)
+        assert len(exp) > 10
 
 
 def test_connected_components_multi_cluster(spark):

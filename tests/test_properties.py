@@ -1129,3 +1129,95 @@ def test_bloom_kernel_sets_the_probed_bits(keys, fpp):
         assert got is None
     else:
         assert got == _probe_bits(keys, fpp)
+
+
+#: byte strings built from spaces, ASCII, valid multi-byte UTF-8 and
+#: malformed sequences, among them an encoded surrogate (ED A0 80, ED
+#: A0), which the JVM replaces by ONE U+FFFD and Python's "replace" by
+#: one per byte
+_DEDUP_TEXT = st.one_of(
+    st.none(),
+    st.lists(
+        st.sampled_from(
+            [b" ", b"a", b"b", b"\xc3\xa9", b"\xef\xbf\xbd", b"\xff",
+             b"\xed\xa0\x80", b"\xed\xa0", b"\xe2\x82", b"\xf0\x9f\x98", b"\xc0"]
+        ),
+        max_size=10,
+    ).map(b"".join),
+)
+
+
+@given(texts=st.lists(_DEDUP_TEXT, max_size=8), k=st.integers(1, 3))
+@settings(**_SETTINGS)
+@pytest.mark.slow  # measured 23s; full (evidence) tier only
+def test_dedup_kernels_read_texts_as_spark_split_does(spark, texts, k):
+    """The SimHash, MinHash-LSH band and Jaccard kernels read each text
+    as Spark's ``split(text, ' ')`` does, byte for byte. Over byte
+    strings with malformed UTF-8, NULL texts, and mostly or wholly
+    empty partitions (at most 8 docs over the partitions the kernels'
+    input is spread to), each kernel's rows equal a reference that
+    takes its tokens and shingles from Spark's own ``split``
+    (``posexplode`` and ``shingle_relation``) and computes the rest in
+    Python."""
+    import hashlib
+    from itertools import combinations
+
+    from datapipeline_scraping_spark.operators.dedup import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_P,
+        jaccard_verify,
+        lsh_bands,
+        shingle_relation,
+        simhash,
+    )
+
+    df = spark.createDataFrame(
+        [(i, None if t is None else t.hex()) for i, t in enumerate(texts)],
+        "doc_id long, h string",
+    ).select("doc_id", F.unhex("h").cast("string").alias("text"))
+
+    def hx(raw: bytes) -> int:
+        return int(hashlib.md5(raw).hexdigest()[:8], 16)
+
+    toks: dict[int, list[bytes]] = {}
+    for r in df.select(
+        "doc_id", F.posexplode(F.split("text", " "))
+    ).select("doc_id", "pos", F.hex(F.col("col").cast("binary")).alias("t")).collect():
+        toks.setdefault(r["doc_id"], []).append((r["pos"], bytes.fromhex(r["t"])))
+    exp_sim = {}
+    for i, ts in toks.items():
+        hs = [hx(t) for _, t in sorted(ts)]
+        exp_sim[i] = sum(
+            1 << j for j in range(32) if sum(1 if h >> j & 1 else -1 for h in hs) > 0
+        )
+    got_sim = {r["doc_id"]: r["simhash"] for r in simhash(df, "doc_id", "text").collect()}
+    assert got_sim == exp_sim
+
+    sh: dict[int, set] = {}
+    for r in shingle_relation(df, "doc_id", "text", k=k).select(
+        "doc_id", F.hex(F.col("s").cast("binary")).alias("s")
+    ).collect():
+        sh.setdefault(r["doc_id"], set()).add(bytes.fromhex(r["s"]))
+    exp_bands = set()
+    for i, ss in sh.items():
+        mh = [min((MINHASH_A[s] * hx(x) + MINHASH_B[s]) % MINHASH_P for x in ss)
+              for s in range(8)]
+        for b in range(4):
+            key = f"{mh[2 * b]}|{mh[2 * b + 1]}".encode()
+            exp_bands.add((i, b, hashlib.md5(key).hexdigest()))
+    got_bands = {tuple(r) for r in lsh_bands(df, "doc_id", "text", k=k).collect()}
+    assert got_bands == exp_bands
+
+    pairs = list(combinations(range(len(texts)), 2))
+    exp_j = {
+        (a, b): len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+        for a, b in pairs
+        if sh[a] & sh[b]
+    }
+    got_j = jaccard_verify(
+        df,
+        spark.createDataFrame(pairs, "id_a long, id_b long"),
+        "doc_id", "text", k=k, threshold=0.0,
+    ).collect()
+    assert {(r["id_a"], r["id_b"]): r["jaccard"] for r in got_j} == exp_j

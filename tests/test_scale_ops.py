@@ -182,6 +182,39 @@ def test_incremental_dedup_plan_has_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_dedup_plans_have_no_token_rows(spark, tmp_path):
+    """simhash, minhash_lsh_pairs and jaccard_verify compute inside each
+    document's (or pair's) row: their executed plans explode no token
+    or shingle into rows (no Generate), and every Exchange partitions
+    documents, band rows or pairs (by id, pair or (band, bucket)),
+    never a token or shingle relation."""
+    import re
+
+    from datapipeline_scraping_spark.operators import dedup as D
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"w{i % 2} the shared tokens of document {i // 2} are all here")
+         for i in range(60)],
+        "doc_id long, text string",
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    pairs = D.minhash_lsh_pairs(docs, "doc_id", "text")
+    keys = {"doc_id", "id_a", "id_b", "band", "bucket"}
+    for df in (
+        D.simhash(docs, "doc_id", "text"),
+        pairs,
+        D.jaccard_verify(docs, pairs, "doc_id", "text"),
+    ):
+        assert df.count() > 0
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Generate" not in plan
+        for cols in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
+            part = {c.strip().split("#")[0] for c in cols.split(",")[:-1]}
+            assert part <= keys, cols
+
+
 def test_length_outliers_plan_broadcasts_moments(spark):
     """q98: the per-language moment table (≤ |langs| rows) joins back
     to documents as a broadcast — no shuffle of the fact side."""

@@ -452,10 +452,9 @@ def lsh_bands(
 
 def lsh_candidate_pairs(buckets: DataFrame, id_col: str) -> DataFrame:
     """Distinct candidate pairs (a < b) from any shared band bucket.
-    The self-join shuffles on (band, bucket) only."""
-    # the self-join consumes the bucket table twice; persist so the
-    # signature chain upstream executes once
-    buckets = buckets.persist()
+    The self-join shuffles on (band, bucket) only. Nothing is cached:
+    AQE reuses the exchange both sides share (``ReusedExchange``), so
+    no cache entry outlives the call."""
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (

@@ -1,49 +1,59 @@
-"""SQL ``UPDATE`` / ``DELETE`` / ``MERGE INTO`` on the manifest ledger
-(VERDICT r10 item 3; grammar hardened per VERDICT r11 item 2), and the
-registered-table views those statements act on. :func:`register_table`
-mints a temporary view of :meth:`ManifestTable.read` — a native
-parquet scan, so a SELECT runs no Python worker — and :func:`sql`
-routes the writes, ``INSERT INTO`` included. Direct ``CREATE ...
-USING manifest`` relations (q171, q183's final read) stay on the
-Python data source, which is read-only.
+"""SQL ``UPDATE`` / ``DELETE`` / ``MERGE INTO`` on the manifest ledger,
+and the registered-table views those statements act on.
+:func:`register_table` mints a temporary view of
+:meth:`ManifestTable.read` — a native parquet scan, so a SELECT runs no
+Python worker — and :func:`sql` routes the writes, ``INSERT INTO``
+included. Direct ``CREATE ... USING manifest`` relations (q171, q183's
+final read) stay on the Python data source, which is read-only.
 
-Spark's parser only accepts UPDATE/DELETE/MERGE for DataSource-V2
-tables implementing the row-level-operation interfaces, which the
-Python DataSource API does not expose — so the statements are accepted
-HERE, by a thin statement router, and executed by the ledger's
-existing transactional writers:
+Spark's parser reads UPDATE/DELETE/MERGE, but Spark only runs them on
+DataSource-V2 tables implementing the row-level-operation interfaces,
+which the Python DataSource API does not expose. So :func:`sql` parses
+each statement that starts with UPDATE, DELETE, MERGE or ALTER once
+with Spark's own parser, routes the plan by its class when it names a
+table registered in this session, and the ledger's transactional
+writers run it. Conditions, assignments and MERGE sources stay Spark
+expressions and plans: they are requalified as trees and wrapped as
+Columns, never printed back to SQL text.
 
-- ``UPDATE t SET c = expr[, ...] [WHERE pred]`` →
+- ``UPDATE t [[AS] a] SET c = expr[, ...] [WHERE pred]`` →
   :meth:`ManifestTable.update_where` (merge-on-read: hardlinked data
   files + ``_upd/`` post-image sidecar, O(matched rows) not O(table));
-- ``DELETE FROM t [WHERE pred]`` → :meth:`ManifestTable.delete_where`
-  (deletion-vector sidecar, same cost shape);
-- ``MERGE INTO t [[AS] a] USING s [[AS] b] ON <key equalities> WHEN ...``
-  → :func:`..operators.txn.merge_commit`, the planner and CAS retry
-  loop ``merge_write`` runs (copy-on-write; ``UPDATE SET *`` plus
-  ``INSERT *`` is the broadcast anti-join upsert, any other clause set
-  :func:`..operators.merge.merge_into`'s full-outer join);
-- ``ALTER TABLE t PARTITION BY (c1[, c2 ...])`` →
-  :meth:`ManifestTable.evolve_partition` (r12 — metadata-only
-  partition evolution; ``()`` evolves to unpartitioned);
+- ``DELETE FROM t [[AS] a] [WHERE pred]`` →
+  :meth:`ManifestTable.delete_where` (deletion-vector sidecar, same
+  cost shape);
+- ``MERGE INTO t [[AS] a] USING s | (query) [[AS] b] ON <key
+  equalities> WHEN ...`` → :func:`..operators.txn.merge_commit`, the
+  planner and CAS retry loop ``merge_write`` runs (copy-on-write;
+  ``UPDATE SET *`` plus ``INSERT *`` is the broadcast anti-join
+  upsert, any other clause set :func:`..operators.merge.merge_into`'s
+  full-outer join);
 - ``ALTER TABLE t RENAME COLUMN a TO b`` / ``ADD COLUMN c <type>`` /
   ``DROP COLUMN c`` → the metadata-only ALTER family
   (:meth:`rename_column` / :meth:`add_column` / :meth:`drop_column`);
-- ``OPTIMIZE t [ZORDER BY (c1, c2)]`` → :func:`compact_table`
-  (returns Delta-style metrics as a one-row DataFrame);
-- ``VACUUM t [RETAIN n HOURS]`` → snapshot GC past the retention
-  window (returns removed/kept counts);
-- ``DESCRIBE HISTORY t`` → :meth:`ManifestTable.history` as a
-  DataFrame (version / snapshot / ts / active partition spec /
-  retained), Delta's table-history surface;
-- ``DESCRIBE DETAIL t`` → one-row table detail (format, location,
-  version, active spec, spec count + full spec HISTORY, bucket
-  layout, declared write sort order, file count, bytes), Delta's
-  ``DESCRIBE DETAIL`` with the Iceberg metadata the log tracks;
 - ``INSERT INTO [TABLE] t [(c1, ...)] VALUES ... | <query>`` →
   :meth:`ManifestTable.append` of the rows Spark's own INSERT analysis
   shapes to the declared schema (ANSI store assignment, column lists,
   arity checks).
+
+Spark's parser refuses five more verbs or misreads them, so they keep
+a regex each and are matched before the parser runs:
+
+- ``ALTER TABLE t PARTITION BY (c1[, c2 ...])`` →
+  :meth:`ManifestTable.evolve_partition` (metadata-only partition
+  evolution; ``()`` evolves to unpartitioned);
+- ``OPTIMIZE t [ZORDER BY (c1, c2)]`` → :func:`compact_table`
+  (returns Delta-style metrics as a one-row DataFrame);
+- ``VACUUM t [RETAIN n HOURS]`` → snapshot GC past the retention
+  window (returns removed/kept counts);
+- ``DESCRIBE HISTORY t`` (Spark reads it as DESCRIBE COLUMN) →
+  :meth:`ManifestTable.history` as a DataFrame (version / snapshot /
+  ts / active partition spec / retained), Delta's table-history
+  surface;
+- ``DESCRIBE DETAIL t`` (likewise) → one-row table detail (format,
+  location, version, active spec, spec count + full spec HISTORY,
+  bucket layout, declared write sort order, file count, bytes),
+  Delta's ``DESCRIBE DETAIL`` with the Iceberg metadata the log tracks.
 
 Everything else falls through to ``spark.sql`` untouched, so the
 router composes with the whole read surface. Table-property contracts
@@ -53,17 +63,12 @@ Every routed statement re-mints the name's view, which pins the version
 it read, so the next SELECT sees the commit. Routing is PER SESSION:
 the views the names resolve to are session-scoped TEMP views, so the
 routing table is keyed by the SparkSession too — two sessions
-registering the same name cannot cross-route each other's statements
-(ADVICE r11).
+registering the same name cannot cross-route each other's statements.
 
-Grammar subset (documented, mirrors what Delta's SQL accepts for the
-same operations; unsupported shapes raise ``ValueError`` loudly
-rather than mis-execute):
+What the writers implement (Delta's SQL subset for the same
+operations). Anything else that Spark parses, or that its parser
+refuses, raises :class:`UnsupportedStatementError` and commits nothing:
 
-- assignments: ``SET [alias.]col = <sql expr>`` with top-level commas
-  separating multiple assignments;
-- predicates: any Spark SQL boolean expression over the table's
-  columns;
 - MERGE ``ON``: AND-ed same-column key equalities
   ``<target-alias>.k = <source-alias>.k [AND ...]`` — composite merge
   keys route as a multi-column pk (the reference's own upsert declares
@@ -72,27 +77,18 @@ rather than mis-execute):
 - MERGE clauses: ``WHEN MATCHED [AND cond] THEN UPDATE SET *``,
   ``WHEN MATCHED [AND cond] THEN UPDATE SET col = expr[, ...]``,
   ``WHEN MATCHED [AND cond] THEN DELETE``,
-  ``WHEN NOT MATCHED [AND cond] THEN INSERT *``. ANY number of WHEN
-  MATCHED clauses in declared order (r13 — VERDICT r12 item 4); ANSI
-  evaluates the FIRST clause whose condition is TRUE per matched row
-  (NULL does not fire), compiled as mutually-exclusive fired flags
-  plus one per-column CASE for mixed ``SET`` maps. Delta's rule,
-  generalized: every WHEN MATCHED clause except the last must carry a
-  condition (later clauses are unreachable otherwise). At most one
-  WHEN NOT MATCHED clause; without it, source-only rows do NOT
-  insert (ANSI semantics).
-
-Lexing is quote-aware throughout: alias rewriting, keyword splitting,
-and the ``USING (subquery)`` extraction all skip string literals —
-including backslash-escaped and doubled quotes inside them (Spark's
-default ``escapedStringLiterals=false`` makes ``\\'`` a literal
-quote) — and balance parentheses (ADVICE r11 lows — the old
-sequential ``re.sub`` alias rewrite corrupted swapped aliases and
-literals; the non-greedy source regex misparsed nested parens). One documented lexing limit:
-clause boundaries split on top-level ``WHEN``/``THEN`` keywords, so a
-``CASE WHEN ... THEN ... END`` embedded in a clause condition or SET
-expression must be parenthesized — ``(CASE WHEN ... END)`` — to sit
-below depth 0.
+  ``WHEN NOT MATCHED [AND cond] THEN INSERT *``. Any number of WHEN
+  MATCHED clauses in declared order; ANSI evaluates the FIRST clause
+  whose condition is TRUE per matched row (NULL does not fire),
+  compiled as mutually-exclusive fired flags plus one per-column CASE
+  for mixed ``SET`` maps. Every WHEN MATCHED clause except the last
+  must carry a condition (Spark's parser enforces it). At most one
+  WHEN NOT MATCHED clause; without it, source-only rows do NOT insert
+  (ANSI semantics). No ``WHEN NOT MATCHED BY SOURCE`` and no ``WITH
+  SCHEMA EVOLUTION`` (``merge_write`` has the latter);
+- ALTER: one top-level column per statement; ADD COLUMN takes a
+  nullable column with no position, default or comment;
+- the target is the registered single-part name.
 
 Reference anchor: the reference's sink IS hand-written SQL DML through
 psycopg2 (``INSERT ... ON CONFLICT (pk) DO UPDATE``,
@@ -116,8 +112,10 @@ import os
 import re
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import ParseException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.sqltext import ident, string_lit
 from ..operators.txn import ManifestTable, merge_commit
@@ -137,6 +135,14 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 #: table's ``INSERT INTO`` against (never executed); dropped after each
 #: statement
 _INSERT_TARGET = "_manifest_insert_target"
+
+
+class UnsupportedStatementError(ValueError):
+    """An UPDATE, DELETE, MERGE or ALTER statement :func:`sql` cannot
+    run: Spark's parser refused it, or it names a registered table in
+    a shape the ledger's writers do not implement. The message leads
+    with this grammar's words; a parser refusal appends Spark's
+    message."""
 
 
 def _tables(spark: SparkSession) -> dict[str, dict]:
@@ -624,167 +630,6 @@ def _refresh_view(spark: SparkSession, name: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# quote-aware lexing helpers
-# ---------------------------------------------------------------------------
-
-
-def _literal_end(s: str, i: int) -> int:
-    """Index just past the string literal opening at ``s[i]``, honouring
-    backslash escapes (Spark's default ``escapedStringLiterals=false``
-    makes ``\\'`` a literal quote inside the string) and doubled-quote
-    escaping. Unterminated literals run to end-of-string."""
-    q = s[i]
-    j = i + 1
-    n = len(s)
-    while j < n:
-        ch = s[j]
-        if ch == "\\" and j + 1 < n:
-            j += 2
-            continue
-        if ch == q:
-            if j + 1 < n and s[j + 1] == q:  # doubled-quote escape
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def _keyword_spans(s: str, word: str) -> list[tuple[int, int]]:
-    """(start, end) offsets of every TOP-LEVEL occurrence of keyword
-    ``word``: paren depth 0, outside string literals, identifier-
-    bounded, case-insensitive."""
-    spans: list[tuple[int, int]] = []
-    up, word_up, w = s.upper(), word.upper(), len(word)
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"'):
-            i = _literal_end(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and up.startswith(word_up, i)
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (
-                i + w == n or not (s[i + w].isalnum() or s[i + w] == "_")
-            )
-        ):
-            spans.append((i, i + w))
-            i += w
-            continue
-        i += 1
-    return spans
-
-
-def _split_keyword(s: str, word: str) -> list[str]:
-    """Split ``s`` on top-level occurrences of keyword ``word``."""
-    parts, last = [], 0
-    for a, b in _keyword_spans(s, word):
-        parts.append(s[last:a])
-        last = b
-    parts.append(s[last:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/quote depth zero."""
-    out, buf, depth = [], [], 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"'):
-            j = _literal_end(s, i)
-            buf.append(s[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    if buf:
-        out.append("".join(buf))
-    return [p.strip() for p in out if p.strip()]
-
-
-def _rewrite_aliases(text: str, mapping: dict[str, str]) -> str:
-    """Rewrite ``alias.`` qualifiers to their canonical names in ONE
-    pass, skipping string literals — so swapped aliases (user's ``s``
-    meaning the target) rewrite correctly instead of being clobbered
-    by a second substitution, and an alias-looking token inside a
-    literal is left alone (ADVICE r11)."""
-    out: list[str] = []
-    prev = ""
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in ("'", '"'):
-            j = _literal_end(text, i)
-            out.append(text[i:j])
-            prev = ch
-            i = j
-            continue
-        m = _IDENT.match(text, i)
-        if m:
-            word = m.group(0)
-            end = m.end()
-            if (
-                prev != "."
-                and text[end : end + 1] == "."
-                and word.lower() in mapping
-            ):
-                out.append(mapping[word.lower()])
-            else:
-                out.append(word)
-            prev = word[-1]
-            i = end
-            continue
-        out.append(ch)
-        prev = ch
-        i += 1
-    return "".join(out)
-
-
-def _strip_outer_parens(s: str) -> str:
-    """Strip one level of wrapping parens if they enclose the whole
-    expression (quote-aware)."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        closes_at_end = False
-        k, n_ = 0, len(s)
-        while k < n_:
-            ch = s[k]
-            if ch in ("'", '"'):
-                k = _literal_end(s, k)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    closes_at_end = k == n_ - 1
-                    break
-            k += 1
-        if not closes_at_end:
-            return s
-        s = s[1:-1].strip()
-    return s
-
-
-# ---------------------------------------------------------------------------
 # statement grammar
 # ---------------------------------------------------------------------------
 
@@ -797,51 +642,17 @@ _INSERT_RE = re.compile(
     r"(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)\s+SET\s+(?P<body>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
-    r"(?:\s+WHERE\s+(?P<pred>.*))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-#: a MERGE alias, ``AS`` optional; the keywords around it are no alias
-_MERGE_ALIAS = (
-    r"(?:AS\s+)?(?!(?:AS|USING|ON|WHEN)\b)(?P<{}>[A-Za-z_][A-Za-z0-9_]*)"
-)
-_MERGE_HEAD = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
-    rf"(?:\s+{_MERGE_ALIAS.format('talias')})?"
-    r"\s+USING\s+",
-    re.IGNORECASE | re.DOTALL,
-)
+# Spark 4.1's parser refuses the next three statements and reads
+# DESCRIBE HISTORY/DETAIL t as DESCRIBE COLUMN, so these five keep a
+# regex and are matched before the parser runs.
+# tests/test_manifest_sql.py::test_spark_parser_refuses_the_regex_verbs
+# names the regex to delete once Spark parses one of them.
 #: ALTER TABLE t PARTITION BY (c1[, c2 ...]) | ()  — partition
 #: evolution (Iceberg's ``ALTER TABLE ... ADD PARTITION FIELD``
 #: family, collapsed to one declarative REPLACE of the active spec)
 _ALTER_PART_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
     r"\s+PARTITION\s+BY\s*\(\s*(?P<cols>[A-Za-z0-9_,\s]*)\)\s*$",
-    re.IGNORECASE,
-)
-#: ALTER TABLE t ADD COLUMN c <type> — metadata-only ADD
-_ALTER_ADD_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+ADD\s+COLUMN\s+(?P<col>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+(?P<dtype>[A-Za-z_][A-Za-z0-9_<>,()\s]*?)\s*$",
-    re.IGNORECASE,
-)
-#: ALTER TABLE t RENAME COLUMN a TO b — metadata-only rename
-_ALTER_RENAME_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+RENAME\s+COLUMN\s+(?P<old>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+TO\s+(?P<new>[A-Za-z_][A-Za-z0-9_]*)\s*$",
-    re.IGNORECASE,
-)
-#: ALTER TABLE t DROP COLUMN c — metadata-only drop
-_ALTER_DROP_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<tbl>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+DROP\s+COLUMN\s+(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*$",
     re.IGNORECASE,
 )
 #: OPTIMIZE t [ZORDER BY (c1[, c2 ...])] — Delta's maintenance verb
@@ -867,154 +678,167 @@ _DETAIL_RE = re.compile(
     re.IGNORECASE,
 )
 
-
-def _split_update_body(body: str) -> tuple[str, str | None]:
-    """Split ``SET`` assignments from a trailing top-level WHERE."""
-    spans = _keyword_spans(body, "WHERE")
-    if not spans:
-        return body.strip(), None
-    a, b = spans[0]
-    return body[:a].strip(), body[b:].strip()
-
-
-def _parse_assignments(
-    assigns_s: str, alias: str | None
-) -> dict[str, str]:
-    """``col = expr[, ...]`` (optionally ``alias.col``) -> {col: expr
-    text}. Raises on malformed shapes."""
-    updates: dict[str, str] = {}
-    for a in _split_top_level(assigns_s):
-        col, eq, expr = a.partition("=")
-        col = col.strip()
-        if alias:
-            prefix = f"{alias.lower()}."
-            if col.lower().startswith(prefix):
-                col = col[len(prefix) :].strip()
-        if not eq or not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", col):
-            raise ValueError(f"unsupported SET assignment: {a!r}")
-        if col in updates:
-            raise ValueError(f"duplicate SET assignment for {col!r}")
-        updates[col] = expr.strip()
-    if not updates:
-        raise ValueError(f"empty SET clause: {assigns_s!r}")
-    return updates
+#: the first keywords of the statements :func:`sql` parses
+_PARSED_VERBS = frozenset({"UPDATE", "DELETE", "MERGE", "ALTER"})
+#: the parsed plans :func:`sql` routes to the ledger's writers
+_ROUTED_PLANS = frozenset(
+    "UpdateTable DeleteFromTable MergeIntoTable AddColumns RenameColumn "
+    "DropColumns".split()
+)
+#: what a parser refusal means in this grammar: by Spark's error
+#: condition, else by the statement's verb
+_PARSE_REFUSALS = {
+    "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION": (
+        "every WHEN MATCHED clause except the last must have a "
+        "condition (later clauses are unreachable otherwise)"
+    ),
+    "NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION": (
+        "at most one WHEN NOT MATCHED clause is supported"
+    ),
+    "UPDATE": "unsupported SET assignment or WHERE clause",
+    "DELETE": "unsupported DELETE statement",
+    "MERGE": "unsupported MERGE statement",
+    "ALTER": "unsupported ALTER TABLE statement",
+}
 
 
-def _parse_merge(statement: str) -> dict | None:
-    """Parse a MERGE statement head; None if not a MERGE shape. The
-    USING source is extracted with balanced, quote-aware parens (a
-    subquery with nested parentheses parses exactly)."""
-    m = _MERGE_HEAD.match(statement)
-    if m is None:
-        return None
-    rest = statement[m.end() :]
-    if rest.startswith("("):
-        depth = 0
-        end = -1
-        k, n_ = 0, len(rest)
-        while k < n_:
-            ch = rest[k]
-            if ch in ("'", '"'):
-                k = _literal_end(rest, k)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    end = k
-                    break
-            k += 1
-        if end == -1:
-            raise ValueError("MERGE USING (...): unbalanced parentheses")
-        src, rest = rest[: end + 1], rest[end + 1 :]
-    else:
-        mi = _IDENT.match(rest)
-        if mi is None:
-            raise ValueError(
-                f"MERGE USING: expected a table name or (subquery), "
-                f"got {rest[:40]!r}"
-            )
-        src, rest = mi.group(0), rest[mi.end() :]
-    mt = re.match(
-        rf"\s*(?:{_MERGE_ALIAS.format('salias')}\s+)?ON\s",
-        rest,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if mt is None:
-        raise ValueError("MERGE: expected [[AS] <alias>] ON <condition>")
-    rest = rest[mt.end() :]
-    whens = _keyword_spans(rest, "WHEN")
-    if not whens:
-        raise ValueError("MERGE: expected WHEN clauses after ON")
-    on = rest[: whens[0][0]].strip()
-    bounds = [a for a, _ in whens] + [len(rest)]
-    clauses = [
-        rest[whens[k][1] : bounds[k + 1]].strip() for k in range(len(whens))
-    ]
-    return {
-        "tbl": m.group("tbl"),
-        "talias": m.group("talias"),
-        "src": src,
-        "salias": mt.group("salias"),
-        "on": on,
-        "clauses": clauses,
-    }
+def _parse(spark: SparkSession, statement: str, verb: str):
+    """Spark's unresolved logical plan of ``statement``; a parser
+    refusal raises :class:`UnsupportedStatementError`."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        return parser.parsePlan(statement)
+    except ParseException as e:
+        words = _PARSE_REFUSALS.get(e.getCondition(), _PARSE_REFUSALS[verb])
+        raise UnsupportedStatementError(f"{words}\n{e}") from e
 
 
-def _parse_on(on: str, talias: str, salias: str) -> list[str]:
-    """ON must be AND-ed same-column key equalities across the two
-    aliases (either order per equality); returns the key columns."""
-    pks: list[str] = []
-    for part in _split_keyword(_strip_outer_parens(on), "AND"):
-        eq = re.fullmatch(
-            r"(?P<l>[A-Za-z_][A-Za-z0-9_]*)\.(?P<lc>[A-Za-z_][A-Za-z0-9_]*)"
-            r"\s*=\s*"
-            r"(?P<r>[A-Za-z_][A-Za-z0-9_]*)\.(?P<rc>[A-Za-z_][A-Za-z0-9_]*)",
-            _strip_outer_parens(part),
+def _seq(spark: SparkSession, seq) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    converters = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    return list(converters.asJava(seq))
+
+
+def _target(spark: SparkSession, node) -> tuple[list[str], str | None]:
+    """``(name parts, alias)`` of a parsed DML target; no parts when the
+    target is not a table name."""
+    alias = None
+    if node.nodeName() == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    if node.nodeName() not in ("UnresolvedRelation", "UnresolvedTable"):
+        return [], alias
+    return _seq(spark, node.multipartIdentifier()), alias
+
+
+def _requalify(spark: SparkSession, expr, mapping: dict):
+    """``expr`` with every ``q.col`` reference whose lowercase
+    qualifier is in ``mapping`` requalified as ``mapping[q].col``, or
+    bare ``col`` where that is None. The tree is rebuilt, never printed
+    back to SQL text (``Expression.sql()`` does not round-trip)."""
+    jvm = spark._jvm
+    if expr.nodeName() == "UnresolvedAttribute":
+        parts = _seq(spark, expr.nameParts())
+        if len(parts) < 2 or parts[0].lower() not in mapping:
+            return expr
+        q = mapping[parts[0].lower()]
+        return jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
+            jvm.PythonUtils.toSeq(([q] if q else []) + parts[1:])
         )
-        if not eq:
-            raise ValueError(
+    kids = _seq(spark, expr.children())
+    new = [_requalify(spark, k, mapping) for k in kids]
+    if all(n is k for n, k in zip(new, kids)):
+        return expr
+    return expr.withNewChildren(jvm.PythonUtils.toSeq(new))
+
+
+def _column(spark: SparkSession, expr, mapping: dict) -> Column:
+    """A parsed expression, requalified by ``mapping``, as a Column."""
+    return Column(
+        spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(
+            _requalify(spark, expr, mapping)
+        )
+    )
+
+
+def _assignments(
+    spark: SparkSession, assigns, own: set, mapping: dict
+) -> dict[str, Column]:
+    """Parsed ``SET`` assignments as ``{column: Column}``. A key may be
+    qualified by a name in ``own`` (the target's name or alias)."""
+    out: dict[str, Column] = {}
+    for a in _seq(spark, assigns):
+        parts = _seq(spark, a.key().nameParts())
+        if len(parts) == 2 and parts[0].lower() in own:
+            parts = parts[1:]
+        if len(parts) != 1:
+            raise UnsupportedStatementError(
+                f"unsupported SET assignment: {'.'.join(parts)!r}"
+            )
+        if parts[0] in out:
+            raise UnsupportedStatementError(
+                f"duplicate SET assignment for {parts[0]!r}"
+            )
+        out[parts[0]] = _column(spark, a.value(), mapping)
+    return out
+
+
+def _merge_keys(
+    spark: SparkSession, cond, talias: str, salias: str
+) -> list[str]:
+    """MERGE ``ON`` must be AND-ed same-column key equalities across
+    the two aliases (either order per equality); returns the key
+    columns."""
+    pks: list[str] = []
+    terms = [cond]
+    while terms:
+        part = terms.pop(0)
+        if part.nodeName() == "And":
+            terms[:0] = _seq(spark, part.children())
+            continue
+        sides = [
+            _seq(spark, c.nameParts())
+            for c in _seq(spark, part.children())
+            if c.nodeName() == "UnresolvedAttribute"
+        ]
+        if part.nodeName() != "EqualTo" or [len(s) for s in sides] != [2, 2]:
+            raise UnsupportedStatementError(
                 f"MERGE ON must be AND-ed key equalities "
-                f"<target>.k = <source>.k (got {part!r})"
+                f"<target>.k = <source>.k (got {part.sql()!r})"
             )
-        sides = {
-            eq.group("l").lower(): eq.group("lc"),
-            eq.group("r").lower(): eq.group("rc"),
-        }
-        if set(sides) != {talias, salias} or sides[talias] != sides[salias]:
-            raise ValueError(
+        by_alias = {q.lower(): c for q, c in sides}
+        if set(by_alias) != {talias, salias} or sides[0][1] != sides[1][1]:
+            raise UnsupportedStatementError(
                 f"MERGE ON must equate the SAME column across target "
-                f"and source aliases (got {part!r})"
+                f"and source aliases (got {part.sql()!r})"
             )
-        if sides[talias] not in pks:
-            pks.append(sides[talias])
-    if not pks:
-        raise ValueError(f"MERGE ON names no key equality (got {on!r})")
+        if by_alias[talias] not in pks:
+            pks.append(by_alias[talias])
     return pks
 
 
-def _parse_when(clause: str) -> dict:
-    """One WHEN clause body (text after the WHEN keyword) ->
-    {"not": bool, "cond": str|None, "action": str}."""
-    m = re.match(r"(?:(?P<not>NOT)\s+)?MATCHED\b", clause, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"unsupported MERGE clause: WHEN {clause!r}")
-    rest = clause[m.end() :]
-    thens = _keyword_spans(rest, "THEN")
-    if not thens:
-        raise ValueError(f"MERGE clause missing THEN: WHEN {clause!r}")
-    a, b = thens[0]
-    cond_s, action = rest[:a].strip(), rest[b:].strip()
-    cond = None
-    if cond_s:
-        ma = re.match(r"AND\b", cond_s, re.IGNORECASE)
-        if not ma or not cond_s[ma.end() :].strip():
-            raise ValueError(
-                f"unsupported MERGE clause condition: {cond_s!r}"
-            )
-        cond = cond_s[ma.end() :].strip()
-    return {"not": bool(m.group("not")), "cond": cond, "action": action}
+def _alter(spark: SparkSession, plan, kind: str, tbl: ManifestTable) -> int:
+    """ALTER TABLE ... ADD / RENAME / DROP COLUMN of one top-level
+    column: the ledger's metadata-only column family."""
+    if kind == "RenameColumn":
+        col = _seq(spark, plan.column().name())
+        if len(col) == 1:
+            return tbl.rename_column(col[0], plan.newName())
+    elif kind == "DropColumns":
+        drops = _seq(spark, plan.columnsToDrop())
+        cols = [_seq(spark, f.name()) for f in drops]
+        if len(cols) == 1 and len(cols[0]) == 1 and not plan.ifExists():
+            return tbl.drop_column(cols[0][0])
+    else:
+        (c, *more) = _seq(spark, plan.columnsToAdd())
+        opts = (c.path(), c.comment(), c.position(), c.default())
+        if not more and c.nullable() and not any(o.isDefined() for o in opts):
+            dtype = T._parse_datatype_json_string(c.dataType().json())
+            return tbl.add_column(c.colName(), dtype)
+    raise UnsupportedStatementError(
+        "ALTER TABLE ADD, RENAME or DROP COLUMN takes one top-level "
+        "column; ADD COLUMN a nullable one with no position, default or "
+        "comment, DROP COLUMN no IF EXISTS"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1089,40 +913,6 @@ def sql(spark: SparkSession, statement: str, *, retries: int = 3):
         )
         _refresh_view(spark, m.group("tbl"))
         return ver
-    m = _UPDATE_RE.match(statement)
-    if m and _resolve(spark, m.group("tbl")):
-        spec = _resolve(spark, m.group("tbl"))
-        tbl = ManifestTable(spec["root"])
-        assigns_s, pred = _split_update_body(m.group("body"))
-        updates = {
-            c: F.expr(e)
-            for c, e in _parse_assignments(assigns_s, None).items()
-        }
-        ver = tbl.update_where(
-            spark,
-            F.expr(pred) if pred else F.lit(True),
-            updates,
-            key_cols=_key_cols(tbl, spec["key_cols"], "UPDATE"),
-            retries=retries,
-        )
-        _refresh_view(spark, m.group("tbl"))
-        return ver
-    m = _DELETE_RE.match(statement)
-    if m and _resolve(spark, m.group("tbl")):
-        spec = _resolve(spark, m.group("tbl"))
-        tbl = ManifestTable(spec["root"])
-        pred = m.group("pred")
-        ver = tbl.delete_where(
-            spark,
-            F.expr(pred) if pred else F.lit(True),
-            key_cols=_key_cols(tbl, spec["key_cols"], "DELETE"),
-            retries=retries,
-        )
-        _refresh_view(spark, m.group("tbl"))
-        return ver
-    mh = _MERGE_HEAD.match(statement)
-    if mh and _resolve(spark, mh.group("tbl")):
-        return _run_merge(spark, _parse_merge(statement), retries)
     m = _ALTER_PART_RE.match(statement)
     if m and _resolve(spark, m.group("tbl")):
         spec = _resolve(spark, m.group("tbl"))
@@ -1130,28 +920,11 @@ def sql(spark: SparkSession, statement: str, *, retries: int = 3):
         ver = ManifestTable(spec["root"]).evolve_partition(cols)
         _refresh_view(spark, m.group("tbl"))
         return ver
-    m = _ALTER_RENAME_RE.match(statement)
-    if m and _resolve(spark, m.group("tbl")):
-        spec = _resolve(spark, m.group("tbl"))
-        ver = ManifestTable(spec["root"]).rename_column(
-            m.group("old"), m.group("new")
-        )
-        _refresh_view(spark, m.group("tbl"))
-        return ver
-    m = _ALTER_DROP_RE.match(statement)
-    if m and _resolve(spark, m.group("tbl")):
-        spec = _resolve(spark, m.group("tbl"))
-        ver = ManifestTable(spec["root"]).drop_column(m.group("col"))
-        _refresh_view(spark, m.group("tbl"))
-        return ver
-    m = _ALTER_ADD_RE.match(statement)
-    if m and _resolve(spark, m.group("tbl")):
-        spec = _resolve(spark, m.group("tbl"))
-        ver = ManifestTable(spec["root"]).add_column(
-            m.group("col"), m.group("dtype").strip()
-        )
-        _refresh_view(spark, m.group("tbl"))
-        return ver
+    verb = (statement.split(None, 1) or [""])[0].upper()
+    if verb in _PARSED_VERBS:
+        ver = _route(spark, _parse(spark, statement, verb), retries)
+        if ver is not None:
+            return ver
     m = _OPTIMIZE_RE.match(statement)
     if m and _resolve(spark, m.group("tbl")):
         from ..operators.txn import compact_table
@@ -1282,83 +1055,123 @@ def sql(spark: SparkSession, statement: str, *, retries: int = 3):
     return spark.sql(statement)
 
 
-def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
-    spec = _resolve(spark, p["tbl"])
-    talias = (p["talias"] or p["tbl"]).lower()
-    src_s = p["src"]
-    if src_s.startswith("("):
-        if not p["salias"]:
-            raise ValueError(
-                "MERGE USING (subquery) requires AS <alias>"
-            )
-        source = spark.sql(src_s[1:-1])
+def _route(spark: SparkSession, plan, retries: int) -> int | None:
+    """Run a parsed UPDATE, DELETE, MERGE or ALTER on its registered
+    table and return the committed version; None when the plan is
+    another statement or names no table registered in this session."""
+    kind = plan.nodeName()
+    if kind not in _ROUTED_PLANS:
+        return None
+    parts, alias = _target(
+        spark, plan.targetTable() if kind == "MergeIntoTable" else plan.table()
+    )
+    if not parts or not _resolve(spark, parts[-1]):
+        return None
+    if len(parts) > 1:
+        raise UnsupportedStatementError(
+            f"a registered table is named by one part: got "
+            f"{'.'.join(parts)!r} for {parts[-1]!r}"
+        )
+    name = parts[0]
+    spec = _resolve(spark, name)
+    tbl = ManifestTable(spec["root"])
+    bare = {q.lower(): None for q in (name, alias) if q}
+    if kind == "UpdateTable":
+        cond = plan.condition()
+        ver = tbl.update_where(
+            spark,
+            _column(spark, cond.get(), bare)
+            if cond.isDefined()
+            else F.lit(True),
+            _assignments(spark, plan.assignments(), set(bare), bare),
+            key_cols=_key_cols(tbl, spec["key_cols"], "UPDATE"),
+            retries=retries,
+        )
+    elif kind == "DeleteFromTable":
+        ver = tbl.delete_where(
+            spark,
+            _column(spark, plan.condition(), bare),
+            key_cols=_key_cols(tbl, spec["key_cols"], "DELETE"),
+            retries=retries,
+        )
+    elif kind == "MergeIntoTable":
+        ver = _run_merge(spark, plan, name, alias, tbl, retries)
     else:
-        source = spark.table(src_s)
-    salias = (p["salias"] or src_s).lower()
+        ver = _alter(spark, plan, kind, tbl)
+    _refresh_view(spark, name)
+    return ver
+
+
+def _run_merge(
+    spark: SparkSession,
+    plan,
+    name: str,
+    alias: str | None,
+    tbl: ManifestTable,
+    retries: int,
+) -> int:
+    """Compile a parsed MERGE onto :func:`merge_commit`: the target
+    and source aliases become ``t`` and ``s``, the ON equalities the
+    key, the WHEN clauses first-match flags."""
+    if plan.withSchemaEvolution():
+        raise UnsupportedStatementError(
+            "MERGE WITH SCHEMA EVOLUTION is not supported: use "
+            "merge_write(..., schema_evolution=True)"
+        )
+    if not plan.notMatchedBySourceActions().isEmpty():
+        raise UnsupportedStatementError(
+            "WHEN NOT MATCHED BY SOURCE is not supported"
+        )
+    talias = (alias or name).lower()
+    src = plan.sourceTable()
+    if src.nodeName() == "SubqueryAlias":
+        salias, src = src.alias(), src.child()
+    elif src.nodeName() == "UnresolvedRelation":
+        salias = _seq(spark, src.multipartIdentifier())[-1]
+    else:
+        raise UnsupportedStatementError(
+            "MERGE USING (subquery) requires AS <alias>"
+        )
+    salias = salias.lower()
     if talias == salias:
-        raise ValueError(
+        raise UnsupportedStatementError(
             f"MERGE target and source aliases must differ (both "
             f"{talias!r})"
         )
-    pk = _parse_on(p["on"], talias, salias)
+    pk = _merge_keys(spark, plan.mergeCondition(), talias, salias)
     mapping = {talias: "t", salias: "s"}
+    source = DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, src
+        ),
+        spark,
+    )
 
-    def _cond(text: str | None):
-        return None if text is None else F.expr(
-            _rewrite_aliases(text, mapping)
-        )
+    def _cond(action):
+        c = action.condition()
+        return _column(spark, c.get(), mapping) if c.isDefined() else None
 
-    # ---- ordered WHEN MATCHED clauses (r13: N clauses, ANSI
-    # first-match routing — VERDICT r12 item 4 lifts the old
-    # one-clause-per-action restriction)
-    matched: list[dict] = []  # {"kind": "U"|"D", "cond", "set"}
-    ins: dict | None = None  # {"cond"}
-    for c in p["clauses"]:
-        w = _parse_when(c)
-        action_u = re.sub(r"\s+", " ", w["action"].upper())
-        if w["not"]:
-            if not action_u.startswith("INSERT") or action_u != "INSERT *":
-                raise ValueError(
-                    "WHEN NOT MATCHED supports only 'THEN INSERT *'"
-                )
-            if ins is not None:
-                raise ValueError(
-                    "at most one WHEN NOT MATCHED clause is supported"
-                )
-            ins = {"cond": w["cond"]}
-        elif action_u == "DELETE":
-            matched.append({"kind": "D", "cond": w["cond"], "set": None})
-        elif action_u.startswith("UPDATE"):
-            mu = re.match(r"UPDATE\s+SET\s+", w["action"], re.IGNORECASE)
-            if not mu:
-                raise ValueError(
-                    f"unsupported MERGE action {w['action']!r}"
-                )
-            body = w["action"][mu.end() :].strip()
-            matched.append(
-                {
-                    "kind": "U",
-                    "cond": w["cond"],
-                    "set": (
-                        None  # None = SET * (full source row)
-                        if body == "*"
-                        else _parse_assignments(body, talias)
-                    ),
-                }
-            )
+    # ordered WHEN MATCHED clauses (kind "U"|"D", cond, set); Spark's
+    # parser already refused an unconditional clause before the last
+    matched: list[tuple] = []
+    for a in _seq(spark, plan.matchedActions()):
+        kind = a.nodeName()
+        if kind == "DeleteAction":
+            matched.append(("D", _cond(a), None))
+        elif kind == "UpdateStarAction":  # set None = SET * (full source row)
+            matched.append(("U", _cond(a), None))
         else:
-            raise ValueError(f"unsupported MERGE action {w['action']!r}")
-    if not matched and ins is None:
-        raise ValueError("MERGE needs at least one WHEN clause")
-    # Delta's clause-order rule, generalized: every WHEN MATCHED
-    # clause except the LAST must carry a condition (an unconditional
-    # earlier clause makes everything after it unreachable)
-    for m in matched[:-1]:
-        if m["cond"] is None:
-            raise ValueError(
-                "every WHEN MATCHED clause except the last must have "
-                "a condition (later clauses are unreachable otherwise)"
-            )
+            st = _assignments(spark, a.assignments(), {talias}, mapping)
+            matched.append(("U", _cond(a), st))
+    inserts = _seq(spark, plan.notMatchedActions())
+    if len(inserts) > 1:
+        raise UnsupportedStatementError(
+            "at most one WHEN NOT MATCHED clause is supported"
+        )
+    if inserts and inserts[0].nodeName() != "InsertStarAction":
+        raise UnsupportedStatementError(
+            "WHEN NOT MATCHED supports only 'THEN INSERT *'"
+        )
 
     # first-match semantics: clause i fires iff its condition is TRUE
     # (NULL does not fire) and no earlier clause fired. merge_into's
@@ -1369,13 +1182,8 @@ def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
     # ANSI reference in tests/test_manifest_sql.py).
     fired: list = []
     prior = F.lit(False)
-    for m in matched:
-        cnd = _cond(m["cond"])
-        ci = (
-            F.lit(True)
-            if cnd is None
-            else F.coalesce(cnd, F.lit(False))
-        )
+    for _kind, cnd, _set in matched:
+        ci = F.lit(True) if cnd is None else F.coalesce(cnd, F.lit(False))
         fired.append(ci & ~prior)
         prior = prior | ci
 
@@ -1385,19 +1193,19 @@ def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
             out = f if out is None else (out | f)
         return out
 
-    del_fired = [f for m, f in zip(matched, fired) if m["kind"] == "D"]
+    matched_delete = _any(
+        [f for (kind, _c, _s), f in zip(matched, fired) if kind == "D"]
+    )
     upd_clauses = [
-        (m, f) for m, f in zip(matched, fired) if m["kind"] == "U"
+        (st, f) for (kind, _c, st), f in zip(matched, fired) if kind == "U"
     ]
-    matched_delete = _any(del_fired)
     # no UPDATE clause: matches are kept unless deleted — a
     # never-true update condition expresses "keep" (merge_into's
     # None would mean "update every match")
     matched_update = (
-        _any([f for _m, f in upd_clauses])
-        if upd_clauses
-        else F.lit(False)
+        _any([f for _st, f in upd_clauses]) if upd_clauses else F.lit(False)
     )
+
     # per-column assignments: one CASE over the fired flags, falling
     # through to the target value. All-SET-* collapses to None (the
     # full-source-row fast path merge_into already implements).
@@ -1406,52 +1214,33 @@ def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
     # ALTER ADD COLUMN landing between retries must widen the
     # assignment list, not silently null-fill the new column.
     def _compile_matched_set(entry_now: dict):
-        if not upd_clauses or all(
-            m["set"] is None for m, _f in upd_clauses
-        ):
+        if all(st is None for st, _f in upd_clauses):
             return None
-        import json as _json
-
-        from pyspark.sql import types as _T
-
-        tcols = [
-            f.name
-            for f in _T.StructType.fromJson(
-                _json.loads(entry_now["schema"])
-            ).fields
-        ]
+        schema = T.StructType.fromJson(json.loads(entry_now["schema"]))
+        tcols = [f.name for f in schema.fields]
         assigned: list[str] = []
-        for m, _f in upd_clauses:
-            cols = (
-                [c for c in tcols if c not in pk]  # SET * = all non-key
-                if m["set"] is None
-                else list(m["set"])
-            )
-            for c in cols:
-                if c not in assigned:
-                    assigned.append(c)
+        for st, _f in upd_clauses:
+            # SET * assigns every non-key column
+            cols = [c for c in tcols if c not in pk] if st is None else st
+            assigned += [c for c in cols if c not in assigned]
         out_set = {}
         for c in assigned:
             expr = F.col(f"t.{c}")
-            for m, f in reversed(upd_clauses):
-                if m["set"] is None:
+            for st, f in reversed(upd_clauses):
+                if st is None:
                     expr = F.when(f, F.col(f"s.{c}")).otherwise(expr)
-                elif c in m["set"]:
-                    expr = F.when(
-                        f, F.expr(_rewrite_aliases(m["set"][c], mapping))
-                    ).otherwise(expr)
+                elif c in st:
+                    expr = F.when(f, st[c]).otherwise(expr)
             out_set[c] = expr
         return out_set
+
     # ANSI: no INSERT clause -> source-only rows do nothing
-    not_matched_insert = (
-        (F.lit(True) if ins["cond"] is None else _cond(ins["cond"]))
-        if ins is not None
-        else F.lit(False)
-    )
+    ins_cond = _cond(inserts[0]) if inserts else F.lit(False)
+    not_matched_insert = F.lit(True) if ins_cond is None else ins_cond
     # UPDATE SET * + INSERT *, both unconditional: the plain upsert
-    upsert = ins == {"cond": None} and matched == [
-        {"kind": "U", "cond": None, "set": None}
-    ]
+    upsert = inserts and ins_cond is None and [
+        (kind, cnd is None, st is None) for kind, cnd, st in matched
+    ] == [("U", True, True)]
 
     def clauses(entry_now: dict) -> dict | None:
         if upsert:
@@ -1463,14 +1252,12 @@ def _run_merge(spark: SparkSession, p: dict, retries: int) -> int:
             "not_matched_insert": not_matched_insert,
         }
 
-    ver = merge_commit(
+    return merge_commit(
         spark,
-        ManifestTable(spec["root"]),
+        tbl,
         source,
         pk,
         clauses=clauses,
-        unique_matches=f"MERGE INTO {p['tbl']}",
+        unique_matches=f"MERGE INTO {name}",
         retries=retries,
     )
-    _refresh_view(spark, p["tbl"])
-    return ver

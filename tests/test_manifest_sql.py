@@ -19,6 +19,7 @@ from datapipeline_scraping_spark.operators.txn import (
     ManifestTable,
 )
 from datapipeline_scraping_spark.sources.manifest_sql import (
+    UnsupportedStatementError,
     predicate_view,
     register_table,
     sql,
@@ -51,6 +52,14 @@ def test_sql_update_routes_merge_on_read(spark, tbl):
     assert _state(spark) == {1: ("A", 110), 2: ("B", 120), 3: ("c", 30)}
     # merge-on-read: the statement wrote a sidecar, not a table rewrite
     assert (tbl._log_entry(2) or {}).get("mor_delta")
+    # SET keys and WHERE columns may be qualified by the target's name
+    # or alias
+    register_table(spark, "ct", tbl.root, key_cols=["pk"])
+    assert sql(spark, "UPDATE ct SET ct.n = 3 WHERE ct.pk = 1") == 3
+    assert sql(spark, "UPDATE ct AS x SET x.n = x.n + 1 WHERE x.pk = 2") == 4
+    assert sorted(tuple(r) for r in spark.table("ct").collect()) == [
+        (1, "A", 3), (2, "B", 121), (3, "c", 30),
+    ]
 
 
 def test_sql_delete_routes_deletion_vector(spark, tbl):
@@ -188,6 +197,58 @@ def test_sql_unsupported_shapes_raise(spark, tbl):
             """MERGE INTO sqldml AS t USING (SELECT * FROM src_bad)
                ON t.pk = s.pk WHEN MATCHED THEN DELETE""",
         )
+    # shapes Spark's parser accepts and the ledger's writers do not
+    # implement, and the two parser refusals above: one named error
+    # each, and nothing is committed
+    merge = "MERGE INTO sqldml AS t USING src_bad AS s ON t.pk = s.pk "
+    for stmt in [
+        merge + "WHEN NOT MATCHED BY SOURCE THEN DELETE",
+        merge.replace("MERGE", "MERGE WITH SCHEMA EVOLUTION")
+        + "WHEN MATCHED THEN UPDATE SET *",
+        "ALTER TABLE sqldml ADD COLUMNS (a int, b int)",
+        "ALTER TABLE sqldml DROP COLUMNS (n, v)",
+        "ALTER TABLE sqldml ADD COLUMN a int FIRST",
+        "ALTER TABLE sqldml ADD COLUMN a int DEFAULT 3",
+        "ALTER TABLE sqldml ADD COLUMN a int COMMENT 'x'",
+        "ALTER TABLE sqldml ADD COLUMN a int NOT NULL",
+        "UPDATE default.sqldml SET n = 1",
+        "DELETE FROM spark_catalog.default.sqldml WHERE pk = 1",
+        "UPDATE sqldml SET = 5",
+        merge + "WHEN MATCHED THEN UPDATE SET * WHEN MATCHED THEN DELETE",
+    ]:
+        with pytest.raises(UnsupportedStatementError):
+            sql(spark, stmt)
+    assert tbl.version() == 1
+    assert spark.table("sqldml").columns == ["pk", "v", "n"]
+
+
+def test_spark_parser_refuses_the_regex_verbs(spark):
+    """``sql()`` matches OPTIMIZE, VACUUM, ALTER TABLE ... PARTITION BY
+    and DESCRIBE HISTORY/DETAIL with regexes before Spark's parser,
+    because the parser refuses the first three and reads the last two
+    as DESCRIBE COLUMN. When a Spark upgrade parses one of them, this
+    test names the regex to delete."""
+    from pyspark.errors import ParseException
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    for regex, stmt in [
+        ("_OPTIMIZE_RE", "OPTIMIZE t"),
+        ("_VACUUM_RE", "VACUUM t RETAIN 0 HOURS"),
+        ("_ALTER_PART_RE", "ALTER TABLE t PARTITION BY (pk)"),
+    ]:
+        try:
+            parser.parsePlan(stmt)
+        except ParseException:
+            continue
+        pytest.fail(f"Spark now parses {stmt!r}: route it and delete {regex}")
+    for regex, stmt in [
+        ("_HISTORY_RE", "DESCRIBE HISTORY t"),
+        ("_DETAIL_RE", "DESCRIBE DETAIL t"),
+    ]:
+        kind = parser.parsePlan(stmt).nodeName()
+        assert kind == "DescribeColumn", (
+            f"Spark now parses {stmt!r} as {kind}: route it and delete {regex}"
+        )
 
 
 @pytest.mark.slow  # r17 tiering: measured 11s; full (evidence) tier only
@@ -283,6 +344,21 @@ def test_sql_merge_swapped_aliases_and_literals(spark, tbl):
         1: ("a", 10),   # unmatched target kept
         2: ("b", 21),   # t.v = 's.' literal matched; n = target 20 + 1
     }                   # 3: second clause deleted
+    # CASE WHEN ... END needs no parentheses in a clause condition or
+    # a SET value
+    _df(spark, [(1, "x", 7), (2, "y", 5)]).createOrReplaceTempView("src_case")
+    sql(
+        spark,
+        """MERGE INTO sqldml AS t USING src_case AS s ON t.pk = s.pk
+           WHEN MATCHED AND CASE WHEN s.n > 6 THEN true ELSE false END
+             THEN UPDATE SET n = CASE WHEN s.n > 6 THEN 1 ELSE 2 END
+           WHEN MATCHED
+             THEN UPDATE SET v = CASE WHEN s.n > 6 THEN 'hi' ELSE 'lo' END""",
+    )
+    assert _state(spark) == {
+        1: ("a", 1),    # first clause fired: n = 1, v kept
+        2: ("lo", 21),  # second clause fired: v = 'lo', n kept
+    }
 
 
 def test_sql_routing_is_session_scoped(spark, tbl):
@@ -331,6 +407,22 @@ def test_sql_merge_subquery_source_with_nested_parens(spark, tbl):
     )
     assert _state(spark) == {
         1: ("a", 10), 2: ("B", 202), 3: ("c", 30), 9: ("NINE", 902),
+    }
+    # an uncorrelated IN (SELECT ...) in a clause condition
+    spark.createDataFrame([(202,), (30,)], "n long").createOrReplaceTempView(
+        "src_allow"
+    )
+    _df(spark, [(1, "x", 1), (2, "y", 2), (3, "z", 3)]).createOrReplaceTempView(
+        "src_in"
+    )
+    sql(
+        spark,
+        """MERGE INTO sqldml AS t USING src_in AS s ON t.pk = s.pk
+           WHEN MATCHED AND t.n IN (SELECT n FROM src_allow)
+             THEN UPDATE SET n = t.n + s.n""",
+    )
+    assert _state(spark) == {
+        1: ("a", 10), 2: ("B", 204), 3: ("c", 33), 9: ("NINE", 902),
     }
 
 

@@ -175,6 +175,22 @@ def test_minhash_finds_planted_neardups(spark):
     assert all(3 not in p for p in pairs)
 
 
+def test_lsh_candidate_pairs_leaves_no_cache_entry(spark):
+    """The band self-join shares its input through exchange reuse, not
+    a persisted band table: repeated calls leave the cache empty."""
+    spark.catalog.clearCache()
+    base = "a b c d e f g h i j k l m n o p q r s t"
+    docs = spark.createDataFrame(
+        [(i, f"{base} x{i % 7}") for i in range(40)], "doc_id long, text string"
+    )
+    for _ in range(3):
+        pairs = minhash_lsh_pairs(docs, "doc_id", "text")
+        assert pairs.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan.split("== Initial Plan ==")[0], plan
+
+
 def test_spread_small_input_is_scale_adaptive(spark, tmp_path):
     """r16: the explode/md5 operators repartition a too-small input so
     one file does not serialize the hashing, but SKIP the shuffle when

@@ -1065,7 +1065,8 @@ def _route(spark: SparkSession, plan, retries: int) -> int | None:
     parts, alias = _target(
         spark, plan.targetTable() if kind == "MergeIntoTable" else plan.table()
     )
-    if not parts or not _resolve(spark, parts[-1]):
+    spec = _resolve(spark, parts[-1]) if parts else None
+    if spec is None:
         return None
     if len(parts) > 1:
         raise UnsupportedStatementError(
@@ -1073,7 +1074,6 @@ def _route(spark: SparkSession, plan, retries: int) -> int | None:
             f"{'.'.join(parts)!r} for {parts[-1]!r}"
         )
     name = parts[0]
-    spec = _resolve(spark, name)
     tbl = ManifestTable(spec["root"])
     bare = {q.lower(): None for q in (name, alias) if q}
     if kind == "UpdateTable":
